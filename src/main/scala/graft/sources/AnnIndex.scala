@@ -50,13 +50,11 @@ object AnnIndex {
     // meta tombstone first / rewrite last (the family discipline): a
     // crash mid-write leaves load() failing loudly on the missing meta
     // instead of pairing stale parameters with half-written artifacts
-    val metaP = new org.apache.hadoop.fs.Path(s"$path/meta")
-    metaP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(metaP, true)
+    Commit.tombstone(spark, s"$path/meta")
     // the three artifacts are independent — overlap their write jobs
     // (guide §2.6) instead of paying three job tails back to back;
     // small artifacts stay one file each (no point fanning out k rows)
-    DedupIndex.runOverlapped(Seq(
+    Commit.runAll(Seq(
       () => centroids.coalesce(1).write.mode("overwrite")
         .parquet(s"$path/centroids"),
       () => codebook.zipWithIndex
@@ -173,7 +171,7 @@ object AnnIndex {
     * .trainCentroids]] k-means + [[graft.operators.Similarity
     * .pqTrainCodebook]] per-subspace Lloyd).
     *
-    * Atomicity: the [[DedupIndex.swapCompacted]] meta-tombstone
+    * Atomicity: the [[Commit.swapCompacted]] meta-tombstone
     * discipline — all three artifacts stage to side directories first
     * (training and encode scan only `corpus`, never a directory being
     * written), meta deletes, the artifacts swap, meta writes last. A
@@ -195,10 +193,9 @@ object AnnIndex {
     // and codes from scratch, so collecting the old codebook (one more
     // driver job per retrain) and opening the old artifact frames would
     // be pure waste; only the search contract (m, residual) survives
-    val metaRows = spark.read.parquet(s"$path/meta").collect()
-    require(metaRows.length == 1, s"malformed index meta at $path")
-    val (m, residual) = (metaRows(0).getAs[Int]("m"),
-      metaRows(0).getAs[Boolean]("residual"))
+    val meta = Commit.readMeta(spark, s"$path/meta")
+    val (m, residual) =
+      (meta.getAs[Int]("m"), meta.getAs[Boolean]("residual"))
     // Materialized ONCE: three downstream actions (codebook collect,
     // centroids write, codes write) would otherwise each re-run the
     // trainer, and avg-based k-means is shuffle-order sensitive — the
@@ -228,24 +225,14 @@ object AnnIndex {
       else
         graft.operators.Similarity.ivfPqEncode(
           corpus, idCol, vecCol, centroids, cb, m)
-    DedupIndex.swapCompacted(spark, path, Seq(
-      "centroids" -> { () =>
-        centroids.coalesce(1).write.mode("overwrite")
-          .parquet(s"$path/centroids.compact")
-      },
-      "codebook" -> { () =>
-        cb.zipWithIndex.map { case (v, c) => (c, v.toSeq) }.toSeq
-          .toDF("code", "vals")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$path/codebook.compact")
-      },
-      "codes" -> { () =>
-        codes.repartition(numFiles, col("centroid_id"))
-          .sortWithinPartitions("centroid_id")
-          .write.mode("overwrite").parquet(s"$path/codes.compact")
-      }), s"$path/meta", () =>
-      Seq((m, cb.length, residual)).toDF("m", "n_codes", "residual")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta"))
+    Commit.swapCompacted(spark, path, Seq(
+      "centroids" -> centroids.coalesce(1),
+      "codebook" -> cb.zipWithIndex.map { case (v, c) => (c, v.toSeq) }.toSeq
+        .toDF("code", "vals").coalesce(1),
+      "codes" -> codes.repartition(numFiles, col("centroid_id"))
+        .sortWithinPartitions("centroid_id")),
+      s"$path/meta",
+      Seq((m, cb.length, residual)).toDF("m", "n_codes", "residual"))
   }
 
   /** [[retrain]] with the library's own trainers: coarse centroids by
@@ -266,11 +253,7 @@ object AnnIndex {
       pqIters: Int,
       pqSampleFraction: Double,
       numFiles: Int): Unit = {
-    val m = {
-      val meta = spark.read.parquet(s"$path/meta").collect()
-      require(meta.length == 1, s"malformed index meta at $path")
-      meta(0).getAs[Int]("m")
-    }
+    val m = Commit.readMeta(spark, s"$path/meta").getAs[Int]("m")
     retrain(spark, path, corpus, idCol, vecCol,
       c => graft.operators.Similarity.trainCentroids(
         c, idCol, vecCol, kCentroids, kmeansIters),
@@ -300,23 +283,18 @@ object AnnIndex {
     import spark.implicits._
     val idx = load(spark, path)
     val (m, nCodes, residual) = (idx.m, idx.codebook.length, idx.residual)
-    val codes = idx.codes
-    DedupIndex.swapCompacted(spark, path, Seq(
-      "codes" -> { () =>
-        codes.repartition(numFiles, col("centroid_id"))
-          .sortWithinPartitions("centroid_id")
-          .write.mode("overwrite").parquet(s"$path/codes.compact")
-      }), s"$path/meta", () =>
-      Seq((m, nCodes, residual)).toDF("m", "n_codes", "residual")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta"))
+    Commit.swapCompacted(spark, path, Seq(
+      "codes" -> idx.codes.repartition(numFiles, col("centroid_id"))
+        .sortWithinPartitions("centroid_id")),
+      s"$path/meta",
+      Seq((m, nCodes, residual)).toDF("m", "n_codes", "residual"))
   }
 
   def load(spark: SparkSession, path: String): Loaded = {
-    val meta = spark.read.parquet(s"$path/meta").collect()
-    require(meta.length == 1, s"malformed index meta at $path")
-    val m = meta(0).getAs[Int]("m")
-    val nCodes = meta(0).getAs[Int]("n_codes")
-    val residual = meta(0).getAs[Boolean]("residual")
+    val meta = Commit.readMeta(spark, s"$path/meta")
+    val m = meta.getAs[Int]("m")
+    val nCodes = meta.getAs[Int]("n_codes")
+    val residual = meta.getAs[Boolean]("residual")
     val cbRows = spark.read.parquet(s"$path/codebook").collect()
     require(cbRows.length == nCodes,
       s"codebook has ${cbRows.length} rows, meta declares $nCodes")

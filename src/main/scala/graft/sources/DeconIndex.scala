@@ -170,7 +170,7 @@ object DeconIndex {
     // false-negative)
     val mergedSlot =
       new java.util.concurrent.atomic.AtomicReference[DataFrame]()
-    DedupIndex.runOverlapped(Seq(
+    Commit.runAll(Seq(
       () => fresh.write.mode("append").parquet(s"$path/grams"),
       () => mergedSlot.set(
         spark.read.parquet(EpochStore.epochPath(path, v))

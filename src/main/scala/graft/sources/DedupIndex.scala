@@ -74,58 +74,6 @@ object DedupIndex {
       numHashes: Int,
       bands: Int)
 
-  // -------------------------------------------------------------------
-  // Layout-clean sentinel (`_layout_clean_<family>/` under the index
-  // path): present iff that family's artifacts are exactly as the last
-  // build/compact left them — folded rows at the build file layout.
-  // Every absorb DELETES it before its first append file lands;
-  // build/compact (re)create it LAST. compact() then skips the full
-  // artifact rewrite of an untouched index (guide §6: don't rewrite
-  // unchanged data — a scheduled compaction over an index that saw no
-  // appends since the last build/compact would otherwise pay a
-  // corpus-scale rewrite to reproduce the bytes already on disk). The
-  // sentinel is advisory-for-speed only: its ABSENCE (legacy index,
-  // crashed build) costs one full — harmless — compaction, never
-  // correctness; a crash between an absorb's delete and its first file
-  // likewise only forfeits the skip. Family-scoped so co-located
-  // artifact families can never claim cleanliness for each other.
-  // -------------------------------------------------------------------
-  private def cleanPath(path: String, family: String) =
-    new org.apache.hadoop.fs.Path(s"$path/_layout_clean_$family")
-  private[sources] def markClean(
-      spark: SparkSession, path: String, family: String): Unit = {
-    val p = cleanPath(path, family)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(p)
-  }
-  private[sources] def unmarkClean(
-      spark: SparkSession, path: String, family: String): Unit = {
-    val p = cleanPath(path, family)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-  }
-  private[sources] def isClean(
-      spark: SparkSession, path: String, family: String): Boolean = {
-    val p = cleanPath(path, family)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** Run independent artifact-staging actions CONCURRENTLY (guide
-    * §2.6 overlap independent jobs): Spark's scheduler happily runs
-    * several jobs at once inside one application, so two independent
-    * artifact rewrites overlap — the second job's tasks back-fill the
-    * executor slots the first job's stage tail leaves idle — instead
-    * of paying both jobs' tails back to back. Single-task lists run
-    * inline. Await rethrows the first failure to the caller.
-    */
-  private[sources] def runOverlapped(tasks: Seq[() => Unit]): Unit =
-    if (tasks.lengthCompare(2) < 0) tasks.foreach(_.apply())
-    else {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      Await.result(
-        Future.traverse(tasks)(t => Future(t.apply())), Duration.Inf)
-    }
-
   /** Build (or atomically rebuild) the index from a corpus. One
     * hash-keyed shuffle for the exact stage (partial-aggregable
     * `min`), one join back for survivor texts, one linear band pass —
@@ -152,12 +100,8 @@ object DedupIndex {
     // surviving a rebuild they would make a fresh stream's batch 0..N
     // silently no-op against the new one (ids restart with a fresh
     // checkpoint).
-    val hconfB = spark.sparkContext.hadoopConfiguration
-    Seq(s"$path/meta", s"$path/ingested").foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(hconfB).delete(hp, true)
-    }
-    unmarkClean(spark, path, "exact")
+    Commit.tombstone(spark, s"$path/meta", s"$path/ingested")
+    Commit.unmarkClean(spark, path, "exact")
     val hashed = docs.select(col(idCol).as("doc_id"),
       col(textCol).as("__text"),
       Dedup.normalizedHash(col(textCol)).as("text_hash"))
@@ -182,18 +126,17 @@ object DedupIndex {
       .toDF("shingle_n", "num_hashes", "bands")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
     // fresh build = folded rows at the build layout by construction
-    markClean(spark, path, "exact")
+    Commit.markClean(spark, path, "exact")
   }
 
   def load(spark: SparkSession, path: String): Loaded = {
-    val meta = spark.read.parquet(s"$path/meta").collect()
-    require(meta.length == 1, s"malformed dedup-index meta at $path")
+    val meta = Commit.readMeta(spark, s"$path/meta")
     Loaded(
       hashes = spark.read.parquet(s"$path/hashes"),
       buckets = spark.read.parquet(s"$path/buckets"),
-      shingleN = meta(0).getAs[Int]("shingle_n"),
-      numHashes = meta(0).getAs[Int]("num_hashes"),
-      bands = meta(0).getAs[Int]("bands"))
+      shingleN = meta.getAs[Int]("shingle_n"),
+      numHashes = meta.getAs[Int]("num_hashes"),
+      bands = meta.getAs[Int]("bands"))
   }
 
   /** Dedup an incoming batch against the frozen index and absorb the
@@ -331,7 +274,7 @@ object DedupIndex {
     require(numFiles > 0, "numFiles must be positive")
     // sentinel first: a crash after this delete but before a file lands
     // only forfeits the next compact's skip — never the reverse hole
-    unmarkClean(spark, path, "exact")
+    Commit.unmarkClean(spark, path, "exact")
     b.newBuckets.repartition(numFiles, col("band"), col("bucket"))
       .sortWithinPartitions("band", "bucket")
       .write.mode("append").parquet(s"$path/buckets")
@@ -371,31 +314,35 @@ object DedupIndex {
       idCol: String,
       textCol: String,
       numFiles: Int = 8,
-      broadcastBatch: Boolean = true): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val marker = new org.apache.hadoop.fs.Path(
-      s"$indexPath/ingested/batch_$batchId")
-    val mFs = marker.getFileSystem(hconf)
-    if (mFs.exists(marker)) return
-    // the output-committed signal is OUR OWN sentinel next to the
-    // absorb marker, never the committer's _SUCCESS: _SUCCESS can be
-    // disabled (marksuccessfuljobs=false on object stores) or the
-    // output relocated, and a replay AFTER absorb recomputes an EMPTY
-    // survivor set (the batch now matches its own absorbed hashes) —
-    // trusting a missing _SUCCESS there would overwrite good output
-    // with that empty frame and then mark the batch done
-    val outDone = new org.apache.hadoop.fs.Path(
-      s"$indexPath/ingested/out_$batchId")
-    val b = dedupBatch(spark, indexPath, batch, idCol, textCol,
-      broadcastBatch)
-    if (!mFs.exists(outDone)) {
-      b.survivors.write.mode("overwrite")
-        .parquet(s"$outPath/batch_id=$batchId")
-      mFs.mkdirs(outDone)
+      broadcastBatch: Boolean = true): Unit =
+    ingestOnce(spark, s"$indexPath/ingested", outPath, batchId)(
+      dedupBatch(spark, indexPath, batch, idCol, textCol, broadcastBatch))(
+      _.survivors, absorb(spark, indexPath, _, numFiles))
+
+  /** The one-batch ingest protocol of every family: the absorb marker
+    * `markers/batch_N` guards the whole call; inside it the pure
+    * `probe` runs, the output sentinel `markers/out_N` guards the
+    * OVERWRITE of `outPath/batch_id=N`, then `absorbB` runs.
+    *
+    * The output-committed signal is OUR OWN sentinel next to the
+    * absorb marker, never the committer's `_SUCCESS`: `_SUCCESS` can be
+    * disabled (marksuccessfuljobs=false on object stores) or the
+    * output relocated, and a replay AFTER absorb recomputes a degraded
+    * output (the batch now matches its own absorbed state: an EMPTY
+    * survivor set, an over-scrubbed rewrite) — trusting a missing
+    * `_SUCCESS` there would overwrite good output with it and then
+    * mark the batch done.
+    */
+  private def ingestOnce[B](
+      spark: SparkSession, markers: String, outPath: String, batchId: Long)(
+      probe: => B)(output: B => DataFrame, absorbB: B => Unit): Unit =
+    Commit.once(spark, s"$markers/batch_$batchId") {
+      val b = probe
+      Commit.once(spark, s"$markers/out_$batchId") {
+        output(b).write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
+      }
+      absorbB(b)
     }
-    absorb(spark, indexPath, b, numFiles)
-    mFs.mkdirs(marker)
-  }
 
   // ---------------------------------------------------------------------
   // Substring gram index — the incremental form of exact substring dedup
@@ -435,12 +382,8 @@ object DedupIndex {
     import spark.implicits._
     val k = spanWords
     // meta tombstone + stale ingest markers (see [[build]]'s note)
-    val hconfB = spark.sparkContext.hadoopConfiguration
-    Seq(s"$path/grams_meta", s"$path/grams_ingested").foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(hconfB).delete(hp, true)
-    }
-    unmarkClean(spark, path, "substring")
+    Commit.tombstone(spark, s"$path/grams_meta", s"$path/grams_ingested")
+    Commit.unmarkClean(spark, path, "substring")
     // NO Spread before this tokenize: measured a REGRESSION twice (r19
     // commit 8cc72a9 context, and re-measured r20: dedup_index_substring
     // 2.92 → 3.82 s, compact_substring 2.59 → 3.74 s, 7-rep stash A/B
@@ -461,7 +404,7 @@ object DedupIndex {
     Seq(Tuple1(k)).toDF("span_words")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/grams_meta")
     // fresh build = distinct hashes at the build layout by construction
-    markClean(spark, path, "substring")
+    Commit.markClean(spark, path, "substring")
     // grams is already checkpointed above (it also feeds the grams/
     // write): the Materialized form must not checkpoint it a second
     // time
@@ -529,9 +472,8 @@ object DedupIndex {
       idCol: String,
       textCol: String,
       broadcastBatch: Boolean = true): SubstringBatch = {
-    val meta = spark.read.parquet(s"$path/grams_meta").collect()
-    require(meta.length == 1, s"malformed gram-index meta at $path")
-    val k = meta(0).getAs[Int]("span_words")
+    val k = Commit.readMeta(spark, s"$path/grams_meta")
+      .getAs[Int]("span_words")
     def bc(df: DataFrame): DataFrame =
       if (broadcastBatch) broadcast(df) else df
     val idx = spark.read.parquet(s"$path/grams")
@@ -590,7 +532,7 @@ object DedupIndex {
       b: SubstringBatch,
       numFiles: Int = 8): Unit = {
     require(numFiles > 0, "numFiles must be positive")
-    unmarkClean(spark, path, "substring")
+    Commit.unmarkClean(spark, path, "substring")
     b.newHashes.repartition(numFiles, col("gram_hash"))
       .sortWithinPartitions("gram_hash")
       .write.mode("append").parquet(s"$path/grams")
@@ -644,12 +586,8 @@ object DedupIndex {
     val spark = vecs.sparkSession
     import spark.implicits._
     // meta tombstone + stale ingest markers (see [[build]]'s note)
-    val hconfB = spark.sparkContext.hadoopConfiguration
-    Seq(s"$path/sem_meta", s"$path/sem_ingested").foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(hconfB).delete(hp, true)
-    }
-    unmarkClean(spark, path, "semantic")
+    Commit.tombstone(spark, s"$path/sem_meta", s"$path/sem_ingested")
+    Commit.unmarkClean(spark, path, "semantic")
     // one materialization: the assignment feeds the pair join twice,
     // the keep-flag join, and the artifact write
     val assigned = graft.operators.Similarity
@@ -671,7 +609,7 @@ object DedupIndex {
     // independent artifacts (vecs derive from the checkpoints, the
     // centroid table from the caller's frame) — overlap the two write
     // jobs (guide §2.6); meta still lands last
-    runOverlapped(Seq(
+    Commit.runAll(Seq(
       () => all.repartition(numFiles, col("centroid_id"))
         .sortWithinPartitions("centroid_id", "vec_id")
         .write.mode("overwrite").parquet(s"$path/sem_vecs"),
@@ -681,7 +619,7 @@ object DedupIndex {
     Seq(Tuple1(tau)).toDF("tau")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/sem_meta")
     // fresh build = folded vec_ids at the cell-clustered layout
-    markClean(spark, path, "semantic")
+    Commit.markClean(spark, path, "semantic")
     assigned.join(dropped, Seq("vec_id"), "left_anti")
       .select(col("vec_id").as(idCol), col("centroid_id"))
   }
@@ -716,9 +654,7 @@ object DedupIndex {
       idCol: String,
       vecCol: String,
       broadcastBatch: Boolean = true): SemanticBatch = {
-    val meta = spark.read.parquet(s"$path/sem_meta").collect()
-    require(meta.length == 1, s"malformed semantic-index meta at $path")
-    val tau = meta(0).getAs[Double]("tau")
+    val tau = Commit.readMeta(spark, s"$path/sem_meta").getAs[Double]("tau")
     def bc(df: DataFrame): DataFrame =
       if (broadcastBatch) broadcast(df) else df
     val centroids = spark.read.parquet(s"$path/sem_centroids")
@@ -775,7 +711,7 @@ object DedupIndex {
       b: SemanticBatch,
       numFiles: Int = 8): Unit = {
     require(numFiles > 0, "numFiles must be positive")
-    unmarkClean(spark, path, "semantic")
+    Commit.unmarkClean(spark, path, "semantic")
     // present = index ids ∩ batch ids: the index STREAMS through a
     // broadcast semi join on the batch's id set; output batch-bounded
     val present = spark.read.parquet(s"$path/sem_vecs")
@@ -826,24 +762,11 @@ object DedupIndex {
       idCol: String,
       vecCol: String,
       numFiles: Int = 8,
-      broadcastBatch: Boolean = true): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val marker = new org.apache.hadoop.fs.Path(
-      s"$indexPath/sem_ingested/batch_$batchId")
-    val mFs = marker.getFileSystem(hconf)
-    if (mFs.exists(marker)) return
-    val outDone = new org.apache.hadoop.fs.Path(
-      s"$indexPath/sem_ingested/out_$batchId")
-    val b = dedupSemanticBatch(spark, indexPath, batch, idCol, vecCol,
-      broadcastBatch)
-    if (!mFs.exists(outDone)) {
-      b.survivors.write.mode("overwrite")
-        .parquet(s"$outPath/batch_id=$batchId")
-      mFs.mkdirs(outDone)
-    }
-    absorbSemantic(spark, indexPath, b, numFiles)
-    mFs.mkdirs(marker)
-  }
+      broadcastBatch: Boolean = true): Unit =
+    ingestOnce(spark, s"$indexPath/sem_ingested", outPath, batchId)(
+      dedupSemanticBatch(spark, indexPath, batch, idCol, vecCol,
+        broadcastBatch))(
+      _.survivors, absorbSemantic(spark, indexPath, _, numFiles))
 
   /** Idempotent one-batch SUBSTRING ingest — [[ingestBatch]]'s protocol
     * for the gram index ([[graft.streaming.StreamingDedup
@@ -861,27 +784,11 @@ object DedupIndex {
       idCol: String,
       textCol: String,
       numFiles: Int = 8,
-      broadcastBatch: Boolean = true): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val marker = new org.apache.hadoop.fs.Path(
-      s"$indexPath/grams_ingested/batch_$batchId")
-    val mFs = marker.getFileSystem(hconf)
-    if (mFs.exists(marker)) return
-    // our own output sentinel, not the committer's _SUCCESS — same
-    // post-absorb-replay hazard as [[ingestBatch]] (the recomputed
-    // rewrite would over-scrub against the batch's own absorbed grams)
-    val outDone = new org.apache.hadoop.fs.Path(
-      s"$indexPath/grams_ingested/out_$batchId")
-    val b = dedupSubstringBatch(spark, indexPath, batch, idCol, textCol,
-      broadcastBatch)
-    if (!mFs.exists(outDone)) {
-      b.rewritten.write.mode("overwrite")
-        .parquet(s"$outPath/batch_id=$batchId")
-      mFs.mkdirs(outDone)
-    }
-    absorbSubstring(spark, indexPath, b, numFiles)
-    mFs.mkdirs(marker)
-  }
+      broadcastBatch: Boolean = true): Unit =
+    ingestOnce(spark, s"$indexPath/grams_ingested", outPath, batchId)(
+      dedupSubstringBatch(spark, indexPath, batch, idCol, textCol,
+        broadcastBatch))(
+      _.rewritten, absorbSubstring(spark, indexPath, _, numFiles))
 
   // ---------------------------------------------------------------------
   // Compaction — every append lands `numFiles` new parquet files and
@@ -889,48 +796,11 @@ object DedupIndex {
   // probe opens ~N·numFiles files and streams dead rows. compact()
   // rewrites each artifact at the BUILD layout (bucketed, sorted,
   // `numFiles` total) with duplicates folded, under the meta-tombstone
-  // discipline: compacted data lands in side directories first, the
-  // meta is deleted (the index is briefly unloadable, never wrong), the
-  // directories swap, and the meta is rewritten LAST — a crash at any
-  // point leaves either the old index, or a tombstoned one that load()
-  // refuses loudly. Ingest markers SURVIVE compaction (unlike rebuild):
+  // swap of [[Commit.swapCompacted]] — a crash at any point leaves
+  // either the old index, or a tombstoned one that load() refuses
+  // loudly. Ingest markers SURVIVE compaction (unlike rebuild):
   // membership is unchanged, so "batch N is absorbed" stays true.
   // ---------------------------------------------------------------------
-
-  /** Stage compacted artifacts and swap them in under the tombstone
-    * discipline. `metaRows` is captured by the caller BEFORE this runs.
-    */
-  private[sources] def swapCompacted(
-      spark: SparkSession,
-      path: String,
-      staged: Seq[(String, () => Unit)],
-      metaDir: String,
-      writeMeta: () => Unit): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    val fs = p(path).getFileSystem(hconf)
-    // 1. stage every compacted artifact (reads old dirs, writes side
-    //    dirs — no overlap between a scan and the directory it scans).
-    //    The staged artifacts are INDEPENDENT, so their rewrite jobs run
-    //    concurrently (guide §2.6): each one's stage tail back-fills the
-    //    others' idle slots instead of the jobs queuing back to back
-    runOverlapped(staged.map { case (dir, write) => () => {
-      fs.delete(p(s"$path/$dir.compact"), true)
-      write() // the closure writes to $dir.compact
-    }})
-    // 2. tombstone the meta: from here to step 4 the index is
-    //    unloadable (load() requires exactly one meta row)
-    fs.delete(p(metaDir), true)
-    // 3. swap
-    staged.foreach { case (dir, _) =>
-      fs.delete(p(s"$path/$dir"), true)
-      if (!fs.rename(p(s"$path/$dir.compact"), p(s"$path/$dir")))
-        throw new IllegalStateException(
-          s"compaction swap failed for $path/$dir")
-    }
-    // 4. meta last
-    writeMeta()
-  }
 
   /** Compact the exact/near-dup index: `hashes/` folds replay
     * duplicates (same hash appended twice by a crashed-and-replayed
@@ -940,62 +810,52 @@ object DedupIndex {
     * artifacts through membership semantics (semi joins / DISTINCT),
     * which duplicates never changed; compaction only removes the dead
     * rows and restores the build file layout.
+    *
+    * A clean index (nothing absorbed since the last build/compact, per
+    * its `_layout_clean_exact` sentinel) skips the rewrite and ignores
+    * `numFiles`: it keeps the file layout it already has.
     */
   def compact(spark: SparkSession, path: String, numFiles: Int = 32): Unit = {
     require(numFiles > 0, "numFiles must be positive")
     // nothing absorbed since the last build/compact: the artifacts are
     // already folded at their build layout — rewriting them would
-    // reproduce the bytes on disk (the sentinel records that build's
-    // own layout; a caller re-compacting an untouched index to a
-    // DIFFERENT numFiles keeps the existing build layout, which is the
-    // operation's stated contract)
-    if (isClean(spark, path, "exact")) return
+    // reproduce the bytes on disk
+    if (Commit.isClean(spark, path, "exact")) return
     import spark.implicits._
     val idx = load(spark, path)
     val (sn, nh, bd) = (idx.shingleN, idx.numHashes, idx.bands)
-    swapCompacted(spark, path, Seq(
-      "hashes" -> { () =>
-        idx.hashes.groupBy(col("text_hash"))
-          .agg(min(col("keep_id")).as("keep_id"))
-          .repartition(numFiles, col("text_hash"))
-          .sortWithinPartitions("text_hash")
-          .write.mode("overwrite").parquet(s"$path/hashes.compact")
-      },
-      "buckets" -> { () =>
-        idx.buckets.distinct()
-          .repartition(numFiles, col("band"), col("bucket"))
-          .sortWithinPartitions("band", "bucket")
-          .write.mode("overwrite").parquet(s"$path/buckets.compact")
-      }), s"$path/meta", () =>
-      Seq((sn, nh, bd)).toDF("shingle_n", "num_hashes", "bands")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta"))
-    markClean(spark, path, "exact")
+    Commit.swapCompacted(spark, path, Seq(
+      "hashes" -> idx.hashes.groupBy(col("text_hash"))
+        .agg(min(col("keep_id")).as("keep_id"))
+        .repartition(numFiles, col("text_hash"))
+        .sortWithinPartitions("text_hash"),
+      "buckets" -> idx.buckets.distinct()
+        .repartition(numFiles, col("band"), col("bucket"))
+        .sortWithinPartitions("band", "bucket")),
+      s"$path/meta",
+      Seq((sn, nh, bd)).toDF("shingle_n", "num_hashes", "bands"))
+    Commit.markClean(spark, path, "exact")
   }
 
   /** Compact the substring gram index: `grams/` folds to DISTINCT
     * hashes at the build layout. Membership semantics again — probe
-    * parity is exact.
+    * parity is exact. A clean gram index skips the rewrite and ignores
+    * `numFiles`, as in [[compact]].
     */
   def compactSubstring(
       spark: SparkSession, path: String, numFiles: Int = 32): Unit = {
     require(numFiles > 0, "numFiles must be positive")
     // no-op fast path — see [[compact]]'s sentinel note
-    if (isClean(spark, path, "substring")) return
+    if (Commit.isClean(spark, path, "substring")) return
     import spark.implicits._
-    val meta = spark.read.parquet(s"$path/grams_meta").collect()
-    require(meta.length == 1, s"malformed gram-index meta at $path")
-    val k = meta(0).getAs[Int]("span_words")
-    val grams = spark.read.parquet(s"$path/grams")
-    swapCompacted(spark, path, Seq(
-      "grams" -> { () =>
-        grams.distinct()
-          .repartition(numFiles, col("gram_hash"))
-          .sortWithinPartitions("gram_hash")
-          .write.mode("overwrite").parquet(s"$path/grams.compact")
-      }), s"$path/grams_meta", () =>
-      Seq(Tuple1(k)).toDF("span_words")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/grams_meta"))
-    markClean(spark, path, "substring")
+    val k = Commit.readMeta(spark, s"$path/grams_meta")
+      .getAs[Int]("span_words")
+    Commit.swapCompacted(spark, path, Seq(
+      "grams" -> spark.read.parquet(s"$path/grams").distinct()
+        .repartition(numFiles, col("gram_hash"))
+        .sortWithinPartitions("gram_hash")),
+      s"$path/grams_meta", Seq(Tuple1(k)).toDF("span_words"))
+    Commit.markClean(spark, path, "substring")
   }
 
   /** Compact the semantic index. Default (`dropShadowed = false`):
@@ -1015,6 +875,9 @@ object DedupIndex {
     * from-scratch run (SemDeDup's cell-prune view accepts this drift;
     * the exact-parity default does not). Rows shadowed ONLY by other
     * dropped rows are retained, so the rule needs no fixpoint.
+    *
+    * With `dropShadowed = false`, a clean semantic index skips the
+    * rewrite and ignores `numFiles`, as in [[compact]].
     */
   def compactSemantic(
       spark: SparkSession, path: String, numFiles: Int = 32,
@@ -1024,11 +887,9 @@ object DedupIndex {
     // the exact-parity fold: dropShadowed is a space/fidelity trade
     // that removes rows even from a freshly-built index, so it always
     // runs
-    if (!dropShadowed && isClean(spark, path, "semantic")) return
+    if (!dropShadowed && Commit.isClean(spark, path, "semantic")) return
     import spark.implicits._
-    val meta = spark.read.parquet(s"$path/sem_meta").collect()
-    require(meta.length == 1, s"malformed semantic-index meta at $path")
-    val tau = meta(0).getAs[Double]("tau")
+    val tau = Commit.readMeta(spark, s"$path/sem_meta").getAs[Double]("tau")
     // sem_centroids/ is small, frozen, and never appended: it stays
     // in place untouched
     val vecs = spark.read.parquet(s"$path/sem_vecs")
@@ -1049,16 +910,12 @@ object DedupIndex {
           .select(col("d.vec_id")).distinct()
         pinned.join(shadowed, Seq("vec_id"), "left_anti")
       }
-    swapCompacted(spark, path, Seq(
-      "sem_vecs" -> { () =>
-        compacted.repartition(numFiles, col("centroid_id"))
-          .sortWithinPartitions("centroid_id", "vec_id")
-          .write.mode("overwrite").parquet(s"$path/sem_vecs.compact")
-      }), s"$path/sem_meta", () =>
-      Seq(Tuple1(tau)).toDF("tau")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/sem_meta"))
+    Commit.swapCompacted(spark, path, Seq(
+      "sem_vecs" -> compacted.repartition(numFiles, col("centroid_id"))
+        .sortWithinPartitions("centroid_id", "vec_id")),
+      s"$path/sem_meta", Seq(Tuple1(tau)).toDF("tau"))
     // either mode leaves folded vec_ids at the build layout, so a later
     // exact-parity compact of the untouched artifact may skip
-    markClean(spark, path, "semantic")
+    Commit.markClean(spark, path, "semantic")
   }
 }

@@ -23,10 +23,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 private[graft] object EpochStore {
 
-  def fs(spark: SparkSession, path: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** The committed meta row; AnalysisException when nothing committed. */
   def readMeta(spark: SparkSession, path: String): org.apache.spark.sql.Row =
     spark.read.parquet(s"$path/meta").head()
@@ -37,7 +33,7 @@ private[graft] object EpochStore {
 
   /** True when `path` holds any committed epoch payload directory. */
   def hasEpochDirs(spark: SparkSession, path: String): Boolean = {
-    val f = fs(spark, path)
+    val f = Commit.fs(spark, path)
     val base = new org.apache.hadoop.fs.Path(path)
     f.exists(base) &&
       f.listStatus(base).exists(_.getPath.getName.startsWith("registers_v"))
@@ -55,7 +51,7 @@ private[graft] object EpochStore {
     * stream's batch-0 replay self-heal without a marker protocol.
     */
   def requireInitializable(spark: SparkSession, path: String): Unit = {
-    val f = fs(spark, path)
+    val f = Commit.fs(spark, path)
     val base = new org.apache.hadoop.fs.Path(path)
     val epochs =
       if (!f.exists(base)) Seq.empty[String]
@@ -124,7 +120,7 @@ private[graft] object EpochStore {
     // bounded payload: one file
     payload.coalesce(1).write.mode("overwrite")
       .parquet(epochPath(path, version))
-    val f = fs(spark, path)
+    val f = Commit.fs(spark, path)
     val metaDir = new org.apache.hadoop.fs.Path(s"$path/meta")
     val tmpDir = new org.apache.hadoop.fs.Path(s"$path/meta_tmp_$version")
     meta.coalesce(1).write.mode("overwrite").parquet(tmpDir.toString)

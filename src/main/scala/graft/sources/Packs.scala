@@ -84,9 +84,7 @@ object Packs {
     // data files: a crash anywhere after this point leaves no meta, so
     // loadPacks fails loudly instead of pairing stale meta (old
     // fingerprint/params) with partial or rewritten token ids
-    val metaDir = new org.apache.hadoop.fs.Path(s"$path/meta")
-    metaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(metaDir, true)
+    Commit.tombstone(spark, s"$path/meta")
     val shards = math.max(1, numFiles / nBuckets)
     packs
       .withColumn("__shard", pmod(col("pack_id"), lit(shards.toLong)))
@@ -113,11 +111,10 @@ object Packs {
     * silently change the schema downstream code joins on).
     */
   def loadPacks(spark: SparkSession, path: String): Loaded = {
-    val meta = spark.read.parquet(s"$path/meta").collect()
-    require(meta.length == 1, s"malformed pack meta at $path")
-    val seqTokens = meta(0).getAs[Long]("seq_tokens")
-    val nBuckets = meta(0).getAs[Int]("n_buckets")
-    val fp = meta(0).getAs[String]("merges_fingerprint")
+    val meta = Commit.readMeta(spark, s"$path/meta")
+    val seqTokens = meta.getAs[Long]("seq_tokens")
+    val nBuckets = meta.getAs[Int]("n_buckets")
+    val fp = meta.getAs[String]("merges_fingerprint")
     val packs = spark.read.parquet(s"$path/packs")
       .withColumn("pack_bucket", col("pack_bucket").cast("long"))
       .select("pack_bucket", "pack_id", "n_tokens", "token_ids")

@@ -76,11 +76,7 @@ object Release {
     require(nShards > 0, "nShards must be positive")
     val spark = docs.sparkSession
     import spark.implicits._
-    val hconf = spark.sparkContext.hadoopConfiguration
-    Seq(s"$path/manifest", s"$path/release_meta").foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(hconf).delete(hp, true)
-    }
+    Commit.tombstone(spark, s"$path/manifest", s"$path/release_meta")
     val sharded = docs.withColumn("shard", shardCol(idCol, nShards))
     sharded.repartition(nShards, col("shard"))
       .write.mode("overwrite").partitionBy("shard")
@@ -141,73 +137,43 @@ object Release {
       path: String,
       batchId: String = ""): Unit = {
     val spark = batch.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def fs(p: String) =
-      new org.apache.hadoop.fs.Path(p).getFileSystem(hconf)
-    def exists(p: String) =
-      fs(p).exists(new org.apache.hadoop.fs.Path(p))
     val batchDir = s"$path/batches/$batchId"
-    if (batchId.nonEmpty && exists(s"$batchDir/done")) return
-    val nShards = spark.read.parquet(s"$path/release_meta")
-      .head().getAs[Int]("n_shards")
-    val sharded = batch.withColumn("shard", shardCol(idCol, nShards))
-      .localCheckpoint() // touched-set + write share one computation
-    val touched = sharded.select(col("shard")).distinct()
-      .collect().map(_.getLong(0)).toSet
-    def listShardFiles(): Seq[(Long, String)] = touched.toSeq.flatMap {
-      s =>
-        val dir = new org.apache.hadoop.fs.Path(s"$path/data/shard=$s")
-        val f = dir.getFileSystem(hconf)
-        if (!f.exists(dir)) Seq.empty
-        else f.listStatus(dir).toSeq.filter(_.isFile)
-          .map(st => (s, st.getPath.getName))
-    }
-    import spark.implicits._
-    // capture old rows BEFORE the tombstone (bounded: one per shard)
-    val oldManifest: Array[org.apache.spark.sql.Row] =
-      if (batchId.isEmpty) spark.read.parquet(s"$path/manifest").collect()
-      else if (exists(s"$batchDir/intent_ok")) {
-        // crashed prior attempt: restore its pre-mutation view, then
-        // delete the files that attempt added to the touched shards
-        val sealedFiles = spark.read.parquet(s"$batchDir/files")
-          .as[(Long, String)].collect().toSet
-        listShardFiles().filterNot(sealedFiles).foreach { case (s, n) =>
-          fs(path).delete(new org.apache.hadoop.fs.Path(
-            s"$path/data/shard=$s/$n"), false)
+    onceIf(spark, batchId, s"$batchDir/done") {
+      val nShards = nShardsOf(spark, path)
+      val sharded = batch.withColumn("shard", shardCol(idCol, nShards))
+        .localCheckpoint() // touched-set + write share one computation
+      val touched = sharded.select(col("shard")).distinct()
+        .collect().map(_.getLong(0)).toSet
+      // capture old rows BEFORE the tombstone (bounded: one per shard)
+      val oldManifest =
+        if (batchId.isEmpty)
+          spark.read.parquet(s"$path/manifest").collect().toSeq
+        else {
+          val intent = sealIntent(spark, path, batchDir, touched)
+          // crashed prior attempt: delete the files it added to the
+          // touched shards before re-appending
+          if (intent.resumed)
+            deleteUnsealed(spark, path, touched, intent.files.toSet)
+          intent.oldManifest
         }
-        spark.read.parquet(s"$batchDir/old_manifest").collect()
-      } else {
-        // fresh attempt: seal the intent snapshot before any mutation
-        fs(path).delete(new org.apache.hadoop.fs.Path(batchDir), true)
-        val live = spark.read.parquet(s"$path/manifest")
-        live.coalesce(1).write.parquet(s"$batchDir/old_manifest")
-        listShardFiles().toDF("shard", "file")
-          .coalesce(1).write.parquet(s"$batchDir/files")
-        fs(path).mkdirs(new org.apache.hadoop.fs.Path(
-          s"$batchDir/intent_ok"))
-        live.collect()
-      }
-    val manifestDir = new org.apache.hadoop.fs.Path(s"$path/manifest")
-    manifestDir.getFileSystem(hconf).delete(manifestDir, true)
-    sharded.repartition(
-        math.max(1, touched.size), col("shard"))
-      .write.mode("append").partitionBy("shard")
-      .option("compression", "gzip")
-      .json(s"$path/data")
-    val schema = org.apache.spark.sql.types.StructType(
-      batch.schema.fields :+ org.apache.spark.sql.types.StructField(
-        "shard", org.apache.spark.sql.types.LongType))
-    val recomputed = manifestOf(
-      spark.read.schema(schema).json(s"$path/data")
-        .filter(col("shard").isInCollection(touched)), idCol, textCol)
-    val keptRows = oldManifest.filterNot(r =>
-      touched(r.getAs[Long]("shard")))
-    val kept = spark.createDataFrame(
-      spark.sparkContext.parallelize(keptRows.toSeq), recomputed.schema)
-    recomputed.unionByName(kept)
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/manifest")
-    if (batchId.nonEmpty)
-      fs(path).mkdirs(new org.apache.hadoop.fs.Path(s"$batchDir/done"))
+      Commit.tombstone(spark, s"$path/manifest")
+      sharded.repartition(math.max(1, touched.size), col("shard"))
+        .write.mode("append").partitionBy("shard")
+        .option("compression", "gzip")
+        .json(s"$path/data")
+      val schema = org.apache.spark.sql.types.StructType(
+        batch.schema.fields :+ org.apache.spark.sql.types.StructField(
+          "shard", org.apache.spark.sql.types.LongType))
+      val recomputed = manifestOf(
+        spark.read.schema(schema).json(s"$path/data")
+          .filter(col("shard").isInCollection(touched)), idCol, textCol)
+      val keptRows = oldManifest.filterNot(r =>
+        touched(r.getAs[Long]("shard")))
+      val kept = spark.createDataFrame(
+        spark.sparkContext.parallelize(keptRows), recomputed.schema)
+      recomputed.unionByName(kept)
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/manifest")
+    }
   }
 
   /** Remove documents from a published release — the takedown path
@@ -257,8 +223,7 @@ object Release {
       schema: org.apache.spark.sql.types.StructType,
       token: String = ""): Unit = {
     val spark = ids.sparkSession
-    val nShards = spark.read.parquet(s"$path/release_meta")
-      .head().getAs[Int]("n_shards")
+    val nShards = nShardsOf(spark, path)
     val keys = ids.select(col(idCol)).distinct().localCheckpoint()
     val touched = keys.select(shardCol(idCol, nShards).as("s")).distinct()
       .collect().map(_.getLong(0)).toSet
@@ -294,9 +259,8 @@ object Release {
       idCol: String,
       textCol: String,
       token: String = ""): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
     val dataDir = new org.apache.hadoop.fs.Path(s"$path/data")
-    val f = dataDir.getFileSystem(hconf)
+    val f = Commit.fs(spark, s"$path/data")
     val touched: Set[Long] =
       if (!f.exists(dataDir)) Set.empty
       else f.listStatus(dataDir).toSeq
@@ -324,110 +288,142 @@ object Release {
       token: String,
       touched: Set[Long],
       transform: DataFrame => DataFrame): Unit = {
-    import spark.implicits._
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def fs(p: String) =
-      new org.apache.hadoop.fs.Path(p).getFileSystem(hconf)
-    def exists(p: String) =
-      fs(p).exists(new org.apache.hadoop.fs.Path(p))
     val tokenDir = s"$path/maintenance/$token"
-    if (token.nonEmpty && exists(s"$tokenDir/done")) return
-    if (touched.isEmpty) {
-      if (token.nonEmpty)
-        fs(path).mkdirs(new org.apache.hadoop.fs.Path(s"$tokenDir/done"))
-      return
-    }
-    def listTouchedFiles(): Seq[(Long, String)] = touched.toSeq.flatMap {
-      s =>
-        val dir = new org.apache.hadoop.fs.Path(s"$path/data/shard=$s")
-        val f = dir.getFileSystem(hconf)
-        if (!f.exists(dir)) Seq.empty
-        else f.listStatus(dir).toSeq.filter(_.isFile)
-          .map(st => (s, st.getPath.getName))
-    }
-    // phase 1 — seal the intent: old manifest rows + exact file listing
-    val (oldManifest, sealedFiles) =
-      if (token.isEmpty)
-        (spark.read.parquet(s"$path/manifest").collect().toSeq,
-          listTouchedFiles())
-      else if (exists(s"$tokenDir/intent_ok"))
-        (spark.read.parquet(s"$tokenDir/old_manifest").collect().toSeq,
-          spark.read.parquet(s"$tokenDir/files")
-            .as[(Long, String)].collect().toSeq)
-      else {
-        fs(path).delete(new org.apache.hadoop.fs.Path(tokenDir), true)
-        val live = spark.read.parquet(s"$path/manifest")
-        live.coalesce(1).write.parquet(s"$tokenDir/old_manifest")
-        val files = listTouchedFiles()
-        files.toDF("shard", "file")
-          .coalesce(1).write.parquet(s"$tokenDir/files")
-        fs(path).mkdirs(new org.apache.hadoop.fs.Path(
-          s"$tokenDir/intent_ok"))
-        (live.collect().toSeq, files)
+    onceIf(spark, token, s"$tokenDir/done") {
+      if (touched.nonEmpty) {
+        // phase 1 — seal the intent: old manifest rows + exact listing
+        val (oldManifest, sealedFiles) =
+          if (token.isEmpty)
+            (spark.read.parquet(s"$path/manifest").collect().toSeq,
+              listShardFiles(spark, path, touched))
+          else {
+            val intent = sealIntent(spark, path, tokenDir, touched)
+            (intent.oldManifest, intent.files)
+          }
+        // phase 2 — write survivors as NEW files; manifest tombstoned
+        // first
+        if (token.isEmpty || !Commit.exists(spark, s"$tokenDir/written_ok")) {
+          // a crashed prior attempt's partial output is any file the
+          // seal doesn't know; remove it before re-writing
+          deleteUnsealed(spark, path, touched, sealedFiles.toSet)
+          Commit.tombstone(spark, s"$path/manifest")
+          val sealedPaths = sealedFiles.map { case (s, n) =>
+            s"$path/data/shard=$s/$n"
+          }
+          if (sealedPaths.nonEmpty) {
+            val sealedRows = spark.read.schema(schema)
+              .option("basePath", s"$path/data").json(sealedPaths: _*)
+            transform(sealedRows)
+              .repartition(math.max(1, touched.size), col("shard"))
+              .write.mode("append").partitionBy("shard")
+              .option("compression", "gzip")
+              .json(s"$path/data")
+          }
+          if (token.nonEmpty) Commit.mkdirs(spark, s"$tokenDir/written_ok")
+        } else Commit.tombstone(spark, s"$path/manifest")
+        // phase 3 — drop the sealed originals (idempotent), recompute
+        // the touched rows from the live dirs, commit the merged manifest
+        val f = Commit.fs(spark, path)
+        def p(s: Long) = new org.apache.hadoop.fs.Path(s"$path/data/shard=$s")
+        sealedFiles.foreach { case (s, n) =>
+          f.delete(new org.apache.hadoop.fs.Path(p(s), n), false)
+        }
+        def hasFiles(s: Long) = f.listStatus(p(s)).exists(_.isFile)
+        val liveTouchedDirs = touched.toSeq
+          .filter(s => f.exists(p(s)) && hasFiles(s))
+          .map(s => s"$path/data/shard=$s")
+        // a fully-emptied shard keeps no dir (and no manifest row)
+        touched.foreach { s =>
+          if (f.exists(p(s)) && !hasFiles(s)) f.delete(p(s), true)
+        }
+        val keptRows = oldManifest.filterNot(r =>
+          touched(r.getAs[Long]("shard")))
+        val recomputed =
+          if (liveTouchedDirs.isEmpty)
+            spark.createDataFrame(
+              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+              manifestSchema)
+          else manifestOf(spark.read.schema(schema)
+            .option("basePath", s"$path/data").json(liveTouchedDirs: _*),
+            idCol, textCol)
+        val kept = spark.createDataFrame(
+          spark.sparkContext.parallelize(keptRows), manifestSchema)
+        recomputed.unionByName(kept)
+          .coalesce(1).write.mode("overwrite").parquet(s"$path/manifest")
       }
-    val sealedSet = sealedFiles.toSet
-    // phase 2 — write survivors as NEW files; manifest tombstoned first
-    val manifestDir = new org.apache.hadoop.fs.Path(s"$path/manifest")
-    if (token.isEmpty || !exists(s"$tokenDir/written_ok")) {
-      // a crashed prior attempt's partial output is any file the seal
-      // doesn't know; remove it before re-writing
-      listTouchedFiles().filterNot(sealedSet).foreach { case (s, n) =>
-        fs(path).delete(new org.apache.hadoop.fs.Path(
-          s"$path/data/shard=$s/$n"), false)
-      }
-      manifestDir.getFileSystem(hconf).delete(manifestDir, true)
-      val sealedPaths = sealedFiles.map { case (s, n) =>
-        s"$path/data/shard=$s/$n"
-      }
-      if (sealedPaths.nonEmpty) {
-        val sealedRows = spark.read.schema(schema)
-          .option("basePath", s"$path/data").json(sealedPaths: _*)
-        transform(sealedRows)
-          .repartition(math.max(1, touched.size), col("shard"))
-          .write.mode("append").partitionBy("shard")
-          .option("compression", "gzip")
-          .json(s"$path/data")
-      }
-      if (token.nonEmpty)
-        fs(path).mkdirs(new org.apache.hadoop.fs.Path(
-          s"$tokenDir/written_ok"))
-    } else {
-      manifestDir.getFileSystem(hconf).delete(manifestDir, true)
     }
-    // phase 3 — drop the sealed originals (idempotent), recompute the
-    // touched rows from the live dirs, commit the merged manifest
-    sealedFiles.foreach { case (s, n) =>
-      val p = new org.apache.hadoop.fs.Path(s"$path/data/shard=$s/$n")
-      fs(path).delete(p, false)
+  }
+
+  /** [[Commit.once]] keyed by a retry token; a one-shot call (empty
+    * token) runs `body` with no marker.
+    */
+  private def onceIf(spark: SparkSession, token: String, marker: String)(
+      body: => Unit): Unit =
+    if (token.isEmpty) body else Commit.once(spark, marker)(body)
+
+  private def nShardsOf(spark: SparkSession, path: String): Int =
+    spark.read.parquet(s"$path/release_meta").head().getAs[Int]("n_shards")
+
+  /** `(shard, file name)` of every data file in the touched shards. */
+  private def listShardFiles(
+      spark: SparkSession, path: String,
+      touched: Set[Long]): Seq[(Long, String)] = {
+    val f = Commit.fs(spark, path)
+    touched.toSeq.flatMap { s =>
+      val dir = new org.apache.hadoop.fs.Path(s"$path/data/shard=$s")
+      if (!f.exists(dir)) Seq.empty
+      else f.listStatus(dir).toSeq.filter(_.isFile)
+        .map(st => (s, st.getPath.getName))
     }
-    val liveTouchedDirs = touched.toSeq.map(s => s"$path/data/shard=$s")
-      .filter { p =>
-        exists(p) && fs(p).listStatus(
-          new org.apache.hadoop.fs.Path(p)).exists(_.isFile)
-      }
-    // a fully-emptied shard keeps no dir (and no manifest row)
-    touched.foreach { s =>
-      val p = s"$path/data/shard=$s"
-      if (exists(p) && !fs(p).listStatus(
-          new org.apache.hadoop.fs.Path(p)).exists(_.isFile))
-        fs(path).delete(new org.apache.hadoop.fs.Path(p), true)
+  }
+
+  /** Delete the touched shards' data files the intent seal does not
+    * know: the partial output of a crashed prior attempt.
+    */
+  private def deleteUnsealed(
+      spark: SparkSession, path: String, touched: Set[Long],
+      sealedFiles: Set[(Long, String)]): Unit = {
+    val f = Commit.fs(spark, path)
+    listShardFiles(spark, path, touched).filterNot(sealedFiles).foreach {
+      case (s, n) =>
+        f.delete(new org.apache.hadoop.fs.Path(s"$path/data/shard=$s/$n"),
+          false)
     }
-    val keptRows = oldManifest.filterNot(r =>
-      touched(r.getAs[Long]("shard")))
-    val recomputed =
-      if (liveTouchedDirs.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          manifestSchema)
-      else manifestOf(spark.read.schema(schema)
-        .option("basePath", s"$path/data").json(liveTouchedDirs: _*),
-        idCol, textCol)
-    val kept = spark.createDataFrame(
-      spark.sparkContext.parallelize(keptRows), manifestSchema)
-    recomputed.unionByName(kept)
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/manifest")
-    if (token.nonEmpty)
-      fs(path).mkdirs(new org.apache.hadoop.fs.Path(s"$tokenDir/done"))
+  }
+
+  /** A retryable mutation's intent: the manifest rows and touched-shard
+    * data files as they were before it mutated anything, and whether
+    * they came from an earlier attempt's seal.
+    */
+  private final case class Intent(
+      oldManifest: Seq[org.apache.spark.sql.Row],
+      files: Seq[(Long, String)],
+      resumed: Boolean)
+
+  /** The intent seal of [[appendRelease]] and [[maintainShards]] under
+    * `dir`: when `intent_ok` exists, a prior attempt sealed it and its
+    * capture is read back; otherwise any half-written snapshot is wiped
+    * and the live manifest plus the touched shards' file listing are
+    * captured and sealed by `intent_ok` — the live manifest is still
+    * intact then, because mutation only starts after the seal.
+    */
+  private def sealIntent(
+      spark: SparkSession, path: String, dir: String,
+      touched: Set[Long]): Intent = {
+    import spark.implicits._
+    if (Commit.exists(spark, s"$dir/intent_ok"))
+      Intent(spark.read.parquet(s"$dir/old_manifest").collect().toSeq,
+        spark.read.parquet(s"$dir/files").as[(Long, String)].collect().toSeq,
+        resumed = true)
+    else {
+      Commit.tombstone(spark, dir)
+      val live = spark.read.parquet(s"$path/manifest")
+      live.coalesce(1).write.parquet(s"$dir/old_manifest")
+      val files = listShardFiles(spark, path, touched)
+      files.toDF("shard", "file").coalesce(1).write.parquet(s"$dir/files")
+      Commit.mkdirs(spark, s"$dir/intent_ok")
+      Intent(live.collect().toSeq, files, resumed = false)
+    }
   }
 
   private val manifestSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -508,12 +504,10 @@ object Release {
       schema: org.apache.spark.sql.types.StructType,
       idCol: String,
       textCol: String): DataFrame = {
-    def nShardsOf(p: String): Int =
-      spark.read.parquet(s"$p/release_meta").head().getAs[Int]("n_shards")
     val la = loadRelease(spark, pathA, schema)
     val lb = loadRelease(spark, pathB, schema)
     val pruned: Option[Seq[Long]] =
-      if (nShardsOf(pathA) != nShardsOf(pathB)) None
+      if (nShardsOf(spark, pathA) != nShardsOf(spark, pathB)) None
       else {
         val a = la.manifest.select(col("shard"), col("n_docs").as("__nd"),
           col("n_chars").as("__nc"), col("checksum").as("__ck"))

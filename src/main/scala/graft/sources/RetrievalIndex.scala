@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   *     place and can never double-append rows (the [[Release]] lesson
   *     — `mode(append)` plus retry is silent duplication).
   *   - `ingested/`       — batch markers for the exactly-once
-  *     streaming cursor (same protocol as [[DedupIndex.ingestBatch]]).
+  *     streaming cursor ([[Commit.once]]).
   *   - `meta/`           — written LAST (tombstone-first discipline):
   *     a crash mid-build/mid-compact leaves no meta, so [[load]] fails
   *     loudly instead of pairing stale stats with half-built postings.
@@ -110,11 +110,9 @@ object RetrievalIndex {
     require(numFiles > 0, "numFiles must be positive")
     val spark = docs.sparkSession
     import spark.implicits._
-    val hconf = spark.sparkContext.hadoopConfiguration
-    Seq("meta", "ingested", "batch_postings", "batch_stats").foreach { d =>
-      val hp = new org.apache.hadoop.fs.Path(s"$path/$d")
-      hp.getFileSystem(hconf).delete(hp, true)
-    }
+    Commit.tombstone(spark,
+      Seq("meta", "ingested", "batch_postings", "batch_stats")
+        .map(d => s"$path/$d"): _*)
     postingsOf(docs, idCol, textCol)
       .repartitionByRange(numFiles, col("term"), col("doc_id"))
       .sortWithinPartitions("term", "doc_id")
@@ -127,18 +125,15 @@ object RetrievalIndex {
 
   private def nonEmptyDir(spark: SparkSession, d: String): Boolean = {
     val hp = new org.apache.hadoop.fs.Path(d)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Commit.fs(spark, d)
     fs.exists(hp) && fs.listStatus(hp).nonEmpty
   }
 
   def load(spark: SparkSession, path: String): Loaded = {
-    val meta = spark.read.parquet(s"$path/meta").collect()
-    require(meta.length == 1, s"malformed retrieval-index meta at $path")
-    def nonEmptyDir(d: String): Boolean =
-      RetrievalIndex.nonEmptyDir(spark, d)
+    Commit.readMeta(spark, s"$path/meta") // the load gate
     def withDeltas(base: String, deltas: String): DataFrame = {
       val b = spark.read.parquet(base)
-      if (nonEmptyDir(deltas))
+      if (nonEmptyDir(spark, deltas))
         b.unionByName(spark.read
           .option("recursiveFileLookup", "true").parquet(deltas))
       else b
@@ -218,26 +213,20 @@ object RetrievalIndex {
       numFiles: Int = 8): Unit = {
     require(appendId.nonEmpty && !appendId.contains("/"),
       s"appendId must be a single path segment, got '$appendId'")
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val marker = new org.apache.hadoop.fs.Path(
-      s"$path/ingested/append_$appendId")
-    val fs = marker.getFileSystem(hconf)
-    if (fs.exists(marker)) return
-    // the two delta writes are independent idempotent overwrites to
-    // their own directories, so they run OVERLAPPED (guide §2.6); the
-    // marker still lands strictly after both. The mid-append crash
-    // window (reader sees one delta without the other until the replay
-    // converges) existed under the sequential order too — only which
-    // delta can be observed alone changes
-    DedupIndex.runOverlapped(Seq(
-      () => postingsOf(newDocs, idCol, textCol)
+    // stats strictly AFTER postings: a crash between the two leaves
+    // postings under the old stats (the class doc's crash window),
+    // never stats without their postings, which would skew every doc's
+    // score until the replay. The stats write is one coalesce(1) row,
+    // so running it after the postings costs next to nothing
+    Commit.once(spark, s"$path/ingested/append_$appendId") {
+      postingsOf(newDocs, idCol, textCol)
         .repartitionByRange(numFiles, col("term"), col("doc_id"))
         .sortWithinPartitions("term", "doc_id")
-        .write.mode("overwrite").parquet(s"$path/batch_postings/$appendId"),
-      () => statsOf(newDocs, idCol, textCol)
+        .write.mode("overwrite").parquet(s"$path/batch_postings/$appendId")
+      statsOf(newDocs, idCol, textCol)
         .coalesce(1).write.mode("overwrite")
-        .parquet(s"$path/batch_stats/$appendId")))
-    fs.mkdirs(marker)
+        .parquet(s"$path/batch_stats/$appendId")
+    }
   }
 
   /** The streaming ingest cursor: foreachBatch → one [[append]] keyed
@@ -257,11 +246,16 @@ object RetrievalIndex {
 
   /** Fold the append deltas back into the build layout. Postings rows
     * are already distinct by (term, doc) across deltas (append
-    * contract), so this is a pure re-bucket — probe results are
-    * bit-identical before and after; stats fold to one exact row.
-    * Ingest markers SURVIVE compaction (unlike a rebuild): the folded
-    * state still contains those batches, and a replay after compaction
-    * must keep no-oping.
+    * contract), so this is a pure re-bucket — probe scores are equal
+    * before and after up to floating-point summation order (the
+    * re-bucket changes the order the per-(qid, doc) `sum` adds its
+    * terms in); stats fold to one exact row. Ingest markers SURVIVE
+    * compaction (unlike a rebuild): the folded state still contains
+    * those batches, and a replay after compaction must keep no-oping.
+    *
+    * An index with no append deltas since the last build/compact skips
+    * the rewrite and ignores `numFiles`: it keeps the file layout it
+    * already has.
     */
   def compact(spark: SparkSession, path: String, numFiles: Int = 32): Unit = {
     require(numFiles > 0, "numFiles must be positive")
@@ -274,25 +268,12 @@ object RetrievalIndex {
     import spark.implicits._
     val idx = load(spark, path)
     val (n, s) = (idx.nDocs, idx.sumDl)
-    DedupIndex.swapCompacted(spark, path, Seq(
-      "postings" -> { () =>
-        idx.postings
-          .repartitionByRange(numFiles, col("term"), col("doc_id"))
-          .sortWithinPartitions("term", "doc_id")
-          .write.mode("overwrite").parquet(s"$path/postings.compact")
-      },
-      "stats" -> { () =>
-        Seq((n, s)).toDF("n_docs", "sum_dl")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$path/stats.compact")
-      }), s"$path/meta", () => {
-      val hconf = spark.sparkContext.hadoopConfiguration
-      Seq("batch_postings", "batch_stats").foreach { d =>
-        val hp = new org.apache.hadoop.fs.Path(s"$path/$d")
-        hp.getFileSystem(hconf).delete(hp, true)
-      }
-      Seq(Tuple1(1)).toDF("format_version")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    })
+    Commit.swapCompacted(spark, path, Seq(
+      "postings" -> idx.postings
+        .repartitionByRange(numFiles, col("term"), col("doc_id"))
+        .sortWithinPartitions("term", "doc_id"),
+      "stats" -> Seq((n, s)).toDF("n_docs", "sum_dl").coalesce(1)),
+      s"$path/meta", Seq(Tuple1(1)).toDF("format_version"),
+      folded = Seq(s"$path/batch_postings", s"$path/batch_stats"))
   }
 }

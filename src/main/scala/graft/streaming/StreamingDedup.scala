@@ -341,7 +341,9 @@ object StreamingDedup {
     * checkpoint lineage, so a fresh temp checkpoint against a used
     * index would collide with absorbed batches' markers and silently
     * skip them. Exactly-once: foreachBatch replays are absorbed by
-    * `ingestBatch`'s marker/`_SUCCESS` protocol — see its scaladoc.
+    * `ingestBatch`'s absorb-marker / output-sentinel protocol (its own
+    * `out_<id>` sentinel, never the committer's `_SUCCESS`) — see its
+    * scaladoc.
     */
   def indexedDedupStream(
       stream: DataFrame,
@@ -351,12 +353,19 @@ object StreamingDedup {
       textCol: String,
       numFiles: Int = 8)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    indexedStream(stream)(graft.sources.DedupIndex.ingestBatch(_,
+      indexPath, outPath, _, _, idCol, textCol, numFiles))
+
+  /** The foreachBatch writer of the absorbing index streams: each
+    * micro-batch goes to `ingest(session, batch, batchId)`.
+    */
+  private def indexedStream(stream: DataFrame)(
+      ingest: (SparkSession, DataFrame, Long) => Unit)
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     stream.writeStream.foreachBatch {
       (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
           batchId: Long) =>
-        graft.sources.DedupIndex.ingestBatch(batch.sparkSession,
-          indexPath, outPath, batch.toDF(), batchId, idCol, textCol,
-          numFiles)
+        ingest(batch.sparkSession, batch.toDF(), batchId)
     }
 
   /** [[indexedDedupStream]]'s SUBSTRING sibling: each micro-batch is
@@ -369,7 +378,7 @@ object StreamingDedup {
     * see [[indexedDedupStream]]'s contract note). Same contracts as
     * the exact/near-dup form: durable `checkpointLocation` required
     * (markers key on batch id), at-least-once replays converge via the
-    * `_SUCCESS`/marker protocol.
+    * absorb-marker / output-sentinel protocol (never `_SUCCESS`).
     */
   def indexedSubstringStream(
       stream: DataFrame,
@@ -379,13 +388,8 @@ object StreamingDedup {
       textCol: String,
       numFiles: Int = 8)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          batchId: Long) =>
-        graft.sources.DedupIndex.ingestSubstringBatch(batch.sparkSession,
-          indexPath, outPath, batch.toDF(), batchId, idCol, textCol,
-          numFiles)
-    }
+    indexedStream(stream)(graft.sources.DedupIndex.ingestSubstringBatch(_,
+      indexPath, outPath, _, _, idCol, textCol, numFiles))
 
   /** [[indexedDedupStream]]'s SEMANTIC sibling: each micro-batch of
     * embeddings is SemDeDup'd against the frozen semantic index
@@ -407,13 +411,8 @@ object StreamingDedup {
       vecCol: String,
       numFiles: Int = 8)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          batchId: Long) =>
-        graft.sources.DedupIndex.ingestSemanticBatch(batch.sparkSession,
-          indexPath, outPath, batch.toDF(), batchId, idCol, vecCol,
-          numFiles)
-    }
+    indexedStream(stream)(graft.sources.DedupIndex.ingestSemanticBatch(_,
+      indexPath, outPath, _, _, idCol, vecCol, numFiles))
 
   /** Decontaminate a document stream against a FROZEN
     * [[graft.sources.DeconIndex]] — the held-out-corpus scale form of

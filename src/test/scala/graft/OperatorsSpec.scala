@@ -5587,6 +5587,11 @@ class OperatorsSpec extends AnyFunSuite {
     assert(files(s"$path/hashes") === h0 &&
       files(s"$path/buckets") === b0,
       "compact of an untouched index must skip the rewrite")
+    // ...whatever numFiles asks for: a clean index keeps its layout
+    DedupIndex.compact(spark, path, numFiles = 5)
+    assert(files(s"$path/hashes") === h0 &&
+      files(s"$path/buckets") === b0,
+      "a clean index ignores numFiles")
     // an absorb re-arms the rewrite...
     val b = DedupIndex.dedupBatch(spark, path,
       Seq((100L, "a novel batch document body")).toDF("doc_id", "text"),
@@ -5609,6 +5614,9 @@ class OperatorsSpec extends AnyFunSuite {
     RetrievalIndex.compact(spark, rpath, numFiles = 2)
     assert(files(s"$rpath/postings") === p0,
       "no append deltas → nothing to fold → no rewrite")
+    RetrievalIndex.compact(spark, rpath, numFiles = 5)
+    assert(files(s"$rpath/postings") === p0,
+      "an index with no deltas ignores numFiles")
     RetrievalIndex.append(spark, rpath,
       Seq((100L, "appended words here")).toDF("doc_id", "text"),
       "doc_id", "text", "a0", numFiles = 2)
@@ -5618,6 +5626,19 @@ class OperatorsSpec extends AnyFunSuite {
     val scored = RetrievalIndex.score(spark, rpath,
       Seq(0L -> "alpha appended")).collect()
     assert(scored.nonEmpty)
+  }
+
+  test("Commit.runAll awaits every task before it rethrows the first" +
+      " failure") {
+    val siblingDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalStateException] {
+      graft.sources.Commit.runAll(Seq(
+        () => throw new IllegalStateException("first task fails at once"),
+        () => { Thread.sleep(500); siblingDone.set(true) }))
+    }
+    assert(e.getMessage === "first task fails at once")
+    assert(siblingDone.get,
+      "the slow sibling must have finished before runAll rethrew")
   }
 
   test("bm25Scores: exact Okapi/Lucene values on a hand-checked corpus;" +
