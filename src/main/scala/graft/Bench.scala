@@ -115,7 +115,11 @@ object Bench {
     // stop Spark BEFORE printing the record: a bounded tail capture of
     // stdout must always contain the one-line JSON, so it goes out as
     // the absolute last stdout line, after any shutdown noise
-    spark.stop()
+    // a failing shutdown must not swallow the record
+    try spark.stop()
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] spark.stop() failed: $e")
+    }
     println(json)
   }
 }

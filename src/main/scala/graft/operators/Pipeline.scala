@@ -214,8 +214,11 @@ object Pipeline {
     if (stripBoilerplate)
       d = TextAnalysis.stripBoilerplateLines(d, idCol, textCol)
         .select(col(idCol), col("text_clean").as(textCol))
+    // a doc whose every line repeats an earlier doc's is emptied, and
+    // is dropped like the substring and scrub stages' empties below
     if (dedupLines)
       d = Dedup.dedupLines(d, idCol, textCol)
+        .filter(length(col("text_kept")) > 0)
         .select(col(idCol), col("text_kept").as(textCol))
     // exact substring dedup AFTER line dedup (line dedup removes whole
     // duplicated lines cheaply; the gram pass then only pays for what

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions.hash60
+import graft.sources.EpochStore
 
 /** Deterministic sampling and split assignment for training-data mixing.
   * Not part of the reference surface — a north-star extension every
@@ -218,9 +219,9 @@ object Sampling {
   final case class LoadedSample(rows: DataFrame, k: Int)
 
   private def sampleMeta(spark: org.apache.spark.sql.SparkSession,
-      idCol: String, k: Int, version: Long): DataFrame = {
+      idCol: String, k: Int): EpochStore.Meta = {
     import spark.implicits._
-    Seq((idCol, k, version)).toDF("id_col", "k", "version")
+    (version, _) => Seq((idCol, k, version)).toDF("id_col", "k", "version")
   }
 
   /** Persist a bottom-k sample of `df` at `path` (epoch 0) — the
@@ -236,17 +237,15 @@ object Sampling {
   def writeSampleIndex(
       df: DataFrame, idCol: String, path: String, k: Int): Unit = {
     require(k > 0, "k must be positive")
-    graft.sources.EpochStore.writeEpoch(df.sparkSession, path,
-      bottomKSample(df, idCol, k),
-      sampleMeta(df.sparkSession, idCol, k, 0L), 0L)
+    EpochStore.build(df.sparkSession, path, bottomKSample(df, idCol, k),
+      sampleMeta(df.sparkSession, idCol, k))
   }
 
   /** Load the live epoch's sample rows. Fails if nothing committed. */
   def loadSampleIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): LoadedSample = {
-    val m = graft.sources.EpochStore.readMeta(spark, path)
-    LoadedSample(spark.read.parquet(graft.sources.EpochStore.epochPath(
-      path, m.getAs[Long]("version"))), m.getAs[Int]("k"))
+    val (m, rows) = EpochStore.load(spark, path)
+    LoadedSample(rows, m.getAs[Int]("k"))
   }
 
   /** Fold a new batch into the persisted sample: bottom-k of the batch
@@ -267,25 +266,19 @@ object Sampling {
   def appendSampleIndex(
       batch: DataFrame, idCol: String, path: String, k: Int = 1000): Unit = {
     val spark = batch.sparkSession
-    if (!graft.sources.EpochStore.hasMeta(spark, path)) {
-      graft.sources.EpochStore.requireInitializable(spark, path)
-      writeSampleIndex(batch, idCol, path, k); return
+    EpochStore.append(spark, path, check = m => {
+      val idc = m.getAs[String]("id_col")
+      require(idc == idCol,
+        s"sample index at $path keys on '$idc', not '$idCol'")
+    })(_ => writeSampleIndex(batch, idCol, path, k)) { (m, stored) =>
+      val kk = m.getAs[Int]("k")
+      val fresh = batch.join(
+        broadcast(stored.select(col(idCol))), Seq(idCol), "left_anti")
+      (bottomKSample(
+        stored.drop("sample_rank")
+          .unionByName(bottomKSample(fresh, idCol, kk).drop("sample_rank")),
+        idCol, kk).localCheckpoint(), sampleMeta(spark, idCol, kk))
     }
-    val m = graft.sources.EpochStore.readMeta(spark, path)
-    val (idc, kk, v) = (m.getAs[String]("id_col"), m.getAs[Int]("k"),
-      m.getAs[Long]("version"))
-    require(idc == idCol,
-      s"sample index at $path keys on '$idc', not '$idCol'")
-    val stored = spark.read.parquet(
-      graft.sources.EpochStore.epochPath(path, v))
-    val fresh = batch.join(
-      broadcast(stored.select(col(idCol))), Seq(idCol), "left_anti")
-    val merged = bottomKSample(
-      stored.drop("sample_rank")
-        .unionByName(bottomKSample(fresh, idCol, kk).drop("sample_rank")),
-      idCol, kk).localCheckpoint()
-    graft.sources.EpochStore.writeEpoch(spark, path, merged,
-      sampleMeta(spark, idc, kk, v + 1L), v + 1L)
   }
 
   /** Streaming ingestion of the sample index: per micro-batch,

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType}
 
 import graft.functions.TextFunctions.hash60
+import graft.sources.EpochStore
 
 /** Mergeable cardinality sketches — HyperLogLog register tables as
   * first-class, PERSISTED DataFrames (Flajolet et al. 2007, "HyperLogLog:
@@ -277,36 +278,22 @@ object Sketches {
   /** A loaded sketch: registers plus the precision it was built under. */
   final case class LoadedHll(registers: DataFrame, p: Int)
 
-  private def readMeta(spark: SparkSession, path: String): org.apache.spark.sql.Row =
-    graft.sources.EpochStore.readMeta(spark, path)
-
-  private def writeEpoch(
-      spark: SparkSession,
-      path: String,
-      payload: DataFrame,
-      meta: DataFrame,
-      version: Long): Unit =
-    graft.sources.EpochStore.writeEpoch(spark, path, payload, meta, version)
-
-  private def hllMeta(spark: SparkSession, p: Int, version: Long): DataFrame = {
+  private def hllMeta(spark: SparkSession, p: Int): EpochStore.Meta = {
     import spark.implicits._
-    Seq((p, version)).toDF("p", "version")
+    (version, _) => Seq((p, version)).toDF("p", "version")
   }
 
   /** Write a fresh sketch of `value` over `df` at `path` (epoch 0). */
   def writeHll(df: DataFrame, value: Column, path: String, p: Int = 12): Unit = {
     checkP(p)
-    writeEpoch(df.sparkSession, path, hllRegisters(df, value, p),
-      hllMeta(df.sparkSession, p, 0L), 0L)
+    EpochStore.build(df.sparkSession, path, hllRegisters(df, value, p),
+      hllMeta(df.sparkSession, p))
   }
 
   /** Load the live epoch's registers. Fails if no committed meta. */
   def loadHll(spark: SparkSession, path: String): LoadedHll = {
-    val m = readMeta(spark, path)
-    LoadedHll(
-      spark.read.parquet(graft.sources.EpochStore.epochPath(
-        path, m.getAs[Long]("version"))),
-      m.getAs[Int]("p"))
+    val (m, registers) = EpochStore.load(spark, path)
+    LoadedHll(registers, m.getAs[Int]("p"))
   }
 
   /** Merge a new batch into the persisted sketch — the incremental
@@ -317,25 +304,17 @@ object Sketches {
     * stream needs no separate build step (`p` applies only then: an
     * existing artifact's own precision governs every later append; a
     * torn meta flip fails loudly instead of re-initializing —
-    * [[graft.sources.EpochStore.requireInitializable]]). Idempotent:
-    * appending the same batch twice commits an epoch with identical
-    * registers.
+    * [[EpochStore.append]]). Idempotent: appending the same batch twice
+    * commits an epoch with identical registers.
     */
   def appendHll(df: DataFrame, value: Column, path: String, p: Int = 12): Unit = {
     val spark = df.sparkSession
-    if (!graft.sources.EpochStore.hasMeta(spark, path)) {
-      graft.sources.EpochStore.requireInitializable(spark, path)
-      writeHll(df, value, path, p); return
+    EpochStore.append(spark, path)(_ => writeHll(df, value, path, p)) {
+      (m, stored) =>
+        val pp = m.getAs[Int]("p")
+        (hllMerge(stored, hllRegisters(df, value, pp)).localCheckpoint(),
+          hllMeta(spark, pp))
     }
-    val m = readMeta(spark, path)
-    val (pp, v) = (m.getAs[Int]("p"), m.getAs[Long]("version"))
-    // localCheckpoint the merge before the epoch write: the merged plan
-    // reads registers_v{v}, and materializing first means the write job
-    // never races the cleanup of the directory it is reading
-    val merged = hllMerge(
-      spark.read.parquet(graft.sources.EpochStore.epochPath(path, v)),
-      hllRegisters(df, value, pp)).localCheckpoint()
-    writeEpoch(spark, path, merged, hllMeta(spark, pp, v + 1L), v + 1L)
   }
 
   /** Streaming ingestion: per micro-batch, [[appendHll]] the batch into
@@ -461,17 +440,11 @@ object Sketches {
     * counters and cursor disagree.
     */
   private def cmsMeta(
-      spark: SparkSession, depth: Int, width: Int, version: Long,
-      lastBatchId: Long = -1L): DataFrame = {
+      spark: SparkSession, depth: Int, width: Int): EpochStore.Meta = {
     import spark.implicits._
-    Seq((depth, width, version, lastBatchId))
+    (version, lastBatchId) => Seq((depth, width, version, lastBatchId))
       .toDF("depth", "width", "version", "last_batch_id")
   }
-
-  private def metaLastBatchId(m: org.apache.spark.sql.Row): Long =
-    if (m.schema.fieldNames.contains("last_batch_id"))
-      m.getAs[Long]("last_batch_id")
-    else -1L
 
   /** A loaded CMS: counters plus the geometry they were built under. */
   final case class LoadedCms(counters: DataFrame, depth: Int, width: Int)
@@ -483,20 +456,15 @@ object Sketches {
       path: String,
       depth: Int = 4,
       width: Int = 1024,
-      weight: Column = lit(1L)): Unit = {
-    checkCms(depth, width)
-    writeEpoch(df.sparkSession, path,
+      weight: Column = lit(1L)): Unit =
+    EpochStore.build(df.sparkSession, path,
       cmsCounters(df, value, depth, width, weight),
-      cmsMeta(df.sparkSession, depth, width, 0L), 0L)
-  }
+      cmsMeta(df.sparkSession, depth, width))
 
   /** Load the live epoch's counters. Fails if no committed meta. */
   def loadCms(spark: SparkSession, path: String): LoadedCms = {
-    val m = readMeta(spark, path)
-    LoadedCms(
-      spark.read.parquet(graft.sources.EpochStore.epochPath(
-        path, m.getAs[Long]("version"))),
-      m.getAs[Int]("depth"), m.getAs[Int]("width"))
+    val (m, counters) = EpochStore.load(spark, path)
+    LoadedCms(counters, m.getAs[Int]("depth"), m.getAs[Int]("width"))
   }
 
   /** Sum a new batch into the persisted CMS — one pass over the BATCH,
@@ -513,33 +481,25 @@ object Sketches {
       path: String,
       depth: Int = 4,
       width: Int = 1024,
-      weight: Column = lit(1L)): Unit = {
-    val spark = df.sparkSession
-    if (!graft.sources.EpochStore.hasMeta(spark, path)) {
-      graft.sources.EpochStore.requireInitializable(spark, path)
-      writeCms(df, value, path, depth, width, weight); return
-    }
-    val m = readMeta(spark, path)
-    commitCmsMerge(df, value, path, m, weight, metaLastBatchId(m))
-  }
+      weight: Column = lit(1L)): Unit =
+    absorbCms(df, value, path, None, depth, width, weight)
 
-  /** The shared merge-and-commit tail of [[appendCms]] and
-    * [[ingestCmsBatch]]: read the live epoch through meta, sum-merge
-    * the batch's counters, localCheckpoint BEFORE the epoch write (the
-    * merged plan reads the directory the commit's cleanup will
-    * delete), commit with the given cursor.
+  /** The shared append of [[appendCms]] (no cursor: the stored one is
+    * carried) and [[ingestCmsBatch]]: sum-merge the batch's counters
+    * into the live epoch under the artifact's own geometry.
     */
-  private def commitCmsMerge(
-      df: DataFrame, value: Column, path: String,
-      m: org.apache.spark.sql.Row, weight: Column, cursor: Long): Unit = {
+  private def absorbCms(
+      df: DataFrame, value: Column, path: String, batchId: Option[Long],
+      depth: Int, width: Int, weight: Column): Unit = {
     val spark = df.sparkSession
-    val (d, w, v) = (m.getAs[Int]("depth"), m.getAs[Int]("width"),
-      m.getAs[Long]("version"))
-    val merged = cmsMerge(
-      spark.read.parquet(graft.sources.EpochStore.epochPath(path, v)),
-      cmsCounters(df, value, d, w, weight)).localCheckpoint()
-    writeEpoch(spark, path, merged,
-      cmsMeta(spark, d, w, v + 1L, cursor), v + 1L)
+    EpochStore.append(spark, path, batchId, "CMS")(cursor =>
+      EpochStore.build(spark, path,
+        cmsCounters(df, value, depth, width, weight),
+        cmsMeta(spark, depth, width), cursor)) { (m, stored) =>
+      val (d, w) = (m.getAs[Int]("depth"), m.getAs[Int]("width"))
+      (cmsMerge(stored, cmsCounters(df, value, d, w, weight))
+        .localCheckpoint(), cmsMeta(spark, d, w))
+    }
   }
 
   /** Absorb ONE stream micro-batch into the persisted CMS,
@@ -551,15 +511,10 @@ object Sketches {
     * a batch id BELOW the cursor is never a legitimate replay — it
     * means the stream's checkpoint was lost or reset and ids restarted
     * — and FAILS LOUDLY rather than silently discarding those batches'
-    * data. Crash windows: before the commit's meta delete, the old
-    * meta still points at the old epoch and the replay re-merges from
-    * unchanged state; inside the (delete → rename) instant, no meta
-    * exists and the replay fails loud via the torn-flip guard (manual
-    * recovery — the one window that needs it, never a silent
-    * double-count); after the flip, the cursor is advanced and the
-    * replay no-ops. Requires monotone batch ids per artifact — true
-    * for one Structured Streaming query per path; two concurrent
-    * writers are out of contract for the whole epoch store.
+    * data. Crash windows as in [[EpochStore.append]]: a replay re-merges
+    * from unchanged state, fails loud on a torn flip (manual recovery —
+    * the one window that needs it, never a silent double-count), or
+    * no-ops after the flip.
     */
   def ingestCmsBatch(
       df: DataFrame,
@@ -568,14 +523,8 @@ object Sketches {
       batchId: Long,
       depth: Int = 4,
       width: Int = 1024,
-      weight: Column = lit(1L)): Unit = {
-    val spark = df.sparkSession
-    graft.sources.EpochStore.ingestWithCursor(spark, path, batchId,
-      "CMS") { () =>
-      writeEpoch(spark, path, cmsCounters(df, value, depth, width, weight),
-        cmsMeta(spark, depth, width, 0L, batchId), 0L)
-    } { m => commitCmsMerge(df, value, path, m, weight, batchId) }
-  }
+      weight: Column = lit(1L)): Unit =
+    absorbCms(df, value, path, Some(batchId), depth, width, weight)
 
   /** Streaming CMS ingestion — [[ingestCmsBatch]] per micro-batch:
     * frequency telemetry absorbed at ingest with exactly-once batch
@@ -672,9 +621,9 @@ object Sketches {
 
   private def quantileMeta(
       spark: SparkSession, idCol: String, valueCol: String,
-      groupCol: String, k: Int, version: Long): DataFrame = {
+      groupCol: String, k: Int): EpochStore.Meta = {
     import spark.implicits._
-    Seq((idCol, valueCol, groupCol, k, version))
+    (version, _) => Seq((idCol, valueCol, groupCol, k, version))
       .toDF("id_col", "value_col", "group_col", "k", "version")
   }
 
@@ -686,9 +635,9 @@ object Sketches {
       df: DataFrame, idCol: String, valueCol: String, groupCol: String,
       path: String, k: Int = 256): Unit = {
     require(k > 0, "k must be positive")
-    graft.sources.EpochStore.writeEpoch(df.sparkSession, path,
+    EpochStore.build(df.sparkSession, path,
       quantileSummaryBy(df, idCol, valueCol, groupCol, k),
-      quantileMeta(df.sparkSession, idCol, valueCol, groupCol, k, 0L), 0L)
+      quantileMeta(df.sparkSession, idCol, valueCol, groupCol, k))
   }
 
   /** A loaded quantile summary: the sample rows plus the maintained
@@ -697,9 +646,8 @@ object Sketches {
   final case class LoadedQuantile(rows: DataFrame, k: Int)
 
   def loadQuantile(spark: SparkSession, path: String): LoadedQuantile = {
-    val m = graft.sources.EpochStore.readMeta(spark, path)
-    LoadedQuantile(spark.read.parquet(graft.sources.EpochStore.epochPath(
-      path, m.getAs[Long]("version"))), m.getAs[Int]("k"))
+    val (m, rows) = EpochStore.load(spark, path)
+    LoadedQuantile(rows, m.getAs[Int]("k"))
   }
 
   /** Fold a batch into the persisted summary: per-group bottom-k of the
@@ -716,34 +664,32 @@ object Sketches {
       batch: DataFrame, idCol: String, valueCol: String, groupCol: String,
       path: String, k: Int = 256): Unit = {
     val spark = batch.sparkSession
-    if (!graft.sources.EpochStore.hasMeta(spark, path)) {
-      graft.sources.EpochStore.requireInitializable(spark, path)
-      writeQuantile(batch, idCol, valueCol, groupCol, path, k); return
+    EpochStore.append(spark, path, check = m => {
+      val (idc, vc, gc) = (m.getAs[String]("id_col"),
+        m.getAs[String]("value_col"), m.getAs[String]("group_col"))
+      require(idc == idCol && vc == valueCol && gc == groupCol,
+        s"quantile summary at $path keys on ($idc, $vc, $gc), " +
+          s"not ($idCol, $valueCol, $groupCol)")
+    })(_ => writeQuantile(batch, idCol, valueCol, groupCol, path, k)) {
+      (m, stored) =>
+        val kk = m.getAs[Int]("k")
+        // replay guard keys on (group, id) — NULL-SAFE on the group, like
+        // every grouped path here — not id alone: an id can legitimately
+        // recur across groups (ids unique only per group), and an id-only
+        // anti-join would silently drop the second group's row from the
+        // sample, breaking the merge law
+        val fresh = batch.join(
+          broadcast(stored.select(col(groupCol).as("__ag"),
+            col(idCol).as("__ai"))),
+          col(groupCol) <=> col("__ag") && col(idCol) === col("__ai"),
+          "left_anti")
+        (quantileSummaryBy(
+          stored.drop("sample_rank")
+            .unionByName(quantileSummaryBy(fresh, idCol, valueCol,
+              groupCol, kk).drop("sample_rank")),
+          idCol, valueCol, groupCol, kk).localCheckpoint(),
+          quantileMeta(spark, idCol, valueCol, groupCol, kk))
     }
-    val m = graft.sources.EpochStore.readMeta(spark, path)
-    val (idc, vc, gc, kk, v) = (m.getAs[String]("id_col"),
-      m.getAs[String]("value_col"), m.getAs[String]("group_col"),
-      m.getAs[Int]("k"), m.getAs[Long]("version"))
-    require(idc == idCol && vc == valueCol && gc == groupCol,
-      s"quantile summary at $path keys on ($idc, $vc, $gc), " +
-        s"not ($idCol, $valueCol, $groupCol)")
-    val stored = spark.read.parquet(
-      graft.sources.EpochStore.epochPath(path, v))
-    // replay guard keys on (group, id) — NULL-SAFE on the group, like
-    // every grouped path here — not id alone: an id can legitimately
-    // recur across groups (ids unique only per group), and an id-only
-    // anti-join would silently drop the second group's row from the
-    // sample, breaking the merge law
-    val fresh = batch.join(
-      broadcast(stored.select(col(gc).as("__ag"), col(idCol).as("__ai"))),
-      col(gc) <=> col("__ag") && col(idCol) === col("__ai"), "left_anti")
-    val merged = quantileSummaryBy(
-      stored.drop("sample_rank")
-        .unionByName(quantileSummaryBy(fresh, idCol, valueCol, gc, kk)
-          .drop("sample_rank")),
-      idCol, valueCol, gc, kk).localCheckpoint()
-    graft.sources.EpochStore.writeEpoch(spark, path, merged,
-      quantileMeta(spark, idc, vc, gc, kk, v + 1L), v + 1L)
   }
 
   /** Streaming ingestion: per micro-batch [[appendQuantile]] —
@@ -1013,11 +959,12 @@ object Sketches {
   }
 
   private def kllMeta(
-      spark: SparkSession, valueCol: String, groupCol: String, k: Int,
-      version: Long, lastBatchId: Long): DataFrame = {
+      spark: SparkSession, valueCol: String, groupCol: String,
+      k: Int): EpochStore.Meta = {
     import spark.implicits._
-    Seq((valueCol, groupCol, k, version, lastBatchId))
-      .toDF("value_col", "group_col", "k", "version", "last_batch_id")
+    (version, lastBatchId) =>
+      Seq((valueCol, groupCol, k, version, lastBatchId))
+        .toDF("value_col", "group_col", "k", "version", "last_batch_id")
   }
 
   /** Persist a KLL sketch artifact (epoch layout, meta-gated). */
@@ -1025,17 +972,16 @@ object Sketches {
       df: DataFrame, valueCol: String, groupCol: String, path: String,
       k: Int = 256, lastBatchId: Long = -1L): Unit = {
     checkKllK(k)
-    graft.sources.EpochStore.writeEpoch(df.sparkSession, path,
+    EpochStore.build(df.sparkSession, path,
       kllSketchBy(df, valueCol, groupCol, k),
-      kllMeta(df.sparkSession, valueCol, groupCol, k, 0L, lastBatchId), 0L)
+      kllMeta(df.sparkSession, valueCol, groupCol, k), lastBatchId)
   }
 
   final case class LoadedKll(rows: DataFrame, k: Int)
 
   def loadKll(spark: SparkSession, path: String): LoadedKll = {
-    val m = graft.sources.EpochStore.readMeta(spark, path)
-    LoadedKll(spark.read.parquet(graft.sources.EpochStore.epochPath(
-      path, m.getAs[Long]("version"))), m.getAs[Int]("k"))
+    val (m, rows) = EpochStore.load(spark, path)
+    LoadedKll(rows, m.getAs[Int]("k"))
   }
 
   /** Fold a batch into the persisted sketch: sketch the batch, union
@@ -1049,41 +995,29 @@ object Sketches {
   def appendKll(
       batch: DataFrame, valueCol: String, groupCol: String, path: String,
       k: Int = 256): Unit =
-    commitKllMerge(batch, valueCol, groupCol, path, None, k)
+    absorbKll(batch, valueCol, groupCol, path, None, k)
 
-  private def commitKllMerge(
+  /** The shared append of [[appendKll]] and [[ingestKllBatch]]: the
+    * key columns are checked before the cursor, so a mismatched replay
+    * still fails loud.
+    */
+  private def absorbKll(
       batch: DataFrame, valueCol: String, groupCol: String, path: String,
       batchId: Option[Long], k: Int): Unit = {
     val spark = batch.sparkSession
-    if (!graft.sources.EpochStore.hasMeta(spark, path)) {
-      graft.sources.EpochStore.requireInitializable(spark, path)
-      writeKll(batch, valueCol, groupCol, path, k,
-        batchId.getOrElse(-1L))
-      return
+    EpochStore.append(spark, path, batchId, "KLL sketch", m => {
+      val (vc, gc) = (m.getAs[String]("value_col"),
+        m.getAs[String]("group_col"))
+      require(vc == valueCol && gc == groupCol,
+        s"KLL sketch at $path keys on ($vc, $gc), not ($valueCol, $groupCol)")
+    })(cursor => writeKll(batch, valueCol, groupCol, path, k, cursor)) {
+      (m, stored) =>
+        val kk = m.getAs[Int]("k")
+        (kllCompactBy(
+          stored.unionByName(kllSketchBy(batch, valueCol, groupCol, kk)),
+          groupCol, kk).localCheckpoint(),
+          kllMeta(spark, valueCol, groupCol, kk))
     }
-    val m = graft.sources.EpochStore.readMeta(spark, path)
-    val (vc, gc, kk, v) = (m.getAs[String]("value_col"),
-      m.getAs[String]("group_col"), m.getAs[Int]("k"),
-      m.getAs[Long]("version"))
-    require(vc == valueCol && gc == groupCol,
-      s"KLL sketch at $path keys on ($vc, $gc), not ($valueCol, $groupCol)")
-    val last = m.getAs[Long]("last_batch_id")
-    if (batchId.contains(last)) return // replayed micro-batch: no-op
-    batchId.foreach { id =>
-      require(id > last,
-        s"KLL sketch at $path has absorbed through stream batch $last " +
-          s"but received batch $id — the stream's checkpoint was lost " +
-          "or reset; continuing would silently drop data. Point the " +
-          "query at its original checkpoint, or rebuild.")
-    }
-    val stored = spark.read.parquet(
-      graft.sources.EpochStore.epochPath(path, v))
-    val merged = kllCompactBy(
-      stored.unionByName(kllSketchBy(batch, valueCol, groupCol, kk)),
-      groupCol, kk).localCheckpoint()
-    graft.sources.EpochStore.writeEpoch(spark, path, merged,
-      kllMeta(spark, vc, gc, kk, v + 1L, batchId.getOrElse(last)),
-      v + 1L)
   }
 
   /** Absorb ONE stream micro-batch exactly-once under the committed
@@ -1094,7 +1028,7 @@ object Sketches {
   def ingestKllBatch(
       df: DataFrame, valueCol: String, groupCol: String, path: String,
       batchId: Long, k: Int = 256): Unit =
-    commitKllMerge(df, valueCol, groupCol, path, Some(batchId), k)
+    absorbKll(df, valueCol, groupCol, path, Some(batchId), k)
 
   /** Streaming KLL ingestion — [[ingestKllBatch]] per micro-batch.
     * Caller starts the returned writer with a durable checkpoint.
@@ -1292,10 +1226,10 @@ object Sketches {
       bins: DataFrame, nBins: Int, lo: Double, hi: Double)
 
   private def binsMeta(
-      spark: SparkSession, nBins: Int, lo: Double, hi: Double,
-      version: Long, lastBatchId: Long = -1L): DataFrame = {
+      spark: SparkSession, nBins: Int, lo: Double,
+      hi: Double): EpochStore.Meta = {
     import spark.implicits._
-    Seq((nBins, lo, hi, version, lastBatchId))
+    (version, lastBatchId) => Seq((nBins, lo, hi, version, lastBatchId))
       .toDF("n_bins", "lo", "hi", "version", "last_batch_id")
   }
 
@@ -1303,31 +1237,15 @@ object Sketches {
   def writeBins(
       df: DataFrame, valueCol: String, path: String,
       nBins: Int = 20, lo: Double = 0.0, hi: Double = 1.0): Unit =
-    writeEpoch(df.sparkSession, path,
+    EpochStore.build(df.sparkSession, path,
       binCounts(df, valueCol, nBins, lo, hi),
-      binsMeta(df.sparkSession, nBins, lo, hi, 0L), 0L)
+      binsMeta(df.sparkSession, nBins, lo, hi))
 
   /** Load the live epoch's bin counts. Fails if no committed meta. */
   def loadBins(spark: SparkSession, path: String): LoadedBins = {
-    val m = readMeta(spark, path)
-    LoadedBins(
-      spark.read.parquet(graft.sources.EpochStore.epochPath(
-        path, m.getAs[Long]("version"))),
+    val (m, bins) = EpochStore.load(spark, path)
+    LoadedBins(bins,
       m.getAs[Int]("n_bins"), m.getAs[Double]("lo"), m.getAs[Double]("hi"))
-  }
-
-  private def commitBinsMerge(
-      df: DataFrame, valueCol: String, path: String,
-      m: org.apache.spark.sql.Row, cursor: Long): Unit = {
-    val spark = df.sparkSession
-    val (nb, lo, hi, v) = (m.getAs[Int]("n_bins"), m.getAs[Double]("lo"),
-      m.getAs[Double]("hi"), m.getAs[Long]("version"))
-    val merged = spark.read
-      .parquet(graft.sources.EpochStore.epochPath(path, v))
-      .unionByName(binCounts(df, valueCol, nb, lo, hi))
-      .groupBy("bin").agg(sum(col("cnt")).as("cnt")).localCheckpoint()
-    writeEpoch(spark, path, merged,
-      binsMeta(spark, nb, lo, hi, v + 1L, cursor), v + 1L)
   }
 
   /** Absorb ONE stream micro-batch into the persisted bin counters,
@@ -1343,11 +1261,15 @@ object Sketches {
       df: DataFrame, valueCol: String, path: String, batchId: Long,
       nBins: Int = 20, lo: Double = 0.0, hi: Double = 1.0): Unit = {
     val spark = df.sparkSession
-    graft.sources.EpochStore.ingestWithCursor(spark, path, batchId,
-      "bin sketch") { () =>
-      writeEpoch(spark, path, binCounts(df, valueCol, nBins, lo, hi),
-        binsMeta(spark, nBins, lo, hi, 0L, batchId), 0L)
-    } { m => commitBinsMerge(df, valueCol, path, m, batchId) }
+    EpochStore.append(spark, path, Some(batchId), "bin sketch")(cursor =>
+      EpochStore.build(spark, path, binCounts(df, valueCol, nBins, lo, hi),
+        binsMeta(spark, nBins, lo, hi), cursor)) { (m, stored) =>
+      val (nb, l, h) = (m.getAs[Int]("n_bins"), m.getAs[Double]("lo"),
+        m.getAs[Double]("hi"))
+      (stored.unionByName(binCounts(df, valueCol, nb, l, h))
+        .groupBy("bin").agg(sum(col("cnt")).as("cnt")).localCheckpoint(),
+        binsMeta(spark, nb, l, h))
+    }
   }
 
   /** Streaming bin ingestion — [[ingestBinsBatch]] per micro-batch.

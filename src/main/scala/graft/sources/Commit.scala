@@ -20,9 +20,10 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   *    [[isClean]]): lets compaction skip an untouched artifact;
   *  - overlapped independent writes ([[runAll]]).
   *
-  * [[EpochStore]]'s versioned-epoch commit (every crash window
-  * loadable) and [[Tables.compactZOrdered]]'s roll-forward swap keep
-  * their own protocols: their crash contracts differ.
+  * [[EpochStore]]'s versioned-epoch lifecycle (every crash window
+  * loadable) reads its meta through [[exists]] and [[readMeta]] but
+  * keeps its own commit order, as does [[Tables.compactZOrdered]]'s
+  * roll-forward swap: their crash contracts differ.
   */
 private[graft] object Commit {
 

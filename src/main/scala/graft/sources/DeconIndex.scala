@@ -65,10 +65,10 @@ object DeconIndex {
       version: Long)
 
   private def meta(
-      spark: SparkSession, n: Int, mBits: Int, k: Int,
-      version: Long): DataFrame = {
+      spark: SparkSession, n: Int, mBits: Int, k: Int): EpochStore.Meta = {
     import spark.implicits._
-    Seq((n, mBits, k, version)).toDF("n", "m_bits", "k", "version")
+    (version, _) =>
+      Seq((n, mBits, k, version)).toDF("n", "m_bits", "k", "version")
   }
 
   private def gramsOf(df: DataFrame, textCol: String, n: Int): DataFrame =
@@ -109,17 +109,17 @@ object DeconIndex {
     // one gram pass feeds both the key artifact and the filter build
     val g = gramsOf(probe, textCol, n).localCheckpoint()
     g.write.mode("overwrite").parquet(s"$path/grams")
-    EpochStore.writeEpoch(spark, path, wordsFrame(g, mBits, k),
-      meta(spark, n, mBits, k, 0L), 0L)
+    EpochStore.build(spark, path, wordsFrame(g, mBits, k),
+      meta(spark, n, mBits, k))
   }
 
   /** Load the committed index. Fails loudly when no meta committed. */
   def load(spark: SparkSession, path: String): LoadedDecon = {
-    val m = EpochStore.readMeta(spark, path)
+    val (m, epoch) = EpochStore.load(spark, path)
     val (n, mBits, k, v) = (m.getAs[Int]("n"), m.getAs[Int]("m_bits"),
       m.getAs[Int]("k"), m.getAs[Long]("version"))
     val words = new Array[Long](mBits / 64)
-    spark.read.parquet(EpochStore.epochPath(path, v)).collect()
+    epoch.collect()
       .foreach(r => words(r.getAs[Long]("w").toInt) = r.getAs[Long]("bits"))
     LoadedDecon(n, mBits, k, words,
       spark.read.parquet(s"$path/grams"), v)
@@ -143,43 +143,37 @@ object DeconIndex {
       mBits: Int = 1 << 20,
       k: Int = 4): Unit = {
     val spark = newProbe.sparkSession
-    if (!EpochStore.hasMeta(spark, path)) {
-      // cold start (stream batch 0): initialize, geometry from the
-      // arguments — an EXISTING artifact's meta governs every later
-      // append, and a torn meta flip refuses to re-initialize
-      EpochStore.requireInitializable(spark, path)
-      build(newProbe, textCol, path, n, mBits, k); return
-    }
-    val m = EpochStore.readMeta(spark, path)
-    val (mn, mMBits, mK, v) = (m.getAs[Int]("n"), m.getAs[Int]("m_bits"),
-      m.getAs[Int]("k"), m.getAs[Long]("version"))
-    val batch = gramsOf(newProbe, textCol, mn).localCheckpoint()
-    val indexGrams = spark.read.parquet(s"$path/grams")
-    // matched ≤ batch size: the artifact streams through one
-    // broadcast-batch semi join, then broadcasts back for the anti
-    val matched = indexGrams
-      .join(broadcast(batch), Seq("__h"), "left_semi")
-      .distinct().localCheckpoint()
-    val fresh = batch.join(broadcast(matched), Seq("__h"), "left_anti")
-    // the gram append and the merged-filter materialization both derive
-    // only from already-checkpointed frames + the OLD epoch, so they
-    // run OVERLAPPED (guide §2.6); the epoch COMMIT below — the
-    // visibility gate the replay protocol rests on — still lands
-    // strictly after both (a filter bit must never become visible
-    // before its gram row is on disk, or the confirm join would
-    // false-negative)
-    val mergedSlot =
-      new java.util.concurrent.atomic.AtomicReference[DataFrame]()
-    Commit.runAll(Seq(
-      () => fresh.write.mode("append").parquet(s"$path/grams"),
-      () => mergedSlot.set(
-        spark.read.parquet(EpochStore.epochPath(path, v))
+    // cold start (stream batch 0): initialize, geometry from the
+    // arguments — an EXISTING artifact's meta governs every later append
+    EpochStore.append(spark, path)(
+      _ => build(newProbe, textCol, path, n, mBits, k)) { (m, stored) =>
+      val (mn, mMBits, mK) = (m.getAs[Int]("n"), m.getAs[Int]("m_bits"),
+        m.getAs[Int]("k"))
+      val batch = gramsOf(newProbe, textCol, mn).localCheckpoint()
+      val indexGrams = spark.read.parquet(s"$path/grams")
+      // matched ≤ batch size: the artifact streams through one
+      // broadcast-batch semi join, then broadcasts back for the anti
+      val matched = indexGrams
+        .join(broadcast(batch), Seq("__h"), "left_semi")
+        .distinct().localCheckpoint()
+      val fresh = batch.join(broadcast(matched), Seq("__h"), "left_anti")
+      // the gram append and the merged-filter materialization both derive
+      // only from already-checkpointed frames + the OLD epoch, so they
+      // run OVERLAPPED (guide §2.6); the epoch COMMIT after this merge —
+      // the visibility gate the replay protocol rests on — still lands
+      // strictly after both (a filter bit must never become visible
+      // before its gram row is on disk, or the confirm join would
+      // false-negative)
+      val mergedSlot =
+        new java.util.concurrent.atomic.AtomicReference[DataFrame]()
+      Commit.runAll(Seq(
+        () => fresh.write.mode("append").parquet(s"$path/grams"),
+        () => mergedSlot.set(stored
           .unionByName(wordsFrame(batch, mMBits, mK))
           .groupBy(col("w")).agg(expr("bit_or(bits)").as("bits"))
-          .localCheckpoint()))) // the merged plan reads the epoch the
-                                // commit's cleanup will delete
-    EpochStore.writeEpoch(spark, path, mergedSlot.get(),
-      meta(spark, mn, mMBits, mK, v + 1L), v + 1L)
+          .localCheckpoint())))
+      (mergedSlot.get(), meta(spark, mn, mMBits, mK))
+    }
   }
 
   /** Decontaminate one corpus batch against the frozen index: drop

@@ -1,14 +1,20 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
-/** Versioned-epoch artifact commit — the shared layout under
-  * [[graft.operators.Sketches]]' sketch stores and
-  * [[graft.operators.Sampling]]'s sample index:
+/** Versioned-epoch artifact lifecycle — the shared layout and commit of
+  * the bounded stores: the HLL, CMS, quantile-summary, KLL and drift-bin
+  * sketches of [[graft.operators.Sketches]], the sample index of
+  * [[graft.operators.Sampling]], the Bloom filter of [[DeconIndex]] and
+  * the term set of [[VocabIndex]]:
   *
   *   registers_v{N}/   payload parquet for epoch N
-  *   meta/             sketch parameters + `version` — the commit
-  *                     pointer, written LAST
+  *   meta/             store parameters + `version` (+ `last_batch_id`
+  *                     for the cursor stores) — the commit pointer,
+  *                     written LAST
+  *
+  * Each store names only its parameters (its [[Meta]]), its payload and
+  * its merge law; [[build]], [[load]] and [[append]] own the rest.
   *
   * The new epoch directory is written FIRST (old epoch untouched), meta
   * flips to it atomically last, and stale epochs are best-effort cleaned
@@ -23,20 +29,89 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 private[graft] object EpochStore {
 
-  /** The committed meta row; AnalysisException when nothing committed. */
-  def readMeta(spark: SparkSession, path: String): org.apache.spark.sql.Row =
-    spark.read.parquet(s"$path/meta").head()
+  /** A store's one-row meta frame for `(version, last_batch_id)`: its
+    * own parameters plus `version`, and the cursor for the stores that
+    * keep one (the others ignore it).
+    */
+  type Meta = (Long, Long) => DataFrame
 
-  def hasMeta(spark: SparkSession, path: String): Boolean =
-    try { readMeta(spark, path); true }
-    catch { case _: org.apache.spark.sql.AnalysisException => false }
+  private def metaDir(path: String): String = s"$path/meta"
 
-  /** True when `path` holds any committed epoch payload directory. */
-  def hasEpochDirs(spark: SparkSession, path: String): Boolean = {
-    val f = Commit.fs(spark, path)
-    val base = new org.apache.hadoop.fs.Path(path)
-    f.exists(base) &&
-      f.listStatus(base).exists(_.getPath.getName.startsWith("registers_v"))
+  private def epochPath(path: String, version: Long): String =
+    s"$path/registers_v$version"
+
+  /** The committed meta row and the live epoch's payload. Fails loudly
+    * (path not found) when nothing is committed.
+    */
+  def load(spark: SparkSession, path: String): (Row, DataFrame) = {
+    val m = Commit.readMeta(spark, metaDir(path))
+    (m, spark.read.parquet(epochPath(path, m.getAs[Long]("version"))))
+  }
+
+  /** Build epoch 0: `payload` under `meta(0, lastBatchId)`. */
+  def build(
+      spark: SparkSession,
+      path: String,
+      payload: DataFrame,
+      meta: Meta,
+      lastBatchId: Long = -1L): Unit =
+    writeEpoch(spark, path, payload, meta(0L, lastBatchId), 0L)
+
+  /** Absorb one batch. With no committed meta the torn-flip guard runs
+    * ([[requireInitializable]]) and `init` builds epoch 0 under the
+    * cursor `batchId` (-1 without one). Otherwise the meta is read once
+    * and `check`ed (key-column mismatches are caller bugs and fail
+    * first); a cursor store (`batchId` given) then no-ops on a replayed
+    * id and fails LOUD on a reset cursor (a lost/re-created checkpoint
+    * restarts ids — continuing would silently drop every
+    * already-numbered batch; `what` names the artifact in that
+    * message). Last, `merge` gets the meta row and the live epoch (read
+    * on first use) and returns the merged payload plus the meta it
+    * commits under, as `version + 1` carrying `batchId` or else the
+    * stored cursor. The merged payload must be MATERIALIZED
+    * (localCheckpoint): its plan reads the epoch the commit's cleanup
+    * deletes.
+    *
+    * Crash windows: before the commit's meta delete, the old meta still
+    * points at the old epoch and a replay re-merges from unchanged
+    * state; inside the (delete → rename) instant no meta exists and the
+    * replay fails loud on the torn-flip guard (the one window that needs
+    * manual recovery); after the flip the cursor has advanced and a
+    * replay no-ops. Requires monotone batch ids per artifact — true for
+    * one Structured Streaming query per path; two concurrent writers
+    * are out of contract.
+    */
+  def append(
+      spark: SparkSession,
+      path: String,
+      batchId: Option[Long] = None,
+      what: String = "epoch store",
+      check: Row => Unit = _ => ())(
+      init: Long => Unit)(
+      merge: (Row, => DataFrame) => (DataFrame, Meta)): Unit = {
+    if (!Commit.exists(spark, metaDir(path))) {
+      requireInitializable(spark, path)
+      init(batchId.getOrElse(-1L))
+      return
+    }
+    val m = Commit.readMeta(spark, metaDir(path))
+    check(m)
+    val last =
+      if (m.schema.fieldNames.contains("last_batch_id"))
+        m.getAs[Long]("last_batch_id")
+      else -1L
+    if (batchId.contains(last)) return
+    batchId.foreach(id => require(id > last,
+      s"$what at $path has absorbed through stream batch $last but " +
+        s"received batch $id — the stream's checkpoint was lost " +
+        "or reset (ids restarted); continuing would silently drop " +
+        "every already-numbered batch. Point the query at its " +
+        "original checkpoint, or rebuild the artifact."))
+    val v = m.getAs[Long]("version")
+    lazy val stored = spark.read.parquet(epochPath(path, v))
+    val (merged, meta) = merge(m, stored)
+    writeEpoch(spark, path, merged, meta(v + 1L, batchId.getOrElse(last)),
+      v + 1L)
   }
 
   /** Guard for append-path initialization: a store with NO meta but
@@ -50,7 +125,7 @@ private[graft] object EpochStore {
     * re-initialization is permitted: this is what lets a cold-start
     * stream's batch-0 replay self-heal without a marker protocol.
     */
-  def requireInitializable(spark: SparkSession, path: String): Unit = {
+  private def requireInitializable(spark: SparkSession, path: String): Unit = {
     val f = Commit.fs(spark, path)
     val base = new org.apache.hadoop.fs.Path(path)
     val epochs =
@@ -64,43 +139,6 @@ private[graft] object EpochStore {
         "restore meta or delete the directory")
   }
 
-  def epochPath(path: String, version: Long): String =
-    s"$path/registers_v$version"
-
-  /** The exactly-once stream-cursor skeleton shared by the epoch
-    * artifacts (CMS counters, drift bins, vocabulary): initialize when
-    * no meta is committed, no-op on a replayed batch id, fail LOUD on
-    * a reset cursor (a lost/re-created checkpoint restarts ids —
-    * continuing would silently drop every already-numbered batch),
-    * delegate the merge otherwise. `what` names the artifact in the
-    * failure message. KLL keeps its own variant: an optional cursor
-    * for batch-mode absorbs plus key-schema validation interleaved
-    * with the cursor checks.
-    */
-  def ingestWithCursor(
-      spark: SparkSession, path: String, batchId: Long, what: String)(
-      init: () => Unit)(
-      merge: org.apache.spark.sql.Row => Unit): Unit = {
-    if (!hasMeta(spark, path)) {
-      requireInitializable(spark, path)
-      init()
-      return
-    }
-    val m = readMeta(spark, path)
-    val last =
-      if (m.schema.fieldNames.contains("last_batch_id"))
-        m.getAs[Long]("last_batch_id")
-      else -1L
-    if (batchId == last) return
-    require(batchId > last,
-      s"$what at $path has absorbed through stream batch $last but " +
-        s"received batch $batchId — the stream's checkpoint was lost " +
-        "or reset (ids restarted); continuing would silently drop " +
-        "every already-numbered batch. Point the query at its " +
-        "original checkpoint, or rebuild the artifact.")
-    merge(m)
-  }
-
   /** Commit one epoch: payload first, meta (carrying `version` plus
     * store-specific parameters) flipped last VIA RENAME — the meta
     * parquet is staged to a temp directory and moved into place, so
@@ -111,7 +149,7 @@ private[graft] object EpochStore {
     * leftover directory is inert — meta names the live epoch — and the
     * next commit retries the delete).
     */
-  def writeEpoch(
+  private def writeEpoch(
       spark: SparkSession,
       path: String,
       payload: DataFrame,
@@ -121,11 +159,11 @@ private[graft] object EpochStore {
     payload.coalesce(1).write.mode("overwrite")
       .parquet(epochPath(path, version))
     val f = Commit.fs(spark, path)
-    val metaDir = new org.apache.hadoop.fs.Path(s"$path/meta")
+    val metaPath = new org.apache.hadoop.fs.Path(metaDir(path))
     val tmpDir = new org.apache.hadoop.fs.Path(s"$path/meta_tmp_$version")
     meta.coalesce(1).write.mode("overwrite").parquet(tmpDir.toString)
-    f.delete(metaDir, true)
-    if (!f.rename(tmpDir, metaDir))
+    f.delete(metaPath, true)
+    if (!f.rename(tmpDir, metaPath))
       throw new java.io.IOException(
         s"epoch store at $path: meta rename failed mid-commit")
     val base = new org.apache.hadoop.fs.Path(path)

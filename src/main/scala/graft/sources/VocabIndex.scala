@@ -29,11 +29,10 @@ import graft.operators.TextAnalysis
   */
 object VocabIndex {
 
-  private def vocabMeta(
-      spark: SparkSession, version: Long,
-      lastBatchId: Long = -1L): DataFrame = {
+  private def vocabMeta(spark: SparkSession): EpochStore.Meta = {
     import spark.implicits._
-    Seq((version, lastBatchId)).toDF("version", "last_batch_id")
+    (version, lastBatchId) =>
+      Seq((version, lastBatchId)).toDF("version", "last_batch_id")
   }
 
   private def distinctTerms(docs: DataFrame, textCol: String): DataFrame =
@@ -41,16 +40,12 @@ object VocabIndex {
 
   /** Write a fresh vocabulary of `textCol` over `docs` (epoch 0). */
   def build(docs: DataFrame, textCol: String, path: String): Unit =
-    EpochStore.writeEpoch(docs.sparkSession, path,
-      distinctTerms(docs, textCol),
-      vocabMeta(docs.sparkSession, 0L), 0L)
+    EpochStore.build(docs.sparkSession, path, distinctTerms(docs, textCol),
+      vocabMeta(docs.sparkSession))
 
   /** Load the live epoch's term set. Fails if no committed meta. */
-  def load(spark: SparkSession, path: String): DataFrame = {
-    val m = EpochStore.readMeta(spark, path)
-    spark.read.parquet(
-      EpochStore.epochPath(path, m.getAs[Long]("version")))
-  }
+  def load(spark: SparkSession, path: String): DataFrame =
+    EpochStore.load(spark, path)._2
 
   /** OOV rates of a batch against the frozen artifact — one row
     * (n_tokens, n_types, oov_tokens, oov_types, token_rate,
@@ -60,31 +55,12 @@ object VocabIndex {
     TextAnalysis.oovRatesVsVocab(batch, textCol,
       load(batch.sparkSession, path))
 
-  private def commitUnion(
-      batch: DataFrame, textCol: String, path: String,
-      m: org.apache.spark.sql.Row, cursor: Long): Unit = {
-    val spark = batch.sparkSession
-    val v = m.getAs[Long]("version")
-    val merged = spark.read.parquet(EpochStore.epochPath(path, v))
-      .unionByName(distinctTerms(batch, textCol))
-      .distinct().localCheckpoint()
-    EpochStore.writeEpoch(spark, path, merged,
-      vocabMeta(spark, v + 1L, cursor), v + 1L)
-  }
-
   /** Grow the vocabulary by a batch (the train-then-track loop's
     * batch API; no stream cursor — use [[ingestBatch]] under a
-    * streaming query).
+    * streaming query). Fails when nothing is committed at `path`.
     */
-  def absorb(batch: DataFrame, textCol: String, path: String): Unit = {
-    val m = EpochStore.readMeta(batch.sparkSession, path)
-    commitUnion(batch, textCol, path, m, metaCursor(m))
-  }
-
-  private def metaCursor(m: org.apache.spark.sql.Row): Long =
-    if (m.schema.fieldNames.contains("last_batch_id"))
-      m.getAs[Long]("last_batch_id")
-    else -1L
+  def absorb(batch: DataFrame, textCol: String, path: String): Unit =
+    absorbUnion(batch, textCol, path, None)
 
   /** Absorb ONE stream micro-batch exactly-once under the committed
     * `last_batch_id` cursor — the ingestCmsBatch contract: replays
@@ -94,12 +70,24 @@ object VocabIndex {
     */
   def ingestBatch(
       batch: DataFrame, textCol: String, path: String,
-      batchId: Long): Unit = {
+      batchId: Long): Unit =
+    absorbUnion(batch, textCol, path, Some(batchId))
+
+  /** Set-union `batch`'s terms into the live epoch; only a cursor
+    * ingest may initialize an empty `path`.
+    */
+  private def absorbUnion(
+      batch: DataFrame, textCol: String, path: String,
+      batchId: Option[Long]): Unit = {
     val spark = batch.sparkSession
-    EpochStore.ingestWithCursor(spark, path, batchId, "vocabulary") { () =>
-      EpochStore.writeEpoch(spark, path, distinctTerms(batch, textCol),
-        vocabMeta(spark, 0L, batchId), 0L)
-    } { m => commitUnion(batch, textCol, path, m, batchId) }
+    EpochStore.append(spark, path, batchId, "vocabulary") { cursor =>
+      require(batchId.isDefined, s"no vocabulary committed at $path")
+      EpochStore.build(spark, path, distinctTerms(batch, textCol),
+        vocabMeta(spark), cursor)
+    } { (_, stored) =>
+      (stored.unionByName(distinctTerms(batch, textCol))
+        .distinct().localCheckpoint(), vocabMeta(spark))
+    }
   }
 
   /** Streaming vocabulary ingestion — [[ingestBatch]] per micro-batch.

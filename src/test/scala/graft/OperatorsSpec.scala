@@ -3076,7 +3076,9 @@ class OperatorsSpec extends AnyFunSuite {
       (2L, base + " tail"),  // near-dup of 0 (shares buckets) -> drops
       (3L, other),           // survives
       (4L, "too short"),     // length gate -> drops
-      (5L, evalDoc))         // probe member -> drops
+      (5L, evalDoc),         // probe member -> drops
+      (6L, base),            // verbatim copy of 0: line dedup empties
+      (7L, other))           // it and 7 -> drop, no "" survivor
       .toDF("doc_id", "text")
     val probe = Seq((100L, evalDoc)).toDF("doc_id", "text")
     val out = Pipeline.curate(d, "doc_id", "text", probe = Some(probe),
