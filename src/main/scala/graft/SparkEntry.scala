@@ -109,8 +109,8 @@ object SparkEntry {
   private def toLongMulti(s: SparkSession, dir: String): DataFrame =
     FrameEngine(xyFrame(s, dir), indexcols = Seq("vec_id")).toLong()
 
-  /** k=4 melt: exercises the single-shuffle uniform-key merge (k >= 3)
-    * instead of the chained full-outer fold — same output, one exchange.
+  /** k=4 melt: four columns merged inside each row (no exchange) — the
+    * same output as the chained full-outer fold of the reference's merge.
     */
   private def toLongMulti4(s: SparkSession, dir: String): DataFrame = {
     val f = t(s, dir, "embeddings").select(

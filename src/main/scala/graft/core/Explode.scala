@@ -135,6 +135,83 @@ object Explode {
     }
   }
 
+  /** The rows that the chain of built-in [[explodeOnce]] steps melts ONE
+    * cell of `c` into, built inside its row as an `array<struct>` (levels,
+    * then the value) for [[RowMerge]]. Each step follows `explodeOnce`:
+    * the same level names and types, the same struct-melt casts, and the
+    * same `drop` semantics (inner steps drop null or empty containers, the
+    * melt drops null values, `*_outer` keeps one all-null row; with no step
+    * at all, `drop` is `na.drop`). Steps stop at `maxDepth`, at a scalar,
+    * or where `stop` holds. `None` when a variant step would run (its
+    * per-cell dispatch stays a frame-level `Generate`) or a struct with no
+    * fields would melt.
+    */
+  def cellRows(
+      cell: Column,
+      dt: DataType,
+      c: String,
+      levelName: Int => String,
+      maxDepth: Int,
+      drop: Boolean,
+      stop: DataType => Boolean): Option[RowMerge.Cells] = {
+    var levels = Vector.empty[StructField]
+    var vt = dt
+    def row(ls: Seq[Column], v: Column): Column =
+      struct((ls.zipWithIndex.map { case (l, i) => l.as(s"_$i") } :+ v.as("v")): _*)
+    def prev(r: Column): Seq[Column] = levels.indices.map(i => r.getField(s"_$i"))
+    def nul(t: DataType): Column = lit(null).cast(t)
+    var rows = array(row(Nil, cell))
+    // one (pos)explode of every row's value: `inner` melts a value, `outer`
+    // is the all-null row `*_outer` keeps for a null or empty one
+    def explodeStep(level: StructField, value: DataType,
+        inner: Column => Column, outer: Column => Column): Unit = {
+      rows =
+        if (drop) flatten(transform(filter(rows, _.getField("v").isNotNull), inner))
+        else flatten(transform(rows, r => {
+          val v = r.getField("v")
+          when(v.isNull || size(v) === 0, array(outer(r))).otherwise(inner(r))
+        }))
+      levels :+= level; vt = value
+    }
+    def arrayStep(name: String, et: DataType): Unit =
+      explodeStep(StructField(name, IntegerType), et,
+        r => transform(r.getField("v"), (x, i) => row(prev(r) :+ i, x)),
+        r => row(prev(r) :+ nul(IntegerType), nul(et)))
+    // `meltStruct`: one row per field, cast to the common type
+    def structStep(name: String, st: StructType): Unit = {
+      val target = commonType(st.fields.map(_.dataType).toSeq)
+      val melted = flatten(transform(rows, r => array(st.fieldNames.toSeq.map(f =>
+        row(prev(r) :+ lit(f), r.getField("v").getField(f).cast(target))): _*)))
+      rows = if (drop) filter(melted, _.getField("v").isNotNull) else melted
+      levels :+= StructField(name, StringType); vt = target
+    }
+    var depth = 0
+    while (depth < maxDepth && !stop(vt) && stepKind(vt) != Stop) {
+      val name = levelName(depth)
+      vt match {
+        case VariantType => return None
+        case ArrayType(st: StructType, _) if st.isEmpty => return None
+        case st: StructType if st.isEmpty => return None
+        case ArrayType(st: StructType, _) =>
+          arrayStep(s"${name}_0", st); structStep(s"${name}_1", st)
+        case ArrayType(et, _) => arrayStep(name, et)
+        case MapType(kt, et, _) =>
+          explodeStep(StructField(name, kt), et,
+            r => transform(map_entries(r.getField("v")),
+              e => row(prev(r) :+ e.getField("key"), e.getField("value"))),
+            r => row(prev(r) :+ nul(kt), nul(et)))
+        case st: StructType => structStep(name, st)
+      }
+      depth += 1
+    }
+    // no step ran: `explodeColumn`'s na.drop, which also drops NaN
+    if (depth == 0 && drop) rows = filter(rows, r => vt match {
+      case FloatType | DoubleType => r.getField("v").isNotNull && !isnan(r.getField("v"))
+      case _ => r.getField("v").isNotNull
+    })
+    Some(RowMerge.Cells(rows, levels :+ StructField(c, vt)))
+  }
+
   /** Melt struct column `c` into (levelName = field name, c = value),
     * casting fields to a common type. Uses `stack`, which stays inside
     * whole-stage codegen.

@@ -21,8 +21,10 @@ import org.apache.spark.sql.types._
   *    new engine (same chaining ergonomics, Scala-idiomatic).
   *
   * All methods only *build* a lazy plan; Catalyst owns optimization
-  * (column pruning, filter pushdown through `Generate`, join selection)
-  * and AQE owns runtime re-planning of the merge-chain shuffles.
+  * (column pruning, filter pushdown through `Generate`). `toLong` merges
+  * inside each row and plans no exchange unless a frame-level step runs
+  * (see [[toLong]]); the aggregating calls (`toPuffy`, `multidPivot*`,
+  * `validateKeys`) shuffle once for their groupBy, re-planned by AQE.
   */
 final class FrameEngine private (
     val df: DataFrame,
@@ -157,44 +159,36 @@ final class FrameEngine private (
     * to `maxDepth` (reference default 3, `puffbird/frame.py:30`), each
     * level becoming a column `"{c}_level{i}"` — or a shared-axis name when
     * `(c -> i)` appears in `sharedAxes` (reference `**shared_axes`,
-    * `puffbird/frame.py:1104-1110`). Then combine the per-column long
-    * frames with chained full-outer equi-joins on the shared columns
-    * (original key + any shared-axis levels), exactly the reference's
-    * accumulating `pd.merge(..., how="outer")` (`puffbird/frame.py:527-534`).
+    * `puffbird/frame.py:1104-1110`). Then merge the per-column long rows
+    * on the shared columns (original key + any shared-axis levels),
+    * exactly the reference's accumulating `pd.merge(..., how="outer")`
+    * (`puffbird/frame.py:527-534`), as a chain of full-outer equi-joins
+    * would.
     *
     * `dropna = true` reproduces the implemented (not documented, see
     * SURVEY §2.13.4) semantics: null cells dropped per column *before*
     * explosion (`puffbird/frame.py:505-506`) and per explosion step; nulls
     * reintroduced by the outer merge remain.
     *
-    * Scale notes: explosions are `GenerateExec` (pipelined, no shuffle);
-    * each merge join shuffles on its key set — unavoidable in general
-    * because `sharedAxes` changes the key set per join; AQE handles skew
-    * from uneven fan-out. Columns listed in `expandCols` use [[expandCol]]
-    * (struct fields stay separate columns, prefixed `"{c}_"`) instead of
-    * being melted — reference `puffbird/frame.py:489-503`.
+    * Columns listed in `expandCols` use [[expandCol]] (struct fields stay
+    * separate columns, prefixed `"{c}_"`) instead of being melted —
+    * reference `puffbird/frame.py:489-503`.
     *
-    * Explain-verified shuffle budget: for two columns the plan is
-    * minimal — one exchange per side into one full-outer sort-merge join
-    * (measured against the union+groupBy form at sf0.1: within noise for
-    * k = 2, and the SMJ streams the per-key cartesian without buffering,
-    * so the fold is kept there).
-    * For k ≥ 3 columns whose melted frames all share the SAME join key
-    * set (the common case — level names are per-column, so the shared
-    * set is the row key at every fold step), the chained-join fold is
-    * replaced by a single-shuffle equivalent (see [[mergeUniformKey]]):
-    * union the frames, ONE groupBy on the key collecting one
-    * struct-array per frame, then a chain of pipelined `explode_outer`s
-    * reproduces the per-key outer cartesian. The chained fold would pay
-    * k input shuffles plus k−2 accumulator re-shuffles (full-outer join
-    * output reports `UnknownPartitioning`: Catalyst cannot see that the
-    * coalesced USING key preserves the hash clustering, so
-    * `EnsureRequirements` re-partitions the ever-wider accumulator
-    * before every further join — the r4 100×-scale structural cost).
-    * When key sets differ across steps (`sharedAxes` on a subset of
-    * columns, expand frames, or level-name collisions) the fold is kept:
-    * outer merges on differing key sets are not associative and the
-    * accumulating order is semantics.
+    * Shuffle budget: none. One column is a chain of `Generate`s
+    * (`posexplode`/`explode`/`stack`, pipelined in whole-stage codegen).
+    * Several columns are merged inside each input row ([[RowMerge]]): each
+    * column's melted rows are built in the row and one generator runs the
+    * outer merge in memory, so the plan is scan → project → `Generate`.
+    * This holds because every merge key contains the row key: each merged
+    * row comes from one input row. Rows that share a key are merged
+    * separately, where the reference refuses them and a join would cross
+    * them (DIVERGENCES.md #13). Only columns whose rows come from a
+    * frame-level step — a user `iterable` step, a JSON-string expand or a
+    * variant step — are folded on after the in-row merge with full-outer
+    * joins, one exchange per side each; the fold keeps its order, since
+    * outer merges on differing key sets are not associative. A shared
+    * level whose type differs across columns (the join would cast) or
+    * has no in-memory equality (see [[RowMerge]]) folds every column.
     */
   def toLong(
       selCols: Seq[String] = Nil,
@@ -214,126 +208,69 @@ final class FrameEngine private (
     if (missing.nonEmpty)
       throw new PuffbirdException(s"not datacols: ${missing.mkString(",")}")
 
-    val longs: Seq[(String, DataFrame, Boolean)] = targets.map { c =>
-      val depth = maxDepthPer.getOrElse(c, maxDepth)
-      val drop = dropnaPer.getOrElse(c, dropna)
+    def levelName(c: String)(i: Int): String =
+      sharedAxes.collectFirst {
+        case (axis, m) if m.get(c).contains(i) => axis
+      }.getOrElse(s"${c}_level$i")
+    def stepOf(c: String) = iterable.get(c).orElse(iterable.get(DefaultKey))
+    def condOf(c: String) = cond.get(c).orElse(cond.get(DefaultKey))
+    def depthOf(c: String) = maxDepthPer.getOrElse(c, maxDepth)
+    def dropOf(c: String) = dropnaPer.getOrElse(c, dropna)
+    // one target's melted frame, for the fold
+    def frameOf(c: String): (String, DataFrame, Boolean) =
       if (expandCols.contains(c)) {
         val frame = df.schema(c).dataType match {
-          case StringType => expandColJsonFrame(c, drop, prefix = true)
-          case _ => expandColFrame(c, drop, prefix = true,
+          case StringType => expandColJsonFrame(c, dropOf(c), prefix = true)
+          case _ => expandColFrame(c, dropOf(c), prefix = true,
             expandIndexFields.getOrElse(c, Nil))
         }
         (c, frame, true)
-      } else (c, explodeColumn(c, depth, drop, sharedAxes,
-        iterable.get(c).orElse(iterable.get(DefaultKey)),
-        cond.get(c).orElse(cond.get(DefaultKey))), false)
-    }
-    // Single-shuffle path: every fold step would join on the same key
-    // set — simulate the fold's shared-column computation to prove it
-    // (and require identical key types: the chained join would
-    // implicit-cast, which the union path must not silently change).
-    val uniformKey: Option[Seq[String]] =
-      if (longs.size >= 3 && longs.forall(!_._3)) {
-        val k0 = longs(0)._2.columns.toSeq.intersect(longs(1)._2.columns.toSeq)
-        var accCols = (longs(0)._2.columns.toSeq ++
-          longs(1)._2.columns.toSeq).distinct
-        var ok = k0.nonEmpty
-        for ((_, f, _) <- longs.drop(2)) {
-          ok &&= accCols.intersect(f.columns.toSeq) == k0
-          accCols = (accCols ++ f.columns.toSeq).distinct
-        }
-        ok &&= k0.forall { kc =>
-          val t0 = longs.head._2.schema(kc).dataType
-          longs.forall(_._2.schema(kc).dataType == t0)
-        }
-        if (ok) Some(k0) else None
-      } else None
+      } else (c, explodeColumn(c, depthOf(c), dropOf(c), levelName(c),
+        stepOf(c), condOf(c)), false)
+    // one target's melted rows inside its row, for the per-row merge; None
+    // where a frame-level step (user `iterable`, JSON expand, variant) runs
+    def cellsOf(c: String): Option[RowMerge.Cells] =
+      if (expandCols.contains(c)) df.schema(c).dataType match {
+        case StringType => None
+        case _ => Some(expandColCells(c, dropOf(c), expandIndexFields.getOrElse(c, Nil)))
+      }
+      else if (stepOf(c).isDefined) None
+      else Explode.cellRows(col(c), df.schema(c).dataType, c, levelName(c),
+        depthOf(c), dropOf(c), t => condOf(c).exists(_(t)))
 
-    // Accumulating outer merge (`puffbird/frame.py:527-534`). Melted
-    // frames join on the full column intersection (= key + level names —
-    // a melted frame's only other column is its value, whose name is
-    // collision-checked). Expanded frames join on the ROW KEY only, with
+    // Accumulating outer merge (`puffbird/frame.py:527-534`). The leading
+    // targets whose rows come from built-in steps merge inside each row
+    // ([[RowMerge]]: no exchange); the rest fold on with full-outer joins.
+    // Melted frames join on the full column intersection (= key + level
+    // names — a melted frame's only other column is its value, whose name
+    // is collision-checked). Expanded frames join on the ROW KEY only, with
     // any other colliding column renamed `"{name}_{c}"` — the reference's
     // merge `suffixes=("", f"_{datacol}")` (tutorial cell 23: a cell
     // index field named like an exploded datacol becomes `a_e`).
-    uniformKey.map(mergeUniformKey(longs, _)).getOrElse {
-      longs.tail.foldLeft(longs.head._2) { case (acc, (c, nxt0, isExpand)) =>
-        if (isExpand) {
-          val shared = indexCols.filter(k =>
-            acc.columns.contains(k) && nxt0.columns.contains(k))
-          val collisions = nxt0.columns.toSeq
-            .filterNot(shared.contains).filter(acc.columns.contains)
-          val nxt = nxt0.withColumnsRenamed(
-            collisions.map(n => n -> s"${n}_$c").toMap)
-          acc.join(nxt, shared, "full_outer")
-        } else {
-          val shared = acc.columns.toSeq.intersect(nxt0.columns.toSeq)
-          acc.join(nxt0, shared, "full_outer")
-        }
+    val inRow =
+      if (targets.size < 2) Nil
+      else targets.iterator.map(cellsOf).takeWhile(_.isDefined).flatten.toSeq
+    val merged = if (inRow.size < 2) None else RowMerge(df, indexCols, inRow)
+    val (start, rest) = merged match {
+      case Some(m) => (m, targets.drop(inRow.size).map(frameOf))
+      case None =>
+        val longs = targets.map(frameOf)
+        (longs.head._2, longs.tail)
+    }
+    rest.foldLeft(start) { case (acc, (c, nxt0, isExpand)) =>
+      if (isExpand) {
+        val shared = indexCols.filter(k =>
+          acc.columns.contains(k) && nxt0.columns.contains(k))
+        val collisions = nxt0.columns.toSeq
+          .filterNot(shared.contains).filter(acc.columns.contains)
+        val nxt = nxt0.withColumnsRenamed(
+          collisions.map(n => n -> s"${n}_$c").toMap)
+        acc.join(nxt, shared, "full_outer")
+      } else {
+        val shared = acc.columns.toSeq.intersect(nxt0.columns.toSeq)
+        acc.join(nxt0, shared, "full_outer")
       }
     }
-  }
-
-  /** Single-shuffle k-way outer merge for melted frames sharing one join
-    * key set. Equivalence with the chained full-outer fold: per key, the
-    * fold emits the cartesian product of each frame's rows for that key
-    * (an absent frame contributes one all-null row). Reproduced as: pad
-    * each frame to (key, struct-of-own-columns), union (no shuffle), ONE
-    * groupBy(key) collecting one array per frame (`collect_list` skips
-    * the union's null padding), then chained `explode_outer` — the
-    * cartesian, pipelined, with an empty array yielding exactly the one
-    * null-extended row. Total: one shuffle, vs the fold's k input
-    * shuffles + k−2 accumulator re-shuffles.
-    *
-    * Null-key subtlety: SQL join equality never matches null keys, so in
-    * the fold a row with a null key passes through null-extended and
-    * never multiplies — but `groupBy` would GROUP null keys together.
-    * Null-key rows are therefore routed AROUND the shuffle: filtered out
-    * before the aggregation and unioned back after the explode stage as a
-    * pipelined projection (their one populated payload struct, the rest
-    * null). Deterministic under stage retry/speculation — the earlier
-    * disambiguator (`monotonically_increasing_id` feeding the exchange)
-    * could re-assign ids on a recomputed map task and silently duplicate
-    * or lose null-key rows.
-    *
-    * Skew: all rows of one key meet in one aggregation buffer — the same
-    * per-key locality the join's cartesian needs anyway; AQE handles the
-    * single exchange's skew.
-    */
-  private def mergeUniformKey(
-      longs: Seq[(String, DataFrame, Boolean)],
-      key: Seq[String]): DataFrame = {
-    val payloads = longs.zipWithIndex.map { case ((_, f, _), i) =>
-      val own = f.columns.toSeq.filterNot(key.contains)
-      (s"${RowAlias}_p$i", own,
-        f.select(key.map(col) :+ struct(own.map(col): _*).as(s"${RowAlias}_p$i"): _*))
-    }
-    val unioned = payloads.map(_._3)
-      .reduce(_.unionByName(_, allowMissingColumns = true))
-    val anyNullKey = key.map(col(_).isNull).reduce(_ || _)
-    val aggs = payloads.map { case (p, _, _) => collect_list(col(p)).as(p) }
-    val grouped = unioned.filter(!anyNullKey)
-      .groupBy(key.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-    val explodedGrouped = payloads.foldLeft(grouped) { case (acc, (p, _, _)) =>
-      acc.withColumn(p, explode_outer(col(p)))
-    }
-    // null-key rows bypass the exchange: one-per-input-row, each carrying
-    // its own payload struct with the others null (unionByName padded)
-    val payloadCols = (key ++ payloads.map(_._1)).map(col)
-    val exploded = explodedGrouped.select(payloadCols: _*)
-      .unionByName(unioned.filter(anyNullKey).select(payloadCols: _*))
-    // the fold's exact output column order: F1's columns, then each
-    // later frame's non-shared columns in frame order
-    val finalCols = longs.map(_._2.columns.toSeq)
-      .reduce((a, b) => a ++ b.filterNot(a.contains))
-    exploded.select(finalCols.map { cn =>
-      if (key.contains(cn)) col(cn)
-      else {
-        val p = payloads.find(_._2.contains(cn)).get._1
-        col(p).getField(cn).as(cn)
-      }
-    }: _*)
   }
 
   /** Single-column toLong convenience. */
@@ -343,14 +280,9 @@ final class FrameEngine private (
       c: String,
       maxDepth: Int,
       drop: Boolean,
-      sharedAxes: Map[String, Map[String, Int]],
+      levelName: Int => String,
       customStep: Option[ExplodeStep] = None,
       stopCond: Option[DataType => Boolean] = None): DataFrame = {
-    def levelName(i: Int): String =
-      sharedAxes.collectFirst {
-        case (axis, m) if m.get(c).contains(i) => axis
-      }.getOrElse(s"${c}_level$i")
-
     var frame = df.select((indexCols :+ c).map(col): _*)
     // dropna before explosion (`puffbird/frame.py:505-506`) — but only
     // when no built-in explosion step will run: the inner
@@ -497,11 +429,14 @@ final class FrameEngine private (
     tmp.select((indexCols :+ ordName).map(col) ++ fieldCols: _*)
   }
 
-  private def expandColFrame(
+  /** The cell struct of `expandCol(c)` and its output layout after the row
+    * key: the ordinal column (absent with `indexFields`), then each
+    * (struct field, output name).
+    */
+  private def expandLayout(
       c: String,
-      drop: Boolean,
       prefix: Boolean,
-      indexFields: Seq[String] = Nil): DataFrame = {
+      indexFields: Seq[String]): (StructType, Option[String], Seq[(String, String)]) = {
     val st = df.schema(c).dataType match {
       case ArrayType(s: StructType, _) => s
       case other =>
@@ -518,23 +453,46 @@ final class FrameEngine private (
     // keyed concat (`puffbird/frame.py:671-681`; golden c6). Cells with a
     // NAMED index (`indexFields`) contribute those fields instead of an
     // ordinal (golden c19).
-    val ordName = s"level_${indexCols.size}"
-    val ex = if (drop) posexplode(col(c)) else posexplode_outer(col(c))
-    val tmp = df.select(indexCols.map(col) :+ ex: _*)
-      .withColumnRenamed("pos", ordName)
-      .withColumnRenamed("col", RowAlias)
+    val ordinal = if (indexFields.isEmpty) Some(s"level_${indexCols.size}") else None
     def outName(f: String, isIndexField: Boolean): String =
       if (!isIndexField && prefix) s"${c}_$f"
       else if (indexCols.contains(f)) s"${f}_$c"
       else f
-    val idxCols = indexFields.map(f =>
-      col(RowAlias).getField(f).as(outName(f, isIndexField = true)))
-    val fieldCols = st.fieldNames.toSeq.filterNot(indexFields.contains).map(
-      f => col(RowAlias).getField(f).as(outName(f, isIndexField = false)))
-    val keyPart =
-      if (indexFields.nonEmpty) indexCols.map(col) ++ idxCols
-      else (indexCols :+ ordName).map(col)
-    tmp.select(keyPart ++ fieldCols: _*)
+    val fields = indexFields.map(f => f -> outName(f, isIndexField = true)) ++
+      st.fieldNames.toSeq.filterNot(indexFields.contains)
+        .map(f => f -> outName(f, isIndexField = false))
+    (st, ordinal, fields)
+  }
+
+  private def expandColFrame(
+      c: String,
+      drop: Boolean,
+      prefix: Boolean,
+      indexFields: Seq[String] = Nil): DataFrame = {
+    val (_, ordinal, fields) = expandLayout(c, prefix, indexFields)
+    val ex = (if (drop) posexplode(col(c)) else posexplode_outer(col(c)))
+      .as(Seq(ordinal.getOrElse(RowAlias + "_pos"), RowAlias))
+    df.select(indexCols.map(col) :+ ex: _*).select(
+      indexCols.map(col) ++ ordinal.map(col) ++
+        fields.map { case (f, o) => col(RowAlias).getField(f).as(o) }: _*)
+  }
+
+  /** [[expandColFrame]] (prefixed, as `toLong` expands) built inside the
+    * row for [[RowMerge]].
+    */
+  private def expandColCells(c: String, drop: Boolean, indexFields: Seq[String]): RowMerge.Cells = {
+    val (st, ordinal, fields) = expandLayout(c, prefix = true, indexFields)
+    def row(i: Column, s: Column): Column = struct(
+      (ordinal.map(_ => i).toSeq ++ fields.map(f => s.getField(f._1)))
+        .zipWithIndex.map { case (v, j) => v.as(s"_$j") }: _*)
+    val rows = transform(col(c), (s, i) => row(i, s))
+    RowMerge.Cells(
+      if (drop) rows
+      else when(col(c).isNull || size(col(c)) === 0,
+        array(row(lit(null).cast(IntegerType), lit(null).cast(st)))).otherwise(rows),
+      ordinal.map(StructField(_, IntegerType)).toSeq ++
+        fields.map { case (f, o) => StructField(o, st(f).dataType) },
+      expandOf = Some(c))
   }
 
   // ---------------------------------------------------------------------
@@ -648,7 +606,8 @@ final class FrameEngine private (
 
   /** Distributed row-key uniqueness check (reference eagerly validates on
     * construction and key mutation: `puffbird/frame.py:204-207,816-822,
-    * 888-890`). Opt-in because it is a full aggregation job.
+    * 888-890`). Opt-in because it is a full aggregation job. Without it,
+    * `toLong` merges rows that share a key separately (DIVERGENCES.md #13).
     */
   def validateKeys(): Unit = {
     if (indexCols.isEmpty) throw new PuffbirdException("no index columns")

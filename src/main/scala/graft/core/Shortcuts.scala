@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types._
 
 /** Convenience entry points — reference `puffbird/shortcuts.py:8-132`
   * (`puffy_to_long(table, *cols, **kwargs)` = construct + `to_long`).
@@ -42,13 +43,25 @@ object TensorHelper {
   }
 
   /** Collect a long pivot result (`dims..., value`) into a dense tensor.
-    * Coordinates are the sorted distinct values of each dim column.
+    * Coordinates are the sorted distinct values of each dim column: by
+    * value for numeric, string, boolean, date and timestamp dims (as
+    * xarray orders them), by their text otherwise; nulls last. A null
+    * value (e.g. a mean over nulls only) is NaN, like a missing cell.
     */
   def toDense(df: DataFrame, dims: Seq[String], valueCol: String): DenseTensor = {
-    val rows = df.select((dims :+ valueCol).map(org.apache.spark.sql.functions.col): _*)
-      .collect()
+    val sel = df.select((dims :+ valueCol).map(org.apache.spark.sql.functions.col): _*)
+    val rows = sel.collect()
     val coords: Seq[Seq[Any]] = dims.indices.map { i =>
-      rows.map(_.get(i)).distinct.sortBy(_.toString).toSeq
+      val byValue = sel.schema(i).dataType match {
+        case _: NumericType | _: StringType | BooleanType | DateType |
+             TimestampType | TimestampNTZType => true
+        case _ => false
+      }
+      val (present, nulls) = rows.map(_.get(i)).distinct.toSeq.partition(_ != null)
+      val sorted =
+        if (byValue) present.sortWith(_.asInstanceOf[Comparable[Any]].compareTo(_) < 0)
+        else present.sortBy(_.toString)
+      sorted ++ nulls
     }
     val index: Seq[Map[Any, Int]] = coords.map(_.zipWithIndex.toMap)
     val shape = coords.map(_.size)
@@ -57,7 +70,10 @@ object TensorHelper {
       val flat = dims.indices.foldLeft(0) { (acc, i) =>
         acc * shape(i) + index(i)(r.get(i))
       }
-      out(flat) = r.getDouble(dims.size) match { case v => v }
+      out(flat) = r.get(dims.size) match {
+        case null => Double.NaN
+        case v: Number => v.doubleValue
+      }
     }
     DenseTensor(coords, out)
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{FrameEngine, PuffbirdException}
+import graft.core.{FrameEngine, PuffbirdException, Shortcuts}
 
 /** Golden tests transcribing the reference's docstring examples
   * (`puffbird/frame.py:110-144, 431-463`, `puffbird/shortcuts.py:98-129`)
@@ -252,11 +252,11 @@ class FrameEngineSpec extends AnyFunSuite {
     assert(out.filter($"index_level0" === 2L).count() === 3L)
   }
 
-  test("k>=3 uniform-key merge matches the chained full-outer fold" +
+  test("k>=3 per-row merge matches the chained full-outer fold" +
       " (incl. null keys and one-sided keys)") {
     // three columns, a key with uneven fan-out (2x1x3), a key missing
     // from one frame (y empty for k=1), and a NULL key row — the cases
-    // where the single-shuffle rewrite could diverge from join semantics
+    // where the in-row merge could diverge from join semantics
     val df = Seq(
       (Some(0L), Seq(1L, 2L), Seq(10L), Seq(100L, 200L, 300L)),
       (Some(1L), Seq(3L), Seq.empty[Long], Seq(400L)),
@@ -277,21 +277,32 @@ class FrameEngineSpec extends AnyFunSuite {
     assert(out.filter($"k".isNull).count() === 3L)
   }
 
-  test("k>=3 uniform-key merge plans exactly ONE shuffle exchange") {
+  test("toLong merges plan no shuffle exchange (AQE off and on)") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    object Plans extends AdaptiveSparkPlanHelper
+    val df = Seq((0L, Seq(1L), Seq(2L), Seq(3L), Seq(4L), Map("x" -> 5L)))
+      .toDF("k", "a", "b", "c", "d", "m")
+    val eng = FrameEngine(df, Seq("k"))
+    val calls: Seq[(String, () => DataFrame)] = Seq(
+      "k=2" -> (() => eng.toLong(Seq("a", "b"))),
+      "k=3" -> (() => eng.toLong(Seq("a", "b", "c"))),
+      "k=4" -> (() => eng.toLong(Seq("a", "b", "c", "d"))),
+      "sharedAxes" -> (() => eng.toLong(Seq("a", "b", "c"),
+        sharedAxes = Map("t" -> Map("a" -> 0, "b" -> 0, "c" -> 0)))),
+      "puffyToLong" -> (() => Shortcuts.puffyToLong(df.select("k", "m", "a"),
+        cols = Seq("m", "a"), indexcols = Seq("k"))))
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val df = Seq((0L, Seq(1L), Seq(2L), Seq(3L), Seq(4L)))
-        .toDF("k", "a", "b", "c", "d")
-      val out = FrameEngine(df, Seq("k")).toLong()
-      val shuffles = out.queryExecution.executedPlan.collect {
-        case s: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => s
+      for (aqe <- Seq("false", "true"); (name, call) <- calls) {
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        val out = call()
+        out.collect()
+        val plan = out.queryExecution.executedPlan
+        val shuffles = Plans.collect(plan) { case s: ShuffleExchangeLike => s }
+        assert(shuffles.isEmpty, s"$name (AQE $aqe) plans ${shuffles.size} shuffles:\n$plan")
       }
-      // the chained fold would plan 4 input shuffles + 2 accumulator
-      // re-shuffles; the union+groupBy+explode_outer rewrite plans one
-      assert(shuffles.size === 1,
-        s"expected 1 shuffle, got ${shuffles.size}:\n" +
-          out.queryExecution.executedPlan.toString)
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
 }

@@ -110,6 +110,18 @@ class ParitySpec extends AnyFunSuite {
     assert(t(Seq(1, 0)) === 20.0) // foo/one → mean(10,30)
     assert(t(Seq(0, 1)) === 50.0) // bar/three
     assert(t(Seq(1, 1)).isNaN)    // foo/three missing
+    // integer dims order by value (0, 1, 2, ..., 12, as xarray does), not
+    // as text (0, 1, 10, 11, 12, 2); a mean over nulls only is NaN
+    val ints = ((0 to 12).map(i => (i, Option(i.toDouble))) ++
+      Seq((7, None), (7, None))).filterNot(r => r._1 == 7 && r._2.isDefined)
+      .toDF("i", "v")
+    val byInt = TensorHelper.toDense(
+      FrameEngine(ints, datacols = Seq("v")).multidPivot(Seq("v"), Seq("i")),
+      Seq("i"), "v")
+    assert(byInt.coords(0) === (0 to 12))
+    assert(byInt(Seq(2)) === 2.0)
+    assert(byInt(Seq(10)) === 10.0)
+    assert(byInt(Seq(7)).isNaN)
   }
 
   test("streaming stateful sessionize matches the batch sessionizer") {

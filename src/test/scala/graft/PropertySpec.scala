@@ -392,29 +392,69 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("k=3 uniform-key merge ≡ chained full-outer fold on random frames" +
-      " (empty arrays, null keys, duplicate keys)") {
-    val gen: Gen[(Option[Long], List[Long], List[Long], List[String])] = for {
-      k <- Gen.option(Gen.choose(0L, 3L)) // few keys => collisions + dups
-      na <- Gen.choose(0, 3); a <- Gen.listOfN(na, Gen.choose(-9L, 9L))
-      nb <- Gen.choose(0, 2); b <- Gen.listOfN(nb, Gen.choose(-9L, 9L))
+  test("per-row merge ≡ full-outer fold keyed on (k, row id) on random frames" +
+      " (shared axes, map x array, nested tables, null cells and keys, dup keys)") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    type Row = (Option[Long], Option[List[Option[Long]]], Option[List[Long]],
+      List[String], Option[Map[String, Long]], Option[Map[String, Long]],
+      Option[List[(Long, Double)]], Option[(Long, Double)], Option[Double])
+    val mapGen = Gen.choose(0, 2).flatMap(nm => Gen.option(Gen.listOfN(nm,
+      Gen.zip(Gen.oneOf("x", "y", "z"), Gen.choose(0L, 9L))).map(_.toMap)))
+    val gen: Gen[Row] = for {
+      k <- Gen.option(Gen.choose(0L, 3L)) // few keys => duplicate keys
+      na <- Gen.choose(0, 3)
+      a <- Gen.option(Gen.listOfN(na, Gen.option(Gen.choose(-9L, 9L))))
+      nb <- Gen.choose(0, 2); b <- Gen.option(Gen.listOfN(nb, Gen.choose(-9L, 9L)))
       nc <- Gen.choose(0, 2); c <- Gen.listOfN(nc, Gen.alphaStr.map(_.take(3)))
-    } yield (k, a, b, c)
-    (1 to 8).foreach { i =>
+      m <- mapGen; p <- mapGen
+      nn <- Gen.choose(0, 2)
+      n <- Gen.option(Gen.listOfN(nn, Gen.zip(Gen.choose(0L, 9L),
+        Gen.choose(0, 9).map(_.toDouble))))
+      st <- Gen.option(Gen.zip(Gen.choose(0L, 9L), Gen.choose(0, 9).map(_.toDouble)))
+      x <- Gen.option(Gen.oneOf(1.5, -2.0, Double.NaN))
+    } yield (k, a, b, c, m, p, n, st, x)
+    val t = "t"
+    // (columns, sharedAxes): k = 2 and 3, shared axes on all columns and on
+    // a subset, map x array, maps on a shared string axis, a nested table,
+    // a struct melt, a scalar (NaN is na.drop'ped)
+    val cases: Seq[(Seq[String], Map[String, Map[String, Int]])] = Seq(
+      (Seq("a", "b", "c"), Map.empty),
+      (Seq("a", "b"), Map(t -> Map("a" -> 0, "b" -> 0))),
+      (Seq("a", "b", "c"), Map(t -> Map("a" -> 0, "b" -> 0, "c" -> 0))),
+      (Seq("a", "b", "c"), Map(t -> Map("a" -> 0, "c" -> 0))),
+      (Seq("m", "a"), Map.empty),
+      (Seq("m", "p"), Map(t -> Map("m" -> 0, "p" -> 0))),
+      (Seq("st", "x", "a"), Map.empty),
+      (Seq("n", "b", "c"), Map.empty),
+      (Seq("a", "n"), Map(t -> Map("a" -> 0, "n" -> 0))))
+    (1 to 4).foreach { i =>
       val seed = rng.Seed(1000L + i)
       val rows = (0 until (2 + i % 5)).toList.map(r =>
         gen.pureApply(Gen.Parameters.default, seed.slide.reseed(r)))
-      val df = rows.toDF("k", "a", "b", "c")
-      val out = FrameEngine(df, Seq("k")).toLong()
-      def melt(cn: String) = df.select(col("k"), posexplode(col(cn)))
-        .select(col("k"), col("pos").as(s"${cn}_level0"), col("col").as(cn))
-      val expected = melt("a")
-        .join(melt("b"), Seq("k"), "full_outer")
-        .join(melt("c"), Seq("k"), "full_outer")
-      assert(out.columns.toSeq === expected.columns.toSeq, s"rows=$rows")
-      val got = out.collect().map(_.toSeq).sortBy(_.toString())
-      val want = expected.collect().map(_.toSeq).sortBy(_.toString())
-      assert(got === want, s"rows=$rows")
+      val withId = rows.zipWithIndex.map { case ((k, a, b, c, m, p, n, st, x), r) =>
+        (k, r.toLong, a, b, c, m, p, n, st, x)
+      }.toDF("k", "rid", "a", "b", "c", "m", "p", "n", "st", "x")
+      val df = withId.drop("rid")
+      for ((cols, shared) <- cases; dropna <- Seq(true, false)) {
+        val out = FrameEngine(df, Seq("k"))
+          .toLong(cols, dropna = dropna, sharedAxes = shared)
+        // expected: the chained full-outer fold of the one-column melts,
+        // keyed on (k, row id) — for unique keys, the fold keyed on k
+        val eng = FrameEngine(withId, Seq("k", "rid"))
+        val expected = cols.map(cn =>
+          eng.toLong(Seq(cn), dropna = dropna, sharedAxes = shared))
+          .reduce((acc: DataFrame, nxt: DataFrame) =>
+            acc.join(nxt, acc.columns.toSeq.intersect(nxt.columns.toSeq), "full_outer"))
+          .drop("rid")
+        val what = s"cols=$cols shared=$shared dropna=$dropna rows=$rows"
+        assert(out.queryExecution.optimizedPlan.collect { case j: Join => j }.isEmpty, what)
+        assert(out.schema === expected.schema, what)
+        // as text: NaN never equals itself
+        val got = out.collect().map(_.toSeq.toString).sorted
+        val want = expected.collect().map(_.toSeq.toString).sorted
+        assert(got === want, what)
+      }
     }
   }
 
