@@ -1,18 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.SparkEntry.Gate
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet stores TIMESTAMP(NANOS); Spark only reads it as long
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // optional isolation: SPARK_GRAFT_BENCH_ONLY=q1_agg,q2_star_join runs
+    // just those queries (profiling aid; the driver never sets it)
+    val selected = Harness.gates("SPARK_GRAFT_BENCH_ONLY")
+    val spark = Harness.session("WARN")
     // codec gates: pre-materialize fixture payloads once per (gate, sf)
     // so the timed region prices DECODE + join, not the in-plan fixture
     // FDCT/Huffman/deflate encode (rep 1 pays the materialize, min-of-
@@ -40,25 +34,8 @@ object Bench {
     // (r4: the single-shot record overstated two unchanged queries 3-4x
     // and the suite total by 40% vs an uncontended re-run)
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    // optional isolation: SPARK_GRAFT_BENCH_ONLY=q1_agg,q2_star_join runs
-    // just those queries (profiling aid; the driver never sets it)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // a typo'd name must not silently bench a partial (or empty) suite
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      if (unknown.nonEmpty) {
-        System.err.println(
-          s"[bench] unknown SPARK_GRAFT_BENCH_ONLY names: ${unknown.toSeq.sorted.mkString(", ")}")
-        sys.exit(2)
-      }
-    }
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None => SparkEntry.queries
-    }
     val explain = sys.env.contains("SPARK_GRAFT_BENCH_EXPLAIN")
-    val results = selected.map { case (name, fn) =>
+    val results = selected.map { case (name, Gate(fn, _)) =>
       if (explain) {
         System.err.println(s"==== $name ====")
         fn(spark, sfDir).explain("formatted")

@@ -7,12 +7,16 @@ import org.apache.spark.sql.types._
 import graft.core.FrameEngine
 import graft.functions.TextFunctions
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.sources.Commit
 import graft.streaming.Events
 
-/** Driver contract — one `queries` entry (+ DuckDB `oracleSql`) per
-  * implemented operator from SURVEY.md §2 and the LLM-pipeline extensions.
-  * Column names are aligned between the Spark result and the oracle SQL
-  * (the driver sorts columns by name before hashing values).
+/** Driver contract — one [[SparkEntry.Gate]] in the [[SparkEntry.gates]]
+  * registry per implemented operator from SURVEY.md §2 and the
+  * LLM-pipeline extensions: the Spark query and its DuckDB oracle SQL,
+  * declared together. `queries` and `oracleSql`, the two maps the driver
+  * reads, are projections of it. Column names are aligned between the
+  * Spark result and the oracle SQL (the driver sorts columns by name
+  * before hashing values).
   */
 object SparkEntry {
 
@@ -549,11 +553,7 @@ object SparkEntry {
   private def streamingDedupSemanticQ(s: SparkSession, dir: String): DataFrame = {
     val idx = s"/tmp/graft_sdsem_${Integer.toHexString(dir.hashCode)}"
     val out = s"/tmp/graft_sdsem_out_${Integer.toHexString(dir.hashCode)}"
-    val hconf = s.sparkContext.hadoopConfiguration
-    Seq(idx, out).foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(hconf).delete(hp, true)
-    }
+    Commit.tombstone(s, idx, out)
     val e = embs(s, dir)
     val centroids = e.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("centroid_id"), col("embedding").as("__cv"))
@@ -586,11 +586,7 @@ object SparkEntry {
   private def streamingDedupIndexQ(s: SparkSession, dir: String): DataFrame = {
     val idx = s"/tmp/graft_sdidx_${Integer.toHexString(dir.hashCode)}"
     val out = s"/tmp/graft_sdidx_out_${Integer.toHexString(dir.hashCode)}"
-    val hconf = s.sparkContext.hadoopConfiguration
-    Seq(idx, out).foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(hconf).delete(hp, true)
-    }
+    Commit.tombstone(s, idx, out)
     val d = docs(s, dir)
     graft.sources.DedupIndex.build(
       d.filter(col("doc_id") % 3 =!= 0), "doc_id", "text", idx)
@@ -615,11 +611,7 @@ object SparkEntry {
   private def streamingSubstringIndexQ(s: SparkSession, dir: String): DataFrame = {
     val idx = s"/tmp/graft_ssidx_${Integer.toHexString(dir.hashCode)}"
     val out = s"/tmp/graft_ssidx_out_${Integer.toHexString(dir.hashCode)}"
-    val hconf = s.sparkContext.hadoopConfiguration
-    Seq(idx, out).foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(hconf).delete(hp, true)
-    }
+    Commit.tombstone(s, idx, out)
     def plant(d: DataFrame): DataFrame = d.select(col("doc_id"),
       when(col("doc_id") % 5 === 0,
         concat(lit(SubstringBoilerplate + " "), col("text")))
@@ -696,8 +688,7 @@ object SparkEntry {
     */
   private def sampleBottomkMergeQ(s: SparkSession, dir: String): DataFrame = {
     val path = s"/tmp/graft_bks_${Integer.toHexString(dir.hashCode)}"
-    val hp = new org.apache.hadoop.fs.Path(path)
-    hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
+    Commit.tombstone(s, path)
     val d = docs(s, dir).select(col("doc_id"), col("lang"), col("source"))
     graft.operators.Sampling.writeSampleIndex(
       d.filter(col("doc_id") % 2 === 0), "doc_id", path, k = 50)
@@ -718,11 +709,7 @@ object SparkEntry {
   private def streamingSampleIndexQ(s: SparkSession, dir: String): DataFrame = {
     val path = s"/tmp/graft_bks_stream_${Integer.toHexString(dir.hashCode)}"
     val ckpt = s"/tmp/graft_bks_ckpt_${Integer.toHexString(dir.hashCode)}"
-    val hconf = s.sparkContext.hadoopConfiguration
-    Seq(path, ckpt).foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(hconf).delete(hp, true)
-    }
+    Commit.tombstone(s, path, ckpt)
     graft.operators.Sampling.sampleIngestStream(
         docStream(s, dir).select(col("doc_id"), col("lang"), col("source")),
         "doc_id", path, k = 50)
@@ -761,11 +748,7 @@ object SparkEntry {
   private def streamingQualityBucketsQ(s: SparkSession, dir: String): DataFrame = {
     val out = s"/tmp/graft_qb_out_${Integer.toHexString(dir.hashCode)}"
     val ckpt = s"/tmp/graft_qb_ckpt_${Integer.toHexString(dir.hashCode)}"
-    val hconf = s.sparkContext.hadoopConfiguration
-    Seq(out, ckpt).foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(hconf).delete(hp, true)
-    }
+    Commit.tombstone(s, out, ckpt)
     val m0 = TextAnalysis.qualityBucketTrain(
       docs(s, dir), "doc_id", "text", "lang")
     val model = m0.copy(vocab = m0.vocab.localCheckpoint(),
@@ -907,11 +890,7 @@ object SparkEntry {
   private def streamingCmsQ(s: SparkSession, dir: String): DataFrame = {
     val path = s"/tmp/graft_cms_stream_${Integer.toHexString(dir.hashCode)}"
     val ckpt = s"/tmp/graft_cms_ckpt_${Integer.toHexString(dir.hashCode)}"
-    val hconf = s.sparkContext.hadoopConfiguration
-    Seq(path, ckpt).foreach { pp =>
-      val hp = new org.apache.hadoop.fs.Path(pp)
-      hp.getFileSystem(hconf).delete(hp, true)
-    }
+    Commit.tombstone(s, path, ckpt)
     val wordsStream = docWordsOf(docStream(s, dir))
     graft.operators.Sketches.cmsIngestStream(
         wordsStream, col("w"), path, depth = 4, width = 1024)
@@ -930,8 +909,7 @@ object SparkEntry {
     */
   private def sketchCmsMergeQ(s: SparkSession, dir: String): DataFrame = {
     val path = s"/tmp/graft_cms_${Integer.toHexString(dir.hashCode)}"
-    val hp = new org.apache.hadoop.fs.Path(path)
-    hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
+    Commit.tombstone(s, path)
     val d = docs(s, dir)
     graft.operators.Sketches.writeCms(
       docWordsOf(d.filter(col("doc_id") % 2 === 0)), col("w"), path, 4, 1024)
@@ -952,8 +930,7 @@ object SparkEntry {
     */
   private def sketchHllMergeQ(s: SparkSession, dir: String): DataFrame = {
     val path = s"/tmp/graft_hll_${Integer.toHexString(dir.hashCode)}"
-    val hp = new org.apache.hadoop.fs.Path(path)
-    hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
+    Commit.tombstone(s, path)
     val d = docs(s, dir)
     graft.operators.Sketches.writeHll(
       d.filter(col("doc_id") % 2 === 0), col("text"), path, p = 12)
@@ -974,11 +951,7 @@ object SparkEntry {
   private def streamingSketchQ(s: SparkSession, dir: String): DataFrame = {
     val path = s"/tmp/graft_hll_stream_${Integer.toHexString(dir.hashCode)}"
     val ckpt = s"/tmp/graft_hll_ckpt_${Integer.toHexString(dir.hashCode)}"
-    val hconf = s.sparkContext.hadoopConfiguration
-    Seq(path, ckpt).foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(hconf).delete(hp, true)
-    }
+    Commit.tombstone(s, path, ckpt)
     graft.operators.Sketches.hllIngestStream(
         docStream(s, dir), col("text"), path, p = 12)
       .option("checkpointLocation", ckpt)
@@ -1073,11 +1046,7 @@ object SparkEntry {
   private def streamingKllQ(s: SparkSession, dir: String): DataFrame = {
     val path = s"/tmp/graft_skll_${Integer.toHexString(dir.hashCode)}"
     val ck1 = s"${path}_ck1"; val ck2 = s"${path}_ck2"
-    val hconf = s.sparkContext.hadoopConfiguration
-    Seq(path, ck1, ck2).foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(hconf).delete(hp, true)
-    }
+    Commit.tombstone(s, path, ck1, ck2)
     graft.operators.Sketches.writeKll(
       docs(s, dir).filter(col("doc_id") % 3 =!= 0), "n_chars", "lang",
       path, k = 16)
@@ -1103,8 +1072,7 @@ object SparkEntry {
     */
   private def sketchQuantileMergeQ(s: SparkSession, dir: String): DataFrame = {
     val path = s"/tmp/graft_qtl_${Integer.toHexString(dir.hashCode)}"
-    val hp = new org.apache.hadoop.fs.Path(path)
-    hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
+    Commit.tombstone(s, path)
     val d = docs(s, dir)
     graft.operators.Sketches.writeQuantile(
       d.filter(col("doc_id") % 2 === 0), "doc_id", "n_chars", "lang",
@@ -1127,11 +1095,7 @@ object SparkEntry {
   private def streamingQuantileQ(s: SparkSession, dir: String): DataFrame = {
     val path = s"/tmp/graft_qtl_stream_${Integer.toHexString(dir.hashCode)}"
     val ckpt = s"/tmp/graft_qtl_ckpt_${Integer.toHexString(dir.hashCode)}"
-    val hconf = s.sparkContext.hadoopConfiguration
-    Seq(path, ckpt).foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(hconf).delete(hp, true)
-    }
+    Commit.tombstone(s, path, ckpt)
     graft.operators.Sketches.quantileIngestStream(
         docStream(s, dir), "doc_id", "n_chars", "lang", path, k = 64)
       .option("checkpointLocation", ckpt)
@@ -1193,8 +1157,7 @@ object SparkEntry {
   private def releaseAppendQ(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
     val path = s"/tmp/graft_release_app_${Integer.toHexString(dir.hashCode)}"
-    val hp = new org.apache.hadoop.fs.Path(path)
-    hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
+    Commit.tombstone(s, path)
     val d = docs(s, dir).select("doc_id", "text", "lang")
     graft.sources.Release.writeRelease(
       d.filter(col("doc_id") % 2 === 0), "doc_id", "text", path,
@@ -1220,8 +1183,7 @@ object SparkEntry {
   private def releaseDiffQ(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
     val base = s"/tmp/graft_release_diff_${Integer.toHexString(dir.hashCode)}"
-    val hp = new org.apache.hadoop.fs.Path(base)
-    hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
+    Commit.tombstone(s, base)
     val d = docs(s, dir).select("doc_id", "text", "lang")
     val v2 = d.withColumn("text",
       when(col("doc_id") % 10 === 0, concat(col("text"), lit(" [rev2]")))
@@ -1249,8 +1211,7 @@ object SparkEntry {
   private def releaseDeleteQ(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
     val path = s"/tmp/graft_release_del_${Integer.toHexString(dir.hashCode)}"
-    val hp = new org.apache.hadoop.fs.Path(path)
-    hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
+    Commit.tombstone(s, path)
     val d = docs(s, dir).select("doc_id", "text", "lang")
     graft.sources.Release.writeRelease(d, "doc_id", "text", path,
       nShards = 8)
@@ -1280,8 +1241,7 @@ object SparkEntry {
     import org.apache.spark.sql.types._
     val path = s"/tmp/graft_release_cmp_${Integer.toHexString(dir.hashCode)}"
     val hconf = s.sparkContext.hadoopConfiguration
-    val hp = new org.apache.hadoop.fs.Path(path)
-    hp.getFileSystem(hconf).delete(hp, true)
+    Commit.tombstone(s, path)
     val d = docs(s, dir).select("doc_id", "text", "lang")
     graft.sources.Release.writeRelease(
       d.filter(col("doc_id") % 4 === 0), "doc_id", "text", path,
@@ -1331,11 +1291,7 @@ object SparkEntry {
     import org.apache.spark.sql.types._
     val path = s"/tmp/graft_srel_${Integer.toHexString(dir.hashCode)}"
     val ck1 = s"${path}_ck1"; val ck2 = s"${path}_ck2"
-    val hconf = s.sparkContext.hadoopConfiguration
-    Seq(path, ck1, ck2).foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(hconf).delete(hp, true)
-    }
+    Commit.tombstone(s, path, ck1, ck2)
     val d = docs(s, dir).select("doc_id", "text", "lang")
     graft.sources.Release.writeRelease(
       d.filter(col("doc_id") % 3 =!= 0), "doc_id", "text", path,
@@ -1487,11 +1443,7 @@ object SparkEntry {
     val hex = Integer.toHexString(dir.hashCode)
     val path = s"/tmp/graft_bins_stream_$hex"
     val ckpt = s"/tmp/graft_bins_ckpt_$hex"
-    val hconf = s.sparkContext.hadoopConfiguration
-    Seq(path, ckpt).foreach { pp =>
-      val hp = new org.apache.hadoop.fs.Path(pp)
-      hp.getFileSystem(hconf).delete(hp, true)
-    }
+    Commit.tombstone(s, path, ckpt)
     val bStream = docStream(s, dir).filter(col("doc_id") % 3 =!= 0)
       .withColumn("n_chars",
         when(col("doc_id") % 7 === 0, col("n_chars") + 80)
@@ -1972,8 +1924,7 @@ object SparkEntry {
     */
   private def deconIndexQ(s: SparkSession, dir: String): DataFrame = {
     val path = s"/tmp/graft_deconidx_${Integer.toHexString(dir.hashCode)}"
-    val hp = new org.apache.hadoop.fs.Path(path)
-    hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
+    Commit.tombstone(s, path)
     val (train, probe) = snippetFixture(s, dir)
     graft.sources.DeconIndex.build(probe, "text", path, n = 13,
       mBits = 1 << 16, k = 3)
@@ -1991,8 +1942,7 @@ object SparkEntry {
     */
   private def deconIndexAppendQ(s: SparkSession, dir: String): DataFrame = {
     val path = s"/tmp/graft_deconidx_app_${Integer.toHexString(dir.hashCode)}"
-    val hp = new org.apache.hadoop.fs.Path(path)
-    hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
+    Commit.tombstone(s, path)
     val (train, _) = snippetFixture(s, dir)
     def probeHalf(even: Boolean) = docs(s, dir)
       .filter(col("doc_id") % 13 === 0 &&
@@ -2021,11 +1971,7 @@ object SparkEntry {
     val path = s"/tmp/graft_deconidx_str_${Integer.toHexString(dir.hashCode)}"
     val out = s"${path}_out"
     val ck1 = s"${path}_ck1"; val ck2 = s"${path}_ck2"
-    val hconf = s.sparkContext.hadoopConfiguration
-    Seq(path, out, ck1, ck2).foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(hconf).delete(hp, true)
-    }
+    Commit.tombstone(s, path, out, ck1, ck2)
     val (_, probe) = snippetFixture(s, dir)
     graft.sources.DeconIndex.build(probe, "text", path, n = 13,
       mBits = 1 << 16, k = 3)
@@ -3476,8 +3422,7 @@ object SparkEntry {
     */
   private def vocabIndexOovQ(s: SparkSession, dir: String): DataFrame = {
     val path = s"/tmp/graft_vocab_${Integer.toHexString(dir.hashCode)}"
-    val hp = new org.apache.hadoop.fs.Path(path)
-    hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
+    Commit.tombstone(s, path)
     val (ref, batch) = oovFixture(s, dir)
     graft.sources.VocabIndex.build(ref, "text", path)
     graft.sources.VocabIndex.oov(batch, "text", path)
@@ -3492,11 +3437,7 @@ object SparkEntry {
     val hex = Integer.toHexString(dir.hashCode)
     val path = s"/tmp/graft_vocab_stream_$hex"
     val ckpt = s"/tmp/graft_vocab_ckpt_$hex"
-    val hconf = s.sparkContext.hadoopConfiguration
-    Seq(path, ckpt).foreach { pp =>
-      val hp = new org.apache.hadoop.fs.Path(pp)
-      hp.getFileSystem(hconf).delete(hp, true)
-    }
+    Commit.tombstone(s, path, ckpt)
     graft.sources.VocabIndex.ingestStream(
         docStream(s, dir).filter(col("doc_id") % 3 =!= 0), "text", path)
       .option("checkpointLocation", ckpt)
@@ -3599,11 +3540,7 @@ object SparkEntry {
     import s.implicits._
     val idx = s"/tmp/graft_bm25prb_${Integer.toHexString(dir.hashCode)}"
     val out = s"/tmp/graft_bm25prb_out_${Integer.toHexString(dir.hashCode)}"
-    val hconf = s.sparkContext.hadoopConfiguration
-    Seq(out).foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(hconf).delete(hp, true)
-    }
+    Commit.tombstone(s, out)
     graft.sources.RetrievalIndex.build(docs(s, dir), "doc_id", "text", idx)
     val qdir = s"$idx/__probe_queries"
     Bm25Queries.toDF("qid", "qtext")
@@ -6953,307 +6890,32 @@ object SparkEntry {
   // Registry
   // -------------------------------------------------------------------
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_agg"           -> (qAgg _),
-    "q2_star_join"     -> (qStarJoin _),
-    "q3_window_topn"   -> (qWindowTopN _),
-    "to_long_array"    -> (toLongArray _),
-    "to_long_map"      -> (toLongMap _),
-    "to_long_nested"   -> (toLongNested _),
-    "to_long_multi"    -> (toLongMulti _),
-    "to_long_multi4"   -> (toLongMulti4 _),
-    "to_long_shared"   -> (toLongShared _),
-    "to_long_scalar"   -> (toLongScalar _),
-    "to_long_struct"   -> (toLongStruct _),
-    "expand_col"       -> (expandColQ _),
-    "expand_col_named" -> (expandColNamed _),
-    "to_puffy"         -> (toPuffyQ _),
-    "to_puffy_native"  -> (toPuffyNative _),
-    "to_puffy_agg"     -> (toPuffyAgg _),
-    "to_puffy_geomean" -> (toPuffyGeomean _),
-    "to_puffy_dict"    -> (toPuffyDict _),
-    "assign_index"     -> (assignIndexQ _),
-    "shortcut_long"    -> (shortcutLongQ _),
-    "multid_pivot"     -> (multidPivotQ _),
-    "multid_pivot_agg" -> (multidPivotAgg _),
-    "multid_pivot_wide" -> (multidPivotWideQ _),
-    "col_apply"        -> (colApplyQ _),
-    "row_apply"        -> (rowApplyQ _),
-    "getitem_select"   -> (getitemQ _),
-    "frame_props"      -> (framePropsQ _),
-    "drop_rename"      -> (dropRenameQ _),
-    "to_long_expand"   -> (toLongExpand _),
-    "to_long_mixed"    -> (toLongMixed _),
-    "to_long_variant"  -> (toLongVariant _),
-    "puffy_roundtrip"  -> (puffyRoundtrip _),
-    "identifier_sanitize" -> (identifierSanitize _),
-    "dedup_exact"      -> (dedupExact _),
-    "dedup_exact_norm" -> (dedupExactNorm _),
-    "dedup_lines"      -> (dedupLinesQ _),
-    "dedup_substring"  -> (dedupSubstringQ _),
-    "dedup_substring_bpe" -> (dedupSubstringBpeQ _),
-    "bpe_train"        -> (bpeTrainQ _),
-    "token_ids_bpe"    -> (tokenIdsBpeQ _),
-    "strip_boilerplate" -> (stripBoilerplateQ _),
-    "dedup_keep_best"  -> (dedupKeepBestQ _),
-    "dedup_semantic"   -> (semanticDedupQ _),
-    "repetition_scores" -> (repetitionScoresQ _),
-    "winnow_fingerprint" -> (winnowQ _),
-    "winnow_pairs"      -> (winnowPairsQ _),
-    "dedup_minhash_sig" -> (dedupMinhashSig _),
-    "dedup_lsh_pairs"  -> (dedupLshPairs _),
-    "dedup_lsh_capped" -> (dedupLshCappedQ _),
-    "dedup_lsh_char"   -> (dedupLshCharQ _),
-    "dedup_drop_near"  -> (dedupDropNear _),
-    "dedup_components" -> (dedupComponents _),
-    "dedup_cluster_report" -> (dedupClusterReportQ _),
-    "dedup_simhash"    -> (dedupSimhash _),
-    "dedup_simhash_pairs" -> (dedupSimhashPairs _),
-    "dedup_ngram_pairs" -> (dedupNgramPairs _),
-    "dedup_editdist_pairs" -> (dedupEditDistPairsQ _),
-    "dedup_cosine_pairs" -> (dedupCosinePairs _),
-    "decontaminate"    -> (decontaminateQ _),
-    "decontaminate_exact" -> (decontaminateExactQ _),
-    "decontaminate_bloom" -> (decontaminateBloomQ _),
-    "decon_index"        -> (deconIndexQ _),
-    "decon_index_append" -> (deconIndexAppendQ _),
-    "streaming_decon_index" -> (streamingDeconIndexQ _),
-    "contamination_report" -> (contaminationReportQ _),
-    "decontaminate_scrub" -> (decontaminateScrubQ _),
-    "decontaminate_scrub_bpe" -> (decontaminateScrubBpeQ _),
-    "curate_scrub"     -> (curateScrubQ _),
-    "curate_report"    -> (curateReportQ _),
-    "mix_temperature"  -> (mixTemperatureQ _),
-    "upsample_epochs"  -> (upsampleEpochsQ _),
-    "pack_shuffle"     -> (packShuffleQ _),
-    "html_extract"     -> (htmlExtractQ _),
-    "curate_html"      -> (curateHtmlQ _),
-    "wet_roundtrip"    -> (wetRoundtripQ _),
-    "wet_curate_quarantine" -> (wetCurateQuarantineQ _),
-    "streaming_upsample" -> (streamingUpsampleQ _),
-    "streaming_wet"    -> (streamingWetQ _),
-    "dedup_lsh_verified" -> (dedupLshVerifiedQ _),
-    "dedup_index_persist" -> (dedupIndexPersistQ _),
-    "dedup_index_append" -> (dedupIndexAppendQ _),
-    "dedup_index_substring" -> (dedupIndexSubstringQ _),
-    "dedup_index_semantic" -> (dedupIndexSemanticQ _),
-    "dedup_index_compact" -> (dedupIndexCompactQ _),
-    "dedup_index_compact_substring" -> (dedupIndexCompactSubQ _),
-    "dedup_index_compact_semantic" -> (dedupIndexCompactSemQ _),
-    "streaming_dedup_index" -> (streamingDedupIndexQ _),
-    "streaming_substring_index" -> (streamingSubstringIndexQ _),
-    "streaming_dedup_semantic" -> (streamingDedupSemanticQ _),
-    "sketch_hll"          -> (sketchHllQ _),
-    "sketch_hll_estimate" -> (sketchHllEstimateQ _),
-    "sketch_hll_grouped"  -> (sketchHllGroupedQ _),
-    "sketch_hll_overlap"  -> (sketchHllOverlapQ _),
-    "corpus_datasheet"    -> (corpusDatasheetQ _),
-    "release_datasheet"   -> (releaseDatasheetQ _),
-    "sketch_cms"          -> (sketchCmsQ _),
-    "sketch_cms_point"    -> (sketchCmsPointQ _),
-    "sketch_cms_merge"    -> (sketchCmsMergeQ _),
-    "streaming_cms"       -> (streamingCmsQ _),
-    "sample_bottomk"      -> (sampleBottomkQ _),
-    "sample_bottomk_merge" -> (sampleBottomkMergeQ _),
-    "streaming_sample_index" -> (streamingSampleIndexQ _),
-    "sketch_hll_merge"    -> (sketchHllMergeQ _),
-    "streaming_sketch"    -> (streamingSketchQ _),
-    "sketch_quantile"     -> (sketchQuantileQ _),
-    "sketch_kll"          -> (sketchKllQ _),
-    "sketch_kll_estimate" -> (sketchKllEstimateQ _),
-    "sketch_kll_merge"    -> (sketchKllMergeQ _),
-    "streaming_kll"       -> (streamingKllQ _),
-    "sketch_kll_sharded"  -> (sketchKllShardedQ _),
-    "curate_adaptive_quality" -> (curateAdaptiveQualityQ _),
-    "sketch_quantile_merge" -> (sketchQuantileMergeQ _),
-    "streaming_quantile"  -> (streamingQuantileQ _),
-    "chunk_tokens"     -> (chunkTokensQ _),
-    "pii_scrub"        -> (piiScrubQ _),
-    "url_normalize"    -> (urlNormalizeQ _),
-    "domain_report"    -> (domainReportQ _),
-    "curate_domains"   -> (curateDomainsQ _),
-    "streaming_curate_domains" -> (streamingCurateDomainsQ _),
-    "curate_semantic"  -> (curateSemanticQ _),
-    "quantize_int8"    -> (quantizeQ _),
-    "asof_join"        -> (asofJoinQ _),
-    "range_join"       -> (rangeJoinQ _),
-    "sample_stratified" -> (sampleStratifiedQ _),
-    "sample_cluster_balanced" -> (sampleClusterBalancedQ _),
-    "split_assign"     -> (splitAssignQ _),
-    "split_leakage_safe" -> (splitLeakageSafeQ _),
-    "mix_budget"       -> (mixBudgetQ _),
-    "mix_budget_bpe"   -> (mixBudgetBpeQ _),
-    "token_counts_bpe" -> (tokenCountsBpeQ _),
-    "token_fertility"  -> (tokenFertilityQ _),
-    "chunk_tokens_bpe" -> (chunkTokensBpeQ _),
-    "pack_sequences"   -> (packSequencesQ _),
-    "pack_materialize" -> (packMaterializeQ _),
-    "pack_persist"     -> (packPersistQ _),
-    "classifier_train" -> (classifierTrainQ _),
-    "classifier_train_bigram" -> (classifierTrainBigramQ _),
-    "classifier_score_bigram" -> (classifierScoreBigramQ _),
-    "classifier_score" -> (classifierScoreQ _),
-    "langid_train"     -> (langidTrainQ _),
-    "langid_score"     -> (langidScoreQ _),
-    "langid_segments"  -> (langidSegmentsQ _),
-    "source_roundtrip" -> (sourceRoundtripQ _),
-    "layout_zorder"    -> (layoutZorderQ _),
-    "layout_zorder_compact" -> (layoutZorderCompactQ _),
-    "layout_zorder3"   -> (layoutZorder3Q _),
-    "release_manifest" -> (releaseManifestQ _),
-    "release_checked"  -> (releaseCheckedQ _),
-    "release_append"   -> (releaseAppendQ _),
-    "release_delete"   -> (releaseDeleteQ _),
-    "release_diff"     -> (releaseDiffQ _),
-    "release_compact"  -> (releaseCompactQ _),
-    "streaming_release" -> (streamingReleaseQ _),
-    "dedup_overlap_matrix" -> (dedupOverlapMatrixQ _),
-    "trainer_feed"     -> (trainerFeedQ _),
-    "sample_exact"     -> (sampleExactQ _),
-    "curate_pipeline"  -> (curatePipelineQ _),
-    "curate_substring" -> (curateSubstringQ _),
-    "curate_classifier" -> (curateClassifierQ _),
-    "curate_decon_exact" -> (curateDeconExactQ _),
-    "curate_quality"   -> (curateQualityQ _),
-    "curate_exposure"  -> (curateExposureQ _),
-    "curate_script"    -> (curateScriptQ _),
-    "streaming_curate_entropy" -> (streamingCurateEntropyQ _),
-    "streaming_curate_script" -> (streamingCurateScriptQ _),
-    "contract_checks"  -> (contractChecksQ _),
-    "contract_fk"      -> (contractFkQ _),
-    "streaming_contract" -> (streamingContractQ _),
-    "contract_by_source" -> (contractBySourceQ _),
-    "drift_bins"       -> (driftBinsQ _),
-    "drift_psi"        -> (driftPsiQ _),
-    "drift_by_lang"    -> (driftByLangQ _),
-    "dedup_drop_editdist" -> (dedupDropEditDistQ _),
-    "dedup_lsh_eval"   -> (dedupLshEvalQ _),
-    "streaming_drift"  -> (streamingDriftQ _),
-    "release_drift"    -> (releaseDriftQ _),
-    "knn_brute"        -> (knnBrute _),
-    "bitext_mine"      -> (bitextMineQ _),
-    "bitext_mine_ivf"  -> (bitextMineIvfQ _),
-    "bitext_mine_ivfpq" -> (bitextMineIvfPqQ _),
-    "ann_lsh_buckets"  -> (annLshBucketsQ _),
-    "ann_lsh_topk"     -> (annLshTopKQ _),
-    "ann_ivf_topk"     -> (annIvfTopKQ _),
-    "ann_ivf_multiprobe" -> (annIvfMultiprobeQ _),
-    "ann_lsh_multiprobe" -> (annLshMultiprobeQ _),
-    "ivf_train"        -> (ivfTrainQ _),
-    "pq_train"         -> (pqTrainQ _),
-    "embed_l2norm"     -> (embedL2NormQ _),
-    "embed_centroids"  -> (embedCentroidsQ _),
-    "pq_encode"        -> (pqEncodeQ _),
-    "ann_pq_topk"      -> (annPqTopKQ _),
-    "ann_ivfpq_topk"   -> (annIvfPqTopKQ _),
-    "ann_ivfpq_refined" -> (annIvfPqRefinedQ _),
-    "ann_ivfpq_refine_recall" -> (annIvfPqRefineRecallQ _),
-    "ann_ivfpq_residual" -> (annIvfPqResidualQ _),
-    "ann_index_persist" -> (annIndexPersistQ _),
-    "ann_index_refined" -> (annIndexRefinedQ _),
-    "ann_index_append" -> (annIndexAppendQ _),
-    "ann_index_compact" -> (annIndexCompactQ _),
-    "ann_index_retrain" -> (annIndexRetrainQ _),
-    "group_topk"       -> (groupTopKQ _),
-    "ngram_freq"       -> (ngramFreqQ _),
-    "heavy_hitters"    -> (heavyHittersQ _),
-    "heavy_hitters_grouped" -> (heavyHittersGroupedQ _),
-    "classifier_eval"  -> (classifierEvalQ _),
-    "streaming_decontaminate" -> (streamingDecontaminateQ _),
-    "skew_join"        -> (skewJoinQ _),
-    "text_stats"       -> (textStats _),
-    "lang_id"          -> (langIdQ _),
-    "token_counts"     -> (tokenCountsQ _),
-    "doc_fingerprint"  -> (fingerprintQ _),
-    "text_vocabulary"  -> (textVocabulary _),
-    "unigram_surprisal" -> (unigramSurprisalQ _),
-    "bigram_surprisal" -> (bigramSurprisalQ _),
-    "quality_buckets"  -> (qualityBucketsQ _),
-    "streaming_quality_buckets" -> (streamingQualityBucketsQ _),
-    "curate_ccnet"     -> (curateCcnetQ _),
-    "text_len_quantiles" -> (textLenQuantiles _),
-    "text_quality_flags" -> (textQualityFlags _),
-    "license_tag"  -> (licenseTagQ _),
-    "code_quality" -> (codeQualityQ _),
-    "bm25_score"   -> (bm25ScoreQ _),
-    "tfidf_top_terms" -> (tfidfTopTermsQ _),
-    "tfidf_cosine_pairs" -> (tfidfCosinePairsQ _),
-    "vocab_oov"        -> (vocabOovQ _),
-    "vocab_index_oov"  -> (vocabIndexOovQ _),
-    "vocab_oov_by_lang" -> (vocabOovByLangQ _),
-    "streaming_vocab"  -> (streamingVocabQ _),
-    "pack_efficiency"  -> (packEfficiencyQ _),
-    "gram_exposure" -> (gramExposureQ _),
-    "char_entropy"  -> (charEntropyQ _),
-    "script_ratios" -> (scriptRatiosQ _),
-    "mine_hard_negatives" -> (mineHardNegativesQ _),
-    "embedding_outliers" -> (embeddingOutliersQ _),
-    "retrieval_recall" -> (retrievalRecallQ _),
-    "retrieval_mrr" -> (retrievalMrrQ _),
-    "retrieval_ndcg" -> (retrievalNdcgQ _),
-    "bm25_index_probe"  -> (bm25IndexProbeQ _),
-    "bm25_index_append" -> (bm25IndexAppendQ _),
-    "streaming_bm25_ingest" -> (streamingBm25IngestQ _),
-    "streaming_bm25_probe"  -> (streamingBm25ProbeQ _),
-    "retrieval_hybrid_rrf"  -> (retrievalHybridRrfQ _),
-    "text_normalize"    -> (textNormalizeQ _),
-    "doc_char_fingerprint" -> (docCharFingerprintQ _),
-    "multimodal_meta"  -> (multimodalMeta _),
-    "multimodal_decode" -> (multimodalDecodeQ _),
-    "multimodal_audio" -> (multimodalAudioQ _),
-    "multimodal_video" -> (multimodalVideoQ _),
-    "multimodal_neardup" -> (multimodalNeardupQ _),
-    "curate_media" -> (curateMediaQ _),
-    "multimodal_neardup_verified" -> (multimodalNeardupVerifiedQ _),
-    "multimodal_mp3"   -> (multimodalMp3Q _),
-    "multimodal_webm"  -> (multimodalWebmQ _),
-    "multimodal_dhash" -> (multimodalDhashQ _),
-    "multimodal_phash" -> (multimodalPhashQ _),
-    "multimodal_phash_pairs" -> (multimodalPhashPairsQ _),
-    "multimodal_dhash_pairs" -> (multimodalDhashPairsQ _),
-    "multimodal_dhash_png" -> (multimodalDhashPngQ _),
-    "multimodal_dhash_gif" -> (multimodalDhashGifQ _),
-    "multimodal_dhash_jpeg" -> (multimodalDhashJpegQ _),
-    "multimodal_video_dhash" -> (multimodalVideoDhashQ _),
-    "multimodal_video_neardup" -> (multimodalVideoNeardupQ _),
-    "multimodal_neardup_codec" -> (multimodalNeardupCodecQ _),
-    "multimodal_thumbnail" -> (multimodalThumbnailQ _),
-    "multimodal_lumastats" -> (multimodalLumastatsQ _),
-    "multimodal_audiohash" -> (multimodalAudiohashQ _),
-    "multimodal_audiodup_pairs" -> (multimodalAudioPairsQ _),
-    "multimodal_audio_dedup" -> (multimodalAudioDedupQ _),
-    "multimodal_audiohash_mp3" -> (multimodalAudiohashMp3Q _),
-    "multimodal_audiodup_mp3"  -> (multimodalAudioPairsMp3Q _),
-    "multimodal_audio_dedup_mp3" -> (multimodalAudioDedupMp3Q _),
-    "multimodal_audiohash_mp3bt" -> (multimodalAudiohashMp3BtQ _),
-    "multimodal_audiodup_mp3bt"  -> (multimodalAudioPairsMp3BtQ _),
-    "multimodal_audiohash_mp3adv" -> (multimodalAudiohashMp3AdvQ _),
-    "multimodal_audiodup_mp3adv"  -> (multimodalAudioPairsMp3AdvQ _),
-    "multimodal_describe" -> (multimodalDescribeQ _),
-    "multimodal_frames" -> (multimodalFramesQ _),
-    "events_hourly"    -> (eventsHourly _),
-    "events_hourly_hll" -> (eventsHourlyHllQ _),
-    "streaming_hourly_hll" -> (streamingHourlyHllQ _),
-    "events_funnel"    -> (eventsFunnel _),
-    "events_sessionize" -> (eventsSessionize _),
-    "events_retention" -> (eventsRetention _),
-    "streaming_sample" -> (streamingSampleQ _),
-    "streaming_quality" -> (streamingQualityQ _),
-    "streaming_classifier" -> (streamingClassifierQ _),
-    "streaming_curate" -> (streamingCurateQ _),
-    "streaming_dedup_exact" -> (streamingDedupExactQ _),
-    "streaming_dedup_neardup" -> (streamingDedupNearQ _),
-    "streaming_multimodal_neardup" -> (streamingMultimodalNeardupQ _),
-    "streaming_audiodup_mp3" -> (streamingAudiodupMp3Q _),
-    "streaming_video_neardup" -> (streamingVideoNeardupQ _),
-    "streaming_sessionize" -> (streamingSessionizeQ _),
-    "streaming_sessionize_rocksdb" -> (streamingSessionizeRocksQ _),
-    "streaming_sessionize_window" -> (streamingSessionizeWindowQ _),
-    "streaming_multimodal" -> (streamingMultimodalQ _),
-    "streaming_hourly" -> (streamingHourlyQ _),
-    "streaming_funnel" -> (streamingFunnelQ _),
-    "streaming_retention" -> (streamingRetentionQ _),
-  )
+  /** One driver gate: the Spark query and the DuckDB SQL its result
+    * must equal.
+    */
+  final case class Gate(run: (SparkSession, String) => DataFrame,
+      oracleSql: String)
+
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    gates.map { case (n, g) => n -> g.run }
+
+  def oracleSql: Map[String, String] =
+    gates.map { case (n, g) => n -> g.oracleSql }
+
+  /** The gates a comma-separated name list selects, or all of them
+    * when `only` is unset. Unknown names, or a list naming none, are
+    * a `Left`: a typo must never run a partial or empty suite unseen.
+    */
+  def select(only: Option[String]): Either[String, Map[String, Gate]] =
+    only.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet) match {
+      case None => Right(gates)
+      case Some(names) if names.isEmpty => Left("lists no gate")
+      case Some(names) =>
+        val unknown = names -- gates.keySet
+        if (unknown.nonEmpty)
+          Left(s"unknown gate names: ${unknown.toSeq.sorted.mkString(", ")}")
+        else Right(gates.filter { case (n, _) => names(n) })
+    }
 
   /** Mixed-media describe expectation — shared by the batch gate and
     * its stateless streaming twin.
@@ -7375,34 +7037,34 @@ object SparkEntry {
          SELECT query_id, neighbor_id, cos_sim, knn_rank FROM rk
          WHERE knn_rank <= 5"""
 
-  def oracleSql: Map[String, String] = Map(
-    "q1_agg" ->
-      "SELECT l_returnflag, sum(l_quantity) AS sum_qty FROM lineitem GROUP BY 1",
-    "q2_star_join" ->
+  lazy val gates: Map[String, Gate] = Map(
+    "q1_agg" -> Gate(qAgg,
+      "SELECT l_returnflag, sum(l_quantity) AS sum_qty FROM lineitem GROUP BY 1"),
+    "q2_star_join" -> Gate(qStarJoin,
       """SELECT n_name, sum(l_extendedprice * (1.0 - l_discount)) AS revenue,
          count(*) AS n_lineitems
          FROM lineitem
          JOIN orders ON l_orderkey = o_orderkey
          JOIN customer ON o_custkey = c_custkey
          JOIN nation ON c_nationkey = n_nationkey
-         GROUP BY 1""",
-    "q3_window_topn" ->
+         GROUP BY 1"""),
+    "q3_window_topn" -> Gate(qWindowTopN,
       """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
            SELECT o_custkey, o_orderkey, o_totalprice,
              CAST(row_number() OVER (PARTITION BY o_custkey
                ORDER BY o_totalprice DESC, o_orderkey) AS INTEGER) AS rn
            FROM orders)
-         WHERE rn <= 3""",
-    "to_long_array" ->
+         WHERE rn <= 3"""),
+    "to_long_array" -> Gate(toLongArray,
       """SELECT vec_id, label,
          CAST(generate_subscripts(embedding,1)-1 AS INTEGER) AS embedding_level0,
          unnest(embedding) AS embedding
-         FROM embeddings""",
-    "to_long_map" ->
+         FROM embeddings"""),
+    "to_long_map" -> Gate(toLongMap,
       """SELECT event_id, k AS props_level0,
          CAST(json_extract_string(props, '$.' || k) AS BIGINT) AS props
-         FROM (SELECT event_id, props, unnest(json_keys(props)) AS k FROM events)""",
-    "to_long_nested" ->
+         FROM (SELECT event_id, props, unnest(json_keys(props)) AS k FROM events)"""),
+    "to_long_nested" -> Gate(toLongNested,
       """WITH t AS (SELECT vec_id,
              [embedding[(i*8+1):(i*8+8)] for i in range(0,8)] AS m
            FROM embeddings),
@@ -7412,13 +7074,13 @@ object SparkEntry {
          SELECT vec_id, m_level0,
            CAST(generate_subscripts(xs,1)-1 AS INTEGER) AS m_level1,
            unnest(xs) AS m
-         FROM l1""",
-    "to_long_multi" ->
+         FROM l1"""),
+    "to_long_multi" -> Gate(toLongMulti,
       """WITH t AS (SELECT vec_id, embedding[1:3] AS x, embedding[5:7] AS y FROM embeddings),
          lx AS (SELECT vec_id, CAST(generate_subscripts(x,1)-1 AS INTEGER) AS x_level0, unnest(x) AS x FROM t),
          ly AS (SELECT vec_id, CAST(generate_subscripts(y,1)-1 AS INTEGER) AS y_level0, unnest(y) AS y FROM t)
-         SELECT vec_id, x_level0, x, y_level0, y FROM lx FULL JOIN ly USING (vec_id)""",
-    "to_long_multi4" ->
+         SELECT vec_id, x_level0, x, y_level0, y FROM lx FULL JOIN ly USING (vec_id)"""),
+    "to_long_multi4" -> Gate(toLongMulti4,
       """WITH t AS (SELECT vec_id, embedding[1:2] AS x, embedding[9:10] AS y,
              embedding[17:18] AS z, embedding[25:26] AS w FROM embeddings),
          lx AS (SELECT vec_id, CAST(generate_subscripts(x,1)-1 AS INTEGER) AS x_level0, unnest(x) AS x FROM t),
@@ -7427,15 +7089,15 @@ object SparkEntry {
          lw AS (SELECT vec_id, CAST(generate_subscripts(w,1)-1 AS INTEGER) AS w_level0, unnest(w) AS w FROM t)
          SELECT vec_id, x_level0, x, y_level0, y, z_level0, z, w_level0, w
          FROM lx FULL JOIN ly USING (vec_id) FULL JOIN lz USING (vec_id)
-         FULL JOIN lw USING (vec_id)""",
-    "to_long_shared" ->
+         FULL JOIN lw USING (vec_id)"""),
+    "to_long_shared" -> Gate(toLongShared,
       """WITH t AS (SELECT vec_id, embedding[1:3] AS x, embedding[5:7] AS y FROM embeddings),
          lx AS (SELECT vec_id, CAST(generate_subscripts(x,1)-1 AS INTEGER) AS axis, unnest(x) AS x FROM t),
          ly AS (SELECT vec_id, CAST(generate_subscripts(y,1)-1 AS INTEGER) AS axis, unnest(y) AS y FROM t)
-         SELECT vec_id, axis, x, y FROM lx FULL JOIN ly USING (vec_id, axis)""",
-    "to_long_scalar" ->
-      "SELECT doc_id, n_chars, lang FROM documents",
-    "to_long_struct" ->
+         SELECT vec_id, axis, x, y FROM lx FULL JOIN ly USING (vec_id, axis)"""),
+    "to_long_scalar" -> Gate(toLongScalar,
+      "SELECT doc_id, n_chars, lang FROM documents"),
+    "to_long_struct" -> Gate(toLongStruct,
       """WITH s AS (SELECT l_orderkey,
              CAST(row_number() OVER (PARTITION BY l_orderkey
                ORDER BY l_quantity, l_discount) - 1 AS INTEGER) AS item_level0_0,
@@ -7445,87 +7107,87 @@ object SparkEntry {
                 l_quantity AS item FROM s
          UNION ALL
          SELECT l_orderkey, item_level0_0, 'l_discount' AS item_level0_1,
-                l_discount AS item FROM s""",
-    "expand_col" ->
+                l_discount AS item FROM s"""),
+    "expand_col" -> Gate(expandColQ,
       """SELECT l_orderkey,
          CAST(row_number() OVER (PARTITION BY l_orderkey
            ORDER BY l_linenumber, l_quantity, l_extendedprice) - 1 AS INTEGER) AS level_1,
-         l_linenumber, l_quantity, l_extendedprice FROM lineitem""",
-    "expand_col_named" ->
-      "SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem",
-    "to_puffy" ->
+         l_linenumber, l_quantity, l_extendedprice FROM lineitem"""),
+    "expand_col_named" -> Gate(expandColNamed,
+      "SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem"),
+    "to_puffy" -> Gate(toPuffyQ,
       """SELECT l_orderkey,
          array_to_string([CAST(x AS VARCHAR) for x in list(l_linenumber ORDER BY l_linenumber)], ',') AS l_linenumber,
          array_to_string([printf('%.6f', round(x, 6)) for x in list(l_quantity ORDER BY l_quantity)], ',') AS l_quantity
-         FROM lineitem GROUP BY l_orderkey""",
-    "to_puffy_native" ->
+         FROM lineitem GROUP BY l_orderkey"""),
+    "to_puffy_native" -> Gate(toPuffyNative,
       """SELECT l_orderkey,
          CAST(count(*) AS INTEGER) AS ln_n,
          min(l_linenumber) AS ln_first,
          max(l_linenumber) AS ln_last,
          min(l_quantity) AS qty_min,
          max(l_quantity) AS qty_max
-         FROM lineitem GROUP BY l_orderkey""",
-    "to_puffy_agg" ->
+         FROM lineitem GROUP BY l_orderkey"""),
+    "to_puffy_agg" -> Gate(toPuffyAgg,
       """SELECT l_returnflag, avg(l_quantity) AS l_quantity,
          avg(l_extendedprice) AS l_extendedprice
-         FROM lineitem GROUP BY 1""",
-    "to_puffy_geomean" ->
+         FROM lineitem GROUP BY 1"""),
+    "to_puffy_geomean" -> Gate(toPuffyGeomean,
       """SELECT l_returnflag, round(exp(avg(ln(l_quantity))), 6) AS l_quantity
-         FROM lineitem GROUP BY 1""",
-    "to_puffy_dict" ->
+         FROM lineitem GROUP BY 1"""),
+    "to_puffy_dict" -> Gate(toPuffyDict,
       """SELECT l_returnflag, avg(l_quantity) AS l_quantity,
          max(l_extendedprice) AS l_extendedprice
-         FROM lineitem GROUP BY 1""",
-    "assign_index" ->
+         FROM lineitem GROUP BY 1"""),
+    "assign_index" -> Gate(assignIndexQ,
       """SELECT CAST(length(c_name) AS INTEGER) AS name_len,
          avg(c_acctbal) AS c_acctbal
-         FROM customer GROUP BY 1""",
-    "shortcut_long" ->
+         FROM customer GROUP BY 1"""),
+    "shortcut_long" -> Gate(shortcutLongQ,
       """SELECT vec_id, label,
          CAST(generate_subscripts(embedding,1)-1 AS INTEGER) AS embedding_level0,
          unnest(embedding) AS embedding
-         FROM embeddings""",
-    "multid_pivot" ->
+         FROM embeddings"""),
+    "multid_pivot" -> Gate(multidPivotQ,
       """SELECT l_returnflag, l_linestatus,
          avg(l_extendedprice) AS l_extendedprice
-         FROM lineitem GROUP BY 1, 2""",
-    "multid_pivot_agg" ->
+         FROM lineitem GROUP BY 1, 2"""),
+    "multid_pivot_agg" -> Gate(multidPivotAgg,
       """SELECT l_returnflag, l_linestatus,
          max(l_extendedprice) AS l_extendedprice,
          sum(l_quantity) AS l_quantity
-         FROM lineitem GROUP BY 1, 2""",
-    "multid_pivot_wide" ->
+         FROM lineitem GROUP BY 1, 2"""),
+    "multid_pivot_wide" -> Gate(multidPivotWideQ,
       """SELECT l_returnflag,
          avg(CASE WHEN l_linestatus='F' THEN l_extendedprice END) AS F,
          avg(CASE WHEN l_linestatus='O' THEN l_extendedprice END) AS O
-         FROM lineitem GROUP BY 1""",
-    "col_apply" ->
-      "SELECT c_custkey, c_name, upper(c_name) AS c_name_upper FROM customer",
-    "row_apply" ->
+         FROM lineitem GROUP BY 1"""),
+    "col_apply" -> Gate(colApplyQ,
+      "SELECT c_custkey, c_name, upper(c_name) AS c_name_upper FROM customer"),
+    "row_apply" -> Gate(rowApplyQ,
       """SELECT l_orderkey, l_linenumber, l_extendedprice, l_discount,
-         l_extendedprice * (1 - l_discount) AS revenue FROM lineitem""",
-    "getitem_select" ->
-      "SELECT p_partkey, p_name, p_retailprice FROM part",
-    "frame_props" ->
+         l_extendedprice * (1 - l_discount) AS revenue FROM lineitem"""),
+    "getitem_select" -> Gate(getitemQ,
+      "SELECT p_partkey, p_name, p_retailprice FROM part"),
+    "frame_props" -> Gate(framePropsQ,
       """SELECT p_partkey, p_name, p_retailprice,
          'p_name,p_retailprice' AS datacols_csv,
          'p_partkey' AS indexcols_csv
-         FROM part""",
-    "drop_rename" ->
-      "SELECT s_suppkey, s_name AS supplier_name, s_nationkey FROM supplier",
-    "to_long_expand" ->
+         FROM part"""),
+    "drop_rename" -> Gate(dropRenameQ,
+      "SELECT s_suppkey, s_name AS supplier_name, s_nationkey FROM supplier"),
+    "to_long_expand" -> Gate(toLongExpand,
       """SELECT l_orderkey,
          CAST(row_number() OVER (PARTITION BY l_orderkey
            ORDER BY l_linenumber, l_quantity) - 1 AS INTEGER) AS level_1,
          l_linenumber AS items_l_linenumber,
-         l_quantity AS items_l_quantity FROM lineitem""",
-    "puffy_roundtrip" ->
+         l_quantity AS items_l_quantity FROM lineitem"""),
+    "puffy_roundtrip" -> Gate(puffyRoundtrip,
       """SELECT l_orderkey,
          CAST(row_number() OVER (PARTITION BY l_orderkey
            ORDER BY l_linenumber, l_quantity) - 1 AS INTEGER) AS level_1,
-         l_linenumber, l_quantity FROM lineitem""",
-    "to_long_mixed" ->
+         l_linenumber, l_quantity FROM lineitem"""),
+    "to_long_mixed" -> Gate(toLongMixed,
       """WITH src AS (SELECT doc_id,
            CASE CAST(doc_id % 3 AS INTEGER)
              WHEN 0 THEN '[' || n_chars || ',' || doc_id || ']'
@@ -7547,8 +7209,8 @@ object SparkEntry {
            SELECT doc_id, CAST(NULL AS VARCHAR) AS v_level0, j AS v
            FROM src WHERE doc_id % 3 = 2)
          SELECT doc_id, v_level0, CAST(NULL AS VARCHAR) AS v_level1, v
-         FROM l1""",
-    "to_long_variant" ->
+         FROM l1"""),
+    "to_long_variant" -> Gate(toLongVariant,
       """WITH src AS (SELECT doc_id,
            CASE CAST(doc_id % 3 AS INTEGER)
              WHEN 0 THEN '[' || n_chars || ',' || doc_id || ']'
@@ -7570,18 +7232,18 @@ object SparkEntry {
            SELECT doc_id, CAST(NULL AS VARCHAR) AS v_level0, j AS v
            FROM src WHERE doc_id % 3 = 2)
          SELECT doc_id, v_level0, CAST(NULL AS VARCHAR) AS v_level1, v
-         FROM l1""",
-    "identifier_sanitize" ->
+         FROM l1"""),
+    "identifier_sanitize" -> Gate(identifierSanitize,
       """SELECT p_partkey AS part_key, p_name AS part_HASH_name,
-         p_retailprice AS retail_DOT_price FROM part""",
-    "dedup_exact" ->
+         p_retailprice AS retail_DOT_price FROM part"""),
+    "dedup_exact" -> Gate(dedupExact,
       """SELECT md5(text) AS text_hash, min(doc_id) AS keep_id,
-         count(*) AS dup_count FROM documents GROUP BY 1""",
-    "dedup_exact_norm" ->
+         count(*) AS dup_count FROM documents GROUP BY 1"""),
+    "dedup_exact_norm" -> Gate(dedupExactNorm,
       """SELECT md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS text_hash,
          min(doc_id) AS keep_id, count(*) AS dup_count
-         FROM documents GROUP BY 1""",
-    "dedup_lines" ->
+         FROM documents GROUP BY 1"""),
+    "dedup_lines" -> Gate(dedupLinesQ,
       """WITH src AS (SELECT doc_id,
              regexp_replace(text, '((?:\S+ ){5}\S+) ', '\1' || chr(10), 'g') AS t
            FROM documents),
@@ -7599,8 +7261,8 @@ object SparkEntry {
              chr(10) ORDER BY pos), '') AS text_kept,
            CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_lines_kept,
            CAST(sum(CASE WHEN keep THEN 0 ELSE 1 END) AS BIGINT) AS n_lines_dropped
-         FROM f GROUP BY doc_id""",
-    "dedup_substring" ->
+         FROM f GROUP BY doc_id"""),
+    "dedup_substring" -> Gate(dedupSubstringQ,
       """WITH src AS (SELECT doc_id,
              CASE WHEN doc_id % 5 = 0
                THEN 'this document is provided as is without warranty of any kind either expressed or implied ' || text
@@ -7635,19 +7297,22 @@ object SparkEntry {
          SELECT t.doc_id, coalesce(agg.text_kept, '') AS text_kept,
            coalesce(agg.n_words_kept, 0) AS n_words_kept,
            coalesce(agg.n_words_dropped, 0) AS n_words_dropped
-         FROM t LEFT JOIN agg USING (doc_id)""",
-    "dedup_index_substring" -> dkDedupIndexSubstring,
-    "streaming_substring_index" -> dkDedupIndexSubstring,
+         FROM t LEFT JOIN agg USING (doc_id)"""),
+    "dedup_index_substring" ->
+      Gate(dedupIndexSubstringQ, dkDedupIndexSubstring),
+    "streaming_substring_index" ->
+      Gate(streamingSubstringIndexQ, dkDedupIndexSubstring),
     // compaction parity: the compacted run must equal the family's
     // from-scratch replay, so the oracle is shared verbatim
-    "dedup_index_compact_substring" -> dkDedupIndexSubstring,
-    "sketch_cms" -> dkCmsCounters,
-    "sketch_cms_merge" -> dkCmsCounters,
-    "streaming_cms" -> dkCmsCounters,
-    "sample_bottomk" -> dkBottomK,
-    "sample_bottomk_merge" -> dkBottomK,
-    "streaming_sample_index" -> dkBottomK,
-    "sketch_cms_point" ->
+    "dedup_index_compact_substring" ->
+      Gate(dedupIndexCompactSubQ, dkDedupIndexSubstring),
+    "sketch_cms" -> Gate(sketchCmsQ, dkCmsCounters),
+    "sketch_cms_merge" -> Gate(sketchCmsMergeQ, dkCmsCounters),
+    "streaming_cms" -> Gate(streamingCmsQ, dkCmsCounters),
+    "sample_bottomk" -> Gate(sampleBottomkQ, dkBottomK),
+    "sample_bottomk_merge" -> Gate(sampleBottomkMergeQ, dkBottomK),
+    "streaming_sample_index" -> Gate(streamingSampleIndexQ, dkBottomK),
+    "sketch_cms_point" -> Gate(sketchCmsPointQ,
       """WITH w AS (SELECT unnest(list_filter(
              string_split_regex(trim(lower(text)), '\s+'),
              x -> len(x) > 0)) AS w
@@ -7670,9 +7335,9 @@ object SparkEntry {
            CAST(min(coalesce(cms.cnt, 0)) AS BIGINT) AS est
          FROM probe LEFT JOIN cms
            ON probe.j = cms.j AND probe.bucket = cms.bucket
-         GROUP BY 1, 2""",
-    "sketch_hll" -> dkHllRegisters,
-    "sketch_hll_overlap" ->
+         GROUP BY 1, 2"""),
+    "sketch_hll" -> Gate(sketchHllQ, dkHllRegisters),
+    "sketch_hll_overlap" -> Gate(sketchHllOverlapQ,
       s"""WITH ha AS (SELECT ${dkHash("text")} AS h FROM documents
              WHERE text IS NOT NULL AND doc_id % 2 = 0),
          hb AS (SELECT ${dkHash("text")} AS h FROM documents
@@ -7730,20 +7395,22 @@ object SparkEntry {
              AS containment_a,
            round(CASE WHEN est_b > 0 THEN est_i / est_b ELSE 0.0 END, 6)
              AS containment_b
-         FROM f""",
-    "corpus_datasheet" -> dkDatasheet,
+         FROM f"""),
+    "corpus_datasheet" -> Gate(corpusDatasheetQ, dkDatasheet),
     // inventory of a PUBLISHED snapshot == inventory of its corpus
-    "release_datasheet" -> dkDatasheet,
-    "sketch_hll_merge" -> dkHllRegisters,
-    "streaming_sketch" -> dkHllRegisters,
-    "sketch_quantile" -> dkQuantileSketch,
-    "sketch_kll" -> dkKllBuild(16),
-    "sketch_kll_estimate" -> dkKllEstimate(16),
-    "sketch_kll_merge" -> dkKllMerge("doc_id % 2 = 0", "doc_id % 2 = 1", 16),
+    "release_datasheet" -> Gate(releaseDatasheetQ, dkDatasheet),
+    "sketch_hll_merge" -> Gate(sketchHllMergeQ, dkHllRegisters),
+    "streaming_sketch" -> Gate(streamingSketchQ, dkHllRegisters),
+    "sketch_quantile" -> Gate(sketchQuantileQ, dkQuantileSketch),
+    "sketch_kll" -> Gate(sketchKllQ, dkKllBuild(16)),
+    "sketch_kll_estimate" -> Gate(sketchKllEstimateQ, dkKllEstimate(16)),
+    "sketch_kll_merge" ->
+      Gate(sketchKllMergeQ, dkKllMerge("doc_id % 2 = 0", "doc_id % 2 = 1", 16)),
     // the stream's one micro-batch makes ingest = the two-half merge
-    "streaming_kll" -> dkKllMerge("doc_id % 3 <> 0", "doc_id % 3 = 0", 16),
-    "sketch_kll_sharded" -> dkKllSharded(4, 16),
-    "curate_adaptive_quality" ->
+    "streaming_kll" ->
+      Gate(streamingKllQ, dkKllMerge("doc_id % 3 <> 0", "doc_id % 3 = 0", 16)),
+    "sketch_kll_sharded" -> Gate(sketchKllShardedQ, dkKllSharded(4, 16)),
+    "curate_adaptive_quality" -> Gate(curateAdaptiveQualityQ,
       s"""WITH sk AS (${dkKllSharded(4, 16)}),
          cwq AS (SELECT lang, value,
              CAST(sum(n * (1::BIGINT << level)) OVER (PARTITION BY lang
@@ -7758,12 +7425,12 @@ object SparkEntry {
            FROM cwq GROUP BY 1)
          SELECT d.doc_id, d.lang, d.n_chars
          FROM documents d JOIN cut USING (lang)
-         WHERE d.n_chars >= cut.p50""",
+         WHERE d.n_chars >= cut.p50"""),
     // per-group bottom-k telescopes across any split/micro-batching —
     // both artifact gates share the from-scratch oracle verbatim
-    "sketch_quantile_merge" -> dkQuantileSketch,
-    "streaming_quantile" -> dkQuantileSketch,
-    "sketch_hll_grouped" ->
+    "sketch_quantile_merge" -> Gate(sketchQuantileMergeQ, dkQuantileSketch),
+    "streaming_quantile" -> Gate(streamingQuantileQ, dkQuantileSketch),
+    "sketch_hll_grouped" -> Gate(sketchHllGroupedQ,
       s"""WITH h AS (SELECT source, ${dkHash("text")} AS h
              FROM documents WHERE text IS NOT NULL),
          r AS (SELECT source, h >> 48 AS bucket,
@@ -7785,8 +7452,8 @@ object SparkEntry {
          SELECT source, m, v_zero, round(raw, 6) AS raw_estimate,
            round(CASE WHEN raw <= 2.5 * 4096.0 AND v_zero > 0
              THEN 4096.0 * ln(4096.0 / v_zero) ELSE raw END, 6) AS estimate
-         FROM e""",
-    "sketch_hll_estimate" ->
+         FROM e"""),
+    "sketch_hll_estimate" -> Gate(sketchHllEstimateQ,
       s"""WITH h AS (SELECT ${dkHash("text")} AS h
              FROM documents WHERE text IS NOT NULL),
          r AS (SELECT h >> 48 AS bucket,
@@ -7808,8 +7475,8 @@ object SparkEntry {
          SELECT m, v_zero, round(raw, 6) AS raw_estimate,
            round(CASE WHEN raw <= 2.5 * 4096.0 AND v_zero > 0
              THEN 4096.0 * ln(4096.0 / v_zero) ELSE raw END, 6) AS estimate
-         FROM e""",
-    "dedup_substring_bpe" ->
+         FROM e"""),
+    "dedup_substring_bpe" -> Gate(dedupSubstringBpeQ,
       """WITH src AS (SELECT doc_id,
              CASE WHEN doc_id % 5 = 0
                THEN 'licensetermsapplytoallcopiesofthisdocumentnowarrantyisexpressedorimplied' || text
@@ -7849,8 +7516,8 @@ object SparkEntry {
          SELECT t.doc_id, coalesce(agg.text_kept, '') AS text_kept,
            coalesce(agg.n_tokens_kept, 0) AS n_tokens_kept,
            coalesce(agg.n_tokens_dropped, 0) AS n_tokens_dropped
-         FROM t LEFT JOIN agg USING (doc_id)""",
-    "strip_boilerplate" ->
+         FROM t LEFT JOIN agg USING (doc_id)"""),
+    "strip_boilerplate" -> Gate(stripBoilerplateQ,
       """WITH src AS (SELECT doc_id,
              '12345 67890 2024' || chr(10) || 'ok' || chr(10) ||
              regexp_replace(text, '((?:\S+ ){5}\S+) ', '\1' || chr(10), 'g') AS t
@@ -7864,8 +7531,8 @@ object SparkEntry {
          SELECT doc_id, array_to_string(ks, chr(10)) AS text_clean,
            CAST(len(ks) AS BIGINT) AS n_lines_kept,
            CAST(len(ls) - len(ks) AS BIGINT) AS n_lines_dropped
-         FROM k""",
-    "dedup_keep_best" ->
+         FROM k"""),
+    "dedup_keep_best" -> Gate(dedupKeepBestQ,
       """WITH h AS (SELECT doc_id, n_chars,
              md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS text_hash
            FROM documents),
@@ -7875,8 +7542,8 @@ object SparkEntry {
              count(*) OVER (PARTITION BY text_hash) AS dup_count
            FROM h)
          SELECT text_hash, doc_id AS keep_id, n_chars AS keep_score,
-           dup_count FROM r WHERE rn = 1""",
-    "dedup_semantic" ->
+           dup_count FROM r WHERE rn = 1"""),
+    "dedup_semantic" -> Gate(semanticDedupQ,
       """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vd FROM embeddings),
          c AS (SELECT vec_id AS centroid_id, vd AS cv FROM v WHERE vec_id % 100 = 0),
          asg AS (SELECT vec_id, vd, centroid_id FROM (
@@ -7888,8 +7555,8 @@ object SparkEntry {
          SELECT a.vec_id, a.centroid_id FROM asg a
          WHERE NOT EXISTS (SELECT 1 FROM asg b
            WHERE b.centroid_id = a.centroid_id AND b.vec_id < a.vec_id
-             AND round(list_cosine_similarity(a.vd, b.vd), 6) >= 0.3)""",
-    "repetition_scores" ->
+             AND round(list_cosine_similarity(a.vd, b.vd), 6) >= 0.3)"""),
+    "repetition_scores" -> Gate(repetitionScoresQ,
       """WITH src AS (SELECT doc_id,
              regexp_replace(text, '((?:\S+ ){5}\S+) ', '\1' || chr(10), 'g') AS t0
            FROM documents),
@@ -7932,8 +7599,8 @@ object SparkEntry {
          FROM src2 s
          LEFT JOIN lstats ls USING (doc_id)
          LEFT JOIN (SELECT doc_id, v FROM g2t WHERE rn = 1) t2 USING (doc_id)
-         LEFT JOIN (SELECT doc_id, v FROM g3t WHERE rn = 1) t3 USING (doc_id)""",
-    "winnow_fingerprint" ->
+         LEFT JOIN (SELECT doc_id, v FROM g3t WHERE rn = 1) t3 USING (doc_id)"""),
+    "winnow_fingerprint" -> Gate(winnowQ,
       """WITH g AS (SELECT doc_id,
              CASE WHEN length(text) < 7 THEN [text]
                   ELSE list_transform(range(1, length(text) - 5),
@@ -7948,8 +7615,8 @@ object SparkEntry {
                     i -> list_min(hs[i:i + 3])) END AS mins
            FROM h)
          SELECT doc_id, unnest(list_sort(list_distinct(mins))) AS fingerprint
-         FROM wm""",
-    "winnow_pairs" ->
+         FROM wm"""),
+    "winnow_pairs" -> Gate(winnowPairsQ,
       s"""WITH src AS (SELECT doc_id,
              CASE WHEN doc_id % 97 = 0 THEN text || ' $winnowPassage'
                   ELSE text END AS text
@@ -7976,11 +7643,11 @@ object SparkEntry {
          SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_shared
          FROM f a JOIN f b
            ON a.fingerprint = b.fingerprint AND a.doc_id < b.doc_id
-         GROUP BY 1, 2 HAVING count(*) >= 2""",
-    "dedup_minhash_sig" -> dkMinhashSigSelect,
-    "dedup_lsh_pairs" -> dkLshPairs,
-    "dedup_lsh_eval" -> dkLshEvalSql(10),
-    "dedup_lsh_capped" ->
+         GROUP BY 1, 2 HAVING count(*) >= 2"""),
+    "dedup_minhash_sig" -> Gate(dedupMinhashSig, dkMinhashSigSelect),
+    "dedup_lsh_pairs" -> Gate(dedupLshPairs, dkLshPairs),
+    "dedup_lsh_eval" -> Gate(dedupLshEvalQ, dkLshEvalSql(10)),
+    "dedup_lsh_capped" -> Gate(dedupLshCappedQ,
       """WITH d AS (SELECT row_number() OVER (ORDER BY doc_id) - 1 AS rn
            FROM (SELECT doc_id FROM documents ORDER BY doc_id LIMIT 70)),
          sizes AS (SELECT CASE WHEN rn < 60 THEN 'big' ELSE 'small' END AS fam,
@@ -7991,12 +7658,12 @@ object SparkEntry {
          FROM sizes
          UNION ALL
          SELECT 'uncapped' AS kind, CAST(sum(n*(n-1)/2) AS BIGINT) AS pairs
-         FROM sizes""",
-    "dedup_lsh_char" -> dkLshCharPairs,
-    "dedup_drop_near" ->
+         FROM sizes"""),
+    "dedup_lsh_char" -> Gate(dedupLshCharQ, dkLshCharPairs),
+    "dedup_drop_near" -> Gate(dedupDropNear,
       s"""SELECT doc_id, n_chars FROM documents
-         WHERE doc_id NOT IN (SELECT id_b FROM ($dkLshPairs))""",
-    "dedup_components" ->
+         WHERE doc_id NOT IN (SELECT id_b FROM ($dkLshPairs))"""),
+    "dedup_components" -> Gate(dedupComponents,
       s"""WITH RECURSIVE pairs AS ($dkLshPairs),
          edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
                    UNION ALL SELECT id_b, id_a FROM pairs),
@@ -8005,8 +7672,8 @@ object SparkEntry {
            UNION
            SELECT e.dst AS id, cc.label FROM cc JOIN edges e ON cc.id = e.src
          )
-         SELECT id, min(label) AS component FROM cc GROUP BY id""",
-    "dedup_cluster_report" ->
+         SELECT id, min(label) AS component FROM cc GROUP BY id"""),
+    "dedup_cluster_report" -> Gate(dedupClusterReportQ,
       s"""WITH RECURSIVE pairs AS ($dkLshPairs),
          edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
                    UNION ALL SELECT id_b, id_a FROM pairs),
@@ -8020,9 +7687,9 @@ object SparkEntry {
            FROM comp GROUP BY 1)
          SELECT cluster_size, count(*) AS n_clusters,
            cluster_size * count(*) AS n_docs
-         FROM sz GROUP BY 1""",
-    "dedup_simhash" -> dkSimhash,
-    "dedup_simhash_pairs" -> {
+         FROM sz GROUP BY 1"""),
+    "dedup_simhash" -> Gate(dedupSimhash, dkSimhash),
+    "dedup_simhash_pairs" -> Gate(dedupSimhashPairs, {
       val bandSelects = (0 until 4).map { b =>
         s"SELECT doc_id, simhash, $b AS band, (simhash >> ${b * 4}) & 15 AS band_bits FROM sim"
       }.mkString(" UNION ALL ")
@@ -8043,9 +7710,9 @@ object SparkEntry {
          JOIN bk b ON a.band = b.band
            AND a.band_bits = b.band_bits AND a.doc_id < b.doc_id
          WHERE bit_count(xor(a.simhash, b.simhash)) <= 3"""
-    },
-    "dedup_ngram_pairs" -> dkNgramPairs,
-    "dedup_editdist_pairs" ->
+    }),
+    "dedup_ngram_pairs" -> Gate(dedupNgramPairs, dkNgramPairs),
+    "dedup_editdist_pairs" -> Gate(dedupEditDistPairsQ,
       """WITH lead AS (SELECT doc_id AS lid,
            substr(regexp_replace(lower(text), '[^a-z ]', '', 'g'), 1, 24)
              AS base FROM documents),
@@ -8061,8 +7728,8 @@ object SparkEntry {
            FROM fix a JOIN fix b ON a.doc_id < b.doc_id
              AND abs(length(a.key) - length(b.key)) <= 2)
          SELECT id_a, id_b, CAST(dist AS INTEGER) AS dist
-         FROM pr WHERE dist <= 2""",
-    "dedup_drop_editdist" ->
+         FROM pr WHERE dist <= 2"""),
+    "dedup_drop_editdist" -> Gate(dedupDropEditDistQ,
       """WITH lead AS (SELECT doc_id AS lid,
            substr(regexp_replace(lower(text), '[^a-z ]', '', 'g'), 1, 24)
              AS base FROM documents),
@@ -8078,16 +7745,16 @@ object SparkEntry {
              AND abs(length(a.key) - length(b.key)) <= 2
            WHERE levenshtein(a.key, b.key) <= 2)
          SELECT doc_id FROM fix
-         WHERE doc_id NOT IN (SELECT doc_id FROM drops)""",
-    "dedup_cosine_pairs" ->
+         WHERE doc_id NOT IN (SELECT doc_id FROM drops)"""),
+    "dedup_cosine_pairs" -> Gate(dedupCosinePairs,
       """SELECT a.vec_id AS id_a, b.vec_id AS id_b,
          round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) AS cos_sim
          FROM embeddings a JOIN embeddings b
            ON a.label = b.label AND a.vec_id < b.vec_id
-         WHERE round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) >= 0.4""",
-    "decontaminate" -> dkDecontaminate,
-    "decontaminate_exact" -> dkDecontaminateExact,
-    "contamination_report" ->
+         WHERE round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) >= 0.4"""),
+    "decontaminate" -> Gate(decontaminateQ, dkDecontaminate),
+    "decontaminate_exact" -> Gate(decontaminateExactQ, dkDecontaminateExact),
+    "contamination_report" -> Gate(contaminationReportQ,
       """WITH tr AS (SELECT doc_id,
            CASE WHEN doc_id % 9 = 0
              THEN text || ' held out evaluation question about the seventeen silver llamas crossing frozen rivers quietly'
@@ -8105,15 +7772,15 @@ object SparkEntry {
        SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams,
          CAST(sum(CASE WHEN h IN (SELECT h FROM m) THEN 1 ELSE 0 END) AS BIGINT) AS n_contaminated,
          round(CAST(sum(CASE WHEN h IN (SELECT h FROM m) THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 6) AS contamination
-       FROM pg GROUP BY doc_id""",
-    "decontaminate_bloom" -> dkDecontaminateExact,
+       FROM pg GROUP BY doc_id"""),
+    "decontaminate_bloom" -> Gate(decontaminateBloomQ, dkDecontaminateExact),
     // the frozen-probe artifact is exact-semantics for any filter
     // size, and incremental probe absorption telescopes on the gram
     // set union — all three index gates share the exact oracle
-    "decon_index" -> dkDecontaminateExact,
-    "decon_index_append" -> dkDecontaminateExact,
-    "streaming_decon_index" -> dkDecontaminateExact,
-    "decontaminate_scrub" ->
+    "decon_index" -> Gate(deconIndexQ, dkDecontaminateExact),
+    "decon_index_append" -> Gate(deconIndexAppendQ, dkDecontaminateExact),
+    "streaming_decon_index" -> Gate(streamingDeconIndexQ, dkDecontaminateExact),
+    "decontaminate_scrub" -> Gate(decontaminateScrubQ,
       """WITH tr AS (SELECT doc_id,
              CASE WHEN doc_id % 9 = 0
                THEN text || ' held out evaluation question about the seventeen silver llamas crossing frozen rivers quietly'
@@ -8141,8 +7808,8 @@ object SparkEntry {
          SELECT t.doc_id, coalesce(agg.text_kept, '') AS text_kept,
            coalesce(agg.n_words_kept, 0) AS n_words_kept,
            coalesce(agg.n_words_dropped, 0) AS n_words_dropped
-         FROM t LEFT JOIN agg USING (doc_id)""",
-    "curate_scrub" ->
+         FROM t LEFT JOIN agg USING (doc_id)"""),
+    "curate_scrub" -> Gate(curateScrubQ,
       s"""WITH tr AS (SELECT doc_id,
              CASE WHEN doc_id % 9 = 0
                THEN text || ' held out evaluation question about the seventeen silver llamas crossing frozen rivers quietly'
@@ -8177,8 +7844,8 @@ object SparkEntry {
            CASE WHEN h < 800000 THEN 'train'
                 WHEN h < 900000 THEN 'val' ELSE 'test' END AS split
          FROM (SELECT doc_id,
-             ${dkHash("CAST(doc_id AS VARCHAR)")} % 1000000 AS h FROM fin)""",
-    "curate_report" ->
+             ${dkHash("CAST(doc_id AS VARCHAR)")} % 1000000 AS h FROM fin)"""),
+    "curate_report" -> Gate(curateReportQ,
       s"""WITH q AS (SELECT doc_id, text FROM documents
            WHERE length(text) >= 250 AND length(text) <= 100000),
          ex AS (SELECT min(doc_id) AS doc_id FROM q
@@ -8208,8 +7875,8 @@ object SparkEntry {
          UNION ALL SELECT 3, 'decontaminate',
            (SELECT CAST(COUNT(*) AS BIGINT) FROM fin)
          UNION ALL SELECT 4, 'output',
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM fin)""",
-    "decontaminate_scrub_bpe" ->
+           (SELECT CAST(COUNT(*) AS BIGINT) FROM fin)"""),
+    "decontaminate_scrub_bpe" -> Gate(decontaminateScrubBpeQ,
       """WITH tr AS (SELECT doc_id,
              CASE WHEN doc_id % 9 = 0
                THEN 'licensetermsapplytoallcopiesofthisdocumentnowarrantyisexpressedorimplied' || text
@@ -8247,8 +7914,8 @@ object SparkEntry {
          SELECT t.doc_id, coalesce(agg.text_kept, '') AS text_kept,
            coalesce(agg.n_tokens_kept, 0) AS n_tokens_kept,
            coalesce(agg.n_tokens_dropped, 0) AS n_tokens_dropped
-         FROM t LEFT JOIN agg USING (doc_id)""",
-    "mix_temperature" ->
+         FROM t LEFT JOIN agg USING (doc_id)"""),
+    "mix_temperature" -> Gate(mixTemperatureQ,
       s"""WITH tot AS (SELECT source, CAST(sum(n_chars) AS BIGINT) AS tk
            FROM documents GROUP BY 1),
          w AS (SELECT source, tk,
@@ -8258,10 +7925,10 @@ object SparkEntry {
          SELECT d.doc_id, d.source, d.n_chars
          FROM documents d JOIN fr USING (source)
          WHERE ${dkHash("CAST(doc_id AS VARCHAR)")} % 1000000
-           < round(f * 1000000)""",
-    "upsample_epochs" -> dkUpsampleOracle,
-    "streaming_upsample" -> dkUpsampleOracle,
-    "pack_shuffle" ->
+           < round(f * 1000000)"""),
+    "upsample_epochs" -> Gate(upsampleEpochsQ, dkUpsampleOracle),
+    "streaming_upsample" -> Gate(streamingUpsampleQ, dkUpsampleOracle),
+    "pack_shuffle" -> Gate(packShuffleQ,
       s"""WITH d AS (SELECT doc_id, n_chars,
            ${dkHash("CAST(doc_id AS VARCHAR)")} AS h FROM documents),
          b AS (SELECT doc_id, n_chars, h, h % 8 AS pack_bucket FROM d),
@@ -8277,11 +7944,11 @@ object SparkEntry {
          SELECT pack_bucket, pack_id, h % 8 AS shard,
            CAST(row_number() OVER (PARTITION BY h % 8
              ORDER BY h, pack_bucket, pack_id) AS BIGINT) AS shard_rank
-         FROM hh""",
-    "html_extract" ->
+         FROM hh"""),
+    "html_extract" -> Gate(htmlExtractQ,
       s"""WITH $dkHtmlClean
-         SELECT doc_id, t AS text_clean FROM clean""",
-    "curate_html" ->
+         SELECT doc_id, t AS text_clean FROM clean"""),
+    "curate_html" -> Gate(curateHtmlQ,
       s"""WITH $dkHtmlClean,
          q AS (SELECT doc_id, t FROM clean
            WHERE length(t) >= 250 AND length(t) <= 100000),
@@ -8292,12 +7959,12 @@ object SparkEntry {
            CASE WHEN h < 800000 THEN 'train'
                 WHEN h < 900000 THEN 'val' ELSE 'test' END AS split
          FROM (SELECT doc_id,
-             ${dkHash("CAST(doc_id AS VARCHAR)")} % 1000000 AS h FROM fin)""",
-    "wet_roundtrip" -> dkWetOracle,
+             ${dkHash("CAST(doc_id AS VARCHAR)")} % 1000000 AS h FROM fin)"""),
+    "wet_roundtrip" -> Gate(wetRoundtripQ, dkWetOracle),
     // the malformed plants (m 5/6) never re-enter: the walk emits them
     // as null-length spans and the quarantine predicate drops them;
     // m=4 survives self-consistently truncated (7 marker chars kept)
-    "wet_curate_quarantine" ->
+    "wet_curate_quarantine" -> Gate(wetCurateQuarantineQ,
       s"""WITH src AS (SELECT doc_id,
            CASE WHEN doc_id % 7 = 4 THEN text || ' #QUARA'
                 ELSE text END AS text
@@ -8310,11 +7977,11 @@ object SparkEntry {
          CASE WHEN h < 800000 THEN 'train'
               WHEN h < 900000 THEN 'val' ELSE 'test' END AS split
        FROM (SELECT doc_id,
-           ${dkHash("CAST(doc_id AS VARCHAR)")} % 1000000 AS h FROM ex)""",
-    "streaming_wet" -> dkWetOracle,
-    "curate_pipeline" -> dkCurate,
-    "curate_substring" -> dkCurateSubstring,
-    "curate_decon_exact" ->
+           ${dkHash("CAST(doc_id AS VARCHAR)")} % 1000000 AS h FROM ex)"""),
+    "streaming_wet" -> Gate(streamingWetQ, dkWetOracle),
+    "curate_pipeline" -> Gate(curatePipelineQ, dkCurate),
+    "curate_substring" -> Gate(curateSubstringQ, dkCurateSubstring),
+    "curate_decon_exact" -> Gate(curateDeconExactQ,
       s"""WITH q AS (SELECT doc_id, text FROM documents
            WHERE length(text) >= 250 AND length(text) <= 100000),
          ex AS (SELECT min(doc_id) AS doc_id FROM q
@@ -8339,8 +8006,8 @@ object SparkEntry {
            CASE WHEN h < 800000 THEN 'train'
                 WHEN h < 900000 THEN 'val' ELSE 'test' END AS split
          FROM (SELECT doc_id,
-             ${dkHash("CAST(doc_id AS VARCHAR)")} % 1000000 AS h FROM fin)""",
-    "curate_classifier" ->
+             ${dkHash("CAST(doc_id AS VARCHAR)")} % 1000000 AS h FROM fin)"""),
+    "curate_classifier" -> Gate(curateClassifierQ,
       s"""${classifierOracle(10, "4.0")},
          sc AS (SELECT d.doc_id, 1/(1+exp(-s.m)) AS score
            FROM d JOIN (SELECT f.doc_id, sum(f.x * w.wt) AS m
@@ -8355,9 +8022,9 @@ object SparkEntry {
            CASE WHEN h < 800000 THEN 'train'
                 WHEN h < 900000 THEN 'val' ELSE 'test' END AS split
          FROM (SELECT doc_id,
-             ${dkHash("CAST(doc_id AS VARCHAR)")} % 1000000 AS h FROM cex)""",
-    "curate_quality" -> dkCurateQuality,
-    "streaming_curate_entropy" ->
+             ${dkHash("CAST(doc_id AS VARCHAR)")} % 1000000 AS h FROM cex)"""),
+    "curate_quality" -> Gate(curateQualityQ, dkCurateQuality),
+    "streaming_curate_entropy" -> Gate(streamingCurateEntropyQ,
       s"""WITH src AS (SELECT doc_id, CASE WHEN doc_id % 17 = 0
            THEN repeat('aa ', 120) ELSE text END AS text
          FROM documents),
@@ -8373,8 +8040,8 @@ object SparkEntry {
              WHEN h < 900000 THEN 'val' ELSE 'test' END AS split
          FROM (SELECT doc_id,
              ${dkHash("CAST(doc_id AS VARCHAR)")} % 1000000 AS h
-           FROM eg)""",
-    "curate_script" ->
+           FROM eg)"""),
+    "curate_script" -> Gate(curateScriptQ,
       s"""WITH src AS (SELECT doc_id, CASE
            WHEN doc_id % 19 = 0 THEN 'Привет мир это русский текст документа'
            WHEN doc_id % 19 = 5 THEN '日本語のテキスト mixed with ラテン and 漢字'
@@ -8397,8 +8064,8 @@ object SparkEntry {
          SELECT doc_id, CASE WHEN h < 800000 THEN 'train'
              WHEN h < 900000 THEN 'val' ELSE 'test' END AS split
          FROM (SELECT doc_id,
-             ${dkHash("CAST(doc_id AS VARCHAR)")} % 1000000 AS h FROM ex)""",
-    "streaming_curate_script" ->
+             ${dkHash("CAST(doc_id AS VARCHAR)")} % 1000000 AS h FROM ex)"""),
+    "streaming_curate_script" -> Gate(streamingCurateScriptQ,
       s"""WITH src AS (SELECT doc_id, CASE
            WHEN doc_id % 19 = 0 THEN 'Привет мир это русский текст документа'
            WHEN doc_id % 19 = 5 THEN '日本語のテキスト mixed with ラテン and 漢字'
@@ -8419,8 +8086,8 @@ object SparkEntry {
          SELECT doc_id, CASE WHEN h < 800000 THEN 'train'
              WHEN h < 900000 THEN 'val' ELSE 'test' END AS split
          FROM (SELECT doc_id,
-             ${dkHash("CAST(doc_id AS VARCHAR)")} % 1000000 AS h FROM kept)""",
-    "contract_checks" ->
+             ${dkHash("CAST(doc_id AS VARCHAR)")} % 1000000 AS h FROM kept)"""),
+    "contract_checks" -> Gate(contractChecksQ,
       """WITH fix0 AS (SELECT doc_id,
            CASE WHEN doc_id % 97 = 0 THEN NULL ELSE text END AS text,
            CASE WHEN doc_id % 89 = 0 THEN -1 ELSE n_chars END AS n_chars,
@@ -8452,8 +8119,8 @@ object SparkEntry {
            SELECT 'unique(doc_id)', t.checked,
              (SELECT CAST(COALESCE(sum(n), 0) AS BIGINT) FROM
                (SELECT count(*) AS n FROM fix GROUP BY doc_id) WHERE n > 1)
-           FROM tot t)""",
-    "contract_fk" ->
+           FROM tot t)"""),
+    "contract_fk" -> Gate(contractFkQ,
       """WITH o AS (SELECT CASE WHEN o_orderkey % 67 = 0 THEN -o_custkey
              ELSE o_custkey END AS k FROM orders),
          tot AS (SELECT count(*) AS checked FROM o)
@@ -8464,8 +8131,8 @@ object SparkEntry {
            FROM tot t
            UNION ALL
            SELECT 'not_null(o_custkey)', t.checked,
-             (SELECT count(*) FROM o WHERE k IS NULL) FROM tot t)""",
-    "streaming_contract" ->
+             (SELECT count(*) FROM o WHERE k IS NULL) FROM tot t)"""),
+    "streaming_contract" -> Gate(streamingContractQ,
       """WITH fix AS (SELECT doc_id,
            CASE WHEN doc_id % 97 = 0 THEN NULL ELSE text END AS text,
            CASE WHEN doc_id % 89 = 0 THEN -1 ELSE n_chars END AS n_chars,
@@ -8490,8 +8157,8 @@ object SparkEntry {
            SELECT 'predicate(n_chars_consistent)', t.checked,
              (SELECT count(*) FROM fix
               WHERE text IS NULL OR n_chars <> length(text))
-           FROM tot t)""",
-    "contract_by_source" ->
+           FROM tot t)"""),
+    "contract_by_source" -> Gate(contractBySourceQ,
       """WITH fix AS (SELECT source,
            CASE WHEN doc_id % 97 = 0 THEN NULL ELSE text END AS text,
            CASE WHEN doc_id % 89 = 0 THEN -1 ELSE n_chars END AS n_chars,
@@ -8513,8 +8180,8 @@ object SparkEntry {
              CAST(sum(CASE WHEN lang IS NULL
                OR NOT regexp_matches(lang, '^[a-z]{2}$')
                THEN 1 ELSE 0 END) AS BIGINT)
-           FROM fix GROUP BY source)""",
-    "drift_bins" ->
+           FROM fix GROUP BY source)"""),
+    "drift_bins" -> Gate(driftBinsQ,
       """WITH bsnap AS (SELECT CASE WHEN doc_id % 7 = 0 THEN n_chars + 80
              ELSE n_chars END AS v FROM documents WHERE doc_id % 3 <> 0),
          ca AS (SELECT LEAST(GREATEST(CAST(FLOOR(n_chars / 30.0) AS INTEGER),
@@ -8525,12 +8192,12 @@ object SparkEntry {
            WHERE v IS NOT NULL GROUP BY 1),
          sp AS (SELECT CAST(range AS INTEGER) AS bin FROM range(0, 20))
          SELECT sp.bin, COALESCE(ca.n, 0) AS cnt_a, COALESCE(cb.n, 0) AS cnt_b
-         FROM sp LEFT JOIN ca USING (bin) LEFT JOIN cb USING (bin)""",
-    "drift_psi" -> dkDriftPsi,
+         FROM sp LEFT JOIN ca USING (bin) LEFT JOIN cb USING (bin)"""),
+    "drift_psi" -> Gate(driftPsiQ, dkDriftPsi),
     // the stream-accumulated artifact's counters telescope to the batch
     // bin table, so the streaming form replays the SAME oracle verbatim
-    "streaming_drift" -> dkDriftPsi,
-    "release_drift" ->
+    "streaming_drift" -> Gate(streamingDriftQ, dkDriftPsi),
+    "release_drift" -> Gate(releaseDriftQ,
       """WITH ca AS (SELECT LEAST(GREATEST(CAST(FLOOR(n_chars / 30.0)
              AS INTEGER), 0), 19) AS bin, count(*) AS n FROM documents
            WHERE n_chars IS NOT NULL GROUP BY 1),
@@ -8553,8 +8220,8 @@ object SparkEntry {
          SELECT round(sum((pa - pb) * ln(pa / pb)), 6) AS psi,
            round(max(gap), 6) AS ks,
            CAST(max(na) AS BIGINT) AS n_a, CAST(max(nb) AS BIGINT) AS n_b
-         FROM p""",
-    "drift_by_lang" ->
+         FROM p"""),
+    "drift_by_lang" -> Gate(driftByLangQ,
       """WITH asnap AS (SELECT lang, n_chars AS v FROM documents
            WHERE n_chars IS NOT NULL),
          bsnap AS (SELECT lang, CASE WHEN doc_id % 7 = 0 THEN n_chars + 80
@@ -8587,8 +8254,8 @@ object SparkEntry {
              AS psi,
            round(max(gap), 6) AS ks,
            CAST(max(na) AS BIGINT) AS n_a, CAST(max(nb) AS BIGINT) AS n_b
-         FROM p GROUP BY lang""",
-    "curate_exposure" ->
+         FROM p GROUP BY lang"""),
+    "curate_exposure" -> Gate(curateExposureQ,
       s"""WITH src AS (SELECT doc_id, CASE
            WHEN doc_id % 17 = 0 THEN repeat('aa ', 120)
            WHEN doc_id % 13 = 0
@@ -8628,21 +8295,23 @@ object SparkEntry {
              WHEN h < 900000 THEN 'val' ELSE 'test' END AS split
          FROM (SELECT doc_id,
              ${dkHash("CAST(doc_id AS VARCHAR)")} % 1000000 AS h
-           FROM keep)""",
-    "dedup_index_persist" ->
+           FROM keep)"""),
+    "dedup_index_persist" -> Gate(dedupIndexPersistQ,
       """SELECT md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS text_hash,
          min(doc_id) AS keep_id
-         FROM documents WHERE doc_id % 3 <> 0 GROUP BY 1""",
-    "dedup_index_append" -> dkDedupIndexAppend,
-    "dedup_index_compact" -> dkDedupIndexCompact,
+         FROM documents WHERE doc_id % 3 <> 0 GROUP BY 1"""),
+    "dedup_index_append" -> Gate(dedupIndexAppendQ, dkDedupIndexAppend),
+    "dedup_index_compact" -> Gate(dedupIndexCompactQ, dkDedupIndexCompact),
     // the stream ingests the SAME %3 batch against the same frozen
     // index, and the telescoping property makes the surviving set
     // independent of micro-batching — oracle shared verbatim
-    "streaming_dedup_index" -> dkDedupIndexAppend,
-    "dedup_index_semantic" -> dkDedupIndexSemantic,
-    "dedup_index_compact_semantic" -> dkDedupIndexSemantic,
-    "streaming_dedup_semantic" -> dkDedupIndexSemantic,
-    "curate_semantic" ->
+    "streaming_dedup_index" -> Gate(streamingDedupIndexQ, dkDedupIndexAppend),
+    "dedup_index_semantic" -> Gate(dedupIndexSemanticQ, dkDedupIndexSemantic),
+    "dedup_index_compact_semantic" ->
+      Gate(dedupIndexCompactSemQ, dkDedupIndexSemantic),
+    "streaming_dedup_semantic" ->
+      Gate(streamingDedupSemanticQ, dkDedupIndexSemantic),
+    "curate_semantic" -> Gate(curateSemanticQ,
       s"""WITH lg AS (SELECT doc_id, text FROM documents
            WHERE length(text) >= 250 AND length(text) <= 100000),
          ex AS (SELECT min(doc_id) AS doc_id FROM lg
@@ -8671,8 +8340,8 @@ object SparkEntry {
                 WHEN h < 900000 THEN 'val' ELSE 'test' END AS split
          FROM (SELECT doc_id,
              ${dkHash("CAST(doc_id AS VARCHAR)")} % 1000000 AS h
-           FROM surv)""",
-    "dedup_lsh_verified" ->
+           FROM surv)"""),
+    "dedup_lsh_verified" -> Gate(dedupLshVerifiedQ,
       s"""WITH pairs AS ($dkLshPairs),
          $dkShingles
          SELECT p.id_a, p.id_b,
@@ -8681,8 +8350,8 @@ object SparkEntry {
          FROM pairs p JOIN s x ON x.doc_id = p.id_a
            JOIN s y ON y.doc_id = p.id_b
          WHERE round(CAST(len(list_intersect(x.sh, y.sh)) AS DOUBLE)
-             / (len(x.sh) + len(y.sh) - len(list_intersect(x.sh, y.sh))), 6) >= 0.3""",
-    "chunk_tokens" ->
+             / (len(x.sh) + len(y.sh) - len(list_intersect(x.sh, y.sh))), 6) >= 0.3"""),
+    "chunk_tokens" -> Gate(chunkTokensQ,
       """WITH tk AS (SELECT doc_id,
              string_split_regex(trim(text), '\s+') AS toks FROM documents),
          c AS (SELECT doc_id, toks,
@@ -8691,26 +8360,26 @@ object SparkEntry {
          SELECT doc_id, CAST(i AS INTEGER) AS chunk_id,
            CAST(len(toks[(i*32+1):(i*32+40)]) AS INTEGER) AS n_tokens,
            array_to_string(toks[(i*32+1):(i*32+40)], ' ') AS chunk_text
-         FROM c, unnest(range(0, nc)) AS t(i)""",
-    "sample_stratified" ->
+         FROM c, unnest(range(0, nc)) AS t(i)"""),
+    "sample_stratified" -> Gate(sampleStratifiedQ,
       s"""SELECT doc_id, lang FROM documents
          WHERE ${dkHash("CAST(doc_id AS VARCHAR)")} % 1000000
            < (CASE WHEN lang = 'en' THEN 500000
-                   WHEN lang = 'de' THEN 250000 ELSE 100000 END)""",
+                   WHEN lang = 'de' THEN 250000 ELSE 100000 END)"""),
     // stateless filter => the stream emits exactly the batch sample
-    "streaming_sample" ->
+    "streaming_sample" -> Gate(streamingSampleQ,
       s"""SELECT doc_id, lang FROM documents
          WHERE ${dkHash("CAST(doc_id AS VARCHAR)")} % 1000000
            < (CASE WHEN lang = 'en' THEN 500000
-                   WHEN lang = 'de' THEN 250000 ELSE 100000 END)""",
-    "sample_exact" ->
+                   WHEN lang = 'de' THEN 250000 ELSE 100000 END)"""),
+    "sample_exact" -> Gate(sampleExactQ,
       s"""SELECT lang, doc_id, sample_rank FROM (
            SELECT lang, doc_id, CAST(row_number() OVER (PARTITION BY lang
                ORDER BY h % 4503599627370496, h) AS INTEGER) AS sample_rank
            FROM (SELECT lang, doc_id,
                ${dkHash("CAST(doc_id AS VARCHAR)")} AS h FROM documents))
-         WHERE sample_rank <= 20""",
-    "sample_cluster_balanced" ->
+         WHERE sample_rank <= 20"""),
+    "sample_cluster_balanced" -> Gate(sampleClusterBalancedQ,
       s"""WITH c AS (SELECT vec_id AS centroid_id, embedding::DOUBLE[] AS cv
              FROM embeddings WHERE vec_id % 100 = 0),
          v AS (SELECT vec_id, embedding::DOUBLE[] AS vd FROM embeddings),
@@ -8727,8 +8396,8 @@ object SparkEntry {
              CAST(row_number() OVER (PARTITION BY centroid_id
                ORDER BY h % 4503599627370496, h) AS INTEGER) AS sample_rank
            FROM h)
-         WHERE sample_rank <= 5""",
-    "mix_budget" ->
+         WHERE sample_rank <= 5"""),
+    "mix_budget" -> Gate(mixBudgetQ,
       s"""WITH tot AS (SELECT source, CAST(sum(n_chars) AS BIGINT) AS tk
            FROM documents GROUP BY 1),
          fr AS (SELECT source,
@@ -8739,9 +8408,9 @@ object SparkEntry {
          SELECT d.doc_id, d.source, d.n_chars
          FROM documents d JOIN fr USING (source)
          WHERE ${dkHash("CAST(doc_id AS VARCHAR)")} % 1000000
-           < round(f * 1000000)""",
-    "bpe_train" -> bpeTrainOracle(8),
-    "token_ids_bpe" ->
+           < round(f * 1000000)"""),
+    "bpe_train" -> Gate(bpeTrainQ, bpeTrainOracle(8)),
+    "token_ids_bpe" -> Gate(tokenIdsBpeQ,
       """SELECT doc_id,
          array_to_string(list_transform(
            string_split(replace(replace(text, 'abc', chr(1)), 'ab', chr(2)), ''),
@@ -8749,8 +8418,8 @@ object SparkEntry {
                           WHEN c = chr(2) THEN 256
                           ELSE ascii(c) END AS VARCHAR)), ',') AS ids_csv,
          CAST(strlen(replace(replace(text, 'abc', chr(1)), 'ab', chr(2))) AS BIGINT) AS n_tokens
-         FROM documents""",
-    "token_fertility" ->
+         FROM documents"""),
+    "token_fertility" -> Gate(tokenFertilityQ,
       """WITH per AS (SELECT lang,
            CAST(strlen(text)
              - (strlen(text) - strlen(replace(text, 'ab', ''))) // 2
@@ -8762,15 +8431,15 @@ object SparkEntry {
          SELECT lang, CAST(sum(tk) AS BIGINT) AS n_tokens,
            CAST(sum(wd) AS BIGINT) AS n_words,
            round(CAST(sum(tk) AS DOUBLE) / sum(wd), 6) AS fertility
-         FROM per GROUP BY lang""",
-    "token_counts_bpe" ->
+         FROM per GROUP BY lang"""),
+    "token_counts_bpe" -> Gate(tokenCountsBpeQ,
       """SELECT doc_id,
          CAST(strlen(text)
            - (strlen(text) - strlen(replace(text, 'ab', ''))) // 2
            - (strlen(text) - strlen(replace(text, 'abc', ''))) // 3
            AS BIGINT) AS n_bpe_tokens
-         FROM documents""",
-    "mix_budget_bpe" ->
+         FROM documents"""),
+    "mix_budget_bpe" -> Gate(mixBudgetBpeQ,
       s"""WITH bpe AS (SELECT doc_id, source,
            CAST(strlen(text)
              - (strlen(text) - strlen(replace(text, 'ab', ''))) // 2
@@ -8787,8 +8456,8 @@ object SparkEntry {
          SELECT d.doc_id, d.source, d.n_bpe_tokens
          FROM bpe d JOIN fr USING (source)
          WHERE ${dkHash("CAST(doc_id AS VARCHAR)")} % 1000000
-           < round(f * 1000000)""",
-    "chunk_tokens_bpe" ->
+           < round(f * 1000000)"""),
+    "chunk_tokens_bpe" -> Gate(chunkTokensBpeQ,
       """WITH t AS (SELECT doc_id,
            strlen(text)
              - (strlen(text) - strlen(replace(text, 'ab', ''))) // 2
@@ -8802,8 +8471,8 @@ object SparkEntry {
            unnest(range(0, nch)) AS cid FROM n)
          SELECT doc_id, CAST(cid AS INTEGER) AS chunk_id,
            CAST(least(cid * 48 + 64, total) - cid * 48 AS INTEGER) AS n_tokens
-         FROM c""",
-    "trainer_feed" ->
+         FROM c"""),
+    "trainer_feed" -> Gate(trainerFeedQ,
       s"""WITH bpe AS (SELECT doc_id, source,
            CAST(strlen(text)
              - (strlen(text) - strlen(replace(text, 'ab', ''))) // 2
@@ -8832,41 +8501,42 @@ object SparkEntry {
            CAST(pack_bucket AS BIGINT) AS pack_bucket,
            CAST(st // 512 AS BIGINT) AS pack_id,
            CAST(st % 512 AS BIGINT) AS pack_offset
-         FROM c""",
-    "pack_materialize" -> packMaterializeOracle,
-    "classifier_train" ->
+         FROM c"""),
+    "pack_materialize" -> Gate(packMaterializeQ, packMaterializeOracle),
+    "classifier_train" -> Gate(classifierTrainQ,
       s"""${classifierOracle(10, "4.0")}
-         SELECT bucket, wt AS weight FROM w10""",
-    "classifier_train_bigram" ->
+         SELECT bucket, wt AS weight FROM w10"""),
+    "classifier_train_bigram" -> Gate(classifierTrainBigramQ,
       s"""${classifierOracle(10, "4.0", ngrams = 2)}
-         SELECT bucket, wt AS weight FROM w10""",
-    "classifier_score_bigram" ->
+         SELECT bucket, wt AS weight FROM w10"""),
+    "classifier_score_bigram" -> Gate(classifierScoreBigramQ,
       s"""${classifierOracle(10, "4.0", ngrams = 2)}
          SELECT d.doc_id, 1/(1+exp(-s.m)) AS score
          FROM d JOIN (SELECT f.doc_id, sum(f.x * w.wt) AS m
              FROM feat f JOIN w10 w USING (bucket) GROUP BY f.doc_id) s
-         USING (doc_id)""",
-    "langid_train" ->
+         USING (doc_id)"""),
+    "langid_train" -> Gate(langidTrainQ,
       s"""$langidModelCtes
-         SELECT lang, gram, cnt FROM m""",
-    "source_roundtrip" ->
-      "SELECT doc_id, text, lang, source, n_chars FROM documents",
-    "layout_zorder" -> dkZorder,
+         SELECT lang, gram, cnt FROM m"""),
+    "source_roundtrip" -> Gate(sourceRoundtripQ,
+      "SELECT doc_id, text, lang, source, n_chars FROM documents"),
+    "layout_zorder" -> Gate(layoutZorderQ, dkZorder),
     // append + OPTIMIZE converges to the from-scratch layout's content
     // and z-values — oracle shared verbatim
-    "layout_zorder_compact" -> dkZorder,
-    "layout_zorder3" -> dkZorder3,
-    "release_manifest" -> dkReleaseManifest,
+    "layout_zorder_compact" -> Gate(layoutZorderCompactQ, dkZorder),
+    "layout_zorder3" -> Gate(layoutZorder3Q, dkZorder3),
+    "release_manifest" -> Gate(releaseManifestQ, dkReleaseManifest),
     // the checked path publishes the identical artifact once the
     // contract passes — manifest oracle shared verbatim
-    "release_checked" -> dkReleaseManifest,
+    "release_checked" -> Gate(releaseCheckedQ, dkReleaseManifest),
     // content-addressed sharding: the touched-shards-only append
     // telescopes exactly to the from-scratch manifest
-    "release_append" -> dkReleaseManifest,
+    "release_append" -> Gate(releaseAppendQ, dkReleaseManifest),
     // takedown telescopes: the touched-shards-only rewrite must equal
     // a from-scratch publish of the survivors
-    "release_delete" -> dkReleaseManifestWhere("doc_id % 7 <> 0"),
-    "release_diff" ->
+    "release_delete" ->
+      Gate(releaseDeleteQ, dkReleaseManifestWhere("doc_id % 7 <> 0")),
+    "release_diff" -> Gate(releaseDiffQ,
       s"""WITH v AS (SELECT doc_id,
            ${dkHash("CAST(doc_id AS VARCHAR)")} % 8 AS shard,
            doc_id % 2 = 0 AS in1,
@@ -8879,13 +8549,13 @@ object SparkEntry {
                 WHEN in1 AND in2 AND rev THEN 'changed' END AS status
          FROM v
          WHERE (in1 AND NOT in2) OR (in2 AND NOT in1)
-            OR (in1 AND in2 AND rev)""",
+            OR (in1 AND in2 AND rev)"""),
     // compaction parity: layout changes, content doesn't — the
     // recomputed manifest equals the from-scratch one row-for-row
-    "release_compact" -> dkReleaseManifest,
+    "release_compact" -> Gate(releaseCompactQ, dkReleaseManifest),
     // the streamed snapshot = base corpus + curation survivors of the
     // streamed half, appended exactly once (the replay no-ops)
-    "streaming_release" ->
+    "streaming_release" -> Gate(streamingReleaseQ,
       s"""WITH src AS (SELECT doc_id, text FROM documents
            WHERE doc_id % 3 <> 0
               OR (doc_id % 3 = 0 AND n_chars >= 300)),
@@ -8896,8 +8566,8 @@ object SparkEntry {
          SELECT shard, count(*) AS n_docs,
            CAST(sum(length(text)) AS BIGINT) AS n_chars,
            bit_xor(dh) AS checksum
-         FROM h GROUP BY 1""",
-    "dedup_overlap_matrix" ->
+         FROM h GROUP BY 1"""),
+    "dedup_overlap_matrix" -> Gate(dedupOverlapMatrixQ,
       """WITH p AS (SELECT CASE WHEN doc_id % 5 = 0
              THEN 'shared block number ' || (doc_id % 37)
              ELSE text END AS text, source FROM documents),
@@ -8915,8 +8585,8 @@ object SparkEntry {
            round(shared / CAST(ta.n AS DOUBLE), 6) AS containment_a,
            round(shared / CAST(tb.n AS DOUBLE), 6) AS containment_b
          FROM sh JOIN t ta ON sh.source_a = ta.source
-           JOIN t tb ON sh.source_b = tb.source""",
-    "domain_report" ->
+           JOIN t tb ON sh.source_b = tb.source"""),
+    "domain_report" -> Gate(domainReportQ,
       """WITH r AS (SELECT doc_id, length(text) AS len,
            'site' || (doc_id % 40) || '.com' AS host FROM documents),
          a AS (SELECT host, count(*) AS n_docs,
@@ -8924,16 +8594,16 @@ object SparkEntry {
          SELECT host, n_docs, n_chars,
            round(n_docs / (SELECT CAST(sum(n_docs) AS DOUBLE) FROM a), 6)
              AS doc_share
-         FROM a""",
+         FROM a"""),
     // stream twin of the domain gates (blocklist + length + exact
     // dedup), projected to the arrival-order-free distinct hash set
-    "streaming_curate_domains" ->
+    "streaming_curate_domains" -> Gate(streamingCurateDomainsQ,
       """SELECT DISTINCT
            md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS text_hash
          FROM documents
          WHERE doc_id % 40 <> 3 AND doc_id % 40 <> 17
-           AND length(text) >= 250 AND length(text) <= 100000""",
-    "curate_domains" ->
+           AND length(text) >= 250 AND length(text) <= 100000"""),
+    "curate_domains" -> Gate(curateDomainsQ,
       s"""WITH u AS (SELECT doc_id, text, doc_id % 40 AS site
            FROM documents),
          nb AS (SELECT * FROM u WHERE site <> 3 AND site <> 17),
@@ -8951,8 +8621,8 @@ object SparkEntry {
            CASE WHEN h < 800000 THEN 'train'
                 WHEN h < 900000 THEN 'val' ELSE 'test' END AS split
          FROM (SELECT doc_id,
-             ${dkHash("CAST(doc_id AS VARCHAR)")} % 1000000 AS h FROM ex)""",
-    "langid_score" ->
+             ${dkHash("CAST(doc_id AS VARCHAR)")} % 1000000 AS h FROM ex)"""),
+    "langid_score" -> Gate(langidScoreQ,
       s"""$langidModelCtes,
          tot AS (SELECT lang, CAST(sum(cnt) AS DOUBLE) AS tot
            FROM m GROUP BY 1),
@@ -8970,8 +8640,8 @@ object SparkEntry {
            round(COALESCE(hit.h, 0)
              - n * ln(tot.tot + (SELECT v FROM vv)), 6) AS score
          FROM nd JOIN tot ON TRUE
-         LEFT JOIN hit ON hit.doc_id = nd.doc_id AND hit.lang = tot.lang""",
-    "langid_segments" ->
+         LEFT JOIN hit ON hit.doc_id = nd.doc_id AND hit.lang = tot.lang"""),
+    "langid_segments" -> Gate(langidSegmentsQ,
       s"""$langidModelCtes,
          tot AS (SELECT lang, CAST(sum(cnt) AS DOUBLE) AS tot
            FROM m GROUP BY 1),
@@ -9010,15 +8680,15 @@ object SparkEntry {
                  ORDER BY count(*) DESC, para_lang) AS rn
              FROM bst GROUP BY doc_id, para_lang) WHERE rn = 1)
          SELECT b.doc_id, b.para_idx, b.para_lang, dl.doc_lang
-         FROM bst b JOIN dl USING (doc_id)""",
-    "classifier_score" -> classifierScoreOracle,
-    "pack_persist" ->
+         FROM bst b JOIN dl USING (doc_id)"""),
+    "classifier_score" -> Gate(classifierScoreQ, classifierScoreOracle),
+    "pack_persist" -> Gate(packPersistQ,
       s"""WITH pm AS ($packMaterializeOracle)
          SELECT pm.*, CAST(512 AS BIGINT) AS seq_tokens,
            CAST(8 AS BIGINT) AS n_buckets,
            md5('a b' || chr(10) || 'ab c' || chr(10)) AS merges_fingerprint
-         FROM pm""",
-    "pack_efficiency" ->
+         FROM pm"""),
+    "pack_efficiency" -> Gate(packEfficiencyQ,
       s"""WITH d AS (SELECT doc_id, n_chars,
            ${dkHash("CAST(doc_id AS VARCHAR)")} AS h FROM documents),
          b AS (SELECT doc_id, n_chars, h, h % 8 AS pack_bucket FROM d),
@@ -9042,8 +8712,8 @@ object SparkEntry {
            round(sum(t) / CAST(sum(t) + sum(pad) AS DOUBLE), 6)
              AS fill_rate,
            CAST(sum(splits) AS BIGINT) AS split_docs
-         FROM e""",
-    "pack_sequences" ->
+         FROM e"""),
+    "pack_sequences" -> Gate(packSequencesQ,
       s"""WITH d AS (SELECT doc_id, n_chars,
            ${dkHash("CAST(doc_id AS VARCHAR)")} AS h FROM documents),
          b AS (SELECT doc_id, n_chars, h, h % 8 AS pack_bucket FROM d),
@@ -9054,15 +8724,15 @@ object SparkEntry {
          SELECT doc_id, n_chars, CAST(pack_bucket AS BIGINT) AS pack_bucket,
            CAST(st // 2048 AS BIGINT) AS pack_id,
            CAST(st % 2048 AS BIGINT) AS pack_offset
-         FROM c""",
-    "split_assign" ->
+         FROM c"""),
+    "split_assign" -> Gate(splitAssignQ,
       s"""SELECT doc_id,
          CASE WHEN h < 800000 THEN 'train'
               WHEN h < 900000 THEN 'val' ELSE 'test' END AS split
          FROM (SELECT doc_id,
              ${dkHash("CAST(doc_id AS VARCHAR)")} % 1000000 AS h
-           FROM documents)""",
-    "split_leakage_safe" ->
+           FROM documents)"""),
+    "split_leakage_safe" -> Gate(splitLeakageSafeQ,
       s"""WITH RECURSIVE pairs AS ($dkLshPairs),
          edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
                    UNION ALL SELECT id_b, id_a FROM pairs),
@@ -9078,27 +8748,27 @@ object SparkEntry {
            CASE WHEN h < 800000 THEN 'train'
                 WHEN h < 900000 THEN 'val' ELSE 'test' END AS split
          FROM (SELECT doc_id, root,
-             ${dkHash("CAST(root AS VARCHAR)")} % 1000000 AS h FROM r)""",
-    "asof_join" ->
+             ${dkHash("CAST(root AS VARCHAR)")} % 1000000 AS h FROM r)"""),
+    "asof_join" -> Gate(asofJoinQ,
       """WITH r AS (SELECT o_custkey, o_orderdate,
              max(o_totalprice) AS prev_total
            FROM orders GROUP BY 1, 2)
          SELECT l.o_orderkey, l.o_custkey, l.o_orderdate, l.o_totalprice,
            r.prev_total
          FROM orders l ASOF LEFT JOIN r
-           ON l.o_custkey = r.o_custkey AND l.o_orderdate > r.o_orderdate""",
-    "range_join" ->
+           ON l.o_custkey = r.o_custkey AND l.o_orderdate > r.o_orderdate"""),
+    "range_join" -> Gate(rangeJoinQ,
       """WITH r AS (SELECT o_orderkey AS band_id, o_totalprice AS lo,
              o_totalprice + 20000 AS hi
            FROM orders WHERE o_orderkey % 997 = 0)
          SELECT r.band_id, l.o_orderkey, l.o_totalprice
          FROM orders l JOIN r
-           ON l.o_totalprice >= r.lo AND l.o_totalprice <= r.hi""",
-    "text_normalize" ->
+           ON l.o_totalprice >= r.lo AND l.o_totalprice <= r.hi"""),
+    "text_normalize" -> Gate(textNormalizeQ,
       s"""SELECT doc_id, trim(regexp_replace(lower(strip_accents(
            nfc_normalize(text || ' Caf\u00e9 \u00dcBER stra\u00dfe NA\u00cfVE e\u0301lan  x'))), '\\s+', ' ', 'g')) AS norm_text
-         FROM documents""",
-    "doc_char_fingerprint" ->
+         FROM documents"""),
+    "doc_char_fingerprint" -> Gate(docCharFingerprintQ,
       s"""WITH d AS (SELECT doc_id, text || '\u0020\u65e5\u672c\u8a9e\u306e\u30c6\u30ad\u30b9\u30c8\u78ba\u8a8d' AS t FROM documents),
          g AS (SELECT doc_id, CASE WHEN length(t) >= 5
              THEN list_distinct([substr(t, CAST(i AS INTEGER), 5)
@@ -9106,8 +8776,8 @@ object SparkEntry {
              ELSE [t] END AS sh FROM d)
          SELECT doc_id, md5(array_to_string(list_sort(
              [${dkHash("x")} for x in sh]), ' '))
-           AS char_fingerprint FROM g""",
-    "pii_scrub" ->
+           AS char_fingerprint FROM g"""),
+    "pii_scrub" -> Gate(piiScrubQ,
       """WITH d AS (SELECT doc_id,
            text || ' contact user' || doc_id || '@example.com or 555-12' ||
            (doc_id % 10) || '-4567 from 10.0.' || (doc_id % 256) || '.1' AS t
@@ -9119,8 +8789,8 @@ object SparkEntry {
                  '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
                '(\+?[0-9]{1,2}[ .-])?\(?[0-9]{3}\)?[ .-][0-9]{3}[ .-][0-9]{4}', '<PHONE>', 'g'),
              '([0-9]{1,3}\.){3}[0-9]{1,3}', '<IP>', 'g') AS clean_text
-         FROM d""",
-    "url_normalize" ->
+         FROM d"""),
+    "url_normalize" -> Gate(urlNormalizeQ,
       """WITH r AS (SELECT doc_id,
            'HTTPS://WWW.Example' || (doc_id % 50) || '.COM:443/Path'
              || (doc_id % 7) || '/?utm_source=s' || (doc_id % 3)
@@ -9149,16 +8819,16 @@ object SparkEntry {
            regexp_replace(regexp_replace(regexp_replace(regexp_replace(
              lower(regexp_extract(r.u, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)),
              '^.*@', ''), ':[0-9]+$', ''), '\.+$', ''), '^www\.', '') AS host
-         FROM s8 JOIN r ON s8.doc_id = r.doc_id""",
-    "quantize_int8" ->
+         FROM s8 JOIN r ON s8.doc_id = r.doc_id"""),
+    "quantize_int8" -> Gate(quantizeQ,
       """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vd FROM embeddings),
          q AS (SELECT vec_id, vd,
              list_max([abs(x) for x in vd]) / 127.0 AS scale FROM v)
          SELECT vec_id, scale,
            array_to_string([CAST(floor(x / scale + 0.5) AS INTEGER)
              for x in vd], ',') AS q_csv
-         FROM q""",
-    "knn_brute" ->
+         FROM q"""),
+    "knn_brute" -> Gate(knnBrute,
       """WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 10),
          c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv FROM embeddings),
          sc AS (SELECT query_id, neighbor_id,
@@ -9166,8 +8836,8 @@ object SparkEntry {
            FROM q, c WHERE query_id <> neighbor_id),
          r AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
              ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS knn_rank FROM sc)
-         SELECT query_id, neighbor_id, cos_sim, knn_rank FROM r WHERE knn_rank <= 5""",
-    "bitext_mine" ->
+         SELECT query_id, neighbor_id, cos_sim, knn_rank FROM r WHERE knn_rank <= 5"""),
+    "bitext_mine" -> Gate(bitextMineQ,
       """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vd FROM embeddings),
          s AS (SELECT * FROM v WHERE vec_id % 2 = 0),
          tt AS (SELECT * FROM v WHERE vec_id % 2 = 1),
@@ -9194,8 +8864,8 @@ object SparkEntry {
          r AS (SELECT *, row_number() OVER (PARTITION BY sid
              ORDER BY margin DESC, tid) AS rn FROM c)
          SELECT sid AS src_id, tid AS tgt_id, cs AS cos_sim, margin
-         FROM r WHERE rn = 1 AND margin >= 1.0""",
-    "bitext_mine_ivf" ->
+         FROM r WHERE rn = 1 AND margin >= 1.0"""),
+    "bitext_mine_ivf" -> Gate(bitextMineIvfQ,
       """WITH ve AS (SELECT vec_id, embedding::DOUBLE[] AS vd FROM embeddings),
          c AS (SELECT vec_id AS centroid_id, vd AS cv FROM ve
            WHERE vec_id % 100 = 0),
@@ -9230,8 +8900,8 @@ object SparkEntry {
          r AS (SELECT *, row_number() OVER (PARTITION BY sid
              ORDER BY margin DESC, tid) AS rn FROM cc)
          SELECT sid AS src_id, tid AS tgt_id, cs AS cos_sim, margin
-         FROM r WHERE rn = 1 AND margin >= 1.0""",
-    "bitext_mine_ivfpq" ->
+         FROM r WHERE rn = 1 AND margin >= 1.0"""),
+    "bitext_mine_ivfpq" -> Gate(bitextMineIvfPqQ,
       s"""WITH $dkPqEncTrained,
          sub2 AS (SELECT e.vec_id, e.j,
              [a.av[CAST(e.j*8+i+1 AS INTEGER)] for i in range(0,8)] AS sv
@@ -9275,11 +8945,11 @@ object SparkEntry {
          r2 AS (SELECT *, row_number() OVER (PARTITION BY sid
              ORDER BY margin DESC, tid) AS rn FROM ccm)
          SELECT sid AS src_id, tid AS tgt_id, cs AS cos_sim, margin
-         FROM r2 WHERE rn = 1 AND margin >= 1.0""",
-    "ann_lsh_buckets" ->
+         FROM r2 WHERE rn = 1 AND margin >= 1.0"""),
+    "ann_lsh_buckets" -> Gate(annLshBucketsQ,
       s"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vd FROM embeddings)
-         SELECT vec_id, CAST($dkLshBucketExpr AS BIGINT) AS bucket FROM v""",
-    "retrieval_recall" ->
+         SELECT vec_id, CAST($dkLshBucketExpr AS BIGINT) AS bucket FROM v"""),
+    "retrieval_recall" -> Gate(retrievalRecallQ,
       """WITH c AS (SELECT vec_id AS centroid_id, embedding::DOUBLE[] AS cv
            FROM embeddings WHERE vec_id % 100 = 0),
          v AS (SELECT vec_id, embedding::DOUBLE[] AS vd FROM embeddings),
@@ -9312,8 +8982,8 @@ object SparkEntry {
              AS recall
          FROM truth t LEFT JOIN cand c2
            ON t.query_id = c2.query_id AND t.neighbor_id = c2.neighbor_id
-         GROUP BY 1""",
-    "retrieval_ndcg" ->
+         GROUP BY 1"""),
+    "retrieval_ndcg" -> Gate(retrievalNdcgQ,
       """WITH c AS (SELECT vec_id AS centroid_id, embedding::DOUBLE[] AS cv
            FROM embeddings WHERE vec_id % 100 = 0),
          v AS (SELECT vec_id, embedding::DOUBLE[] AS vd FROM embeddings),
@@ -9350,8 +9020,8 @@ object SparkEntry {
          SELECT query_id, n_truth, round(dcg0, 6) AS dcg,
            round(dcg0 / list_sum([1.0 / log2(i + 1.0)
              for i in range(1, CAST(n_truth AS INTEGER) + 1)]), 6) AS ndcg
-         FROM g""",
-    "retrieval_mrr" ->
+         FROM g"""),
+    "retrieval_mrr" -> Gate(retrievalMrrQ,
       """WITH c AS (SELECT vec_id AS centroid_id, embedding::DOUBLE[] AS cv
            FROM embeddings WHERE vec_id % 100 = 0),
          v AS (SELECT vec_id, embedding::DOUBLE[] AS vd FROM embeddings),
@@ -9386,8 +9056,8 @@ object SparkEntry {
          SELECT query_id, first_hit_rank,
            CASE WHEN first_hit_rank IS NULL THEN 0.0
                 ELSE round(1.0::DOUBLE / first_hit_rank, 6) END AS rr
-         FROM fh""",
-    "ann_ivf_topk" ->
+         FROM fh"""),
+    "ann_ivf_topk" -> Gate(annIvfTopKQ,
       """WITH c AS (SELECT vec_id AS centroid_id, embedding::DOUBLE[] AS cv
            FROM embeddings WHERE vec_id % 100 = 0),
          v AS (SELECT vec_id, embedding::DOUBLE[] AS vd FROM embeddings),
@@ -9405,8 +9075,8 @@ object SparkEntry {
            JOIN v bv ON bv.vec_id = b.vec_id),
          r AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
              ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS knn_rank FROM j)
-         SELECT query_id, neighbor_id, cos_sim, knn_rank FROM r WHERE knn_rank <= 5""",
-    "ann_ivf_multiprobe" ->
+         SELECT query_id, neighbor_id, cos_sim, knn_rank FROM r WHERE knn_rank <= 5"""),
+    "ann_ivf_multiprobe" -> Gate(annIvfMultiprobeQ,
       """WITH c AS (SELECT vec_id AS centroid_id, embedding::DOUBLE[] AS cv
            FROM embeddings WHERE vec_id % 100 = 0),
          v AS (SELECT vec_id, embedding::DOUBLE[] AS vd FROM embeddings),
@@ -9425,8 +9095,8 @@ object SparkEntry {
            JOIN v bv ON bv.vec_id = b.vec_id),
          r AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
              ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS knn_rank FROM j)
-         SELECT query_id, neighbor_id, cos_sim, knn_rank FROM r WHERE knn_rank <= 5""",
-    "ivf_train" ->
+         SELECT query_id, neighbor_id, cos_sim, knn_rank FROM r WHERE knn_rank <= 5"""),
+    "ivf_train" -> Gate(ivfTrainQ,
       """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vd FROM embeddings),
          h AS (SELECT vec_id, vd,
              CAST(concat('0x', substr(md5(CAST(vec_id AS VARCHAR)),1,15)) AS BIGINT) AS hk
@@ -9450,15 +9120,15 @@ object SparkEntry {
          SELECT s.centroid_id,
            array_to_string([printf('%.6f', round(x, 6))
              for x in coalesce(n.nv, s.vd)], ',') AS centroid
-         FROM seeds s LEFT JOIN newc n USING (centroid_id)""",
-    "embed_l2norm" ->
+         FROM seeds s LEFT JOIN newc n USING (centroid_id)"""),
+    "embed_l2norm" -> Gate(embedL2NormQ,
       """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vd FROM embeddings),
          n AS (SELECT vec_id, vd,
              sqrt(list_sum([x*x for x in vd])) AS nm FROM v)
          SELECT vec_id, array_to_string([printf('%.6f', round(x / nm, 6))
            for x in vd], ',') AS unit_csv
-         FROM n""",
-    "embed_centroids" ->
+         FROM n"""),
+    "embed_centroids" -> Gate(embedCentroidsQ,
       """WITH v AS (SELECT label, embedding::DOUBLE[] AS vd FROM embeddings),
          rec AS (SELECT label,
              CAST(generate_subscripts(vd,1)-1 AS INTEGER) AS pos,
@@ -9466,17 +9136,17 @@ object SparkEntry {
          ag AS (SELECT label, pos, avg(x) AS m FROM rec GROUP BY 1, 2)
          SELECT label, array_to_string([printf('%.6f', round(x, 6))
            for x in list(m ORDER BY pos)], ',') AS centroid_csv
-         FROM ag GROUP BY label""",
-    "pq_encode" ->
+         FROM ag GROUP BY label"""),
+    "pq_encode" -> Gate(pqEncodeQ,
       s"""WITH $dkPqEnc
          SELECT vec_id, array_to_string(list(code ORDER BY j), ',') AS codes_csv
-         FROM enc GROUP BY vec_id""",
-    "pq_train" ->
+         FROM enc GROUP BY vec_id"""),
+    "pq_train" -> Gate(pqTrainQ,
       s"""WITH $dkPqTrainCTEs
          SELECT sub, code, array_to_string([printf('%.6f', round(x, 6))
            for x in cv], ',') AS centroid_csv
-         FROM tc""",
-    "ann_pq_topk" ->
+         FROM tc"""),
+    "ann_pq_topk" -> Gate(annPqTopKQ,
       s"""WITH $dkPqEncTrained,
          sub AS (SELECT e.vec_id, e.j,
              [a.av[CAST(e.j*8+i+1 AS INTEGER)] for i in range(0,8)] AS sv
@@ -9490,16 +9160,16 @@ object SparkEntry {
          rk AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
              ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS knn_rank FROM sc)
          SELECT query_id, neighbor_id, cos_sim, knn_rank FROM rk
-         WHERE knn_rank <= 5""",
-    "ann_ivfpq_topk" ->
+         WHERE knn_rank <= 5"""),
+    "ann_ivfpq_topk" -> Gate(annIvfPqTopKQ,
       s"""WITH $dkIvfPqAdcCtes
          SELECT query_id, neighbor_id, cos_sim, knn_rank FROM rk
-         WHERE knn_rank <= 5""",
-    "ann_ivfpq_refined" -> dkIvfPqRefinedSql,
+         WHERE knn_rank <= 5"""),
+    "ann_ivfpq_refined" -> Gate(annIvfPqRefinedQ, dkIvfPqRefinedSql),
     // shared VERBATIM: the persisted-index refined probe must not move
     // a single score vs the in-session form
-    "ann_index_refined" -> dkIvfPqRefinedSql,
-    "ann_ivfpq_refine_recall" ->
+    "ann_index_refined" -> Gate(annIndexRefinedQ, dkIvfPqRefinedSql),
+    "ann_ivfpq_refine_recall" -> Gate(annIvfPqRefineRecallQ,
       s"""WITH $dkIvfPqAdcCtes,
          cand_adc AS (SELECT query_id, neighbor_id FROM rk
            WHERE knn_rank <= 5),
@@ -9533,25 +9203,25 @@ object SparkEntry {
              ON t.query_id = r2.query_id AND t.neighbor_id = r2.neighbor_id
            GROUP BY 1)
          SELECT ra.query_id, ra.recall_adc, rr.recall_refined
-         FROM ra JOIN rr ON ra.query_id = rr.query_id""",
-    "ann_ivfpq_residual" -> dkIvfPqResidualSql,
-    "ann_index_persist" -> dkIvfPqResidualSql,
-    "ann_index_append" -> dkIvfPqResidualSql,
+         FROM ra JOIN rr ON ra.query_id = rr.query_id"""),
+    "ann_ivfpq_residual" -> Gate(annIvfPqResidualQ, dkIvfPqResidualSql),
+    "ann_index_persist" -> Gate(annIndexPersistQ, dkIvfPqResidualSql),
+    "ann_index_append" -> Gate(annIndexAppendQ, dkIvfPqResidualSql),
     // compaction is a pure layout rewrite of the appended index —
     // bit-identical search, oracle shared verbatim
-    "ann_index_compact" -> dkIvfPqResidualSql,
+    "ann_index_compact" -> Gate(annIndexCompactQ, dkIvfPqResidualSql),
     // retrain rebuilds quantizers+codes from the current corpus — the
     // post-swap search must equal a from-scratch build (same oracle,
     // verbatim); the stale pre-retrain artifacts return different rows
-    "ann_index_retrain" -> dkIvfPqResidualSql,
-    "group_topk" ->
+    "ann_index_retrain" -> Gate(annIndexRetrainQ, dkIvfPqResidualSql),
+    "group_topk" -> Gate(groupTopKQ,
       """SELECT o_custkey, o_orderkey, o_totalprice, rk FROM (
            SELECT o_custkey, o_orderkey, o_totalprice,
              CAST(row_number() OVER (PARTITION BY o_custkey
                ORDER BY o_totalprice DESC, o_orderkey) AS INTEGER) AS rk
            FROM orders)
-         WHERE rk <= 3""",
-    "ngram_freq" ->
+         WHERE rk <= 3"""),
+    "ngram_freq" -> Gate(ngramFreqQ,
       """WITH w AS (SELECT doc_id,
              string_split_regex(trim(lower(text)), '\s+') AS ws
            FROM documents),
@@ -9562,8 +9232,8 @@ object SparkEntry {
          d AS (SELECT ngram, doc_id, count(*) AS tf FROM g GROUP BY 1, 2)
          SELECT ngram, CAST(sum(tf) AS BIGINT) AS term_freq,
            count(*) AS doc_freq
-         FROM d GROUP BY 1 HAVING sum(tf) >= 5""",
-    "heavy_hitters_grouped" ->
+         FROM d GROUP BY 1 HAVING sum(tf) >= 5"""),
+    "heavy_hitters_grouped" -> Gate(heavyHittersGroupedQ,
       """WITH w AS (SELECT doc_id, lang,
              string_split_regex(trim(lower(text)), '\s+') AS ws
            FROM documents),
@@ -9575,8 +9245,8 @@ object SparkEntry {
            FROM g GROUP BY 1, 2, 3)
          SELECT lang, ngram, CAST(sum(tf) AS BIGINT) AS term_freq,
            count(*) AS doc_freq
-         FROM d GROUP BY 1, 2 HAVING sum(tf) >= 5""",
-    "classifier_eval" ->
+         FROM d GROUP BY 1, 2 HAVING sum(tf) >= 5"""),
+    "classifier_eval" -> Gate(classifierEvalQ,
       s"""${classifierOracle(10, "4.0")},
          sc AS (SELECT d.doc_id,
              CASE WHEN d.doc_id % 11 = 0 THEN 1 ELSE 0 END AS pos,
@@ -9598,11 +9268,11 @@ object SparkEntry {
          SELECT threshold, tp, fp, fn, tn,
            round(CAST(tp AS DOUBLE) / nullif(tp + fp, 0), 6) AS precision,
            round(CAST(tp AS DOUBLE) / nullif(tp + fn, 0), 6) AS recall
-         FROM cm""",
+         FROM cm"""),
     // the CMS prefilter never changes the answer (no false negatives;
     // false positives die in the exact confirm) — the oracle is the
     // exact bigram heavy-hitter count
-    "heavy_hitters" ->
+    "heavy_hitters" -> Gate(heavyHittersQ,
       """WITH w AS (SELECT doc_id,
              string_split_regex(trim(lower(text)), '\s+') AS ws
            FROM documents),
@@ -9613,11 +9283,11 @@ object SparkEntry {
          d AS (SELECT ngram, doc_id, count(*) AS tf FROM g GROUP BY 1, 2)
          SELECT ngram, CAST(sum(tf) AS BIGINT) AS term_freq,
            count(*) AS doc_freq
-         FROM d GROUP BY 1 HAVING sum(tf) >= 8""",
-    "skew_join" ->
+         FROM d GROUP BY 1 HAVING sum(tf) >= 8"""),
+    "skew_join" -> Gate(skewJoinQ,
       """SELECT l_orderkey AS okey, l_quantity, o_totalprice
-         FROM lineitem JOIN orders ON l_orderkey = o_orderkey""",
-    "ann_lsh_topk" ->
+         FROM lineitem JOIN orders ON l_orderkey = o_orderkey"""),
+    "ann_lsh_topk" -> Gate(annLshTopKQ,
       s"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vd FROM embeddings),
          bk AS (SELECT vec_id, vd, CAST($dkLshBucketExpr AS BIGINT) AS bucket FROM v),
          sc AS (SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
@@ -9625,8 +9295,8 @@ object SparkEntry {
            FROM bk a JOIN bk b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
          r AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
              ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS knn_rank FROM sc)
-         SELECT query_id, neighbor_id, cos_sim, knn_rank FROM r WHERE knn_rank <= 5""",
-    "ann_lsh_multiprobe" ->
+         SELECT query_id, neighbor_id, cos_sim, knn_rank FROM r WHERE knn_rank <= 5"""),
+    "ann_lsh_multiprobe" -> Gate(annLshMultiprobeQ,
       s"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vd FROM embeddings),
          d AS (SELECT vec_id, vd, $dkLshDots AS dots FROM v),
          bs AS (SELECT vec_id, vd, dots,
@@ -9642,16 +9312,16 @@ object SparkEntry {
            FROM pr a JOIN bs b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
          r AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
              ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS knn_rank FROM sc)
-         SELECT query_id, neighbor_id, cos_sim, knn_rank FROM r WHERE knn_rank <= 5""",
-    "text_stats" ->
+         SELECT query_id, neighbor_id, cos_sim, knn_rank FROM r WHERE knn_rank <= 5"""),
+    "text_stats" -> Gate(textStats,
       s"""WITH w AS (SELECT doc_id, text, string_split_regex(trim(lower(text)), '\\s+') AS ws FROM documents)
          SELECT doc_id, CAST(length(text) AS INTEGER) AS n_chars_m,
            CAST(len(ws) AS INTEGER) AS n_words,
            round(CAST(length(regexp_replace(text, '\\s+', '', 'g')) AS DOUBLE) / len(ws), 6) AS avg_word_len,
            round(CAST(len(list_distinct(ws)) AS DOUBLE) / len(ws), 6) AS distinct_ratio,
            round(CAST(len(list_filter(ws, x -> x IN (${dkStopFilter("en")}))) AS DOUBLE) / len(ws), 6) AS stopword_ratio
-         FROM w""",
-    "lang_id" ->
+         FROM w"""),
+    "lang_id" -> Gate(langIdQ,
       s"""WITH w AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS ws FROM documents),
          sc AS (SELECT doc_id,
            CAST(len(list_filter(ws, x -> x IN (${dkStopFilter("en")}))) AS INTEGER) AS score_en,
@@ -9665,8 +9335,8 @@ object SparkEntry {
            WHEN score_de = greatest(score_en, score_de, score_es, score_fr) THEN 'de'
            WHEN score_es = greatest(score_en, score_de, score_es, score_fr) THEN 'es'
            ELSE 'fr' END AS pred_lang
-         FROM sc""",
-    "token_counts" ->
+         FROM sc"""),
+    "token_counts" -> Gate(tokenCountsQ,
       """WITH w AS (SELECT doc_id, text,
            string_split_regex(trim(lower(text)), '\s+') AS ws,
            regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]') AS re_toks
@@ -9674,18 +9344,18 @@ object SparkEntry {
          SELECT doc_id, CAST(len(ws) AS INTEGER) AS n_ws_tokens,
            CAST(len(re_toks) AS INTEGER) AS n_re_tokens,
            round(CAST(length(text) AS DOUBLE) / NULLIF(len(re_toks), 0), 6) AS chars_per_token
-         FROM w""",
-    "doc_fingerprint" ->
+         FROM w"""),
+    "doc_fingerprint" -> Gate(fingerprintQ,
       s"""WITH $dkShingles
-         SELECT doc_id, md5(array_to_string(list_sort(sh), ' ')) AS fingerprint FROM s""",
-    "text_vocabulary" ->
+         SELECT doc_id, md5(array_to_string(list_sort(sh), ' ')) AS fingerprint FROM s"""),
+    "text_vocabulary" -> Gate(textVocabulary,
       """SELECT word, count(*) AS term_freq,
          count(DISTINCT doc_id) AS doc_freq
          FROM (SELECT doc_id,
              unnest(string_split_regex(trim(lower(text)), '\s+')) AS word
            FROM documents)
-         GROUP BY 1""",
-    "bigram_surprisal" ->
+         GROUP BY 1"""),
+    "bigram_surprisal" -> Gate(bigramSurprisalQ,
       """WITH w AS (SELECT doc_id,
              string_split_regex(trim(lower(text)), '\s+') AS ws
            FROM documents),
@@ -9702,8 +9372,8 @@ object SparkEntry {
              + 0.1 * (CAST(uc AS DOUBLE) / total))), 6) AS surprisal
          FROM b JOIN bc USING (prev, word) JOIN pc USING (prev)
            JOIN v USING (word), t
-         GROUP BY doc_id""",
-    "unigram_surprisal" ->
+         GROUP BY doc_id"""),
+    "unigram_surprisal" -> Gate(unigramSurprisalQ,
       """WITH w AS (SELECT doc_id,
              unnest(string_split_regex(trim(lower(text)), '\s+')) AS word
            FROM documents),
@@ -9711,9 +9381,9 @@ object SparkEntry {
          t AS (SELECT CAST(sum(cnt) AS DOUBLE) AS total FROM v)
          SELECT doc_id,
            round(avg(-ln(CAST(cnt AS DOUBLE) / total)), 6) AS surprisal
-         FROM w JOIN v USING (word), t GROUP BY doc_id""",
-    "quality_buckets" -> dkQualityBuckets,
-    "curate_ccnet" ->
+         FROM w JOIN v USING (word), t GROUP BY doc_id"""),
+    "quality_buckets" -> Gate(qualityBucketsQ, dkQualityBuckets),
+    "curate_ccnet" -> Gate(curateCcnetQ,
       """WITH t0 AS (SELECT doc_id, lang, text FROM documents
              WHERE length(text) >= 100),
          ex AS (SELECT min(doc_id) AS doc_id FROM t0
@@ -9748,17 +9418,18 @@ object SparkEntry {
                 WHEN h < 900000 THEN 'val' ELSE 'test' END AS split
          FROM (SELECT doc_id,
              CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)),1,15)) AS BIGINT)
-               % 1000000 AS h FROM keep)""",
-    "streaming_quality_buckets" -> dkQualityBuckets,
-    "text_len_quantiles" ->
+               % 1000000 AS h FROM keep)"""),
+    "streaming_quality_buckets" ->
+      Gate(streamingQualityBucketsQ, dkQualityBuckets),
+    "text_len_quantiles" -> Gate(textLenQuantiles,
       """SELECT lang, round(quantile_cont(n_chars, 0.25), 6) AS p25,
          round(quantile_cont(n_chars, 0.5), 6) AS p50,
          round(quantile_cont(n_chars, 0.75), 6) AS p75,
          count(*) AS n_docs
-         FROM documents GROUP BY 1""",
-    "text_quality_flags" -> oracleSqlQualityFlags,
-    "bm25_score" -> oracleSqlBm25,
-    "embedding_outliers" ->
+         FROM documents GROUP BY 1"""),
+    "text_quality_flags" -> Gate(textQualityFlags, oracleSqlQualityFlags),
+    "bm25_score" -> Gate(bm25ScoreQ, oracleSqlBm25),
+    "embedding_outliers" -> Gate(embeddingOutliersQ,
       """WITH ve AS (SELECT vec_id, embedding::DOUBLE[] AS vd FROM embeddings),
          c AS (SELECT vec_id AS centroid_id, vd AS cv FROM ve
            WHERE vec_id % 100 = 0),
@@ -9780,8 +9451,8 @@ object SparkEntry {
          SELECT vec_id, centroid_id, cs AS cos_sim,
            round(m, 6) AS cluster_mean,
            cs < m - 1.0 * sd AS flagged
-         FROM j""",
-    "script_ratios" ->
+         FROM j"""),
+    "script_ratios" -> Gate(scriptRatiosQ,
       """WITH src AS (SELECT doc_id, CASE
            WHEN doc_id % 19 = 0 THEN 'Привет мир это русский текст документа'
            WHEN doc_id % 19 = 5 THEN '日本語のテキスト mixed with ラテン and 漢字'
@@ -9806,8 +9477,8 @@ object SparkEntry {
                 WHEN cy >= k AND cy >= a THEN 'cyrillic'
                 WHEN k >= a THEN 'cjk'
                 ELSE 'arabic' END AS script
-         FROM c""",
-    "char_entropy" ->
+         FROM c"""),
+    "char_entropy" -> Gate(charEntropyQ,
       """WITH ch AS (SELECT doc_id, unnest(string_split(text, '')) AS c
            FROM documents),
          cc AS (SELECT doc_id, c, count(*) AS k FROM ch GROUP BY 1, 2),
@@ -9816,8 +9487,8 @@ object SparkEntry {
          SELECT d.doc_id,
            CASE WHEN e.doc_id IS NULL THEN 0.0
                 ELSE round(log2(e.n) - e.s / e.n, 6) END AS entropy
-         FROM documents d LEFT JOIN e ON d.doc_id = e.doc_id""",
-    "mine_hard_negatives" ->
+         FROM documents d LEFT JOIN e ON d.doc_id = e.doc_id"""),
+    "mine_hard_negatives" -> Gate(mineHardNegativesQ,
       """WITH ve AS (SELECT vec_id, label, embedding::DOUBLE[] AS vd
            FROM embeddings),
          kn AS (SELECT q.vec_id AS query_id, cv.vec_id AS neighbor_id,
@@ -9839,8 +9510,8 @@ object SparkEntry {
              ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS neg_rank
            FROM kept)
          SELECT query_id, neighbor_id, cos_sim, neg_rank
-         FROM r WHERE neg_rank <= 3""",
-    "gram_exposure" ->
+         FROM r WHERE neg_rank <= 3"""),
+    "gram_exposure" -> Gate(gramExposureQ,
       """WITH tt AS (SELECT doc_id,
              list_filter(string_split_regex(trim(lower(text)), '\s+'),
                w -> len(w) > 0) AS ws
@@ -9863,8 +9534,8 @@ object SparkEntry {
                   / tot.n_grams, 6) END AS exposure
          FROM documents d
          LEFT JOIN tot ON d.doc_id = tot.doc_id
-         LEFT JOIN dup ON d.doc_id = dup.doc_id""",
-    "tfidf_top_terms" ->
+         LEFT JOIN dup ON d.doc_id = dup.doc_id"""),
+    "tfidf_top_terms" -> Gate(tfidfTopTermsQ,
       """WITH toks AS (SELECT doc_id,
              list_filter(string_split_regex(trim(lower(text)), '\s+'),
                w -> len(w) > 0) AS ws
@@ -9881,8 +9552,8 @@ object SparkEntry {
            FROM tfc JOIN dfq USING (term), st),
          r AS (SELECT *, CAST(row_number() OVER (PARTITION BY doc_id
              ORDER BY tfidf DESC, term) AS INTEGER) AS rk FROM sc)
-         SELECT doc_id, term, tfidf, rk FROM r WHERE rk <= 3""",
-    "tfidf_cosine_pairs" ->
+         SELECT doc_id, term, tfidf, rk FROM r WHERE rk <= 3"""),
+    "tfidf_cosine_pairs" -> Gate(tfidfCosinePairsQ,
       """WITH fix AS (SELECT doc_id, text FROM documents
            WHERE doc_id % 10 = 0),
          toks AS (SELECT doc_id,
@@ -9905,14 +9576,14 @@ object SparkEntry {
              round(sum(a.u * b.u), 6) AS cos_sim
            FROM u a JOIN u b ON a.term = b.term AND a.doc_id < b.doc_id
            GROUP BY 1, 2)
-         SELECT id_a, id_b, cos_sim FROM dot WHERE cos_sim >= 0.85""",
-    "vocab_oov" -> dkVocabOov,
+         SELECT id_a, id_b, cos_sim FROM dot WHERE cos_sim >= 0.85"""),
+    "vocab_oov" -> Gate(vocabOovQ, dkVocabOov),
     // the persisted-artifact probe and the streamed-build probe both
     // reduce to the same term set (set union telescopes), so the OOV
     // family shares ONE oracle verbatim
-    "vocab_index_oov" -> dkVocabOov,
-    "streaming_vocab" -> dkVocabOov,
-    "vocab_oov_by_lang" ->
+    "vocab_index_oov" -> Gate(vocabIndexOovQ, dkVocabOov),
+    "streaming_vocab" -> Gate(streamingVocabQ, dkVocabOov),
+    "vocab_oov_by_lang" -> Gate(vocabOovByLangQ,
       """WITH ref AS (SELECT DISTINCT unnest(list_filter(
              string_split_regex(trim(lower(text)), '\s+'),
              w -> len(w) > 0)) AS term
@@ -9937,15 +9608,15 @@ object SparkEntry {
              AS token_rate,
            round(COALESCE(sum(oov), 0)
              / CAST(GREATEST(count(*), 1) AS DOUBLE), 6) AS type_rate
-         FROM j GROUP BY lang""",
+         FROM j GROUP BY lang"""),
     // the three index-artifact gates REPLAY the direct form's oracle:
     // probe/append/streaming-ingest parity IS their contract
-    "bm25_index_probe" -> oracleSqlBm25,
-    "bm25_index_append" -> oracleSqlBm25,
-    "streaming_bm25_ingest" -> oracleSqlBm25,
-    "streaming_bm25_probe" -> oracleSqlBm25,
-    "retrieval_hybrid_rrf" -> oracleSqlHybridRrf,
-    "license_tag" ->
+    "bm25_index_probe" -> Gate(bm25IndexProbeQ, oracleSqlBm25),
+    "bm25_index_append" -> Gate(bm25IndexAppendQ, oracleSqlBm25),
+    "streaming_bm25_ingest" -> Gate(streamingBm25IngestQ, oracleSqlBm25),
+    "streaming_bm25_probe" -> Gate(streamingBm25ProbeQ, oracleSqlBm25),
+    "retrieval_hybrid_rrf" -> Gate(retrievalHybridRrfQ, oracleSqlHybridRrf),
+    "license_tag" -> Gate(licenseTagQ,
       """WITH p AS (SELECT doc_id, CASE WHEN doc_id % 11 = 0 THEN
            (CASE doc_id % 7
              WHEN 0 THEN 'SPDX-License-Identifier: MIT'
@@ -9970,8 +9641,8 @@ object SparkEntry {
            WHEN contains(text, 'Mozilla Public License') THEN 'MPL-2.0'
            WHEN contains(text, 'Creative Commons') THEN 'CC'
            ELSE NULL END AS license
-         FROM p""",
-    "code_quality" ->
+         FROM p"""),
+    "code_quality" -> Gate(codeQualityQ,
       """WITH p AS (SELECT doc_id, CASE
            WHEN doc_id % 10 = 0 THEN text || chr(10) || repeat('x', 1200)
            WHEN doc_id % 10 = 1 THEN replace(text, ' ', chr(10))
@@ -9997,13 +9668,13 @@ object SparkEntry {
            has_long_b64, auto_generated,
            (max_line_len < 1000 AND mean_line < 100 AND alnum > 0.25
              AND NOT has_long_b64 AND NOT auto_generated) AS keep
-         FROM f""",
-    "multimodal_meta" ->
+         FROM f"""),
+    "multimodal_meta" -> Gate(multimodalMeta,
       """SELECT doc_id, 'text' AS kind,
          CAST(octet_length(text::BLOB) AS BIGINT) AS byte_len,
          lower(substr(hex(text::BLOB), 1, 16)) AS header_hex
-         FROM documents""",
-    "multimodal_decode" ->
+         FROM documents"""),
+    "multimodal_decode" -> Gate(multimodalDecodeQ,
       """WITH d AS (SELECT doc_id, 1 + doc_id % 2048 AS w,
              1 + (doc_id * 7) % 2048 AS h, doc_id % 4 AS m
            FROM documents)
@@ -10014,8 +9685,8 @@ object SparkEntry {
                 ELSE NULL END AS format,
            CAST(CASE WHEN m <= 2 THEN w ELSE NULL END AS INTEGER) AS width,
            CAST(CASE WHEN m <= 2 THEN h ELSE NULL END AS INTEGER) AS height
-         FROM d""",
-    "multimodal_audio" ->
+         FROM d"""),
+    "multimodal_audio" -> Gate(multimodalAudioQ,
       """WITH d AS (SELECT doc_id,
            1 + doc_id % 2 AS ch,
            8000 * (1 + doc_id % 5) AS rate,
@@ -10031,8 +9702,8 @@ object SparkEntry {
            CAST(CASE WHEN m = 3 THEN NULL ELSE nf END AS BIGINT) AS n_frames,
            CAST(CASE WHEN m = 3 THEN NULL
                 ELSE (nf * 1000) // rate END AS BIGINT) AS duration_ms
-         FROM d""",
-    "multimodal_video" ->
+         FROM d"""),
+    "multimodal_video" -> Gate(multimodalVideoQ,
       """WITH d AS (SELECT doc_id,
            1000 * (1 + doc_id % 4) AS ts,
            1000 + doc_id % 9000 AS dur,
@@ -10049,9 +9720,9 @@ object SparkEntry {
                 ELSE (dur * 1000) // ts END AS BIGINT) AS duration_ms,
            CAST(CASE WHEN m = 3 THEN NULL ELSE w END AS INTEGER) AS width,
            CAST(CASE WHEN m = 3 THEN NULL ELSE h END AS INTEGER) AS height
-         FROM d""",
-    "multimodal_neardup" -> dkPayloadNeardup,
-    "curate_media" ->
+         FROM d"""),
+    "multimodal_neardup" -> Gate(multimodalNeardupQ, dkPayloadNeardup),
+    "curate_media" -> Gate(curateMediaQ,
       s"""WITH $dkPayloadBk,
          sz AS (SELECT doc_id, len(ph) // 2 AS bl FROM p
            WHERE len(ph) // 2 >= 60),
@@ -10067,28 +9738,29 @@ object SparkEntry {
            CAST(NULL AS INTEGER) AS channels,
            CAST(NULL AS INTEGER) AS sample_rate,
            CAST(NULL AS BIGINT) AS duration_ms
-         FROM sz WHERE doc_id NOT IN (SELECT doc_id FROM losers)""",
-    "multimodal_neardup_verified" -> dkPayloadNeardupVerified,
-    "multimodal_dhash" ->
+         FROM sz WHERE doc_id NOT IN (SELECT doc_id FROM losers)"""),
+    "multimodal_neardup_verified" ->
+      Gate(multimodalNeardupVerifiedQ, dkPayloadNeardupVerified),
+    "multimodal_dhash" -> Gate(multimodalDhashQ,
       s"""WITH $dkDhash
-         SELECT doc_id, dhash FROM dh""",
+         SELECT doc_id, dhash FROM dh"""),
     // the PNG/JPEG fixture payloads carry the SAME picture as the BMP
     // gate (codecGray == the dkDhash gray arithmetic), so the oracle is
     // container-blind: real inflate/Huffman/IDCT on the Spark side,
     // pure arithmetic on the oracle side
-    "multimodal_dhash_png" ->
+    "multimodal_dhash_png" -> Gate(multimodalDhashPngQ,
       s"""WITH $dkDhash
-         SELECT doc_id, dhash FROM dh""",
+         SELECT doc_id, dhash FROM dh"""),
     // integer-DCT pHash: the cosine table round(cos(kπ/64)·2^15) is
     // implementation-independent (every entry ≥ 0.004 from a rounding
     // boundary), so the oracle rebuilds it with its own cos and every
     // downstream step is exact BIGINT arithmetic; the three containers
     // (9×8 BMP, 9×8 PNG, 72×64 block-constant JPEG) resample to the
     // same 32×32 plane, making the oracle container-blind
-    "multimodal_phash" ->
+    "multimodal_phash" -> Gate(multimodalPhashQ,
       s"""WITH $dkPhash
-         SELECT doc_id, phash FROM ph""",
-    "multimodal_phash_pairs" ->
+         SELECT doc_id, phash FROM ph"""),
+    "multimodal_phash_pairs" -> Gate(multimodalPhashPairsQ,
       s"""WITH $dkPhash,
          bk AS (SELECT doc_id, phash, b,
              (phash >> CAST(16*b AS INTEGER)) & 65535 AS bb
@@ -10100,18 +9772,18 @@ object SparkEntry {
          FROM bk a
          JOIN ok ON a.b = ok.b AND a.bb = ok.bb
          JOIN bk c
-           ON a.b = c.b AND a.bb = c.bb AND a.doc_id < c.doc_id""",
-    "multimodal_dhash_jpeg" ->
+           ON a.b = c.b AND a.bb = c.bb AND a.doc_id < c.doc_id"""),
+    "multimodal_dhash_jpeg" -> Gate(multimodalDhashJpegQ,
       s"""WITH $dkDhash
-         SELECT doc_id, dhash FROM dh""",
+         SELECT doc_id, dhash FROM dh"""),
     // the MP4 fixtures carry the SAME picture as a keyframe sample
     // (decoys are non-sync), so the oracle stays container-blind:
     // real sample-table walk + JPEG decode on the Spark side, pure
     // arithmetic on the oracle side
-    "multimodal_video_dhash" ->
+    "multimodal_video_dhash" -> Gate(multimodalVideoDhashQ,
       s"""WITH $dkDhash
-         SELECT doc_id, dhash FROM dh""",
-    "multimodal_video_neardup" ->
+         SELECT doc_id, dhash FROM dh"""),
+    "multimodal_video_neardup" -> Gate(multimodalVideoNeardupQ,
       s"""WITH $dkDhash,
          bk AS (SELECT doc_id, dhash, b,
              (dhash >> CAST(16*b AS INTEGER)) & 65535 AS bb
@@ -10123,14 +9795,14 @@ object SparkEntry {
          FROM bk a
          JOIN ok ON a.b = ok.b AND a.bb = ok.bb
          JOIN bk c
-           ON a.b = c.b AND a.bb = c.bb AND a.doc_id < c.doc_id""",
-    "multimodal_dhash_gif" ->
+           ON a.b = c.b AND a.bb = c.bb AND a.doc_id < c.doc_id"""),
+    "multimodal_dhash_gif" -> Gate(multimodalDhashGifQ,
       s"""WITH $dkDhash
-         SELECT doc_id, dhash FROM dh""",
-    "multimodal_audiohash" ->
+         SELECT doc_id, dhash FROM dh"""),
+    "multimodal_audiohash" -> Gate(multimodalAudiohashQ,
       s"""WITH $dkAudioEnvelope
-         SELECT doc_id, ahash FROM ah""",
-    "multimodal_audiodup_pairs" ->
+         SELECT doc_id, ahash FROM ah"""),
+    "multimodal_audiodup_pairs" -> Gate(multimodalAudioPairsQ,
       s"""WITH $dkAudioEnvelope,
          bk AS (SELECT doc_id, ahash, b,
              (ahash >> CAST(16*b AS INTEGER)) & 65535 AS bb
@@ -10142,8 +9814,8 @@ object SparkEntry {
          FROM bk a
          JOIN ok ON a.b = ok.b AND a.bb = ok.bb
          JOIN bk c
-           ON a.b = c.b AND a.bb = c.bb AND a.doc_id < c.doc_id""",
-    "multimodal_audio_dedup" ->
+           ON a.b = c.b AND a.bb = c.bb AND a.doc_id < c.doc_id"""),
+    "multimodal_audio_dedup" -> Gate(multimodalAudioDedupQ,
       s"""WITH $dkAudioEnvelope,
          bk AS (SELECT doc_id, b,
              (ahash >> CAST(16*b AS INTEGER)) & 65535 AS bb
@@ -10155,25 +9827,25 @@ object SparkEntry {
            SELECT DISTINCT c.doc_id FROM bk a
            JOIN ok ON a.b = ok.b AND a.bb = ok.bb
            JOIN bk c
-             ON a.b = c.b AND a.bb = c.bb AND a.doc_id < c.doc_id)""",
+             ON a.b = c.b AND a.bb = c.bb AND a.doc_id < c.doc_id)"""),
     // the MP3-family oracles model only the source PCM arithmetic
     // (recursive level walk + triangle window sums) — landing the MP3
     // members on the WAV/FLAC twins' bits is the Layer III decode's job
-    "multimodal_audiohash_mp3" ->
+    "multimodal_audiohash_mp3" -> Gate(multimodalAudiohashMp3Q,
       s"""WITH RECURSIVE $dkMp3Envelope
-         SELECT doc_id, ahash FROM ah""",
+         SELECT doc_id, ahash FROM ah"""),
     // the large-table family carries the SAME recording per key, so
     // its oracle is the mp3 envelope CTE verbatim — the multi-table
     // Huffman decode is what lands the lossy members on these bits
-    "multimodal_audiohash_mp3bt" ->
+    "multimodal_audiohash_mp3bt" -> Gate(multimodalAudiohashMp3BtQ,
       s"""WITH RECURSIVE $dkMp3Envelope
-         SELECT doc_id, ahash FROM ah""",
+         SELECT doc_id, ahash FROM ah"""),
     // intensity/mixed-block family: same source recording per key ->
     // the envelope CTE again verbatim
-    "multimodal_audiohash_mp3adv" ->
+    "multimodal_audiohash_mp3adv" -> Gate(multimodalAudiohashMp3AdvQ,
       s"""WITH RECURSIVE $dkMp3Envelope
-         SELECT doc_id, ahash FROM ah""",
-    "multimodal_audiodup_mp3adv" ->
+         SELECT doc_id, ahash FROM ah"""),
+    "multimodal_audiodup_mp3adv" -> Gate(multimodalAudioPairsMp3AdvQ,
       s"""WITH RECURSIVE $dkMp3Envelope,
          bk AS (SELECT doc_id, ahash, b,
              (ahash >> CAST(16*b AS INTEGER)) & 65535 AS bb
@@ -10185,8 +9857,8 @@ object SparkEntry {
          FROM bk a
          JOIN ok ON a.b = ok.b AND a.bb = ok.bb
          JOIN bk c
-           ON a.b = c.b AND a.bb = c.bb AND a.doc_id < c.doc_id""",
-    "multimodal_audiodup_mp3bt" ->
+           ON a.b = c.b AND a.bb = c.bb AND a.doc_id < c.doc_id"""),
+    "multimodal_audiodup_mp3bt" -> Gate(multimodalAudioPairsMp3BtQ,
       s"""WITH RECURSIVE $dkMp3Envelope,
          bk AS (SELECT doc_id, ahash, b,
              (ahash >> CAST(16*b AS INTEGER)) & 65535 AS bb
@@ -10198,8 +9870,8 @@ object SparkEntry {
          FROM bk a
          JOIN ok ON a.b = ok.b AND a.bb = ok.bb
          JOIN bk c
-           ON a.b = c.b AND a.bb = c.bb AND a.doc_id < c.doc_id""",
-    "multimodal_audiodup_mp3" ->
+           ON a.b = c.b AND a.bb = c.bb AND a.doc_id < c.doc_id"""),
+    "multimodal_audiodup_mp3" -> Gate(multimodalAudioPairsMp3Q,
       s"""WITH RECURSIVE $dkMp3Envelope,
          bk AS (SELECT doc_id, ahash, b,
              (ahash >> CAST(16*b AS INTEGER)) & 65535 AS bb
@@ -10211,8 +9883,8 @@ object SparkEntry {
          FROM bk a
          JOIN ok ON a.b = ok.b AND a.bb = ok.bb
          JOIN bk c
-           ON a.b = c.b AND a.bb = c.bb AND a.doc_id < c.doc_id""",
-    "multimodal_audio_dedup_mp3" ->
+           ON a.b = c.b AND a.bb = c.bb AND a.doc_id < c.doc_id"""),
+    "multimodal_audio_dedup_mp3" -> Gate(multimodalAudioDedupMp3Q,
       s"""WITH RECURSIVE $dkMp3Envelope,
          bk AS (SELECT doc_id, b,
              (ahash >> CAST(16*b AS INTEGER)) & 65535 AS bb
@@ -10224,8 +9896,8 @@ object SparkEntry {
            SELECT DISTINCT c.doc_id FROM bk a
            JOIN ok ON a.b = ok.b AND a.bb = ok.bb
            JOIN bk c
-             ON a.b = c.b AND a.bb = c.bb AND a.doc_id < c.doc_id)""",
-    "multimodal_lumastats" ->
+             ON a.b = c.b AND a.bb = c.bb AND a.doc_id < c.doc_id)"""),
+    "multimodal_lumastats" -> Gate(multimodalLumastatsQ,
       s"""WITH $dkDhash,
          st AS (SELECT g.doc_id, CAST(sum(v) AS BIGINT) AS sv,
              CAST(sum(v * v) AS BIGINT) AS svv,
@@ -10243,12 +9915,12 @@ object SparkEntry {
            CAST(CASE WHEN f.m IN (2, 4) THEN 64 ELSE 1 END * svv AS BIGINT)
              AS lum_sum_sq,
            mn AS lum_min, mx AS lum_max
-         FROM f JOIN st ON f.doc_id = st.doc_id""",
-    "multimodal_thumbnail" ->
+         FROM f JOIN st ON f.doc_id = st.doc_id"""),
+    "multimodal_thumbnail" -> Gate(multimodalThumbnailQ,
       s"""WITH $dkDhash
          SELECT doc_id, 'png' AS format, 9 AS width, 8 AS height, dhash
-         FROM dh""",
-    "multimodal_neardup_codec" ->
+         FROM dh"""),
+    "multimodal_neardup_codec" -> Gate(multimodalNeardupCodecQ,
       s"""WITH $dkDhash,
          bk AS (SELECT doc_id, dhash, b,
              (dhash >> CAST(16*b AS INTEGER)) & 65535 AS bb
@@ -10260,10 +9932,10 @@ object SparkEntry {
          FROM bk a
          JOIN ok ON a.b = ok.b AND a.bb = ok.bb
          JOIN bk c
-           ON a.b = c.b AND a.bb = c.bb AND a.doc_id < c.doc_id""",
-    "multimodal_describe" -> dkDescribe,
-    "streaming_multimodal" -> dkDescribe,
-    "multimodal_frames" ->
+           ON a.b = c.b AND a.bb = c.bb AND a.doc_id < c.doc_id"""),
+    "multimodal_describe" -> Gate(multimodalDescribeQ, dkDescribe),
+    "streaming_multimodal" -> Gate(streamingMultimodalQ, dkDescribe),
+    "multimodal_frames" -> Gate(multimodalFramesQ,
       """WITH d AS (SELECT doc_id, 1000 * (1 + doc_id % 4) AS ts,
            1000 + doc_id % 9000 AS dur, doc_id % 4 AS m FROM documents),
          x AS (SELECT doc_id, (((dur * 1000) // ts) * 25) // 1000 AS nf
@@ -10271,8 +9943,8 @@ object SparkEntry {
          u AS (SELECT doc_id, unnest(range(0, (nf + 9) // 10)) AS i
            FROM x WHERE nf > 0)
          SELECT doc_id, CAST(i AS INTEGER) AS sample_idx,
-           CAST(i * 10 AS BIGINT) AS frame_idx FROM u""",
-    "multimodal_dhash_pairs" ->
+           CAST(i * 10 AS BIGINT) AS frame_idx FROM u"""),
+    "multimodal_dhash_pairs" -> Gate(multimodalDhashPairsQ,
       s"""WITH $dkDhash,
          bk AS (SELECT doc_id, dhash, b,
              (dhash >> CAST(16*b AS INTEGER)) & 65535 AS bb
@@ -10284,8 +9956,8 @@ object SparkEntry {
          FROM bk a
          JOIN ok ON a.b = ok.b AND a.bb = ok.bb
          JOIN bk c
-           ON a.b = c.b AND a.bb = c.bb AND a.doc_id < c.doc_id""",
-    "multimodal_mp3" ->
+           ON a.b = c.b AND a.bb = c.bb AND a.doc_id < c.doc_id"""),
+    "multimodal_mp3" -> Gate(multimodalMp3Q,
       """WITH d AS (SELECT doc_id,
            1 + doc_id % 14 AS br_idx, doc_id % 3 AS rate_idx,
            doc_id % 4 AS mode, doc_id % 100 AS tag_len,
@@ -10308,8 +9980,8 @@ object SparkEntry {
            CAST(CASE WHEN m = 4 THEN NULL ELSE frames END AS BIGINT) AS n_frames,
            CAST(CASE WHEN m = 4 THEN NULL
                 ELSE (frames * 1000) // rate END AS BIGINT) AS duration_ms
-         FROM z""",
-    "multimodal_webm" ->
+         FROM z"""),
+    "multimodal_webm" -> Gate(multimodalWebmQ,
       """WITH d AS (SELECT doc_id,
            16 * (1 + doc_id % 100) AS w,
            16 * (1 + (doc_id * 3) % 100) AS h,
@@ -10329,22 +10001,22 @@ object SparkEntry {
                 WHEN di = 2 THEN 4096 ELSE 8192 END AS BIGINT) AS duration_ms,
            CAST(CASE WHEN m = 4 THEN NULL ELSE w END AS INTEGER) AS width,
            CAST(CASE WHEN m = 4 THEN NULL ELSE h END AS INTEGER) AS height
-         FROM d""",
-    "events_hourly_hll" -> dkHourlyHll,
-    "streaming_hourly_hll" -> dkHourlyHll,
-    "events_hourly" ->
+         FROM d"""),
+    "events_hourly_hll" -> Gate(eventsHourlyHllQ, dkHourlyHll),
+    "streaming_hourly_hll" -> Gate(streamingHourlyHllQ, dkHourlyHll),
+    "events_hourly" -> Gate(eventsHourly,
       """SELECT epoch_ns(ts) // 3600000000000 AS hour_id, event_type,
          count(*) AS n_events, sum(value) AS value_sum
-         FROM events GROUP BY 1, 2""",
-    "events_retention" ->
+         FROM events GROUP BY 1, 2"""),
+    "events_retention" -> Gate(eventsRetention,
       """WITH d AS (SELECT DISTINCT user_id,
              epoch_ns(ts) // 86400000000000 AS day_id FROM events),
          c AS (SELECT user_id, day_id,
              min(day_id) OVER (PARTITION BY user_id) AS cohort_day FROM d)
          SELECT cohort_day, day_id - cohort_day AS day_offset,
            count(*) AS n_users
-         FROM c WHERE day_id - cohort_day <= 30 GROUP BY 1, 2""",
-    "events_funnel" ->
+         FROM c WHERE day_id - cohort_day <= 30 GROUP BY 1, 2"""),
+    "events_funnel" -> Gate(eventsFunnel,
       """WITH e AS (SELECT user_id, epoch_us(ts) AS ts, event_type FROM events),
          s1 AS (SELECT user_id, min(ts) AS t_signup FROM e
            WHERE event_type = 'signup' GROUP BY 1),
@@ -10358,8 +10030,8 @@ object SparkEntry {
            CASE WHEN t_purchase IS NOT NULL THEN 3
                 WHEN t_click IS NOT NULL THEN 2 ELSE 1 END AS steps_reached
          FROM s1 LEFT JOIN s2 ON s1.user_id = s2.user_id
-         LEFT JOIN s3 ON s1.user_id = s3.user_id""",
-    "events_sessionize" ->
+         LEFT JOIN s3 ON s1.user_id = s3.user_id"""),
+    "events_sessionize" -> Gate(eventsSessionize,
       """WITH l AS (SELECT user_id, epoch_us(ts) AS tsn, value,
              lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts) AS prev
            FROM events),
@@ -10372,15 +10044,15 @@ object SparkEntry {
            FROM f)
          SELECT user_id, session_idx, min(tsn) AS session_start,
            max(tsn) AS session_end, count(*) AS n_events, sum(value) AS value_sum
-         FROM s GROUP BY 1, 2""",
+         FROM s GROUP BY 1, 2"""),
     // stateless column exprs => the stream emits exactly the batch scores
-    "streaming_quality" -> oracleSqlQualityFlags,
-    "streaming_curate" -> dkStreamingCurate,
-    "streaming_classifier" -> classifierScoreOracle,
-    "streaming_dedup_exact" ->
-      "SELECT DISTINCT md5(text) AS text_hash FROM documents",
-    "streaming_dedup_neardup" -> dkStreamingNearDup,
-    "streaming_multimodal_neardup" ->
+    "streaming_quality" -> Gate(streamingQualityQ, oracleSqlQualityFlags),
+    "streaming_curate" -> Gate(streamingCurateQ, dkStreamingCurate),
+    "streaming_classifier" -> Gate(streamingClassifierQ, classifierScoreOracle),
+    "streaming_dedup_exact" -> Gate(streamingDedupExactQ,
+      "SELECT DISTINCT md5(text) AS text_hash FROM documents"),
+    "streaming_dedup_neardup" -> Gate(streamingDedupNearQ, dkStreamingNearDup),
+    "streaming_multimodal_neardup" -> Gate(streamingMultimodalNeardupQ,
       s"""WITH $dkDhash,
          bk AS (SELECT doc_id, b,
              (dhash >> CAST(16*b AS INTEGER)) & 65535 AS bb
@@ -10388,11 +10060,11 @@ object SparkEntry {
          coll AS (SELECT DISTINCT a.doc_id FROM bk a JOIN bk c
            ON a.b = c.b AND a.bb = c.bb AND c.doc_id < a.doc_id)
          SELECT doc_id FROM documents
-         WHERE doc_id NOT IN (SELECT doc_id FROM coll)""",
+         WHERE doc_id NOT IN (SELECT doc_id FROM coll)"""),
     // streaming twins of the MP3-envelope / MP4-keyframe legs: same
     // constant-ts bucket-ownership survivor rule, hashes from the
     // respective arithmetic CTEs (envelope / picture formula)
-    "streaming_audiodup_mp3" ->
+    "streaming_audiodup_mp3" -> Gate(streamingAudiodupMp3Q,
       s"""WITH RECURSIVE $dkMp3Envelope,
          bk AS (SELECT doc_id, b,
              (ahash >> CAST(16*b AS INTEGER)) & 65535 AS bb
@@ -10400,8 +10072,8 @@ object SparkEntry {
          coll AS (SELECT DISTINCT a.doc_id FROM bk a JOIN bk c
            ON a.b = c.b AND a.bb = c.bb AND c.doc_id < a.doc_id)
          SELECT doc_id FROM documents
-         WHERE doc_id NOT IN (SELECT doc_id FROM coll)""",
-    "streaming_video_neardup" ->
+         WHERE doc_id NOT IN (SELECT doc_id FROM coll)"""),
+    "streaming_video_neardup" -> Gate(streamingVideoNeardupQ,
       s"""WITH $dkDhash,
          bk AS (SELECT doc_id, b,
              (dhash >> CAST(16*b AS INTEGER)) & 65535 AS bb
@@ -10409,22 +10081,22 @@ object SparkEntry {
          coll AS (SELECT DISTINCT a.doc_id FROM bk a JOIN bk c
            ON a.b = c.b AND a.bb = c.bb AND c.doc_id < a.doc_id)
          SELECT doc_id FROM documents
-         WHERE doc_id NOT IN (SELECT doc_id FROM coll)""",
+         WHERE doc_id NOT IN (SELECT doc_id FROM coll)"""),
     // stateless filter => the stream emits exactly the batch survivor set
-    "streaming_decontaminate" -> dkDecontaminate,
-    "streaming_hourly" ->
+    "streaming_decontaminate" -> Gate(streamingDecontaminateQ, dkDecontaminate),
+    "streaming_hourly" -> Gate(streamingHourlyQ,
       """SELECT epoch_ns(ts) // 3600000000000 AS hour_id, event_type,
          count(*) AS n_events, sum(value) AS value_sum
-         FROM events GROUP BY 1, 2""",
-    "streaming_retention" ->
+         FROM events GROUP BY 1, 2"""),
+    "streaming_retention" -> Gate(streamingRetentionQ,
       """WITH d AS (SELECT DISTINCT user_id,
              epoch_ns(ts) // 86400000000000 AS day_id FROM events),
          c AS (SELECT user_id, day_id,
              min(day_id) OVER (PARTITION BY user_id) AS cohort_day FROM d)
          SELECT cohort_day, day_id - cohort_day AS day_offset,
            count(*) AS n_users
-         FROM c WHERE day_id - cohort_day <= 30 GROUP BY 1, 2""",
-    "streaming_funnel" ->
+         FROM c WHERE day_id - cohort_day <= 30 GROUP BY 1, 2"""),
+    "streaming_funnel" -> Gate(streamingFunnelQ,
       """WITH e AS (SELECT user_id, epoch_us(ts) AS ts, event_type FROM events),
          s1 AS (SELECT user_id, min(ts) AS t_signup FROM e
            WHERE event_type = 'signup' GROUP BY 1),
@@ -10438,10 +10110,11 @@ object SparkEntry {
            CASE WHEN t_purchase IS NOT NULL THEN 3
                 WHEN t_click IS NOT NULL THEN 2 ELSE 1 END AS steps_reached
          FROM s1 LEFT JOIN s2 ON s1.user_id = s2.user_id
-         LEFT JOIN s3 ON s1.user_id = s3.user_id""",
-    "streaming_sessionize" -> dkStreamSessionizeSql,
-    "streaming_sessionize_rocksdb" -> dkStreamSessionizeSql,
-    "streaming_sessionize_window" ->
+         LEFT JOIN s3 ON s1.user_id = s3.user_id"""),
+    "streaming_sessionize" -> Gate(streamingSessionizeQ, dkStreamSessionizeSql),
+    "streaming_sessionize_rocksdb" ->
+      Gate(streamingSessionizeRocksQ, dkStreamSessionizeSql),
+    "streaming_sessionize_window" -> Gate(streamingSessionizeWindowQ,
       """WITH l AS (SELECT user_id, epoch_us(ts) AS tsn, value,
              lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts) AS prev
            FROM events),
@@ -10459,6 +10132,6 @@ object SparkEntry {
          mx AS (SELECT max(epoch_us(ts)) AS mt FROM events)
          SELECT user_id, session_start, session_end, n_events, value_sum
          FROM g, mx
-         WHERE session_end + 1800000000 <= mt - 1800000000""",
+         WHERE session_end + 1800000000 <= mt - 1800000000"""),
   )
 }

@@ -6237,6 +6237,19 @@ class OperatorsSpec extends AnyFunSuite {
     } finally sys.props.remove(key)
   }
 
+  test("gate selection: unset selects all 299 gates, a list exactly its" +
+      " names, and an unknown or empty list is rejected by name") {
+    val all = SparkEntry.select(None).toOption.get
+    assert(all.size === 299)
+    assert(all.keySet === SparkEntry.queries.keySet)
+    assert(all.keySet === SparkEntry.oracleSql.keySet)
+    assert(SparkEntry.select(Some("q1_agg, to_long_map")).map(_.keySet) ===
+      Right(Set("q1_agg", "to_long_map")))
+    val bad = SparkEntry.select(Some("q1_agg,no_such_gate"))
+    assert(bad.isLeft && bad.left.toOption.get.contains("no_such_gate"))
+    assert(SparkEntry.select(Some(" , ")).isLeft)
+  }
+
   test("HashedBagCountsExpr equals hashedFeatures' per-doc rows for" +
       " both ngram settings (the join-free trainer's feature parity)") {
     import graft.operators.Classifier

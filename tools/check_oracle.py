@@ -4,6 +4,9 @@ DuckDB against the sf parquet tables, compare (order-insensitive, columns
 sorted by name) with the Spark output parquet written by graft.Verify.
 
 Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
+
+Exits 0 only when the oracle json lists at least one gate and every
+listed gate passes; 1 otherwise.
 """
 import json, math, sys
 import duckdb
@@ -63,7 +66,8 @@ def main(sf_dir, out_dir):
         except Exception as e:
             print(f"ERR  {name}: {type(e).__name__}: {str(e)[:200]}")
     print(f"== {n_ok}/{len(oracle)} pass")
+    return 0 if oracle and n_ok == len(oracle) else 1
 
 
 if __name__ == "__main__":
-    main(sys.argv[1], sys.argv[2])
+    sys.exit(main(sys.argv[1], sys.argv[2]))
