@@ -180,20 +180,31 @@ object Dedup {
       t => hash60Array(charShingles(t, charN, keepLastCpMod = sampleMod)),
       numHashes, bands, maxBucketSize)
 
-  /** Shared band-join candidate generation: spread the RAW text first
-    * (the shingle/hash pipeline then runs after the exchange, on all
-    * cores), fan out to (band, bucket) rows, equi-join. A doc whose
-    * hash set is empty gets NO band rows (MinHashBucketsExpr returns an
-    * empty array and the posexplode drops it) — the exclusion is inside
-    * the expression, not a `filter(size > 0)` on the aliased column,
-    * which predicate-pushdown would rewrite to a second full
-    * shingle+md5 evaluation below the Spread exchange.
+  /** The word-shingle MinHash band signature of `text`: element `b` is
+    * band `b`'s bucket. The one definition behind every word-band site
+    * (batch near-dup and decontamination, [[Pipeline.curate]]'s
+    * signature column, the persisted [[graft.sources.DedupIndex]] and
+    * the streaming gates), so they cannot drift apart.
     */
+  private[graft] def wordBands(
+      text: Column, shingleN: Int, numHashes: Int, bands: Int): Column =
+    minhashBuckets(shingleHashes(text, shingleN), numHashes, bands)
+
+  /** `(idCol, band, bucket)` rows of a band-signature column: one row
+    * per band, a doc with an empty signature gets none.
+    */
+  private[graft] def bandRows(
+      df: DataFrame, idCol: String, signature: Column): DataFrame =
+    df.select(col(idCol), posexplode(signature))
+      .withColumnRenamed("pos", "band")
+      .withColumnRenamed("col", "bucket")
+
   /** Band-bucket ownership rows `(idCol, band, bucket)` — the raw
     * material both the in-session pair joins AND the persisted
     * incremental index ([[graft.sources.DedupIndex]]) consume; one
     * definition pins index build and batch probe to the same signature
-    * arithmetic.
+    * arithmetic. The raw text is spread first, so the shingle/hash
+    * pipeline runs after the exchange, on all cores.
     */
   private[graft] def bandBucketRows(
       docs: DataFrame,
@@ -203,12 +214,8 @@ object Dedup {
       numHashes: Int,
       bands: Int): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    Spread.ifNarrow(
-        docs.select(col(idCol), col(textCol)), col(idCol))
-      .select(col(idCol),
-        posexplode(minhashBuckets(mkHashes(col(textCol)), numHashes, bands)))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bucket")
+    spreadBandRows(docs, idCol, textCol,
+      t => minhashBuckets(mkHashes(t), numHashes, bands))
   }
 
   /** [[bandBucketRows]] for the default word-shingle MinHash form. */
@@ -219,9 +226,25 @@ object Dedup {
       shingleN: Int = 3,
       numHashes: Int = 16,
       bands: Int = 8): DataFrame =
-    bandBucketRows(docs, idCol, textCol,
-      shingleHashes(_, shingleN), numHashes, bands)
+    spreadBandRows(docs, idCol, textCol,
+      wordBands(_, shingleN, numHashes, bands))
 
+  private def spreadBandRows(
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      signature: Column => Column): DataFrame =
+    bandRows(Spread.ifNarrow(docs.select(col(idCol), col(textCol)), col(idCol)),
+      idCol, signature(col(textCol)))
+
+  /** Shared band-join candidate generation over [[bandBucketRows]]:
+    * fan out to (band, bucket) rows, equi-join. A doc whose hash set is
+    * empty gets NO band rows (MinHashBucketsExpr returns an empty array
+    * and the posexplode drops it) — the exclusion is inside the
+    * expression, not a `filter(size > 0)` on the aliased column, which
+    * predicate-pushdown would rewrite to a second full shingle+md5
+    * evaluation below the Spread exchange.
+    */
   private[operators] def lshPairsFromText(
       docs: DataFrame,
       idCol: String,
@@ -779,27 +802,37 @@ object Dedup {
       broadcastProbe: Boolean = true,
       maxBucketSize: Int = 0): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    def bucketRows(df: DataFrame) =
-      Spread.ifNarrow(df.select(col(idCol), col(textCol)), col(idCol))
-        .select(col(idCol),
-          posexplode(
-            minhashBuckets(shingleHashes(col(textCol), shingleN),
-              numHashes, bands)))
-        .withColumnRenamed("pos", "band")
-        .withColumnRenamed("col", "bucket")
+    def rows(df: DataFrame) =
+      wordBandBucketRows(df, idCol, textCol, shingleN, numHashes, bands)
+    decontaminateBands(corpus, rows(corpus), rows(probe), idCol,
+      broadcastProbe, maxBucketSize)
+  }
+
+  /** [[decontaminate]]'s body over precomputed `(idCol, band, bucket)`
+    * rows of the corpus and the probe — for a caller whose corpus
+    * already carries its signature ([[Pipeline.curate]]'s `__bands`
+    * column). Probe buckets, the shuffled-path cap and the semi/anti
+    * joins are the ones documented there.
+    */
+  private[graft] def decontaminateBands(
+      corpus: DataFrame,
+      corpusBands: DataFrame,
+      probeBands: DataFrame,
+      idCol: String,
+      broadcastProbe: Boolean,
+      maxBucketSize: Int): DataFrame = {
     def maybeBroadcast(df: DataFrame) =
       if (broadcastProbe) broadcast(df) else df
     val probeBuckets =
-      bucketRows(probe).select(col("band"), col("bucket")).distinct()
+      probeBands.select(col("band"), col("bucket")).distinct()
     // the cap is scoped to the shuffled path, as documented: on the
     // broadcast path the semi join never shuffles the corpus, so there
     // is no skewed task to protect and the recall sacrifice would buy
     // nothing
-    val corpusBuckets =
-      if (broadcastProbe) bucketRows(corpus)
-      else capHotBuckets(bucketRows(corpus), Seq("band", "bucket"),
-        maxBucketSize)
-    val contaminated = corpusBuckets
+    val capped =
+      if (broadcastProbe) corpusBands
+      else capHotBuckets(corpusBands, Seq("band", "bucket"), maxBucketSize)
+    val contaminated = capped
       .join(maybeBroadcast(probeBuckets), Seq("band", "bucket"), "left_semi")
       .select(col(idCol)).distinct()
     corpus.join(contaminated, Seq(idCol), "left_anti")
@@ -870,7 +903,7 @@ object Dedup {
     // per-doc dup counts) — left lazy, each re-runs the positional
     // gram hashing over the input; spread first so a single-split
     // local input doesn't hash serially (no-op at real scale)
-    val g = substringMaterialize(normalizedGramHashes(
+    val g = materialize(normalizedGramHashes(
       Spread.ifNarrow(df.select(col(idCol), col(textCol)), col(idCol)),
       textCol, n, col(idCol)))
     val shared = g.select(col(idCol), col("__h")).distinct()
@@ -1066,7 +1099,7 @@ object Dedup {
     * corpus never shuffles on the broadcast path; the only corpus-keyed
     * shuffle is the per-doc starts aggregate, whose input is
     * CONTAMINATED grams only (eval-overlap-sized, not corpus-sized).
-    * Token arrays materialize once ([[substringMaterialize]]) for the
+    * Token arrays materialize once ([[materialize]]) for the
     * gram pass and the rewrite join, the [[dedupSubstrings]] fan-out
     * discipline. `broadcastProbe = false` shuffles the semi join for
     * probes too large to broadcast.
@@ -1083,7 +1116,7 @@ object Dedup {
     val probeGrams = probe.select(explode(wordGramHash128(
         transform(words(col(textCol)), w => lower(w)), n)).as("__h"))
       .distinct()
-    val toks = substringMaterialize(
+    val toks = materialize(
       Spread.ifNarrow(corpus.select(col(idCol), col(textCol)), col(idCol))
         .select(col(idCol), words(col(textCol)).as("__ws")))
     val grams = toks.filter(size(col("__ws")) >= n)
@@ -1139,7 +1172,7 @@ object Dedup {
     val probeGrams = probe.select(explode(intGramHash128(
         bpeTokenIds(col(textCol), merges), k)).as("__h"))
       .distinct()
-    val toks = substringMaterialize(
+    val toks = materialize(
       Spread.ifNarrow(corpus.select(col(idCol), col(textCol)), col(idCol))
         .select(col(idCol),
           bpeTokenIds(col(textCol), merges).as("__ids")))
@@ -1398,7 +1431,7 @@ object Dedup {
     // input's partitioning for every downstream consumer, and a
     // single-split local input would run the whole gram fan-out
     // (positional md5 per gram) serially (no-op at real scale)
-    val toks = substringMaterialize(
+    val toks = materialize(
       Spread.ifNarrow(docs.select(col(idCol), col(textCol)), col(idCol))
         .select(col(idCol),
           filter(split(col(textCol), "\\s+"), w => length(w) > 0)
@@ -1409,38 +1442,6 @@ object Dedup {
     val starts = removedGramStarts(grams, idCol)
     applyWordRemoval(toks, starts, idCol, k)
   }
-
-  /** The shared first-occurrence core of substring dedup: from positional
-    * gram rows `(idCol, __gpos, __h)`, the per-document sorted starts of
-    * every REMOVED gram occurrence (all but the corpus-wide first
-    * occurrence of each duplicated hash) as `(idCol, __starts)`.
-    *
-    * The gram table is `localCheckpoint`ed first: it feeds both the
-    * duplicate aggregate and the join-back, and without materialization
-    * the upstream tokenize+hash pass would re-run per consumer — at
-    * 100 TB that is ~2 extra corpus passes ([[dedupSubstrings]] was
-    * shipped with exactly that defect in r11; this helper is where the
-    * fix lives for every gram-space variant). Both shuffles stay linear
-    * in the gram table and skew-safe (aggregate build side is one row
-    * per hash).
-    */
-  /** Materialization strategy for the substring-dedup fan-out tables
-    * (token arrays + positional grams), honoring the SAME
-    * `graft.curate.materialize` config as [[Pipeline.curate]]: default
-    * `localCheckpoint` (eager — triggers the upstream job at call time —
-    * and NON-RECOVERABLE on executor loss, the right trade in the
-    * common case because the ContextCleaner frees the blocks once the
-    * frame is unreachable), `persist` as the escape hatch for long
-    * multi-hour 100 TB runs where recomputing a lost corpus-scale gram
-    * partition from lineage is cheaper than a job restart.
-    */
-  private[graft] def substringMaterialize(df: DataFrame): DataFrame =
-    df.sparkSession.conf.get("graft.curate.materialize", "localCheckpoint")
-    match {
-      case "persist" =>
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      case _ => df.localCheckpoint()
-    }
 
   /** Shared rewrite assembly for the word-gram removal family
     * ([[dedupSubstrings]], [[scrubContaminatedSpans]], and the
@@ -1463,8 +1464,56 @@ object Dedup {
         col("__r").getField("n_words_kept").as("n_words_kept"),
         col("__r").getField("n_words_dropped").as("n_words_dropped"))
 
+  /** Materialize a frame that several consumers read, honoring the
+    * `graft.curate.materialize` config: default `localCheckpoint`
+    * (eager — triggers the upstream job at call time — and
+    * NON-RECOVERABLE on executor loss, the right trade in the common
+    * case because the ContextCleaner frees the blocks once the frame is
+    * unreachable), `persist` as the escape hatch for long multi-hour
+    * 100 TB runs where recomputing a lost corpus-scale partition from
+    * lineage is cheaper than a job restart. Callers: [[Pipeline.curate]]
+    * (its rewrite and signature boundaries) and the substring-dedup
+    * fan-out tables (token arrays + positional grams).
+    *
+    * Spread rule: a checkpoint with fewer partitions than
+    * `defaultParallelism` is re-spread by a round-robin
+    * `repartition(defaultParallelism)`; a wider one is returned as is.
+    * AQE coalesces a small shuffle (e.g. a few thousand docs after line
+    * dedup) to ONE partition, and a checkpoint freezes that, so every
+    * per-row stage after it would run as one task. The count comes from
+    * the checkpointed RDD, so reading it runs no job; at scale the
+    * checkpoint is already wide and nothing is added. The `persist`
+    * path is lazy and is not spread.
+    */
+  private[graft] def materialize(df: DataFrame): DataFrame =
+    df.sparkSession.conf.get("graft.curate.materialize", "localCheckpoint")
+    match {
+      case "persist" =>
+        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      case _ =>
+        val frozen = df.localCheckpoint()
+        val cores = df.sparkSession.sparkContext.defaultParallelism
+        if (frozen.queryExecution.toRdd.getNumPartitions < cores)
+          frozen.repartition(cores)
+        else frozen
+    }
+
+  /** The shared first-occurrence core of substring dedup: from positional
+    * gram rows `(idCol, __gpos, __h)`, the per-document sorted starts of
+    * every REMOVED gram occurrence (all but the corpus-wide first
+    * occurrence of each duplicated hash) as `(idCol, __starts)`.
+    *
+    * The gram table is `localCheckpoint`ed first: it feeds both the
+    * duplicate aggregate and the join-back, and without materialization
+    * the upstream tokenize+hash pass would re-run per consumer — at
+    * 100 TB that is ~2 extra corpus passes ([[dedupSubstrings]] was
+    * shipped with exactly that defect in r11; this helper is where the
+    * fix lives for every gram-space variant). Both shuffles stay linear
+    * in the gram table and skew-safe (aggregate build side is one row
+    * per hash).
+    */
   private[graft] def removedGramStarts(grams: DataFrame, idCol: String): DataFrame =
-    removedGramStartsMaterialized(substringMaterialize(grams), idCol)
+    removedGramStartsMaterialized(materialize(grams), idCol)
 
   /** [[removedGramStarts]] over an ALREADY-materialized gram frame —
     * for callers that checkpoint the gram table themselves because
@@ -1543,7 +1592,7 @@ object Dedup {
     val k = spanTokens
     // spread BEFORE tokenizing (see dedupSubstrings): serial gram
     // hashing on a single-split local input dominated this path
-    val toks = substringMaterialize(
+    val toks = materialize(
       Spread.ifNarrow(docs.select(col(idCol), col(textCol)), col(idCol))
         .select(col(idCol),
           bpeTokenIds(col(textCol), merges).as("__ids")))

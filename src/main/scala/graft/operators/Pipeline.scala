@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextFunctions.{minhashBuckets, shingleHashes}
-
 /** End-to-end corpus curation — the composition every training-data
   * pipeline runs before a corpus reaches the trainer, owned as ONE
   * operator so stage ORDER is a reviewed decision instead of ad-hoc
@@ -113,7 +111,7 @@ object Pipeline {
     // counts and are not snapped) — the funnel is computed off the SAME
     // frames the pipeline runs, so report and pipeline cannot drift
     def snap(name: String, f: DataFrame): Unit =
-      stageFrames.foreach(_ += name -> f)
+      stageFrames.foreach(_ += name -> f.drop(Bands))
     snap("input", docs)
     // stage -1: URL/domain gating before anything reads the TEXT (the
     // RefinedWeb §3.1 order — document-level URL rules are the
@@ -257,27 +255,37 @@ object Pipeline {
         .select(col(idCol), col("text_kept").as(textCol))
       snap("decontaminate_scrub", d)
     }
-    // The rewrite stages above are expensive per-row chains, and from
-    // here the frame fans out to several independent consumers (the
-    // exact-dedup aggregate, its semi join back, near-dup band rows,
-    // decontamination bands): left lazy, EACH branch re-runs the
-    // rewrites over the scan — measured 2.8x wall on the 10x stress
-    // corpus. Materialize via localCheckpoint rather than persist: the
-    // returned lazy frame exposes no unpersist hook, so a persist here
-    // pinned a CacheManager entry per curate() call for the life of the
-    // SparkContext (r8 advice); checkpoint blocks are instead freed by
-    // the ContextCleaner once the frame is unreachable — same lifecycle
-    // decision (and same executor-loss tradeoff + `persist` escape
-    // hatch) as FrameEngine.expandColJsonFrame.
+    // Materialization boundary. The rewrite stages above are expensive
+    // per-row chains, and from here the frame fans out to several
+    // independent consumers (the exact-dedup aggregate, its semi join
+    // back, near-dup owners and losers, decontamination): left lazy,
+    // EACH branch re-runs the rewrites over the scan — measured 2.8x
+    // wall on the 10x stress corpus. [[Dedup.materialize]] checkpoints
+    // (or persists, per `graft.curate.materialize`) and re-spreads a
+    // checkpoint narrower than `defaultParallelism`: AQE coalesces a
+    // small rewrite's shuffle to one partition, and frozen there every
+    // per-row stage below would run as one task. localCheckpoint is the
+    // default because the returned lazy frame has no unpersist hook: a
+    // persist here would pin a CacheManager entry per curate() call.
+    //
+    // With near-dup on, the word-band signature is computed ONCE per
+    // document, here: on the final text (after every rewrite, so removed
+    // boilerplate never shapes it) and after the spread (Spread.ifNarrow
+    // covers a narrow file input with no rewrite stage), then
+    // checkpointed with the frame as `__bands`. Near-dup's owners and
+    // losers and the band decontamination explode it instead of
+    // re-deriving it — three signature evaluations per document become
+    // one. Band decontamination alone has one consumer of the signature,
+    // so it computes it lazily in [[Dedup.decontaminate]] instead: an
+    // eager checkpoint there only added a job (measured on the
+    // `curate_pipeline` gate at sf0.1 on 4 cores: 0.66 → 1.0-1.3 s).
+    // `__bands` never leaves curate: snapshots and the output drop it.
     if (htmlInput || stripBoilerplate || dedupLines ||
-        substringDedup != "off" ||
-        (scrubProbeNgrams > 0 && probe.isDefined))
-      d = docs.sparkSession.conf
-        .get("graft.curate.materialize", "localCheckpoint") match {
-        case "persist" =>
-          d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        case _ => d.localCheckpoint()
-      }
+        substringDedup != "off" || (scrubProbeNgrams > 0 && probe.isDefined))
+      d = Dedup.materialize(d)
+    if (nearDup)
+      d = Dedup.materialize(Spread.ifNarrow(d, col(idCol)).withColumn(Bands,
+        Dedup.wordBands(col(textCol), shingleN, numHashes, bands)))
     val keepExact = Dedup.exactNormalized(d, idCol, textCol)
       .select(col("keep_id").as(idCol))
     d = d.join(keepExact, Seq(idCol), "left_semi")
@@ -342,11 +350,7 @@ object Pipeline {
       snap("semantic_dedup", d)
     }
     if (nearDup) {
-      val bandRows = d.select(col(idCol),
-          posexplode(minhashBuckets(shingleHashes(col(textCol), shingleN),
-            numHashes, bands)))
-        .withColumnRenamed("pos", "band")
-        .withColumnRenamed("col", "bucket")
+      val bandRows = Dedup.bandRows(d, idCol, col(Bands))
       val owners = bandRows.groupBy(col("band"), col("bucket"))
         .agg(min(col(idCol)).as("__owner"))
       val losers = bandRows.join(owners, Seq("band", "bucket"))
@@ -365,14 +369,22 @@ object Pipeline {
           Dedup.decontaminateExact(d, p, idCol, textCol,
             n = decontaminateExactNgrams,
             broadcastProbe = decontaminateBroadcastProbe)
+        else if (nearDup)
+          Dedup.decontaminateBands(d, Dedup.bandRows(d, idCol, col(Bands)),
+            Dedup.wordBandBucketRows(p, idCol, textCol, shingleN, numHashes,
+              bands),
+            idCol, decontaminateBroadcastProbe, decontaminateMaxBucketSize)
         else Dedup.decontaminate(d, p, idCol, textCol, shingleN,
           numHashes, bands,
           broadcastProbe = decontaminateBroadcastProbe,
           maxBucketSize = decontaminateMaxBucketSize)
       snap("decontaminate", d)
     }
-    Sampling.assignSplit(d, idCol, splits)
+    Sampling.assignSplit(d.drop(Bands), idCol, splits)
   }
+
+  /** [[curate]]'s per-document word-band signature column. */
+  private val Bands = "__bands"
 
   /** Corpus datasheet — the headline numbers a dataset card publishes
     * (Gebru et al. 2021 "Datasheets for Datasets"): total documents,
@@ -441,12 +453,15 @@ object Pipeline {
     * Returns one row per ROW-DROPPING stage (rewrite-only stages keep
     * counts and are not snapped) plus `input` and `output`. Each stage
     * row is a global `count` — partial-aggregable, one combined row
-    * per task. COST: every snapped frame BEFORE [[curate]]'s
-    * materialization boundary re-runs the scan and the per-row chains
-    * up to its stage (frames at or after the boundary share the
-    * checkpoint), so with the gate stages enabled the report costs
-    * roughly one extra PREFIX pass per pre-boundary snap — e.g. four
-    * gate stages ≈ 4 scan+filter passes, cheap; but with expensive
+    * per task. COST: [[curate]]'s materialization boundary sits after
+    * its rewrite stages, and exists whenever a rewrite stage or near-dup
+    * is on. Every snapped
+    * frame AFTER it reads the checkpoint (the signature is not
+    * recomputed: snaps only project `__bands` away). Every snapped
+    * frame BEFORE it re-runs the scan and the per-row chains up to its
+    * stage, so with the gate stages enabled the report costs roughly
+    * one extra PREFIX pass per pre-boundary snap — e.g. four gate
+    * stages ≈ 4 scan+filter passes, cheap; but with expensive
     * pre-boundary rewrites (classifier scoring, substring/scrub
     * chains) budget accordingly. A diagnostic to run alongside a
     * backfill, not in the ingest hot path.
@@ -654,7 +669,7 @@ object Pipeline {
       dhashBands: Int = 4,
       perceptualHash: String = "dhash"): DataFrame = {
     import org.apache.spark.sql.types.BinaryType
-    import graft.functions.TextFunctions.byteShingleHashes
+    import graft.functions.TextFunctions.{byteShingleHashes, minhashBuckets}
     require(numHashes % bands == 0, "bands must divide numHashes")
     require(dhashBands > 0 && 64 % dhashBands == 0,
       "dhashBands must divide 64")

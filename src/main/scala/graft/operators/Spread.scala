@@ -15,9 +15,12 @@ import org.apache.spark.sql.{Column, DataFrame}
 object Spread {
 
   /** `df.repartition(key)` when the plan's file sources provide fewer
-    * files than `defaultParallelism`; `df` unchanged otherwise (or when
-    * the plan has no file source to count, e.g. in-memory test frames —
-    * those are small by construction).
+    * files than `defaultParallelism`; `df` unchanged otherwise, and
+    * when the plan has no file source to count. A frame without one is
+    * not small by construction: a checkpoint of a rewritten corpus is
+    * one, and AQE may have coalesced it to a single partition. Such
+    * frames are spread where they are made, by partition count, in
+    * [[Dedup.materialize]].
     */
   def ifNarrow(df: DataFrame, key: Column): DataFrame = {
     val cores = df.sparkSession.sparkContext.defaultParallelism

@@ -390,9 +390,9 @@ object DedupIndex {
     // at sf0.1/32) — the full-text exchange costs more than the
     // single-split gram hashing saves at these batch sizes, unlike the
     // corpus-wide dedup_substring operator where the spread won
-    val toks = Dedup.substringMaterialize(docs.select(col(idCol),
+    val toks = Dedup.materialize(docs.select(col(idCol),
       words(col(textCol)).as("__ws")))
-    val grams = Dedup.substringMaterialize(
+    val grams = Dedup.materialize(
       toks.filter(size(col("__ws")) >= k)
         .select(col(idCol),
           posexplode(wordGramHash128(col("__ws"), k))
@@ -480,9 +480,9 @@ object DedupIndex {
     // NO Spread on the batch tokenize — same re-measured regression as
     // [[buildSubstring]]'s note (streaming_substring_index 4.35 → 4.63 s
     // in the same 7-rep A/B)
-    val toks = Dedup.substringMaterialize(newDocs.select(col(idCol),
+    val toks = Dedup.materialize(newDocs.select(col(idCol),
       words(col(textCol)).as("__ws")))
-    val bg = Dedup.substringMaterialize(
+    val bg = Dedup.materialize(
       toks.filter(size(col("__ws")) >= k)
         .select(col(idCol),
           posexplode(wordGramHash128(col("__ws"), k))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.operators.Dedup
+
 /** Streaming ingest-time deduplication for a training-data pipeline: the
   * incremental form of `Dedup.dropDuplicatesExact` — a document stream in,
   * first occurrence of each content out. Not part of the reference
@@ -103,7 +105,6 @@ object StreamingDedup {
       bands: Int = 4): DataFrame = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import spark.implicits._
-    import graft.functions.TextFunctions.{minhashBuckets, shingleHashes}
     require(numHashes % bands == 0, "bands must divide numHashes")
     val schema = StructType(DocSchema.fields :+
       StructField("ingest_ts", TimestampType))
@@ -126,8 +127,7 @@ object StreamingDedup {
       .withWatermark("ingest_ts", horizon)
       .select(col("doc_id"), col("ingest_ts"),
         posexplode(
-          minhashBuckets(shingleHashes(col("text"), shingleN),
-            numHashes, bands)))
+          Dedup.wordBands(col("text"), shingleN, numHashes, bands)))
       .select(col("doc_id"), col("pos").as("band"),
         col("col").as("bucket"), col("ingest_ts"))
       .as[BandRow]
@@ -304,10 +304,9 @@ object StreamingDedup {
       shingleN: Int = 3,
       numHashes: Int = 16,
       bands: Int = 8): org.apache.spark.sql.Column = {
-    import graft.functions.TextFunctions.{minhashBuckets, shingleHashes}
     require(numHashes % bands == 0, "bands must divide numHashes")
     def bandKeys(c: org.apache.spark.sql.Column) =
-      transform(minhashBuckets(shingleHashes(c, shingleN), numHashes, bands),
+      transform(Dedup.wordBands(c, shingleN, numHashes, bands),
         (b, i) => concat(i.cast("string"), lit(":"), b))
     // sorted so the literal — and with it the plan — is deterministic
     val probeKeys = probe

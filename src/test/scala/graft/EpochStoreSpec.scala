@@ -1,8 +1,7 @@
 package graft
 
 import java.io.File
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
@@ -10,7 +9,6 @@ import org.apache.logging.log4j.LogManager
 import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -85,32 +83,6 @@ class EpochStoreSpec extends AnyFunSuite {
   private def version(path: String): Long =
     spark.read.parquet(s"$path/meta").head().getAs[Long]("version")
 
-  /** Spark jobs started while `body` runs, counted by a listener. A
-    * fence job run after `body` marks the end: listener events arrive
-    * in order, so once its start is seen every earlier job was counted.
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val fence = "epoch-store-spec-fence"
-    val jobs = new AtomicInteger
-    val fenced = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == fence)
-          fenced.countDown()
-        else jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobGroup(fence, fence)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(fenced.await(60, TimeUnit.SECONDS), "fence job never seen")
-    } finally sc.removeSparkListener(listener)
-    jobs.get
-  }
-
   /** Messages (with their throwables' class chains) logged while `body`
     * runs.
     */
@@ -145,7 +117,7 @@ class EpochStoreSpec extends AnyFunSuite {
       val path = fresh(name)
       if (name == "vocab_absorb") VocabIndex.build(batch(0), "text", path)
       else run(path, 0)
-      name -> jobsOf(run(path, 1))
+      name -> SparkJobs.count(spark)(run(path, 1))
     }.toMap
     info(counted.toSeq.sorted.map { case (n, j) => s"$n=$j" }.mkString(" "))
     assert(counted === expected)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -3070,6 +3070,11 @@ class OperatorsSpec extends AnyFunSuite {
     val base = Seq.tabulate(30)(i => s"w$i unique body text").mkString(" ")
     val other = Seq.tabulate(30)(i => s"z$i different words").mkString(" ")
     val evalDoc = Seq.tabulate(30)(i => s"e$i eval probe content").mkString(" ")
+    // a long shared footer under two short, unrelated bodies: with the
+    // footer the two texts are MinHash near-dups, without it disjoint
+    val footer = Seq.tabulate(30)(i => s"f$i site footer menu link").mkString("\n")
+    val coreA = Seq.tabulate(4)(i => s"a$i first body words").mkString(" ")
+    val coreB = Seq.tabulate(4)(i => s"b$i second body words").mkString(" ")
     val d = Seq(
       (0L, base),            // survives
       (1L, base + " "),      // exact-normalized dup of 0 -> drops
@@ -3078,13 +3083,15 @@ class OperatorsSpec extends AnyFunSuite {
       (4L, "too short"),     // length gate -> drops
       (5L, evalDoc),         // probe member -> drops
       (6L, base),            // verbatim copy of 0: line dedup empties
-      (7L, other))           // it and 7 -> drop, no "" survivor
-      .toDF("doc_id", "text")
+      (7L, other),           // it and 7 -> drop, no "" survivor
+      (8L, s"$coreA\n$footer"), // near-dups only while they share the
+      (9L, s"$coreB\n$footer")) // footer: line dedup strips 9's -> both
+      .toDF("doc_id", "text")   // survive (bands of the FINAL text)
     val probe = Seq((100L, evalDoc)).toDF("doc_id", "text")
     val out = Pipeline.curate(d, "doc_id", "text", probe = Some(probe),
       minChars = 50, stripBoilerplate = true, nearDup = true, dedupLines = true)
     val ids = out.collect().map(_.getAs[Long]("doc_id")).sorted.toSeq
-    assert(ids === Seq(0L, 3L))
+    assert(ids === Seq(0L, 3L, 8L, 9L))
     // split column present and deterministic across runs
     val splits = out.collect().map(r =>
       r.getAs[Long]("doc_id") -> r.getAs[String]("split")).toMap
@@ -3103,6 +3110,47 @@ class OperatorsSpec extends AnyFunSuite {
       dedupLines = true).count()
     assert(spark.sharedState.cacheManager.isEmpty,
       "curate must not leave cached plans behind")
+  }
+
+  test("curate computes each document's MinHash band signature once:" +
+      " the output plan holds only the probe's, and __bands stays inside") {
+    import graft.functions.MinHashBucketsExpr
+    import graft.operators.Pipeline
+    val body = Seq.tabulate(20)(i => s"w$i body text words").mkString(" ")
+    val d = Seq((0L, body), (1L, body + " tail"), (2L, s"$body\n$body"),
+        (3L, Seq.tabulate(20)(i => s"z$i other words").mkString(" ")))
+      .toDF("doc_id", "text")
+    val probe = Seq((100L, body)).toDF("doc_id", "text")
+    val stages = scala.collection.mutable.Buffer.empty[(String, DataFrame)]
+    val out = Pipeline.curate(d, "doc_id", "text", probe = Some(probe),
+      dedupLines = true, nearDup = true, stageFrames = Some(stages))
+    assert(out.columns.toSeq === Seq("doc_id", "text", "split"))
+    // the corpus signature lives in the checkpoint; near-dup owners,
+    // losers and the decontamination read it, only the probe computes one
+    val minhash = out.queryExecution.optimizedPlan.collect { case n =>
+      n.expressions.flatMap(_.collect { case m: MinHashBucketsExpr => m })
+    }.flatten
+    assert(minhash.size === 1)
+    assert(stages.nonEmpty &&
+      stages.forall { case (_, f) => !f.columns.contains("__bands") })
+    // line dedup empties 2 (both its lines repeat 0's), near-dup drops
+    // 1 (0 owns its buckets), the probe drops 0
+    assert(out.collect().map(_.getAs[Long]("doc_id")).sorted.toSeq ===
+      Seq(3L))
+  }
+
+  test("materialize: a narrow checkpoint is spread to defaultParallelism," +
+      " a wide one keeps its partitions and runs one job") {
+    val cores = spark.sparkContext.defaultParallelism
+    val narrow = spark.range(0, 100, 1, 1).toDF("id")
+    val spread = Dedup.materialize(narrow)
+    assert(spread.rdd.getNumPartitions >= cores)
+    assert(spread.collect().map(_.getLong(0)).sorted.toSeq === (0L until 100L))
+    val wide = spark.range(0, 100, 1, cores + 2).toDF("id")
+    var kept: DataFrame = null
+    assert(SparkJobs.count(spark) { kept = Dedup.materialize(wide) } === 1)
+    assert(kept.rdd.getNumPartitions === cores + 2)
+    assert(kept.collect().map(_.getLong(0)).sorted.toSeq === (0L until 100L))
   }
 
   test("retention cohorts: first-day cohort, per-offset distinct actives," +
