@@ -218,12 +218,6 @@ object Sampling {
     */
   final case class LoadedSample(rows: DataFrame, k: Int)
 
-  private def sampleMeta(spark: org.apache.spark.sql.SparkSession,
-      idCol: String, k: Int): EpochStore.Meta = {
-    import spark.implicits._
-    (version, _) => Seq((idCol, k, version)).toDF("id_col", "k", "version")
-  }
-
   /** Persist a bottom-k sample of `df` at `path` (epoch 0) — the
     * always-fresh inspection/eval sample over a GROWING corpus: because
     * membership is pure hash order, bottom-k(A ∪ B) =
@@ -238,14 +232,14 @@ object Sampling {
       df: DataFrame, idCol: String, path: String, k: Int): Unit = {
     require(k > 0, "k must be positive")
     EpochStore.build(df.sparkSession, path, bottomKSample(df, idCol, k),
-      sampleMeta(df.sparkSession, idCol, k))
+      Map("id_col" -> idCol, "k" -> k))
   }
 
   /** Load the live epoch's sample rows. Fails if nothing committed. */
   def loadSampleIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): LoadedSample = {
     val (m, rows) = EpochStore.load(spark, path)
-    LoadedSample(rows, m.getAs[Int]("k"))
+    LoadedSample(rows, m("k").toInt)
   }
 
   /** Fold a new batch into the persisted sample: bottom-k of the batch
@@ -267,17 +261,17 @@ object Sampling {
       batch: DataFrame, idCol: String, path: String, k: Int = 1000): Unit = {
     val spark = batch.sparkSession
     EpochStore.append(spark, path, check = m => {
-      val idc = m.getAs[String]("id_col")
+      val idc = m("id_col")
       require(idc == idCol,
         s"sample index at $path keys on '$idc', not '$idCol'")
     })(_ => writeSampleIndex(batch, idCol, path, k)) { (m, stored) =>
-      val kk = m.getAs[Int]("k")
+      val kk = m("k").toInt
       val fresh = batch.join(
         broadcast(stored.select(col(idCol))), Seq(idCol), "left_anti")
-      (bottomKSample(
+      bottomKSample(
         stored.drop("sample_rank")
           .unionByName(bottomKSample(fresh, idCol, kk).drop("sample_rank")),
-        idCol, kk).localCheckpoint(), sampleMeta(spark, idCol, kk))
+        idCol, kk).localCheckpoint()
     }
   }
 

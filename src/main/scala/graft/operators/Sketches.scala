@@ -278,22 +278,17 @@ object Sketches {
   /** A loaded sketch: registers plus the precision it was built under. */
   final case class LoadedHll(registers: DataFrame, p: Int)
 
-  private def hllMeta(spark: SparkSession, p: Int): EpochStore.Meta = {
-    import spark.implicits._
-    (version, _) => Seq((p, version)).toDF("p", "version")
-  }
-
   /** Write a fresh sketch of `value` over `df` at `path` (epoch 0). */
   def writeHll(df: DataFrame, value: Column, path: String, p: Int = 12): Unit = {
     checkP(p)
     EpochStore.build(df.sparkSession, path, hllRegisters(df, value, p),
-      hllMeta(df.sparkSession, p))
+      Map("p" -> p))
   }
 
   /** Load the live epoch's registers. Fails if no committed meta. */
   def loadHll(spark: SparkSession, path: String): LoadedHll = {
     val (m, registers) = EpochStore.load(spark, path)
-    LoadedHll(registers, m.getAs[Int]("p"))
+    LoadedHll(registers, m("p").toInt)
   }
 
   /** Merge a new batch into the persisted sketch — the incremental
@@ -311,9 +306,8 @@ object Sketches {
     val spark = df.sparkSession
     EpochStore.append(spark, path)(_ => writeHll(df, value, path, p)) {
       (m, stored) =>
-        val pp = m.getAs[Int]("p")
-        (hllMerge(stored, hllRegisters(df, value, pp)).localCheckpoint(),
-          hllMeta(spark, pp))
+        hllMerge(stored, hllRegisters(df, value, m("p").toInt))
+          .localCheckpoint()
     }
   }
 
@@ -433,38 +427,30 @@ object Sketches {
       .select(col("__cand.*"), col("est"))
   }
 
-  /** CMS meta carries `last_batch_id` alongside the geometry: the
-    * exactly-once cursor for [[cmsIngestStream]] (-1 = no stream batch
-    * absorbed). It lives IN the meta row — the same atomic flip that
-    * commits an epoch commits its cursor, so there is no window where
-    * counters and cursor disagree.
-    */
-  private def cmsMeta(
-      spark: SparkSession, depth: Int, width: Int): EpochStore.Meta = {
-    import spark.implicits._
-    (version, lastBatchId) => Seq((depth, width, version, lastBatchId))
-      .toDF("depth", "width", "version", "last_batch_id")
-  }
-
   /** A loaded CMS: counters plus the geometry they were built under. */
   final case class LoadedCms(counters: DataFrame, depth: Int, width: Int)
 
-  /** Write a fresh CMS of `value` over `df` at `path` (epoch 0). */
+  /** Write a fresh CMS of `value` over `df` at `path` (epoch 0). The
+    * meta carries `last_batch_id` alongside the geometry: the
+    * exactly-once cursor for [[cmsIngestStream]] (-1 = no stream batch
+    * absorbed), committed by the same atomic flip as the counters.
+    */
   def writeCms(
       df: DataFrame,
       value: Column,
       path: String,
       depth: Int = 4,
       width: Int = 1024,
-      weight: Column = lit(1L)): Unit =
+      weight: Column = lit(1L),
+      lastBatchId: Long = -1L): Unit =
     EpochStore.build(df.sparkSession, path,
       cmsCounters(df, value, depth, width, weight),
-      cmsMeta(df.sparkSession, depth, width))
+      Map("depth" -> depth, "width" -> width), lastBatchId)
 
   /** Load the live epoch's counters. Fails if no committed meta. */
   def loadCms(spark: SparkSession, path: String): LoadedCms = {
     val (m, counters) = EpochStore.load(spark, path)
-    LoadedCms(counters, m.getAs[Int]("depth"), m.getAs[Int]("width"))
+    LoadedCms(counters, m("depth").toInt, m("width").toInt)
   }
 
   /** Sum a new batch into the persisted CMS — one pass over the BATCH,
@@ -493,12 +479,10 @@ object Sketches {
       depth: Int, width: Int, weight: Column): Unit = {
     val spark = df.sparkSession
     EpochStore.append(spark, path, batchId, "CMS")(cursor =>
-      EpochStore.build(spark, path,
-        cmsCounters(df, value, depth, width, weight),
-        cmsMeta(spark, depth, width), cursor)) { (m, stored) =>
-      val (d, w) = (m.getAs[Int]("depth"), m.getAs[Int]("width"))
-      (cmsMerge(stored, cmsCounters(df, value, d, w, weight))
-        .localCheckpoint(), cmsMeta(spark, d, w))
+      writeCms(df, value, path, depth, width, weight, cursor)) {
+      (m, stored) =>
+        cmsMerge(stored, cmsCounters(df, value, m("depth").toInt,
+          m("width").toInt, weight)).localCheckpoint()
     }
   }
 
@@ -507,7 +491,7 @@ object Sketches {
     * `last_batch_id` cursor — a REPLAYED batch (`batchId == cursor`)
     * returns without merging, closing the double-count hazard
     * [[appendCms]] documents with no marker file (the cursor rides the
-    * meta row, so the atomic flip that commits counters commits it);
+    * meta, so the atomic flip that commits counters commits it);
     * a batch id BELOW the cursor is never a legitimate replay — it
     * means the stream's checkpoint was lost or reset and ids restarted
     * — and FAILS LOUDLY rather than silently discarding those batches'
@@ -619,14 +603,6 @@ object Sketches {
       round(percentile(col(valueCol), lit(0.75)), 6).as("p75"),
       count(lit(1)).as("n_sample"))
 
-  private def quantileMeta(
-      spark: SparkSession, idCol: String, valueCol: String,
-      groupCol: String, k: Int): EpochStore.Meta = {
-    import spark.implicits._
-    (version, _) => Seq((idCol, valueCol, groupCol, k, version))
-      .toDF("id_col", "value_col", "group_col", "k", "version")
-  }
-
   /** Persist a quantile summary at `path` (epoch 0, the
     * [[graft.sources.EpochStore]] layout — every crash window leaves a
     * loadable artifact).
@@ -637,7 +613,8 @@ object Sketches {
     require(k > 0, "k must be positive")
     EpochStore.build(df.sparkSession, path,
       quantileSummaryBy(df, idCol, valueCol, groupCol, k),
-      quantileMeta(df.sparkSession, idCol, valueCol, groupCol, k))
+      Map("id_col" -> idCol, "value_col" -> valueCol,
+        "group_col" -> groupCol, "k" -> k))
   }
 
   /** A loaded quantile summary: the sample rows plus the maintained
@@ -647,7 +624,7 @@ object Sketches {
 
   def loadQuantile(spark: SparkSession, path: String): LoadedQuantile = {
     val (m, rows) = EpochStore.load(spark, path)
-    LoadedQuantile(rows, m.getAs[Int]("k"))
+    LoadedQuantile(rows, m("k").toInt)
   }
 
   /** Fold a batch into the persisted summary: per-group bottom-k of the
@@ -665,14 +642,13 @@ object Sketches {
       path: String, k: Int = 256): Unit = {
     val spark = batch.sparkSession
     EpochStore.append(spark, path, check = m => {
-      val (idc, vc, gc) = (m.getAs[String]("id_col"),
-        m.getAs[String]("value_col"), m.getAs[String]("group_col"))
+      val (idc, vc, gc) = (m("id_col"), m("value_col"), m("group_col"))
       require(idc == idCol && vc == valueCol && gc == groupCol,
         s"quantile summary at $path keys on ($idc, $vc, $gc), " +
           s"not ($idCol, $valueCol, $groupCol)")
     })(_ => writeQuantile(batch, idCol, valueCol, groupCol, path, k)) {
       (m, stored) =>
-        val kk = m.getAs[Int]("k")
+        val kk = m("k").toInt
         // replay guard keys on (group, id) — NULL-SAFE on the group, like
         // every grouped path here — not id alone: an id can legitimately
         // recur across groups (ids unique only per group), and an id-only
@@ -683,12 +659,11 @@ object Sketches {
             col(idCol).as("__ai"))),
           col(groupCol) <=> col("__ag") && col(idCol) === col("__ai"),
           "left_anti")
-        (quantileSummaryBy(
+        quantileSummaryBy(
           stored.drop("sample_rank")
             .unionByName(quantileSummaryBy(fresh, idCol, valueCol,
               groupCol, kk).drop("sample_rank")),
-          idCol, valueCol, groupCol, kk).localCheckpoint(),
-          quantileMeta(spark, idCol, valueCol, groupCol, kk))
+          idCol, valueCol, groupCol, kk).localCheckpoint()
     }
   }
 
@@ -958,15 +933,6 @@ object Sketches {
       .filter(col(valueCol) >= col("__cut")).drop("__cut")
   }
 
-  private def kllMeta(
-      spark: SparkSession, valueCol: String, groupCol: String,
-      k: Int): EpochStore.Meta = {
-    import spark.implicits._
-    (version, lastBatchId) =>
-      Seq((valueCol, groupCol, k, version, lastBatchId))
-        .toDF("value_col", "group_col", "k", "version", "last_batch_id")
-  }
-
   /** Persist a KLL sketch artifact (epoch layout, meta-gated). */
   def writeKll(
       df: DataFrame, valueCol: String, groupCol: String, path: String,
@@ -974,14 +940,15 @@ object Sketches {
     checkKllK(k)
     EpochStore.build(df.sparkSession, path,
       kllSketchBy(df, valueCol, groupCol, k),
-      kllMeta(df.sparkSession, valueCol, groupCol, k), lastBatchId)
+      Map("value_col" -> valueCol, "group_col" -> groupCol, "k" -> k),
+      lastBatchId)
   }
 
   final case class LoadedKll(rows: DataFrame, k: Int)
 
   def loadKll(spark: SparkSession, path: String): LoadedKll = {
     val (m, rows) = EpochStore.load(spark, path)
-    LoadedKll(rows, m.getAs[Int]("k"))
+    LoadedKll(rows, m("k").toInt)
   }
 
   /** Fold a batch into the persisted sketch: sketch the batch, union
@@ -1006,23 +973,21 @@ object Sketches {
       batchId: Option[Long], k: Int): Unit = {
     val spark = batch.sparkSession
     EpochStore.append(spark, path, batchId, "KLL sketch", m => {
-      val (vc, gc) = (m.getAs[String]("value_col"),
-        m.getAs[String]("group_col"))
+      val (vc, gc) = (m("value_col"), m("group_col"))
       require(vc == valueCol && gc == groupCol,
         s"KLL sketch at $path keys on ($vc, $gc), not ($valueCol, $groupCol)")
     })(cursor => writeKll(batch, valueCol, groupCol, path, k, cursor)) {
       (m, stored) =>
-        val kk = m.getAs[Int]("k")
-        (kllCompactBy(
+        val kk = m("k").toInt
+        kllCompactBy(
           stored.unionByName(kllSketchBy(batch, valueCol, groupCol, kk)),
-          groupCol, kk).localCheckpoint(),
-          kllMeta(spark, valueCol, groupCol, kk))
+          groupCol, kk).localCheckpoint()
     }
   }
 
   /** Absorb ONE stream micro-batch exactly-once under the committed
     * `last_batch_id` cursor — same crash-window analysis as
-    * [[ingestCmsBatch]] (the cursor rides the meta row, so the atomic
+    * [[ingestCmsBatch]] (the cursor rides the meta, so the atomic
     * epoch flip commits both).
     */
   def ingestKllBatch(
@@ -1225,27 +1190,19 @@ object Sketches {
   final case class LoadedBins(
       bins: DataFrame, nBins: Int, lo: Double, hi: Double)
 
-  private def binsMeta(
-      spark: SparkSession, nBins: Int, lo: Double,
-      hi: Double): EpochStore.Meta = {
-    import spark.implicits._
-    (version, lastBatchId) => Seq((nBins, lo, hi, version, lastBatchId))
-      .toDF("n_bins", "lo", "hi", "version", "last_batch_id")
-  }
-
   /** Write a fresh bin artifact of `valueCol` over `df` (epoch 0). */
   def writeBins(
       df: DataFrame, valueCol: String, path: String,
-      nBins: Int = 20, lo: Double = 0.0, hi: Double = 1.0): Unit =
+      nBins: Int = 20, lo: Double = 0.0, hi: Double = 1.0,
+      lastBatchId: Long = -1L): Unit =
     EpochStore.build(df.sparkSession, path,
       binCounts(df, valueCol, nBins, lo, hi),
-      binsMeta(df.sparkSession, nBins, lo, hi))
+      Map("n_bins" -> nBins, "lo" -> lo, "hi" -> hi), lastBatchId)
 
   /** Load the live epoch's bin counts. Fails if no committed meta. */
   def loadBins(spark: SparkSession, path: String): LoadedBins = {
     val (m, bins) = EpochStore.load(spark, path)
-    LoadedBins(bins,
-      m.getAs[Int]("n_bins"), m.getAs[Double]("lo"), m.getAs[Double]("hi"))
+    LoadedBins(bins, m("n_bins").toInt, m("lo").toDouble, m("hi").toDouble)
   }
 
   /** Absorb ONE stream micro-batch into the persisted bin counters,
@@ -1262,13 +1219,10 @@ object Sketches {
       nBins: Int = 20, lo: Double = 0.0, hi: Double = 1.0): Unit = {
     val spark = df.sparkSession
     EpochStore.append(spark, path, Some(batchId), "bin sketch")(cursor =>
-      EpochStore.build(spark, path, binCounts(df, valueCol, nBins, lo, hi),
-        binsMeta(spark, nBins, lo, hi), cursor)) { (m, stored) =>
-      val (nb, l, h) = (m.getAs[Int]("n_bins"), m.getAs[Double]("lo"),
-        m.getAs[Double]("hi"))
-      (stored.unionByName(binCounts(df, valueCol, nb, l, h))
-        .groupBy("bin").agg(sum(col("cnt")).as("cnt")).localCheckpoint(),
-        binsMeta(spark, nb, l, h))
+      writeBins(df, valueCol, path, nBins, lo, hi, cursor)) { (m, stored) =>
+      stored.unionByName(binCounts(df, valueCol, m("n_bins").toInt,
+          m("lo").toDouble, m("hi").toDouble))
+        .groupBy("bin").agg(sum(col("cnt")).as("cnt")).localCheckpoint()
     }
   }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Persistence for trained ANN index artifacts — the
   * train-once-search-many production shape. An IVF(-PQ) index is three
-  * artifacts plus a parameter row:
+  * artifacts plus a parameter record:
   *
   *  - `centroids`: the coarse quantizer, `(centroid_id, __cv)` — small
   *    by the IVF contract (it is broadcast and driver-folded at search);
@@ -14,12 +14,13 @@ import org.apache.spark.sql.functions._
   *  - `codes`: the encoded corpus `(neighbor_id, centroid_id, codes)` —
   *    the ONLY corpus-sized piece, m ints per vector (~32× smaller than
   *    the float vectors it replaces);
-  *  - `meta`: `(m, n_codes, residual)` so a loader cannot silently
-  *    mis-pair a residual-coded corpus with the raw-vector search path.
+  *  - `meta`: `(m, n_codes, residual)` ([[Commit.writeMeta]]) so a
+  *    loader cannot silently mis-pair a residual-coded corpus with the
+  *    raw-vector search path.
   *
-  * [[write]]/[[load]] round-trip them as parquet under one base path:
-  * doubles round-trip bit-exactly, so a loaded search returns the SAME
-  * rows as the in-session pipeline that trained it
+  * [[write]]/[[load]] round-trip the artifacts as parquet under one
+  * base path: doubles round-trip bit-exactly, so a loaded search
+  * returns the SAME rows as the in-session pipeline that trained it
   * ([[graft.operators.Similarity.ivfPqTopKEncoded]] /
   * `ivfPqResidualTopKEncoded` consume nothing but these frames). Codes
   * are laid out clustered by `centroid_id` — the search join key — so
@@ -67,8 +68,8 @@ object AnnIndex {
       () => codes.repartition(col("centroid_id"))
         .sortWithinPartitions("centroid_id")
         .write.mode("overwrite").parquet(s"$path/codes")))
-    Seq((m, codebook.length, residual)).toDF("m", "n_codes", "residual")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    Commit.writeMeta(spark, s"$path/meta",
+      Map("m" -> m, "n_codes" -> codebook.length, "residual" -> residual))
   }
 
   /** Metastore-backed alternative for the codes table: bucketed by
@@ -175,7 +176,7 @@ object AnnIndex {
     * discipline — all three artifacts stage to side directories first
     * (training and encode scan only `corpus`, never a directory being
     * written), meta deletes, the artifacts swap, meta writes last. A
-    * crash anywhere leaves [[load]] failing loudly on missing/multi
+    * crash anywhere leaves [[load]] failing loudly on a missing
     * meta — never live meta over a half-swapped index.
     */
   def retrain(
@@ -194,8 +195,7 @@ object AnnIndex {
     // driver job per retrain) and opening the old artifact frames would
     // be pure waste; only the search contract (m, residual) survives
     val meta = Commit.readMeta(spark, s"$path/meta")
-    val (m, residual) =
-      (meta.getAs[Int]("m"), meta.getAs[Boolean]("residual"))
+    val (m, residual) = (meta("m").toInt, meta("residual").toBoolean)
     // Materialized ONCE: three downstream actions (codebook collect,
     // centroids write, codes write) would otherwise each re-run the
     // trainer, and avg-based k-means is shuffle-order sensitive — the
@@ -231,8 +231,7 @@ object AnnIndex {
         .toDF("code", "vals").coalesce(1),
       "codes" -> codes.repartition(numFiles, col("centroid_id"))
         .sortWithinPartitions("centroid_id")),
-      s"$path/meta",
-      Seq((m, cb.length, residual)).toDF("m", "n_codes", "residual"))
+      s"$path/meta", meta + ("n_codes" -> cb.length))
   }
 
   /** [[retrain]] with the library's own trainers: coarse centroids by
@@ -253,7 +252,7 @@ object AnnIndex {
       pqIters: Int,
       pqSampleFraction: Double,
       numFiles: Int): Unit = {
-    val m = Commit.readMeta(spark, s"$path/meta").getAs[Int]("m")
+    val m = Commit.readMeta(spark, s"$path/meta")("m").toInt
     retrain(spark, path, corpus, idCol, vecCol,
       c => graft.operators.Similarity.trainCentroids(
         c, idCol, vecCol, kCentroids, kmeansIters),
@@ -280,21 +279,19 @@ object AnnIndex {
     */
   def compact(spark: SparkSession, path: String, numFiles: Int = 32): Unit = {
     require(numFiles > 0, "numFiles must be positive")
-    import spark.implicits._
-    val idx = load(spark, path)
-    val (m, nCodes, residual) = (idx.m, idx.codebook.length, idx.residual)
+    val meta = Commit.readMeta(spark, s"$path/meta")
     Commit.swapCompacted(spark, path, Seq(
-      "codes" -> idx.codes.repartition(numFiles, col("centroid_id"))
+      "codes" -> spark.read.parquet(s"$path/codes")
+        .repartition(numFiles, col("centroid_id"))
         .sortWithinPartitions("centroid_id")),
-      s"$path/meta",
-      Seq((m, nCodes, residual)).toDF("m", "n_codes", "residual"))
+      s"$path/meta", meta)
   }
 
   def load(spark: SparkSession, path: String): Loaded = {
     val meta = Commit.readMeta(spark, s"$path/meta")
-    val m = meta.getAs[Int]("m")
-    val nCodes = meta.getAs[Int]("n_codes")
-    val residual = meta.getAs[Boolean]("residual")
+    val m = meta("m").toInt
+    val nCodes = meta("n_codes").toInt
+    val residual = meta("residual").toBoolean
     val cbRows = spark.read.parquet(s"$path/codebook").collect()
     require(cbRows.length == nCodes,
       s"codebook has ${cbRows.length} rows, meta declares $nCodes")

@@ -1,7 +1,12 @@
 package graft.sources
 
+import java.io.{InputStreamReader, OutputStreamWriter}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The artifact-commit protocol of the persisted stores ([[DedupIndex]],
   * [[RetrievalIndex]], [[AnnIndex]], [[DeconIndex]], [[Packs]],
@@ -10,10 +15,13 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   *
   *  - marker-guarded once ([[once]]): a directory marker written after
   *    the body makes a replayed call a no-op;
-  *  - meta tombstone ([[tombstone]]) and exactly-one-row meta read
-  *    ([[readMeta]]): meta is deleted before an artifact is touched and
-  *    written last, so a crash in between leaves a store its loader
-  *    refuses loudly instead of pairing stale parameters with new data;
+  *  - meta ([[writeMeta]] / [[readMeta]]): a store's parameters as one
+  *    small properties file, written and read on the driver with no
+  *    Spark job — the only code that knows the meta format;
+  *  - meta tombstone ([[tombstone]]): meta is deleted before an
+  *    artifact is touched and written last, so a crash in between
+  *    leaves a store its loader refuses loudly instead of pairing stale
+  *    parameters with new data;
   *  - staged swap ([[swapCompacted]]): rewrites land in side
   *    directories, then swap in under the meta tombstone;
   *  - layout-clean sentinel ([[markClean]] / [[unmarkClean]] /
@@ -21,8 +29,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   *  - overlapped independent writes ([[runAll]]).
   *
   * [[EpochStore]]'s versioned-epoch lifecycle (every crash window
-  * loadable) reads its meta through [[exists]] and [[readMeta]] but
-  * keeps its own commit order, as does [[Tables.compactZOrdered]]'s
+  * loadable) commits its meta through [[writeMeta]] and [[readMeta]]
+  * but keeps its own commit order, as does [[Tables.compactZOrdered]]'s
   * roll-forward swap: their crash contracts differ.
   */
 private[graft] object Commit {
@@ -50,13 +58,44 @@ private[graft] object Commit {
   def tombstone(spark: SparkSession, dirs: String*): Unit =
     dirs.foreach(d => fs(spark, d).delete(new Path(d), true))
 
-  /** The committed meta row of a store: exactly one row, or the store
-    * is unloadable (tombstoned mid-commit, or never committed).
+  /** Commit a store's parameters as its meta: one small
+    * `java.util.Properties` file at `dir` (each value by `toString`),
+    * written to a temp file beside `dir`, then swapped in by delete +
+    * rename, so a reader sees the old meta, no meta, or the new one —
+    * never a partial file. A temp file left by an interrupted write is
+    * overwritten. Driver-side file I/O only: no Spark job.
     */
-  def readMeta(spark: SparkSession, dir: String): Row = {
-    val rows = spark.read.parquet(dir).collect()
-    require(rows.length == 1, s"malformed meta at $dir")
-    rows(0)
+  def writeMeta(
+      spark: SparkSession, dir: String, fields: Map[String, Any]): Unit = {
+    val props = new java.util.Properties
+    fields.foreach { case (k, v) => props.setProperty(k, v.toString) }
+    val f = fs(spark, dir)
+    val tmp = new Path(s"$dir.tmp")
+    val out = new OutputStreamWriter(f.create(tmp, true), UTF_8)
+    try props.store(out, null) finally out.close()
+    f.delete(new Path(dir), true)
+    if (!f.rename(tmp, new Path(dir)))
+      throw new java.io.IOException(s"meta rename failed for $dir")
+  }
+
+  /** The committed meta of a store, as written by [[writeMeta]]; values
+    * parse back with `toInt`, `toLong`, `toDouble`, `toBoolean`. A
+    * missing meta (tombstoned mid-commit, or never committed), an
+    * unreadable one, or a missing key fails loudly naming `dir`. One
+    * `FileSystem.open`, no Spark job.
+    */
+  def readMeta(spark: SparkSession, dir: String): Map[String, String] = {
+    val props = new java.util.Properties
+    try {
+      val in = new InputStreamReader(fs(spark, dir).open(new Path(dir)),
+        UTF_8)
+      try props.load(in) finally in.close()
+    } catch {
+      case e @ (_: java.io.IOException | _: IllegalArgumentException) =>
+        throw new IllegalStateException(s"no readable meta at $dir", e)
+    }
+    props.asScala.toMap.withDefault(k =>
+      throw new NoSuchElementException(s"meta at $dir has no $k"))
   }
 
   // -------------------------------------------------------------------
@@ -122,7 +161,7 @@ private[graft] object Commit {
       path: String,
       staged: Seq[(String, DataFrame)],
       metaDir: String,
-      meta: DataFrame,
+      meta: Map[String, Any],
       folded: Seq[String] = Nil): Unit = {
     // 1. stage every compacted artifact (reads old dirs, writes side
     //    dirs — no overlap between a scan and the directory it scans).
@@ -134,7 +173,7 @@ private[graft] object Commit {
       df.write.mode("overwrite").parquet(s"$path/$dir.compact")
     }})
     // 2. tombstone the meta: from here to step 4 the store is
-    //    unloadable (readMeta requires exactly one meta row)
+    //    unloadable (readMeta fails on a missing meta)
     tombstone(spark, metaDir)
     // 3. swap, then drop what the swapped-in artifacts folded
     staged.foreach { case (dir, _) =>
@@ -146,6 +185,6 @@ private[graft] object Commit {
     }
     tombstone(spark, folded: _*)
     // 4. meta last
-    meta.coalesce(1).write.mode("overwrite").parquet(metaDir)
+    writeMeta(spark, metaDir, meta)
   }
 }

@@ -22,7 +22,7 @@ import graft.functions.TextFunctions.{bloomContainsBcast, bloomPositions}
   *    gram definition of the exact-decon family, so this index, the
   *    batch operators, and their shared oracles can never drift).
   *    Append-only; the EXACT confirm side of every probe join.
-  *  - `registers_v{N}/` + `meta/`: the Bloom filter words `(w, bits)`
+  *  - `registers_v{N}/` + `meta`: the Bloom filter words `(w, bits)`
   *    over those keys plus `(n, m_bits, k, version)`, committed under
   *    the [[EpochStore]] versioned-epoch layout (filter tables are
   *    bounded — `mBits/64` rows — so epoch rewrites cost nothing).
@@ -64,13 +64,6 @@ object DeconIndex {
       grams: DataFrame,
       version: Long)
 
-  private def meta(
-      spark: SparkSession, n: Int, mBits: Int, k: Int): EpochStore.Meta = {
-    import spark.implicits._
-    (version, _) =>
-      Seq((n, mBits, k, version)).toDF("n", "m_bits", "k", "version")
-  }
-
   private def gramsOf(df: DataFrame, textCol: String, n: Int): DataFrame =
     graft.operators.Dedup.normalizedGramHashes(df, textCol, n)
       .select(col("__h")).distinct()
@@ -110,14 +103,14 @@ object DeconIndex {
     val g = gramsOf(probe, textCol, n).localCheckpoint()
     g.write.mode("overwrite").parquet(s"$path/grams")
     EpochStore.build(spark, path, wordsFrame(g, mBits, k),
-      meta(spark, n, mBits, k))
+      Map("n" -> n, "m_bits" -> mBits, "k" -> k))
   }
 
   /** Load the committed index. Fails loudly when no meta committed. */
   def load(spark: SparkSession, path: String): LoadedDecon = {
     val (m, epoch) = EpochStore.load(spark, path)
-    val (n, mBits, k, v) = (m.getAs[Int]("n"), m.getAs[Int]("m_bits"),
-      m.getAs[Int]("k"), m.getAs[Long]("version"))
+    val (n, mBits, k, v) = (m("n").toInt, m("m_bits").toInt,
+      m("k").toInt, m("version").toLong)
     val words = new Array[Long](mBits / 64)
     epoch.collect()
       .foreach(r => words(r.getAs[Long]("w").toInt) = r.getAs[Long]("bits"))
@@ -147,8 +140,8 @@ object DeconIndex {
     // arguments — an EXISTING artifact's meta governs every later append
     EpochStore.append(spark, path)(
       _ => build(newProbe, textCol, path, n, mBits, k)) { (m, stored) =>
-      val (mn, mMBits, mK) = (m.getAs[Int]("n"), m.getAs[Int]("m_bits"),
-        m.getAs[Int]("k"))
+      val (mn, mMBits, mK) = (m("n").toInt, m("m_bits").toInt,
+        m("k").toInt)
       val batch = gramsOf(newProbe, textCol, mn).localCheckpoint()
       val indexGrams = spark.read.parquet(s"$path/grams")
       // matched ≤ batch size: the artifact streams through one
@@ -172,7 +165,7 @@ object DeconIndex {
           .unionByName(wordsFrame(batch, mMBits, mK))
           .groupBy(col("w")).agg(expr("bit_or(bits)").as("bits"))
           .localCheckpoint())))
-      (mergedSlot.get(), meta(spark, mn, mMBits, mK))
+      mergedSlot.get()
     }
   }
 

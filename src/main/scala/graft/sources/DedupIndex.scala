@@ -92,7 +92,6 @@ object DedupIndex {
     require(numHashes % bands == 0, "bands must divide numHashes")
     require(numFiles > 0, "numFiles must be positive")
     val spark = docs.sparkSession
-    import spark.implicits._
     // tombstone first (the Packs discipline): a crash anywhere below
     // leaves no meta, so load() fails loudly instead of pairing stale
     // banding params with half-rebuilt artifacts. The ingest MARKERS
@@ -122,9 +121,8 @@ object DedupIndex {
       .repartition(numFiles, col("band"), col("bucket"))
       .sortWithinPartitions("band", "bucket")
       .write.mode("overwrite").parquet(s"$path/buckets")
-    Seq((shingleN, numHashes, bands))
-      .toDF("shingle_n", "num_hashes", "bands")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    Commit.writeMeta(spark, s"$path/meta", Map("shingle_n" -> shingleN,
+      "num_hashes" -> numHashes, "bands" -> bands))
     // fresh build = folded rows at the build layout by construction
     Commit.markClean(spark, path, "exact")
   }
@@ -134,9 +132,9 @@ object DedupIndex {
     Loaded(
       hashes = spark.read.parquet(s"$path/hashes"),
       buckets = spark.read.parquet(s"$path/buckets"),
-      shingleN = meta.getAs[Int]("shingle_n"),
-      numHashes = meta.getAs[Int]("num_hashes"),
-      bands = meta.getAs[Int]("bands"))
+      shingleN = meta("shingle_n").toInt,
+      numHashes = meta("num_hashes").toInt,
+      bands = meta("bands").toInt)
   }
 
   /** Dedup an incoming batch against the frozen index and absorb the
@@ -379,7 +377,6 @@ object DedupIndex {
     require(spanWords >= 2, "spanWords must be >= 2")
     require(numFiles > 0, "numFiles must be positive")
     val spark = docs.sparkSession
-    import spark.implicits._
     val k = spanWords
     // meta tombstone + stale ingest markers (see [[build]]'s note)
     Commit.tombstone(spark, s"$path/grams_meta", s"$path/grams_ingested")
@@ -401,8 +398,7 @@ object DedupIndex {
       .repartition(numFiles, col("gram_hash"))
       .sortWithinPartitions("gram_hash")
       .write.mode("overwrite").parquet(s"$path/grams")
-    Seq(Tuple1(k)).toDF("span_words")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/grams_meta")
+    Commit.writeMeta(spark, s"$path/grams_meta", Map("span_words" -> k))
     // fresh build = distinct hashes at the build layout by construction
     Commit.markClean(spark, path, "substring")
     // grams is already checkpointed above (it also feeds the grams/
@@ -472,8 +468,7 @@ object DedupIndex {
       idCol: String,
       textCol: String,
       broadcastBatch: Boolean = true): SubstringBatch = {
-    val k = Commit.readMeta(spark, s"$path/grams_meta")
-      .getAs[Int]("span_words")
+    val k = Commit.readMeta(spark, s"$path/grams_meta")("span_words").toInt
     def bc(df: DataFrame): DataFrame =
       if (broadcastBatch) broadcast(df) else df
     val idx = spark.read.parquet(s"$path/grams")
@@ -584,7 +579,6 @@ object DedupIndex {
       numFiles: Int = 32): DataFrame = {
     require(numFiles > 0, "numFiles must be positive")
     val spark = vecs.sparkSession
-    import spark.implicits._
     // meta tombstone + stale ingest markers (see [[build]]'s note)
     Commit.tombstone(spark, s"$path/sem_meta", s"$path/sem_ingested")
     Commit.unmarkClean(spark, path, "semantic")
@@ -616,8 +610,7 @@ object DedupIndex {
       () => centroids.select(col("centroid_id"), col("__cv").as("cvec"))
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$path/sem_centroids")))
-    Seq(Tuple1(tau)).toDF("tau")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/sem_meta")
+    Commit.writeMeta(spark, s"$path/sem_meta", Map("tau" -> tau))
     // fresh build = folded vec_ids at the cell-clustered layout
     Commit.markClean(spark, path, "semantic")
     assigned.join(dropped, Seq("vec_id"), "left_anti")
@@ -654,7 +647,7 @@ object DedupIndex {
       idCol: String,
       vecCol: String,
       broadcastBatch: Boolean = true): SemanticBatch = {
-    val tau = Commit.readMeta(spark, s"$path/sem_meta").getAs[Double]("tau")
+    val tau = Commit.readMeta(spark, s"$path/sem_meta")("tau").toDouble
     def bc(df: DataFrame): DataFrame =
       if (broadcastBatch) broadcast(df) else df
     val centroids = spark.read.parquet(s"$path/sem_centroids")
@@ -821,9 +814,8 @@ object DedupIndex {
     // already folded at their build layout — rewriting them would
     // reproduce the bytes on disk
     if (Commit.isClean(spark, path, "exact")) return
-    import spark.implicits._
+    val meta = Commit.readMeta(spark, s"$path/meta")
     val idx = load(spark, path)
-    val (sn, nh, bd) = (idx.shingleN, idx.numHashes, idx.bands)
     Commit.swapCompacted(spark, path, Seq(
       "hashes" -> idx.hashes.groupBy(col("text_hash"))
         .agg(min(col("keep_id")).as("keep_id"))
@@ -832,8 +824,7 @@ object DedupIndex {
       "buckets" -> idx.buckets.distinct()
         .repartition(numFiles, col("band"), col("bucket"))
         .sortWithinPartitions("band", "bucket")),
-      s"$path/meta",
-      Seq((sn, nh, bd)).toDF("shingle_n", "num_hashes", "bands"))
+      s"$path/meta", meta)
     Commit.markClean(spark, path, "exact")
   }
 
@@ -847,14 +838,12 @@ object DedupIndex {
     require(numFiles > 0, "numFiles must be positive")
     // no-op fast path — see [[compact]]'s sentinel note
     if (Commit.isClean(spark, path, "substring")) return
-    import spark.implicits._
-    val k = Commit.readMeta(spark, s"$path/grams_meta")
-      .getAs[Int]("span_words")
+    val meta = Commit.readMeta(spark, s"$path/grams_meta")
     Commit.swapCompacted(spark, path, Seq(
       "grams" -> spark.read.parquet(s"$path/grams").distinct()
         .repartition(numFiles, col("gram_hash"))
         .sortWithinPartitions("gram_hash")),
-      s"$path/grams_meta", Seq(Tuple1(k)).toDF("span_words"))
+      s"$path/grams_meta", meta)
     Commit.markClean(spark, path, "substring")
   }
 
@@ -888,8 +877,8 @@ object DedupIndex {
     // that removes rows even from a freshly-built index, so it always
     // runs
     if (!dropShadowed && Commit.isClean(spark, path, "semantic")) return
-    import spark.implicits._
-    val tau = Commit.readMeta(spark, s"$path/sem_meta").getAs[Double]("tau")
+    val meta = Commit.readMeta(spark, s"$path/sem_meta")
+    val tau = meta("tau").toDouble
     // sem_centroids/ is small, frozen, and never appended: it stays
     // in place untouched
     val vecs = spark.read.parquet(s"$path/sem_vecs")
@@ -913,7 +902,7 @@ object DedupIndex {
     Commit.swapCompacted(spark, path, Seq(
       "sem_vecs" -> compacted.repartition(numFiles, col("centroid_id"))
         .sortWithinPartitions("centroid_id", "vec_id")),
-      s"$path/sem_meta", Seq(Tuple1(tau)).toDF("tau"))
+      s"$path/sem_meta", meta)
     // either mode leaves folded vec_ids at the build layout, so a later
     // exact-parity compact of the untouched artifact may skip
     Commit.markClean(spark, path, "semantic")

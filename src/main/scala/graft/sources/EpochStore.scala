@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Versioned-epoch artifact lifecycle — the shared layout and commit of
   * the bounded stores: the HLL, CMS, quantile-summary, KLL and drift-bin
@@ -9,12 +9,14 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * the term set of [[VocabIndex]]:
   *
   *   registers_v{N}/   payload parquet for epoch N
-  *   meta/             store parameters + `version` (+ `last_batch_id`
-  *                     for the cursor stores) — the commit pointer,
+  *   meta              store parameters + `version` + `last_batch_id`
+  *                     (-1 unless a stream cursor set it), one
+  *                     [[Commit.writeMeta]] file — the commit pointer,
   *                     written LAST
   *
-  * Each store names only its parameters (its [[Meta]]), its payload and
-  * its merge law; [[build]], [[load]] and [[append]] own the rest.
+  * Each store names only its parameters (once, at [[build]]), its
+  * payload and its merge law; [[build]], [[load]] and [[append]] own
+  * the rest, and every epoch carries the parameters forward.
   *
   * The new epoch directory is written FIRST (old epoch untouched), meta
   * flips to it atomically last, and stale epochs are best-effort cleaned
@@ -29,33 +31,28 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   */
 private[graft] object EpochStore {
 
-  /** A store's one-row meta frame for `(version, last_batch_id)`: its
-    * own parameters plus `version`, and the cursor for the stores that
-    * keep one (the others ignore it).
-    */
-  type Meta = (Long, Long) => DataFrame
-
   private def metaDir(path: String): String = s"$path/meta"
 
   private def epochPath(path: String, version: Long): String =
     s"$path/registers_v$version"
 
-  /** The committed meta row and the live epoch's payload. Fails loudly
-    * (path not found) when nothing is committed.
+  /** The committed meta and the live epoch's payload. Fails loudly
+    * when nothing is committed.
     */
-  def load(spark: SparkSession, path: String): (Row, DataFrame) = {
+  def load(
+      spark: SparkSession, path: String): (Map[String, String], DataFrame) = {
     val m = Commit.readMeta(spark, metaDir(path))
-    (m, spark.read.parquet(epochPath(path, m.getAs[Long]("version"))))
+    (m, spark.read.parquet(epochPath(path, m("version").toLong)))
   }
 
-  /** Build epoch 0: `payload` under `meta(0, lastBatchId)`. */
+  /** Build epoch 0: `payload` under the store's `params`. */
   def build(
       spark: SparkSession,
       path: String,
       payload: DataFrame,
-      meta: Meta,
+      params: Map[String, Any],
       lastBatchId: Long = -1L): Unit =
-    writeEpoch(spark, path, payload, meta(0L, lastBatchId), 0L)
+    writeEpoch(spark, path, payload, params, 0L, lastBatchId)
 
   /** Absorb one batch. With no committed meta the torn-flip guard runs
     * ([[requireInitializable]]) and `init` builds epoch 0 under the
@@ -65,10 +62,10 @@ private[graft] object EpochStore {
     * id and fails LOUD on a reset cursor (a lost/re-created checkpoint
     * restarts ids — continuing would silently drop every
     * already-numbered batch; `what` names the artifact in that
-    * message). Last, `merge` gets the meta row and the live epoch (read
-    * on first use) and returns the merged payload plus the meta it
-    * commits under, as `version + 1` carrying `batchId` or else the
-    * stored cursor. The merged payload must be MATERIALIZED
+    * message). Last, `merge` gets the meta and the live epoch (read on
+    * first use) and returns the merged payload, committed as
+    * `version + 1` under the same parameters, carrying `batchId` or
+    * else the stored cursor. The merged payload must be MATERIALIZED
     * (localCheckpoint): its plan reads the epoch the commit's cleanup
     * deletes.
     *
@@ -86,9 +83,9 @@ private[graft] object EpochStore {
       path: String,
       batchId: Option[Long] = None,
       what: String = "epoch store",
-      check: Row => Unit = _ => ())(
+      check: Map[String, String] => Unit = _ => ())(
       init: Long => Unit)(
-      merge: (Row, => DataFrame) => (DataFrame, Meta)): Unit = {
+      merge: (Map[String, String], => DataFrame) => DataFrame): Unit = {
     if (!Commit.exists(spark, metaDir(path))) {
       requireInitializable(spark, path)
       init(batchId.getOrElse(-1L))
@@ -96,10 +93,7 @@ private[graft] object EpochStore {
     }
     val m = Commit.readMeta(spark, metaDir(path))
     check(m)
-    val last =
-      if (m.schema.fieldNames.contains("last_batch_id"))
-        m.getAs[Long]("last_batch_id")
-      else -1L
+    val last = m("last_batch_id").toLong
     if (batchId.contains(last)) return
     batchId.foreach(id => require(id > last,
       s"$what at $path has absorbed through stream batch $last but " +
@@ -107,11 +101,10 @@ private[graft] object EpochStore {
         "or reset (ids restarted); continuing would silently drop " +
         "every already-numbered batch. Point the query at its " +
         "original checkpoint, or rebuild the artifact."))
-    val v = m.getAs[Long]("version")
+    val v = m("version").toLong
     lazy val stored = spark.read.parquet(epochPath(path, v))
-    val (merged, meta) = merge(m, stored)
-    writeEpoch(spark, path, merged, meta(v + 1L, batchId.getOrElse(last)),
-      v + 1L)
+    writeEpoch(spark, path, merge(m, stored), m, v + 1L,
+      batchId.getOrElse(last))
   }
 
   /** Guard for append-path initialization: a store with NO meta but
@@ -139,12 +132,11 @@ private[graft] object EpochStore {
         "restore meta or delete the directory")
   }
 
-  /** Commit one epoch: payload first, meta (carrying `version` plus
-    * store-specific parameters) flipped last VIA RENAME — the meta
-    * parquet is staged to a temp directory and moved into place, so
-    * the no-meta window is the delete+rename instant, not a full
-    * parquet job; a crash inside even that instant leaves epoch
-    * payloads intact and the append paths refuse to re-initialize
+  /** Commit one epoch: payload first, then meta (the store's
+    * parameters plus `version` and `last_batch_id`) flipped last by
+    * [[Commit.writeMeta]]'s delete + rename, so the no-meta window is
+    * that instant; a crash inside it leaves epoch payloads intact and
+    * the append paths refuse to re-initialize
     * ([[requireInitializable]]). Stale epochs are cleaned after (a
     * leftover directory is inert — meta names the live epoch — and the
     * next commit retries the delete).
@@ -153,26 +145,18 @@ private[graft] object EpochStore {
       spark: SparkSession,
       path: String,
       payload: DataFrame,
-      meta: DataFrame,
-      version: Long): Unit = {
+      params: Map[String, Any],
+      version: Long,
+      lastBatchId: Long): Unit = {
     // bounded payload: one file
     payload.coalesce(1).write.mode("overwrite")
       .parquet(epochPath(path, version))
+    Commit.writeMeta(spark, metaDir(path), params ++
+      Map("version" -> version, "last_batch_id" -> lastBatchId))
     val f = Commit.fs(spark, path)
-    val metaPath = new org.apache.hadoop.fs.Path(metaDir(path))
-    val tmpDir = new org.apache.hadoop.fs.Path(s"$path/meta_tmp_$version")
-    meta.coalesce(1).write.mode("overwrite").parquet(tmpDir.toString)
-    f.delete(metaPath, true)
-    if (!f.rename(tmpDir, metaPath))
-      throw new java.io.IOException(
-        s"epoch store at $path: meta rename failed mid-commit")
-    val base = new org.apache.hadoop.fs.Path(path)
-    if (f.exists(base)) f.listStatus(base).foreach { st =>
+    f.listStatus(new org.apache.hadoop.fs.Path(path)).foreach { st =>
       val n = st.getPath.getName
-      if ((n.startsWith("registers_v") &&
-            n.stripPrefix("registers_v") != version.toString) ||
-          (n.startsWith("meta_tmp_") &&
-            n.stripPrefix("meta_tmp_") != version.toString))
+      if (n.startsWith("registers_v") && n != s"registers_v$version")
         f.delete(st.getPath, true)
     }
   }

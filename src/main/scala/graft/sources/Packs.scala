@@ -7,12 +7,12 @@ import org.apache.spark.sql.functions._
   * corpus→trainer pipeline ([[graft.operators.Sampling.packSequences]] →
   * [[graft.operators.Sampling.materializePacks]] → THIS): size-bounded,
   * deterministically-sharded training files a data-parallel trainer can
-  * consume rank-by-rank, plus a `meta` row that makes a pack set
+  * consume rank-by-rank, plus a `meta` record that makes a pack set
   * self-describing.
   *
   * Layout under one base path (the [[AnnIndex]] artifact pattern):
   *
-  *  - `meta`: one row `(seq_tokens, n_buckets, merges_fingerprint)` —
+  *  - `meta`: `(seq_tokens, n_buckets, merges_fingerprint)` —
   *    a loader refuses to mix packs built under different packing
   *    params, and the merges fingerprint
   *    ([[graft.functions.Bpe.mergesFingerprint]]) pins WHICH vocabulary
@@ -79,7 +79,6 @@ object Packs {
         s"$nBuckets: directory partitioning writes at least one file " +
         "per bucket — raise numFiles to >= nBuckets (or lower nBuckets)")
     val spark = packs.sparkSession
-    import spark.implicits._
     // tombstone the old meta BEFORE the packs overwrite deletes old
     // data files: a crash anywhere after this point leaves no meta, so
     // loadPacks fails loudly instead of pairing stale meta (old
@@ -100,9 +99,8 @@ object Packs {
     // meta is written LAST, as the commit marker: with the tombstone
     // above, a failure anywhere mid-write leaves NO meta — never a
     // fingerprint (old or new) paired with partial/stale token ids
-    Seq((seqTokens, nBuckets, mergesFingerprint))
-      .toDF("seq_tokens", "n_buckets", "merges_fingerprint")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    Commit.writeMeta(spark, s"$path/meta", Map("seq_tokens" -> seqTokens,
+      "n_buckets" -> nBuckets, "merges_fingerprint" -> mergesFingerprint))
   }
 
   /** Load a pack set written by [[writePacks]]. `pack_bucket` comes
@@ -112,12 +110,10 @@ object Packs {
     */
   def loadPacks(spark: SparkSession, path: String): Loaded = {
     val meta = Commit.readMeta(spark, s"$path/meta")
-    val seqTokens = meta.getAs[Long]("seq_tokens")
-    val nBuckets = meta.getAs[Int]("n_buckets")
-    val fp = meta.getAs[String]("merges_fingerprint")
     val packs = spark.read.parquet(s"$path/packs")
       .withColumn("pack_bucket", col("pack_bucket").cast("long"))
       .select("pack_bucket", "pack_id", "n_tokens", "token_ids")
-    Loaded(packs, seqTokens, nBuckets, fp)
+    Loaded(packs, meta("seq_tokens").toLong, meta("n_buckets").toInt,
+      meta("merges_fingerprint"))
   }
 }

@@ -75,7 +75,6 @@ object Release {
       nShards: Int = 16): Unit = {
     require(nShards > 0, "nShards must be positive")
     val spark = docs.sparkSession
-    import spark.implicits._
     Commit.tombstone(spark, s"$path/manifest", s"$path/release_meta")
     val sharded = docs.withColumn("shard", shardCol(idCol, nShards))
     sharded.repartition(nShards, col("shard"))
@@ -89,8 +88,8 @@ object Release {
     manifestOf(spark.read.schema(sharded.schema).json(s"$path/data"),
         idCol, textCol)
       .coalesce(1).write.mode("overwrite").parquet(s"$path/manifest")
-    Seq(Tuple1(nShards)).toDF("n_shards")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/release_meta")
+    Commit.writeMeta(spark, s"$path/release_meta",
+      Map("n_shards" -> nShards))
   }
 
   /** Fold a new batch into a published release — the incremental
@@ -362,7 +361,7 @@ object Release {
     if (token.isEmpty) body else Commit.once(spark, marker)(body)
 
   private def nShardsOf(spark: SparkSession, path: String): Int =
-    spark.read.parquet(s"$path/release_meta").head().getAs[Int]("n_shards")
+    Commit.readMeta(spark, s"$path/release_meta")("n_shards").toInt
 
   /** `(shard, file name)` of every data file in the touched shards. */
   private def listShardFiles(

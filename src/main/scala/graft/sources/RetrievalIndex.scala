@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   *     — `mode(append)` plus retry is silent duplication).
   *   - `ingested/`       — batch markers for the exactly-once
   *     streaming cursor ([[Commit.once]]).
-  *   - `meta/`           — written LAST (tombstone-first discipline):
+  *   - `meta`            — written LAST (tombstone-first discipline):
   *     a crash mid-build/mid-compact leaves no meta, so [[load]] fails
   *     loudly instead of pairing stale stats with half-built postings.
   *
@@ -109,7 +109,6 @@ object RetrievalIndex {
       numFiles: Int = 32): Unit = {
     require(numFiles > 0, "numFiles must be positive")
     val spark = docs.sparkSession
-    import spark.implicits._
     Commit.tombstone(spark,
       Seq("meta", "ingested", "batch_postings", "batch_stats")
         .map(d => s"$path/$d"): _*)
@@ -119,8 +118,7 @@ object RetrievalIndex {
       .write.mode("overwrite").parquet(s"$path/postings")
     statsOf(docs, idCol, textCol)
       .coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
-    Seq(Tuple1(1)).toDF("format_version")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    Commit.writeMeta(spark, s"$path/meta", Map("format_version" -> 1))
   }
 
   private def nonEmptyDir(spark: SparkSession, d: String): Boolean = {
@@ -273,7 +271,7 @@ object RetrievalIndex {
         .repartitionByRange(numFiles, col("term"), col("doc_id"))
         .sortWithinPartitions("term", "doc_id"),
       "stats" -> Seq((n, s)).toDF("n_docs", "sum_dl").coalesce(1)),
-      s"$path/meta", Seq(Tuple1(1)).toDF("format_version"),
+      s"$path/meta", Map("format_version" -> 1),
       folded = Seq(s"$path/batch_postings", s"$path/batch_stats"))
   }
 }

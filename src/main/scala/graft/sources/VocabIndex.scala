@@ -29,19 +29,13 @@ import graft.operators.TextAnalysis
   */
 object VocabIndex {
 
-  private def vocabMeta(spark: SparkSession): EpochStore.Meta = {
-    import spark.implicits._
-    (version, lastBatchId) =>
-      Seq((version, lastBatchId)).toDF("version", "last_batch_id")
-  }
-
   private def distinctTerms(docs: DataFrame, textCol: String): DataFrame =
     TextAnalysis.corpusTerms(docs, textCol).distinct()
 
   /** Write a fresh vocabulary of `textCol` over `docs` (epoch 0). */
   def build(docs: DataFrame, textCol: String, path: String): Unit =
     EpochStore.build(docs.sparkSession, path, distinctTerms(docs, textCol),
-      vocabMeta(docs.sparkSession))
+      Map.empty)
 
   /** Load the live epoch's term set. Fails if no committed meta. */
   def load(spark: SparkSession, path: String): DataFrame =
@@ -83,10 +77,10 @@ object VocabIndex {
     EpochStore.append(spark, path, batchId, "vocabulary") { cursor =>
       require(batchId.isDefined, s"no vocabulary committed at $path")
       EpochStore.build(spark, path, distinctTerms(batch, textCol),
-        vocabMeta(spark), cursor)
+        Map.empty, cursor)
     } { (_, stored) =>
-      (stored.unionByName(distinctTerms(batch, textCol))
-        .distinct().localCheckpoint(), vocabMeta(spark))
+      stored.unionByName(distinctTerms(batch, textCol))
+        .distinct().localCheckpoint()
     }
   }
 

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Sampling, Sketches}
-import graft.sources.{DeconIndex, VocabIndex}
+import graft.sources.{Commit, DeconIndex, VocabIndex}
 
 /** The versioned-epoch lifecycle across all eight epoch stores: the
   * Spark jobs one warm append runs, the crash contract (torn meta flip,
@@ -81,7 +81,7 @@ class EpochStoreSpec extends AnyFunSuite {
   }
 
   private def version(path: String): Long =
-    spark.read.parquet(s"$path/meta").head().getAs[Long]("version")
+    Commit.readMeta(spark, s"$path/meta")("version").toLong
 
   /** Messages (with their throwables' class chains) logged while `body`
     * runs.
@@ -105,12 +105,11 @@ class EpochStoreSpec extends AnyFunSuite {
   }
 
   test("one warm append runs the pinned number of Spark jobs per store") {
-    // the meta is read once per append (schema + row: 2 jobs); its
-    // existence costs no job
+    // meta reads and writes are driver-side file I/O: no job
     val expected = Map(
-      "hll" -> 8, "cms" -> 8, "cms_ingest" -> 8, "quantile" -> 20,
-      "kll" -> 12, "kll_ingest" -> 12, "bins_ingest" -> 9, "sample" -> 17,
-      "decon" -> 16, "vocab_ingest" -> 8, "vocab_absorb" -> 8)
+      "hll" -> 5, "cms" -> 5, "cms_ingest" -> 5, "quantile" -> 17,
+      "kll" -> 9, "kll_ingest" -> 9, "bins_ingest" -> 6, "sample" -> 14,
+      "decon" -> 13, "vocab_ingest" -> 5, "vocab_absorb" -> 5)
     val absorb: Append = (dir, i) => VocabIndex.absorb(batch(i), "text", dir)
     val counted = (appends :+ ("vocab_absorb" -> absorb)).map {
         case (name, run) =>
