@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.FrameEngine
@@ -12,12 +12,7 @@ import graft.core.FrameEngine
 object GoldenDump {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/graft_golden")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("WARN")
     import spark.implicits._
 
     def dump(name: String, df: DataFrame): Unit = {

@@ -1,7 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
-/** What the gate mains ([[Bench]], [[Verify]], [[Explain]]) share: the
-  * local session they run in and the env-var gate selection. */
+/** What the mains share: the local session that [[Bench]], [[Verify]],
+  * [[Explain]] and [[GoldenDump]] run in, and the env-var gate selection
+  * of the three gate mains. */
 private[graft] object Harness {
   /** `local[SPARK_GRAFT_CPUS]` with one shuffle partition per core, no
     * UI, UTC session time. */

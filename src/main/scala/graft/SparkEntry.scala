@@ -2263,7 +2263,8 @@ object SparkEntry {
   /** Composed curation: length gate -> exact-normalized dedup ->
     * decontaminate (probe = %13 docs) -> train/val/test assignment.
     * The near-dup and line-dedup stages are off here (their survivor
-    * rules are gated separately); the full path runs in specs + Stress.
+    * rules are gated separately); the full path runs in the
+    * OperatorsSpec case "curate pipeline, full path".
     */
   private def curatePipelineQ(s: SparkSession, dir: String): DataFrame =
     graft.operators.Pipeline.curate(

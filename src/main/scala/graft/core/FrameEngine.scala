@@ -181,14 +181,21 @@ final class FrameEngine private (
     * outer merge in memory, so the plan is scan → project → `Generate`.
     * This holds because every merge key contains the row key: each merged
     * row comes from one input row. Rows that share a key are merged
-    * separately, where the reference refuses them and a join would cross
-    * them (DIVERGENCES.md #13). Only columns whose rows come from a
-    * frame-level step — a user `iterable` step, a JSON-string expand or a
-    * variant step — are folded on after the in-row merge with full-outer
-    * joins, one exchange per side each; the fold keeps its order, since
-    * outer merges on differing key sets are not associative. A shared
-    * level whose type differs across columns (the join would cast) or
-    * has no in-memory equality (see [[RowMerge]]) folds every column.
+    * separately, where the reference refuses them (DIVERGENCES.md #13).
+    *
+    * The other columns fold on with full-outer joins on the key, one
+    * exchange per side each; the fold keeps its order, since outer merges
+    * on differing key sets are not associative. They are:
+    *  - the first column whose rows come from a frame-level step (a user
+    *    `iterable` step, a JSON-string expand or a variant step) and every
+    *    column after it;
+    *  - every column, when fewer than two leading columns can merge in
+    *    the row;
+    *  - every column, when [[RowMerge]] returns `None` (e.g. a shared
+    *    level whose type differs across columns, or that has no in-memory
+    *    equality).
+    * A join crosses the rows that share a key, so with duplicate keys the
+    * folded columns are crossed and the result depends on column order.
     */
   def toLong(
       selCols: Seq[String] = Nil,

@@ -277,6 +277,32 @@ class FrameEngineSpec extends AnyFunSuite {
     assert(out.filter($"k".isNull).count() === 3L)
   }
 
+  test("duplicate keys with a frame-level step: folded columns are crossed" +
+      " by key, so the result depends on column order") {
+    // two input rows share k = 0; b's rows come from a user `iterable`
+    // step, so b (and any column after it) folds on with a key join
+    val df = Seq(
+      (0L, Seq(1L), Seq(10L), "[7]"),
+      (0L, Seq(2L), Seq(20L), "[8]")
+    ).toDF("k", "a", "c", "b")
+    val eng = FrameEngine(df, Seq("k"))
+    def run(order: String*): (Long, Set[(Long, Long)], Set[String]) = {
+      val out = eng.toLong(selCols = order, maxDepthPer = Map("b" -> 1),
+        iterable = Map("b" -> graft.core.Explode.jsonStep))
+      val rows = out.select("a", "c", "b").collect()
+      (rows.length.toLong, rows.map(r => (r.getLong(0), r.getLong(1))).toSet,
+        rows.map(_.getString(2)).toSet)
+    }
+    val sameRow = Set((1L, 10L), (2L, 20L))
+    val crossed = Set((1L, 10L), (1L, 20L), (2L, 10L), (2L, 20L))
+    // b last: a and c merge inside each row; only b is crossed (2 x 2)
+    assert(run("a", "c", "b") === ((4L, sameRow, Set("7", "8"))))
+    // b second: one leading in-row column is too few, so every column
+    // folds and a, c and b are all crossed (2 x 2 x 2); b first likewise
+    assert(run("a", "b", "c") === ((8L, crossed, Set("7", "8"))))
+    assert(run("b", "a", "c") === ((8L, crossed, Set("7", "8"))))
+  }
+
   test("toLong merges plan no shuffle exchange (AQE off and on)") {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper

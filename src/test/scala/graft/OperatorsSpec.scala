@@ -798,6 +798,25 @@ class OperatorsSpec extends AnyFunSuite {
       Seq((1L, "aa ab aa ab aa")).toDF("doc_id", "text"),
       "doc_id", "text", merges = expected).collect()
     assert(counts(0).getLong(1) === 6L)
+    // the piece-type cap: 28 types ("ab" x20, " ab" x20, "zqa".."zqz" x1)
+    // over maxPieceTypes = 10 keeps the top 10 by (count DESC, piece), so
+    // only zqa..zqh reach training. Capped: (a,b)=40, (' ',ab)=20,
+    // (z,q)=8, then (zq,a)..(zq,h) at 1 each = exactly 11 merges. Without
+    // the cap (z,q)=26 would come second.
+    val capped = (Seq.fill(20)("ab ab") ++ ('a' to 'z').map(c => s"zq$c"))
+      .toDF("text")
+    assert(capped.select(explode(graft.functions.TextFunctions
+      .bpePieces(col("text")))).distinct().count() === 28L)
+    def trainCapped(d: org.apache.spark.sql.DataFrame) =
+      TextAnalysis.bpeTrainMerges(d, "text", numMerges = 11,
+        maxPieceTypes = 10, minPairCount = 1L)
+    val cappedMerges = trainCapped(capped)
+    assert(cappedMerges === Seq("a" -> "b", " " -> "ab", "z" -> "q") ++
+      ('a' to 'h').map(c => "zq" -> c.toString))
+    assert(TextAnalysis.bpeTrainMerges(capped, "text", numMerges = 2,
+      minPairCount = 1L) === Seq("a" -> "b", "z" -> "q"))
+    // a rerun over a differently partitioned input is bit-identical
+    assert(trainCapped(capped.repartition(3)) === cappedMerges)
     // encodeToken is decodeToken's inverse on every byte
     (0 until 256).foreach { b =>
       val raw = new String(Array(b.toByte), "ISO-8859-1")
@@ -1151,9 +1170,13 @@ class OperatorsSpec extends AnyFunSuite {
     // BEFORE the meta tombstone — the committed set stays loadable
     intercept[IllegalArgumentException] {
       Packs.writePacks(packs, path, seqTokens = 16L, nBuckets = 16,
-        mergesFingerprint = fp, numFiles = 8)
+        mergesFingerprint = "x", numFiles = 8)
     }
-    assert(Packs.loadPacks(spark, path).mergesFingerprint === fp)
+    val kept = Packs.loadPacks(spark, path)
+    assert(kept.mergesFingerprint === fp && kept.nBuckets === 4)
+    assert(kept.packs.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getSeq[Int](3))).toSet === want)
   }
 
   test("Classifier ngrams=2: bigram features separate a word-ORDER" +
@@ -5460,6 +5483,7 @@ class OperatorsSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     DedupIndex.build(corpus, "doc_id", "text", path, numFiles = 2)
     val baseHashFiles = parquetFileCount(s"$path/hashes")
+    val baseBucketFiles = parquetFileCount(s"$path/buckets")
     // three appends, one with a simulated crash-replay double absorb
     for (i <- 1 to 3) {
       val b = DedupIndex.dedupBatch(spark, path,
@@ -5492,6 +5516,8 @@ class OperatorsSpec extends AnyFunSuite {
     assert(h.count() === h.select("text_hash").distinct().count())
     assert(parquetFileCount(s"$path/hashes") <= baseHashFiles,
       "hash file count back at build level")
+    assert(parquetFileCount(s"$path/buckets") <= baseBucketFiles,
+      "bucket file count back at build level")
     assert(marker.getFileSystem(
       spark.sparkContext.hadoopConfiguration).exists(marker),
       "ingest markers survive compaction (membership is unchanged)")
@@ -5745,6 +5771,7 @@ class OperatorsSpec extends AnyFunSuite {
         .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("doc_id")) ->
           (math.rint(r.getAs[Double]("score") * 1e9) / 1e9)).toMap
     RetrievalIndex.build(base, "doc_id", "text", path, numFiles = 2)
+    val buildPostingFiles = parquetFileCount(s"$path/postings")
     RetrievalIndex.append(spark, path, batch, "doc_id", "text", "x")
     val expected = graft.operators.TextAnalysis
       .bm25Scores(all, "doc_id", "text", qs).collect()
@@ -5765,6 +5792,8 @@ class OperatorsSpec extends AnyFunSuite {
     RetrievalIndex.compact(spark, path, numFiles = 2)
     assert(scores() === expected, "bit-parity through compaction")
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/batch_postings")))
+    assert(parquetFileCount(s"$path/postings") <= buildPostingFiles + 1,
+      "posting file count back at build level")
     RetrievalIndex.append(spark, path, batch, "doc_id", "text", "x")
     assert(scores() === expected, "post-compact replay still no-ops")
     val idx = RetrievalIndex.load(spark, path)

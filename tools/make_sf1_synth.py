@@ -1,11 +1,13 @@
 #!/usr/bin/env python3
-"""Synthesize a ~sf1 test directory from sf0.1 for scaling observations.
+"""Synthesize a ~sf1 test directory from sf0.1: the one scale replica.
 
 Replicates every fact table MULT times with per-copy key shifts (shift =
 copy_index * (max_key + 1), so keys stay disjoint and join fan-outs stay
 realistic); the tiny dim tables (nation, region) stay 1x. Schemas are
-preserved exactly (pyarrow round-trip), so graft.Bench runs against the
-output unchanged via SPARK_GRAFT_SF_DIR.
+preserved exactly (pyarrow round-trip), so graft.Bench (via
+SPARK_GRAFT_SF_DIR) and graft.Verify (its sfDir argument) run against the
+output unchanged, and tools/check_oracle.py (plus tools/check_phash_sf1.py
+for multimodal_phash_pairs) checks the Verify dump against it.
 
 Caveats for interpreting the resulting numbers (see OPTIMIZATION_r20.md):
   - non-key columns (texts, payload seeds derived from ids are fine, but
