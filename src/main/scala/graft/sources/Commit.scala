@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The artifact-commit protocol of the persisted stores ([[DedupIndex]],
   * [[RetrievalIndex]], [[AnnIndex]], [[DeconIndex]], [[Packs]],
@@ -18,6 +19,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - meta ([[writeMeta]] / [[readMeta]]): a store's parameters as one
   *    small properties file, written and read on the driver with no
   *    Spark job — the only code that knows the meta format;
+  *  - artifact schemas ([[schemaEntry]] / [[open]]): each artifact's
+  *    `StructType` JSON rides in its store's meta from the write that
+  *    made it, and the artifact is opened with that schema, so opening
+  *    a store directory runs no schema-inference job;
   *  - meta tombstone ([[tombstone]]): meta is deleted before an
   *    artifact is touched and written last, so a crash in between
   *    leaves a store its loader refuses loudly instead of pairing stale
@@ -98,6 +103,27 @@ private[graft] object Commit {
       throw new NoSuchElementException(s"meta at $dir has no $k"))
   }
 
+  /** The meta entry that records `df`'s schema as artifact `name`'s:
+    * the caller adds it to the meta it commits when `df` is written.
+    * (A file read makes every field nullable, as inference would.)
+    */
+  def schemaEntry(name: String, df: DataFrame): (String, String) =
+    s"schema.$name" -> df.schema.json
+
+  /** Artifact `name` at `dir`, opened with the schema its store's meta
+    * `meta` recorded by [[schemaEntry]]: no schema-inference job. A
+    * meta without that entry fails loudly naming the meta's path; there
+    * is no fallback to inference.
+    */
+  def open(
+      spark: SparkSession,
+      meta: Map[String, String],
+      name: String,
+      dir: String): DataFrame =
+    spark.read
+      .schema(DataType.fromJson(meta(s"schema.$name")).asInstanceOf[StructType])
+      .parquet(dir)
+
   // -------------------------------------------------------------------
   // Layout-clean sentinel (`_layout_clean_<family>/` under the store
   // path): present iff that family's artifacts are exactly as the last
@@ -154,7 +180,9 @@ private[graft] object Commit {
     * are deleted, and `meta` is written LAST — a crash at any point
     * leaves either the old store, or a tombstoned one that its loader
     * refuses loudly. `meta` is built by the caller BEFORE this runs,
-    * from the meta it read.
+    * from the meta it read; the schema of each staged artifact is
+    * recorded in it under the artifact's directory name
+    * ([[schemaEntry]]).
     */
   def swapCompacted(
       spark: SparkSession,
@@ -185,6 +213,7 @@ private[graft] object Commit {
     }
     tombstone(spark, folded: _*)
     // 4. meta last
-    writeMeta(spark, metaDir, meta)
+    writeMeta(spark, metaDir,
+      meta ++ staged.map { case (dir, df) => schemaEntry(dir, df) })
   }
 }

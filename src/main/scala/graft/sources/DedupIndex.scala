@@ -1,7 +1,13 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.InterpretedOrdering
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, StringType,
+  StructField, StructType}
 
 import graft.functions.TextFunctions.wordGramHash128
 import graft.operators.Dedup
@@ -24,7 +30,8 @@ import graft.operators.Dedup
   *  - `buckets/`: `(doc_id, band, bucket)` — MinHash band-bucket
   *    ownership rows ([[Dedup.wordBandBucketRows]]) of the corpus's
   *    EXACT-SURVIVOR docs. `bands` rows per survivor.
-  *  - `meta`: `(shingle_n, num_hashes, bands)` — the banding parameters;
+  *  - `meta`: `(shingle_n, num_hashes, bands)` — the banding parameters
+  *    — and the two artifacts' schemas ([[Commit.schemaEntry]]);
   *    written LAST (tombstoned first on rebuild, the [[Packs]]
   *    discipline) so a mid-build crash leaves an unloadable directory,
   *    and a loader can never probe an index with mismatched banding.
@@ -56,13 +63,14 @@ import graft.operators.Dedup
   *    in the band table too, and a future near-dup of a dropped doc
   *    must still be dropped.
   *
-  * Scale shape of [[append]] (the whole point): the batch side of every
-  * join is BROADCAST, so the corpus-sized artifacts are only ever
-  * STREAMED through broadcast hash joins — no corpus shuffle, no corpus
-  * sort, cost linear in index size with a batch-sized output. The raw
-  * corpus text is never touched. With `broadcastBatch = false` the
-  * joins fall back to shuffles for batches too large to broadcast —
-  * at that size, prefer rebuilding.
+  * Scale shape of [[append]] (the whole point): the batch's keys — id,
+  * normalized hash, band signature — are collected to the driver, and
+  * the corpus-sized artifacts are only ever SCANNED, filtered by those
+  * keys as a pushed-down `In` filter; the keep-first rules then run on
+  * the driver over batch-sized sets. No corpus shuffle, no corpus sort,
+  * no join, and the raw corpus text is never touched. The driver holds
+  * what the broadcast sides of a join formulation would hold: a batch
+  * too large for that is one to rebuild with.
   */
 object DedupIndex {
 
@@ -112,17 +120,20 @@ object DedupIndex {
     // exact survivors carry their text into the band pass; reading the
     // just-written hashes/ back avoids recomputing the aggregate and
     // keeps this stage's lineage off the raw-docs double-scan path
-    val keeps = spark.read.parquet(s"$path/hashes")
+    val hashSchema = Commit.schemaEntry("hashes", hashes)
+    val keeps = Commit.open(spark, Map(hashSchema), "hashes",
+      s"$path/hashes")
     val survivors = hashed.join(keeps, Seq("text_hash"))
       .filter(col("doc_id") === col("keep_id"))
       .select(col("doc_id"), col("__text"))
-    Dedup.wordBandBucketRows(survivors, "doc_id", "__text",
-        shingleN, numHashes, bands)
-      .repartition(numFiles, col("band"), col("bucket"))
+    val bandRows = Dedup.wordBandBucketRows(survivors, "doc_id", "__text",
+      shingleN, numHashes, bands)
+    bandRows.repartition(numFiles, col("band"), col("bucket"))
       .sortWithinPartitions("band", "bucket")
       .write.mode("overwrite").parquet(s"$path/buckets")
     Commit.writeMeta(spark, s"$path/meta", Map("shingle_n" -> shingleN,
-      "num_hashes" -> numHashes, "bands" -> bands))
+      "num_hashes" -> numHashes, "bands" -> bands, hashSchema,
+      Commit.schemaEntry("buckets", bandRows)))
     // fresh build = folded rows at the build layout by construction
     Commit.markClean(spark, path, "exact")
   }
@@ -130,8 +141,8 @@ object DedupIndex {
   def load(spark: SparkSession, path: String): Loaded = {
     val meta = Commit.readMeta(spark, s"$path/meta")
     Loaded(
-      hashes = spark.read.parquet(s"$path/hashes"),
-      buckets = spark.read.parquet(s"$path/buckets"),
+      hashes = Commit.open(spark, meta, "hashes", s"$path/hashes"),
+      buckets = Commit.open(spark, meta, "buckets", s"$path/buckets"),
       shingleN = meta("shingle_n").toInt,
       numHashes = meta("num_hashes").toInt,
       bands = meta("bands").toInt)
@@ -143,15 +154,15 @@ object DedupIndex {
     * exact-survivor band rows so the NEXT append sees this batch as
     * part of the corpus.
     *
-    * Every returned/appended frame is materialized (eager local
-    * checkpoint) BEFORE any append file lands: they all derive from
-    * scans of `hashes/`/`buckets/`, and a scan recomputed after the
-    * directory grew would double-read (the [[AnnIndex.append]]
-    * read-write-overlap lesson). Append atomicity is parquet-append
-    * atomicity; replaying a crashed append is safe for correctness
-    * (duplicate hash/bucket rows only re-confirm membership — the
-    * exact stage aggregates by hash, the near-dup stage takes
-    * DISTINCT ids) at the cost of dead rows until a rebuild.
+    * Every returned/appended frame is fixed BEFORE any append file
+    * lands: the survivors are the batch filtered by keys the driver
+    * holds, and the appended state is built on the driver, so nothing
+    * recomputed after the directories grew can re-read them (the
+    * [[AnnIndex.append]] read-write-overlap lesson). Append atomicity is
+    * parquet-append atomicity; replaying a crashed append is safe for
+    * correctness (duplicate hash/bucket rows only re-confirm membership
+    * — both stages test membership) at the cost of dead rows until a
+    * compaction.
     */
   def append(
       spark: SparkSession,
@@ -159,100 +170,120 @@ object DedupIndex {
       newDocs: DataFrame,
       idCol: String,
       textCol: String,
-      numFiles: Int = 8,
-      broadcastBatch: Boolean = true): DataFrame = {
-    val b = dedupBatch(spark, path, newDocs, idCol, textCol,
-      broadcastBatch)
+      numFiles: Int = 8): DataFrame = {
+    val b = dedupBatch(spark, path, newDocs, idCol, textCol)
     absorb(spark, path, b, numFiles)
     b.survivors
   }
 
-  /** The result of deduping one batch against the frozen index, every
-    * frame MATERIALIZED (eager local checkpoint): `survivors` = the
-    * batch rows (original schema) that pass both stages; `newHashes` /
-    * `newBuckets` = the state [[absorb]] appends. Computing this is
-    * PURE — the index directories are only read — so it can be
-    * recomputed idempotently until [[absorb]] runs (the property
-    * [[ingestBatch]]'s crash-replay protocol rests on).
+  /** The result of deduping one batch against the frozen index:
+    * `survivors` = the batch rows (original schema) that pass both
+    * stages, the batch filtered by the surviving `(id, hash)` pairs —
+    * no index scan in its lineage; `newHashes` / `newBuckets` = the
+    * state [[absorb]] appends, built on the driver and sorted by key.
+    * Computing this is PURE — the index directories are only read — so
+    * it can be recomputed idempotently until [[absorb]] runs (the
+    * property [[ingestBatch]]'s crash-replay protocol rests on).
     */
   final case class BatchDedup(
       survivors: DataFrame,
       newHashes: DataFrame,
       newBuckets: DataFrame)
 
+  /** One batch row's keys; `rank` orders ids as Spark does, equal ids
+    * sharing a rank.
+    */
+  private final case class BatchKey(
+      id: Any, rank: Int, hash: String, bands: Seq[String])
+
   /** Stage-1/stage-2 dedup of a batch against the frozen index — the
-    * probe half of [[append]], with no writes.
+    * probe half of [[append]], with no writes. At most two Spark jobs:
+    * one collect of the batch keys, one collect of the index rows that
+    * match them; the keep-first rules run on the driver.
     */
   def dedupBatch(
       spark: SparkSession,
       path: String,
       newDocs: DataFrame,
       idCol: String,
-      textCol: String,
-      broadcastBatch: Boolean = true): BatchDedup = {
+      textCol: String): BatchDedup = {
     val idx = load(spark, path)
-    def bc(df: DataFrame): DataFrame =
-      if (broadcastBatch) broadcast(df) else df
-    // one materialization of the batch's hash column: it feeds three
-    // consumers (index probe, min-id fold, survivor projection)
-    val batch = newDocs
-      .withColumn("__h", Dedup.normalizedHash(col(textCol)))
-      .localCheckpoint()
-    // STAGE 1 (exact): which batch hashes does the index already own?
-    // Probe direction matters at scale — the corpus-sized hashes/ is
-    // the STREAMED side of a broadcast semi join against the batch's
-    // distinct hashes, and the output is batch-bounded
-    val hits = idx.hashes
-      .join(bc(batch.select(col("__h").as("text_hash")).distinct()),
-        Seq("text_hash"), "left_semi")
-      .select(col("text_hash").as("__h"))
-    val minIds = batch.groupBy(col("__h"))
-      .agg(min(col(idCol)).as("__keep"))
-    // materialized: downstream it feeds the band pass, the survivor
-    // projection AND the hash append — one checkpoint means hashes/ is
-    // streamed exactly once per append, and nothing below re-reads it
-    val exactSurv = batch.join(minIds, Seq("__h"))
-      .filter(col(idCol) === col("__keep")).drop("__keep")
-      .join(bc(hits), Seq("__h"), "left_anti")
-      .localCheckpoint()
-    // STAGE 2 (near-dup): band rows of the batch's exact survivors —
-    // batch-sized — probe the corpus band table (broadcast again, the
-    // corpus side streams), plus the batch-internal keep-first join
-    val bb = Dedup.wordBandBucketRows(
-        exactSurv.select(col(idCol), col(textCol)), idCol, textCol,
-        idx.shingleN, idx.numHashes, idx.bands)
-      .localCheckpoint()
-    val corpusHits = idx.buckets.select(col("band"), col("bucket"))
-      .join(bc(bb), Seq("band", "bucket"))
-      .select(col(idCol)).distinct()
-    val internalHits = bb.as("a").join(bb.as("b"),
-        col("a.band") === col("b.band") &&
-        col("a.bucket") === col("b.bucket") &&
-        col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"b.$idCol").as(idCol)).distinct()
-    val dropped = corpusHits.union(internalHits).distinct()
-    // survivors must be pinned BEFORE buckets/ grows: its lineage scans
-    // buckets/ (via corpusHits), and a post-append recompute would see
-    // the batch's own band rows and drop every surviving doc as a
-    // near-dup of itself
-    val survivors = exactSurv
-      .join(bc(dropped), Seq(idCol), "left_anti")
-      .select(newDocs.columns.map(col): _*)
-      .localCheckpoint()
+    val idType = newDocs.select(col(idCol)).schema.head.dataType
+    // a row with a null id or text never survives (a null hash matches
+    // nothing, a null id equals no first id) and drops no other row, so
+    // it never reaches the driver
+    val collected = newDocs
+      .filter(col(idCol).isNotNull && col(textCol).isNotNull)
+      .select(col(idCol), Dedup.normalizedHash(col(textCol)),
+        Dedup.wordBands(col(textCol), idx.shingleN, idx.numHashes,
+          idx.bands))
+      .collect()
+    // dense id ranks under Spark's own ordering of the id type, so
+    // "lower id" and "equal ids" mean here what they mean in SQL
+    val ord = InterpretedOrdering.forSchema(Seq(idType))
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
+    val byId = collected.map(r => (InternalRow(toCatalyst(r.get(0))), r))
+      .sortWith((a, b) => ord.lt(a._1, b._1))
+    val ranks = byId.indices.scanLeft(-1) { (rank, i) =>
+      if (i > 0 && ord.equiv(byId(i - 1)._1, byId(i)._1)) rank else rank + 1
+    }.tail
+    val keys = ranks.zip(byId).map { case (rank, (_, r)) =>
+      BatchKey(r.get(0), rank, r.getString(1), r.getSeq[String](2))
+    }
+    // the index rows that share a key with the batch: both directories
+    // scanned under a pushed-down In filter, one job
+    val found = idx.hashes
+      .filter(col("text_hash").isin(keys.map(_.hash).distinct: _*))
+      .select(col("text_hash"), lit(null).cast(IntegerType).as("band"),
+        lit(null).cast(StringType).as("bucket"))
+      .union(idx.buckets
+        .filter(col("bucket").isin(keys.flatMap(_.bands).distinct: _*))
+        .select(lit(null).cast(StringType).as("text_hash"), col("band"),
+          col("bucket")))
+      .collect()
+    val indexedHashes = found.filter(!_.isNullAt(0)).map(_.getString(0)).toSet
+    val indexedBuckets = found.filter(_.isNullAt(0))
+      .map(r => (r.getInt(1), r.getString(2))).toSet
+    // STAGE 1 (exact): the lowest id of each hash survives, with every
+    // row sharing that id, unless the index already owns the hash
+    val firstOfHash = keys.groupMapReduce(_.hash)(_.rank)(math.min)
+    val exact = keys.filter(k =>
+      k.rank == firstOfHash(k.hash) && !indexedHashes(k.hash))
+    // STAGE 2 (near-dup): an exact survivor drops when one of its
+    // (band, bucket) keys is indexed, or held by a lower id in the batch
+    val bandRows = for {
+      k <- exact
+      (bucket, band) <- k.bands.zipWithIndex
+    } yield ((band, bucket), k)
+    val firstOfBucket = bandRows.groupMapReduce(_._1)(_._2.rank)(math.min)
+    val dropped = bandRows.collect {
+      case (key, k) if indexedBuckets(key) || k.rank > firstOfBucket(key) =>
+        k.rank
+    }.toSet
+    val kept = exact.filterNot(k => dropped(k.rank))
+      .distinctBy(k => (k.rank, k.hash))
     // the absorb state: every fresh hash (owner = the exact survivor,
     // near-dropped or not) and every exact-survivor's band rows — the
-    // two wider-than-survivors invariants the telescoping proof needs.
-    // Both project off materialized frames, so the appends read
-    // checkpoint blocks, never the directories they grow
+    // two wider-than-survivors invariants the telescoping proof needs
+    def local(rows: Seq[Row], fields: (String, DataType)*): DataFrame =
+      spark.createDataFrame(rows.asJava,
+        StructType(fields.map { case (n, t) => StructField(n, t) }))
     BatchDedup(
-      survivors = survivors,
-      newHashes = exactSurv
-        .select(col("__h").as("text_hash"), col(idCol).as("keep_id")),
-      newBuckets = bb
-        .select(col(idCol).as("doc_id"), col("band"), col("bucket")))
+      survivors = newDocs.filter(
+        struct(col(idCol).as("i"), Dedup.normalizedHash(col(textCol)).as("h"))
+          .isin(kept.map(k => struct(lit(k.id).cast(idType).as("i"),
+            lit(k.hash).as("h"))): _*)),
+      newHashes = local(exact.sortBy(_.hash).map(k => Row(k.hash, k.id)),
+        "text_hash" -> StringType, "keep_id" -> idType),
+      newBuckets = local(
+        bandRows.sortBy(_._1).map { case ((band, bucket), k) =>
+          Row(k.id, band, bucket) },
+        "doc_id" -> idType, "band" -> IntegerType, "bucket" -> StringType))
   }
 
-  /** Append a [[dedupBatch]] result's state to the index. BUCKETS are
+  /** Append a [[dedupBatch]] result's state to the index. Its frames
+    * are driver-built and sorted by key, so each write runs without a
+    * shuffle and every file holds one key range. BUCKETS are
     * written BEFORE hashes deliberately: a batch doc is recognized as
     * "already absorbed" by its HASH, so writing the hash last means a
     * crash-replay of a partially-absorbed batch recomputes
@@ -260,7 +291,7 @@ object DedupIndex {
     * whose hash landed necessarily has its band rows landed too, and a
     * doc whose hash did not land is recomputed as a fresh exact
     * survivor (its duplicated band rows are benign: the near-dup stage
-    * takes DISTINCT ids). The reverse order would let a crash leave a
+    * tests membership). The reverse order would let a crash leave a
     * hash-absorbed survivor with no band rows — an invariant hole no
     * replay could see.
     */
@@ -273,11 +304,9 @@ object DedupIndex {
     // sentinel first: a crash after this delete but before a file lands
     // only forfeits the next compact's skip — never the reverse hole
     Commit.unmarkClean(spark, path, "exact")
-    b.newBuckets.repartition(numFiles, col("band"), col("bucket"))
-      .sortWithinPartitions("band", "bucket")
+    b.newBuckets.coalesce(numFiles)
       .write.mode("append").parquet(s"$path/buckets")
-    b.newHashes.repartition(numFiles, col("text_hash"))
-      .sortWithinPartitions("text_hash")
+    b.newHashes.coalesce(numFiles)
       .write.mode("append").parquet(s"$path/hashes")
   }
 
@@ -311,10 +340,9 @@ object DedupIndex {
       batchId: Long,
       idCol: String,
       textCol: String,
-      numFiles: Int = 8,
-      broadcastBatch: Boolean = true): Unit =
+      numFiles: Int = 8): Unit =
     ingestOnce(spark, s"$indexPath/ingested", outPath, batchId)(
-      dedupBatch(spark, indexPath, batch, idCol, textCol, broadcastBatch))(
+      dedupBatch(spark, indexPath, batch, idCol, textCol))(
       _.survivors, absorb(spark, indexPath, _, numFiles))
 
   /** The one-batch ingest protocol of every family: the absorb marker
@@ -394,11 +422,12 @@ object DedupIndex {
         .select(col(idCol),
           posexplode(wordGramHash128(col("__ws"), k))
             .as(Seq("__gpos", "__h"))))
-    grams.select(col("__h").as("gram_hash")).distinct()
-      .repartition(numFiles, col("gram_hash"))
+    val hashes = grams.select(col("__h").as("gram_hash")).distinct()
+    hashes.repartition(numFiles, col("gram_hash"))
       .sortWithinPartitions("gram_hash")
       .write.mode("overwrite").parquet(s"$path/grams")
-    Commit.writeMeta(spark, s"$path/grams_meta", Map("span_words" -> k))
+    Commit.writeMeta(spark, s"$path/grams_meta", Map("span_words" -> k,
+      Commit.schemaEntry("grams", hashes)))
     // fresh build = distinct hashes at the build layout by construction
     Commit.markClean(spark, path, "substring")
     // grams is already checkpointed above (it also feeds the grams/
@@ -424,13 +453,13 @@ object DedupIndex {
     *
     * Scale shape: the batch's distinct gram hashes BROADCAST into a
     * semi join that STREAMS the corpus-scale `grams/` artifact —
-    * a columnar scan of 16-byte keys with no corpus shuffle (the
-    * [[append]] probe direction); everything else (internal
+    * a columnar scan of 16-byte keys with no corpus shuffle;
+    * everything else (internal
     * first-occurrence aggregate, starts union, rewrite join) is
     * batch-sized. Matched hashes, starts, and the appended new-hash
     * set are all materialized BEFORE any append file lands, so no
     * consumer's lineage can rescan a directory it is growing (the
-    * [[append]] read-write-overlap discipline).
+    * [[AnnIndex.append]] read-write-overlap discipline).
     */
   def appendSubstring(
       spark: SparkSession,
@@ -438,10 +467,8 @@ object DedupIndex {
       newDocs: DataFrame,
       idCol: String,
       textCol: String,
-      numFiles: Int = 8,
-      broadcastBatch: Boolean = true): DataFrame = {
-    val b = dedupSubstringBatch(spark, path, newDocs, idCol, textCol,
-      broadcastBatch)
+      numFiles: Int = 8): DataFrame = {
+    val b = dedupSubstringBatch(spark, path, newDocs, idCol, textCol)
     absorbSubstring(spark, path, b, numFiles)
     b.rewritten
   }
@@ -466,12 +493,10 @@ object DedupIndex {
       path: String,
       newDocs: DataFrame,
       idCol: String,
-      textCol: String,
-      broadcastBatch: Boolean = true): SubstringBatch = {
-    val k = Commit.readMeta(spark, s"$path/grams_meta")("span_words").toInt
-    def bc(df: DataFrame): DataFrame =
-      if (broadcastBatch) broadcast(df) else df
-    val idx = spark.read.parquet(s"$path/grams")
+      textCol: String): SubstringBatch = {
+    val meta = Commit.readMeta(spark, s"$path/grams_meta")
+    val k = meta("span_words").toInt
+    val idx = Commit.open(spark, meta, "grams", s"$path/grams")
     // NO Spread on the batch tokenize — same re-measured regression as
     // [[buildSubstring]]'s note (streaming_substring_index 4.35 → 4.63 s
     // in the same 7-rep A/B)
@@ -485,11 +510,11 @@ object DedupIndex {
     val batchHashes = bg.select(col("__h")).distinct()
     // index ∩ batch: batch-bounded output, corpus side streamed
     val hits = idx
-      .join(bc(batchHashes.select(col("__h").as("gram_hash"))),
+      .join(broadcast(batchHashes.select(col("__h").as("gram_hash"))),
         Seq("gram_hash"), "left_semi")
       .select(col("gram_hash").as("__h"))
       .localCheckpoint()
-    val idxStarts = bg.join(bc(hits), Seq("__h"), "left_semi")
+    val idxStarts = bg.join(broadcast(hits), Seq("__h"), "left_semi")
       .select(col(idCol), col("__gpos"))
     val dup = bg.groupBy(col("__h"))
       .agg(count(lit(1)).as("__c"),
@@ -512,7 +537,7 @@ object DedupIndex {
     SubstringBatch(
       rewritten = Dedup.applyWordRemoval(toks, starts, idCol, k),
       newHashes = batchHashes
-        .join(bc(hits), Seq("__h"), "left_anti")
+        .join(broadcast(hits), Seq("__h"), "left_anti")
         .select(col("__h").as("gram_hash")))
   }
 
@@ -603,14 +628,16 @@ object DedupIndex {
     // independent artifacts (vecs derive from the checkpoints, the
     // centroid table from the caller's frame) — overlap the two write
     // jobs (guide §2.6); meta still lands last
+    val cells = centroids.select(col("centroid_id"), col("__cv").as("cvec"))
     Commit.runAll(Seq(
       () => all.repartition(numFiles, col("centroid_id"))
         .sortWithinPartitions("centroid_id", "vec_id")
         .write.mode("overwrite").parquet(s"$path/sem_vecs"),
-      () => centroids.select(col("centroid_id"), col("__cv").as("cvec"))
-        .coalesce(1).write.mode("overwrite")
+      () => cells.coalesce(1).write.mode("overwrite")
         .parquet(s"$path/sem_centroids")))
-    Commit.writeMeta(spark, s"$path/sem_meta", Map("tau" -> tau))
+    Commit.writeMeta(spark, s"$path/sem_meta", Map("tau" -> tau,
+      Commit.schemaEntry("sem_vecs", all),
+      Commit.schemaEntry("sem_centroids", cells)))
     // fresh build = folded vec_ids at the cell-clustered layout
     Commit.markClean(spark, path, "semantic")
     assigned.join(dropped, Seq("vec_id"), "left_anti")
@@ -645,12 +672,11 @@ object DedupIndex {
       path: String,
       newVecs: DataFrame,
       idCol: String,
-      vecCol: String,
-      broadcastBatch: Boolean = true): SemanticBatch = {
-    val tau = Commit.readMeta(spark, s"$path/sem_meta")("tau").toDouble
-    def bc(df: DataFrame): DataFrame =
-      if (broadcastBatch) broadcast(df) else df
-    val centroids = spark.read.parquet(s"$path/sem_centroids")
+      vecCol: String): SemanticBatch = {
+    val meta = Commit.readMeta(spark, s"$path/sem_meta")
+    val tau = meta("tau").toDouble
+    val centroids = Commit.open(spark, meta, "sem_centroids",
+        s"$path/sem_centroids")
       .select(col("centroid_id"), col("cvec").as("__cv"))
     val assigned = graft.operators.Similarity
       .ivfAssign(newVecs, idCol, vecCol, centroids)
@@ -660,8 +686,8 @@ object DedupIndex {
     // corpus stage: ANY indexed cell-mate within tau shadows a batch
     // vector (kept or dropped — see the family contract above); the
     // corpus side streams, the batch side broadcasts
-    val idx = spark.read.parquet(s"$path/sem_vecs")
-    val corpusHits = idx.as("i").join(bc(assigned.as("n")),
+    val idx = Commit.open(spark, meta, "sem_vecs", s"$path/sem_vecs")
+    val corpusHits = idx.as("i").join(broadcast(assigned.as("n")),
         col("i.centroid_id") === col("n.centroid_id") &&
         cosineFast(col("i.vec"), col("n.vec")) >= lit(tau))
       .select(col("n.vec_id")).distinct()
@@ -678,10 +704,10 @@ object DedupIndex {
     val dropped = corpusHits.union(internalHits).distinct()
       .localCheckpoint()
     SemanticBatch(
-      survivors = assigned.join(bc(dropped), Seq("vec_id"), "left_anti")
+      survivors = assigned.join(broadcast(dropped), Seq("vec_id"), "left_anti")
         .select(col("vec_id").as(idCol), col("centroid_id")),
       newVecs = assigned.join(
-          bc(dropped.select(col("vec_id"), lit(false).as("kept"))),
+          broadcast(dropped.select(col("vec_id"), lit(false).as("kept"))),
           Seq("vec_id"), "left")
         .select(col("vec_id"), col("centroid_id"), col("vec"),
           coalesce(col("kept"), lit(true)).as("kept")))
@@ -707,7 +733,9 @@ object DedupIndex {
     Commit.unmarkClean(spark, path, "semantic")
     // present = index ids ∩ batch ids: the index STREAMS through a
     // broadcast semi join on the batch's id set; output batch-bounded
-    val present = spark.read.parquet(s"$path/sem_vecs")
+    val present = Commit.open(spark,
+        Commit.readMeta(spark, s"$path/sem_meta"), "sem_vecs",
+        s"$path/sem_vecs")
       .select(col("vec_id"))
       .join(broadcast(b.newVecs.select(col("vec_id"))),
         Seq("vec_id"), "left_semi")
@@ -728,10 +756,8 @@ object DedupIndex {
       newVecs: DataFrame,
       idCol: String,
       vecCol: String,
-      numFiles: Int = 8,
-      broadcastBatch: Boolean = true): DataFrame = {
-    val b = dedupSemanticBatch(spark, path, newVecs, idCol, vecCol,
-      broadcastBatch)
+      numFiles: Int = 8): DataFrame = {
+    val b = dedupSemanticBatch(spark, path, newVecs, idCol, vecCol)
     absorbSemantic(spark, path, b, numFiles)
     b.survivors
   }
@@ -754,11 +780,9 @@ object DedupIndex {
       batchId: Long,
       idCol: String,
       vecCol: String,
-      numFiles: Int = 8,
-      broadcastBatch: Boolean = true): Unit =
+      numFiles: Int = 8): Unit =
     ingestOnce(spark, s"$indexPath/sem_ingested", outPath, batchId)(
-      dedupSemanticBatch(spark, indexPath, batch, idCol, vecCol,
-        broadcastBatch))(
+      dedupSemanticBatch(spark, indexPath, batch, idCol, vecCol))(
       _.survivors, absorbSemantic(spark, indexPath, _, numFiles))
 
   /** Idempotent one-batch SUBSTRING ingest — [[ingestBatch]]'s protocol
@@ -776,11 +800,9 @@ object DedupIndex {
       batchId: Long,
       idCol: String,
       textCol: String,
-      numFiles: Int = 8,
-      broadcastBatch: Boolean = true): Unit =
+      numFiles: Int = 8): Unit =
     ingestOnce(spark, s"$indexPath/grams_ingested", outPath, batchId)(
-      dedupSubstringBatch(spark, indexPath, batch, idCol, textCol,
-        broadcastBatch))(
+      dedupSubstringBatch(spark, indexPath, batch, idCol, textCol))(
       _.rewritten, absorbSubstring(spark, indexPath, _, numFiles))
 
   // ---------------------------------------------------------------------
@@ -800,8 +822,7 @@ object DedupIndex {
     * absorb) with the arrival-order owner (min keep_id) winning;
     * `buckets/` folds to DISTINCT ownership rows. Probe results are
     * bit-identical before and after — both stages consume these
-    * artifacts through membership semantics (semi joins / DISTINCT),
-    * which duplicates never changed; compaction only removes the dead
+    * artifacts as key sets, which duplicates never changed; compaction only removes the dead
     * rows and restores the build file layout.
     *
     * A clean index (nothing absorbed since the last build/compact, per
@@ -814,7 +835,6 @@ object DedupIndex {
     // already folded at their build layout — rewriting them would
     // reproduce the bytes on disk
     if (Commit.isClean(spark, path, "exact")) return
-    val meta = Commit.readMeta(spark, s"$path/meta")
     val idx = load(spark, path)
     Commit.swapCompacted(spark, path, Seq(
       "hashes" -> idx.hashes.groupBy(col("text_hash"))
@@ -824,7 +844,8 @@ object DedupIndex {
       "buckets" -> idx.buckets.distinct()
         .repartition(numFiles, col("band"), col("bucket"))
         .sortWithinPartitions("band", "bucket")),
-      s"$path/meta", meta)
+      s"$path/meta", Map("shingle_n" -> idx.shingleN,
+        "num_hashes" -> idx.numHashes, "bands" -> idx.bands))
     Commit.markClean(spark, path, "exact")
   }
 
@@ -840,7 +861,8 @@ object DedupIndex {
     if (Commit.isClean(spark, path, "substring")) return
     val meta = Commit.readMeta(spark, s"$path/grams_meta")
     Commit.swapCompacted(spark, path, Seq(
-      "grams" -> spark.read.parquet(s"$path/grams").distinct()
+      "grams" -> Commit.open(spark, meta, "grams", s"$path/grams")
+        .distinct()
         .repartition(numFiles, col("gram_hash"))
         .sortWithinPartitions("gram_hash")),
       s"$path/grams_meta", meta)
@@ -881,8 +903,7 @@ object DedupIndex {
     val tau = meta("tau").toDouble
     // sem_centroids/ is small, frozen, and never appended: it stays
     // in place untouched
-    val vecs = spark.read.parquet(s"$path/sem_vecs")
-    val folded = vecs
+    val folded = Commit.open(spark, meta, "sem_vecs", s"$path/sem_vecs")
       .groupBy(col("vec_id"))
       .agg(max(struct(col("kept"), col("centroid_id"), col("vec")))
         .as("__r"))

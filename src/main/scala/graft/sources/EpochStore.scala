@@ -10,9 +10,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   *   registers_v{N}/   payload parquet for epoch N
   *   meta              store parameters + `version` + `last_batch_id`
-  *                     (-1 unless a stream cursor set it), one
-  *                     [[Commit.writeMeta]] file — the commit pointer,
-  *                     written LAST
+  *                     (-1 unless a stream cursor set it) + the live
+  *                     epoch's schema, one [[Commit.writeMeta]] file —
+  *                     the commit pointer, written LAST
   *
   * Each store names only its parameters (once, at [[build]]), its
   * payload and its merge law; [[build]], [[load]] and [[append]] own
@@ -42,8 +42,13 @@ private[graft] object EpochStore {
   def load(
       spark: SparkSession, path: String): (Map[String, String], DataFrame) = {
     val m = Commit.readMeta(spark, metaDir(path))
-    (m, spark.read.parquet(epochPath(path, m("version").toLong)))
+    (m, liveEpoch(spark, path, m))
   }
+
+  /** The epoch `m` names, opened with the schema `m` recorded. */
+  private def liveEpoch(
+      spark: SparkSession, path: String, m: Map[String, String]): DataFrame =
+    Commit.open(spark, m, "registers", epochPath(path, m("version").toLong))
 
   /** Build epoch 0: `payload` under the store's `params`. */
   def build(
@@ -102,7 +107,7 @@ private[graft] object EpochStore {
         "every already-numbered batch. Point the query at its " +
         "original checkpoint, or rebuild the artifact."))
     val v = m("version").toLong
-    lazy val stored = spark.read.parquet(epochPath(path, v))
+    lazy val stored = liveEpoch(spark, path, m)
     writeEpoch(spark, path, merge(m, stored), m, v + 1L,
       batchId.getOrElse(last))
   }
@@ -133,7 +138,8 @@ private[graft] object EpochStore {
   }
 
   /** Commit one epoch: payload first, then meta (the store's
-    * parameters plus `version` and `last_batch_id`) flipped last by
+    * parameters plus `version`, `last_batch_id` and the payload's
+    * schema) flipped last by
     * [[Commit.writeMeta]]'s delete + rename, so the no-meta window is
     * that instant; a crash inside it leaves epoch payloads intact and
     * the append paths refuse to re-initialize
@@ -152,7 +158,8 @@ private[graft] object EpochStore {
     payload.coalesce(1).write.mode("overwrite")
       .parquet(epochPath(path, version))
     Commit.writeMeta(spark, metaDir(path), params ++
-      Map("version" -> version, "last_batch_id" -> lastBatchId))
+      Map("version" -> version, "last_batch_id" -> lastBatchId,
+        Commit.schemaEntry("registers", payload)))
     val f = Commit.fs(spark, path)
     f.listStatus(new org.apache.hadoop.fs.Path(path)).foreach { st =>
       val n = st.getPath.getName

@@ -21,20 +21,23 @@ import org.apache.spark.sql.functions._
   *     file across the whole alphabet and defeats exactly that
   *     pruning — measured in the `bm25_index_10x` stress). The
   *     layout survives compaction.
-  *   - `stats/`          — ONE `(n_docs, sum_dl)` row. BIGINT sums, so
-  *     the corpus statistics are exact and MERGEABLE: each append adds
-  *     a row, [[load]] folds them ( ≤ 1 + #appends rows).
-  *   - `batch_postings/<id>/`, `batch_stats/<id>/` — per-append
-  *     deltas, each written with `mode(overwrite)` to its OWN
-  *     directory keyed by the caller's append id, so a crashed append
-  *     REPLAYS IDEMPOTENTLY: the replay overwrites both deltas in
-  *     place and can never double-append rows (the [[Release]] lesson
-  *     — `mode(append)` plus retry is silent duplication).
+  *   - `batch_postings/<id>/` — per-append postings deltas, each
+  *     written with `mode(overwrite)` to its OWN directory keyed by the
+  *     caller's append id, so a crashed append REPLAYS IDEMPOTENTLY:
+  *     the replay overwrites its delta in place and can never
+  *     double-append rows (the [[Release]] lesson — `mode(append)` plus
+  *     retry is silent duplication).
+  *   - `batch_stats/<id>` — that append's `(n_docs, sum_dl)`, one
+  *     [[Commit.writeMeta]] file written after its postings; a
+  *     `<id>.tmp` left by an interrupted write is ignored.
   *   - `ingested/`       — batch markers for the exactly-once
   *     streaming cursor ([[Commit.once]]).
-  *   - `meta`            — written LAST (tombstone-first discipline):
-  *     a crash mid-build/mid-compact leaves no meta, so [[load]] fails
-  *     loudly instead of pairing stale stats with half-built postings.
+  *   - `meta`            — the corpus statistics of the build layout
+  *     (`n_docs`, `sum_dl`: BIGINT sums, so exact and MERGEABLE —
+  *     [[load]] adds each append's on the driver) and the postings
+  *     schema; written LAST (tombstone-first discipline): a crash
+  *     mid-build/mid-compact leaves no meta, so [[load]] fails loudly
+  *     instead of pairing stale stats with half-built postings.
   *
   * Scoring is Okapi/Lucene BM25, bit-compatible with the direct
   * one-pass form ([[graft.operators.TextAnalysis.bm25Scores]]): same
@@ -46,10 +49,11 @@ import org.apache.spark.sql.functions._
   * per-(qid, doc) aggregate.
   *
   * Crash window worth knowing: a reader that loads between a crashed
-  * append's two delta writes sees the batch's postings with the OLD
-  * stats row (scores drift low until the replay lands). Both writes
-  * are idempotent overwrites, so the replay converges; [[compact]]
-  * folds the delta directories back to the build layout.
+  * append's postings write and its stats write sees the batch's
+  * postings under the OLD stats (scores drift low until the replay
+  * lands). Both writes are idempotent overwrites, so the replay
+  * converges to the from-scratch statistics; [[compact]] folds the
+  * deltas back to the build layout.
   */
 object RetrievalIndex {
 
@@ -85,16 +89,19 @@ object RetrievalIndex {
       .groupBy(col("term"), col("doc_id"), col("dl"))
       .agg(count(lit(1)).cast("int").as("tf"))
 
-  /** One exact stats row — BIGINT so appends merge losslessly. Empty
-    * docs count toward `n_docs` with `dl = 0`, matching the direct
-    * form's `avg(size(toks))`.
+  /** Exact corpus statistics of `docs` as meta fields, computed by one
+    * aggregate — BIGINT so appends merge losslessly. Empty docs count
+    * toward `n_docs` with `dl = 0`, matching the direct form's
+    * `avg(size(toks))`.
     */
   private def statsOf(
-      docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs.select(tokens(col(textCol)).as("__toks"))
-      .agg(count(lit(1)).as("n_docs"),
-        coalesce(sum(size(col("__toks")).cast("long")), lit(0L))
-          .as("sum_dl"))
+      docs: DataFrame, textCol: String): Map[String, Long] = {
+    val r = docs.select(tokens(col(textCol)).as("__toks"))
+      .agg(count(lit(1)), coalesce(sum(size(col("__toks")).cast("long")),
+        lit(0L)))
+      .head()
+    Map("n_docs" -> r.getLong(0), "sum_dl" -> r.getLong(1))
+  }
 
   /** Build (or atomically rebuild) the index from a corpus. Stale
     * append deltas and ingest markers die with the meta tombstone —
@@ -112,13 +119,12 @@ object RetrievalIndex {
     Commit.tombstone(spark,
       Seq("meta", "ingested", "batch_postings", "batch_stats")
         .map(d => s"$path/$d"): _*)
-    postingsOf(docs, idCol, textCol)
-      .repartitionByRange(numFiles, col("term"), col("doc_id"))
+    val postings = postingsOf(docs, idCol, textCol)
+    postings.repartitionByRange(numFiles, col("term"), col("doc_id"))
       .sortWithinPartitions("term", "doc_id")
       .write.mode("overwrite").parquet(s"$path/postings")
-    statsOf(docs, idCol, textCol)
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
-    Commit.writeMeta(spark, s"$path/meta", Map("format_version" -> 1))
+    Commit.writeMeta(spark, s"$path/meta", statsOf(docs, textCol) +
+      Commit.schemaEntry("postings", postings))
   }
 
   private def nonEmptyDir(spark: SparkSession, d: String): Boolean = {
@@ -128,21 +134,27 @@ object RetrievalIndex {
   }
 
   def load(spark: SparkSession, path: String): Loaded = {
-    Commit.readMeta(spark, s"$path/meta") // the load gate
-    def withDeltas(base: String, deltas: String): DataFrame = {
-      val b = spark.read.parquet(base)
-      if (nonEmptyDir(spark, deltas))
-        b.unionByName(spark.read
-          .option("recursiveFileLookup", "true").parquet(deltas))
-      else b
-    }
-    val stats = withDeltas(s"$path/stats", s"$path/batch_stats")
-      .agg(sum(col("n_docs")).as("n"), sum(col("sum_dl")).as("s"))
-      .collect()(0) // bounded: folds 1 + #appends rows
+    val meta = Commit.readMeta(spark, s"$path/meta") // the load gate
+    val postings = Commit.open(spark, meta, "postings", s"$path/postings")
+    val deltas = s"$path/batch_postings"
+    // each append's stats, added on the driver; a `.tmp` among them is
+    // an interrupted write's leftover, a dot file a checksum
+    val f = Commit.fs(spark, path)
+    val statsDir = new org.apache.hadoop.fs.Path(s"$path/batch_stats")
+    val appended =
+      if (!f.exists(statsDir)) Seq.empty[Map[String, String]]
+      else f.listStatus(statsDir).toSeq.map(_.getPath.getName)
+        .filterNot(n => n.endsWith(".tmp") || n.startsWith("."))
+        .map(id => Commit.readMeta(spark, s"$path/batch_stats/$id"))
+    def total(k: String) = (meta +: appended).map(_(k).toLong).sum
     Loaded(
-      postings = withDeltas(s"$path/postings", s"$path/batch_postings"),
-      nDocs = stats.getLong(0),
-      sumDl = stats.getLong(1))
+      postings =
+        if (!nonEmptyDir(spark, deltas)) postings
+        else postings.unionByName(spark.read
+          .schema(postings.schema)
+          .option("recursiveFileLookup", "true").parquet(deltas)),
+      nDocs = total("n_docs"),
+      sumDl = total("sum_dl"))
   }
 
   /** BM25 scores of a query set against the frozen index — the probe
@@ -209,21 +221,21 @@ object RetrievalIndex {
       textCol: String,
       appendId: String,
       numFiles: Int = 8): Unit = {
-    require(appendId.nonEmpty && !appendId.contains("/"),
-      s"appendId must be a single path segment, got '$appendId'")
+    require(appendId.nonEmpty && !appendId.contains("/") &&
+      !appendId.endsWith(".tmp"),
+      s"appendId must be a single path segment not ending in .tmp," +
+        s" got '$appendId'")
     // stats strictly AFTER postings: a crash between the two leaves
     // postings under the old stats (the class doc's crash window),
     // never stats without their postings, which would skew every doc's
-    // score until the replay. The stats write is one coalesce(1) row,
-    // so running it after the postings costs next to nothing
+    // score until the replay
     Commit.once(spark, s"$path/ingested/append_$appendId") {
       postingsOf(newDocs, idCol, textCol)
         .repartitionByRange(numFiles, col("term"), col("doc_id"))
         .sortWithinPartitions("term", "doc_id")
         .write.mode("overwrite").parquet(s"$path/batch_postings/$appendId")
-      statsOf(newDocs, idCol, textCol)
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$path/batch_stats/$appendId")
+      Commit.writeMeta(spark, s"$path/batch_stats/$appendId",
+        statsOf(newDocs, textCol))
     }
   }
 
@@ -247,7 +259,7 @@ object RetrievalIndex {
     * contract), so this is a pure re-bucket — probe scores are equal
     * before and after up to floating-point summation order (the
     * re-bucket changes the order the per-(qid, doc) `sum` adds its
-    * terms in); stats fold to one exact row. Ingest markers SURVIVE
+    * terms in); the stats fold into the meta. Ingest markers SURVIVE
     * compaction (unlike a rebuild): the folded state still contains
     * those batches, and a replay after compaction must keep no-oping.
     *
@@ -263,15 +275,12 @@ object RetrievalIndex {
     // left them (guide §6: don't rewrite unchanged data)
     if (!nonEmptyDir(spark, s"$path/batch_postings") &&
         !nonEmptyDir(spark, s"$path/batch_stats")) return
-    import spark.implicits._
     val idx = load(spark, path)
-    val (n, s) = (idx.nDocs, idx.sumDl)
     Commit.swapCompacted(spark, path, Seq(
       "postings" -> idx.postings
         .repartitionByRange(numFiles, col("term"), col("doc_id"))
-        .sortWithinPartitions("term", "doc_id"),
-      "stats" -> Seq((n, s)).toDF("n_docs", "sum_dl").coalesce(1)),
-      s"$path/meta", Map("format_version" -> 1),
+        .sortWithinPartitions("term", "doc_id")),
+      s"$path/meta", Map("n_docs" -> idx.nDocs, "sum_dl" -> idx.sumDl),
       folded = Seq(s"$path/batch_postings", s"$path/batch_stats"))
   }
 }

@@ -21,7 +21,13 @@ def norm(v):
     if isinstance(v, float):
         if math.isnan(v):
             return "NaN"
-        return round(v, 6)
+        # 6 decimals below 1e9, which covers every float the sf0.01
+        # gates emit (the largest, q2_star_join revenue, is ~1.5e8);
+        # above, 12 significant digits: sums near 1e10 (q2_star_join at
+        # ~sf1) differ between engines' summation orders in the 15th
+        if abs(v) < 1e9:
+            return round(v, 6)
+        return float(f"{v:.12g}")
     if isinstance(v, (list, tuple)):
         return tuple(norm(x) for x in v)
     if hasattr(v, "isoformat"):
