@@ -521,12 +521,10 @@ object SparkEntry {
   }
 
   /** Compaction parity, SEMANTIC family: [[dedupIndexSemanticQ]] with
-    * a parity-mode [[graft.sources.DedupIndex.compactSemantic]]
-    * between build and append — vec_id folds and the cell-clustered
-    * layout are restored with the vector set unchanged, so the
-    * family's from-scratch oracle is shared verbatim (the
-    * `dropShadowed` space trade is spec-covered separately: it
-    * deliberately relaxes exact telescoping).
+    * a [[graft.sources.DedupIndex.compactSemantic]] between build and
+    * append — vec_id folds and the cell-clustered layout are restored
+    * with the vector set unchanged, so the family's from-scratch
+    * oracle is shared verbatim.
     */
   private def dedupIndexCompactSemQ(s: SparkSession, dir: String): DataFrame = {
     val e = embs(s, dir)
@@ -2591,8 +2589,8 @@ object SparkEntry {
   // finds an entry whose checkpoint blocks are gone and dies with
   // "lineage truncated" (exactly how langid_segments failed its first
   // bench run). Each gate trains per call — ~0.5 s, the price of a
-  // harness that cannot dangle — and langIdScore's internal
-  // materializeModel checkpoint is per-call, ContextCleaner-freed.
+  // harness that cannot dangle — and langIdScore's internal model
+  // checkpoint is per-call, ContextCleaner-freed.
 
   private def langidScoreQ(s: SparkSession, dir: String): DataFrame =
     // Rounding for the oracle hash lives HERE, not in the library —

@@ -396,24 +396,14 @@ final class FrameEngine private (
     * alive forfeits recompute (lineage is truncated) and fails the job —
     * acceptable for a parse scoped to one expansion; the two passes
     * themselves are inherent (the output schema must be known at plan
-    * time). Deployments with executor churn (dynamic allocation, spot
-    * instances) can set `graft.expandCol.materialize=persist` to keep
-    * lineage via `persist(MEMORY_AND_DISK)` instead — recompute survives
-    * executor loss, at the cost of a CacheManager entry that lives until
-    * the session drops the plan (the lazy return frame gives no
-    * unpersist hook).
+    * time).
     */
   private def expandColJsonFrame(c: String, drop: Boolean, prefix: Boolean): DataFrame = {
     val cellsType = ArrayType(MapType(StringType, StringType))
     val cellsAlias = RowAlias + "_cells"
     val projected = df
       .select(indexCols.map(col) :+ from_json(col(c), cellsType).as(cellsAlias): _*)
-    val parsed = df.sparkSession.conf
-      .get("graft.expandCol.materialize", "localCheckpoint") match {
-      case "persist" =>
-        projected.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      case _ => projected.localCheckpoint()
-    }
+    val parsed = projected.localCheckpoint()
     val keys = parsed.select(explode(col(cellsAlias)).as(RowAlias))
       .select(explode(map_keys(col(RowAlias))).as("__k"))
       .distinct().orderBy("__k")

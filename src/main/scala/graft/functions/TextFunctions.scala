@@ -116,14 +116,6 @@ object TextFunctions {
     toColumn(ByteShingleHashesExpr(toExpression(payload), n))
   }
 
-  /** Positional word k-gram 60-bit hashes ([[WordGramHash60Expr]]) —
-    * the unwinnowed gram index for substring dedup.
-    */
-  def wordGramHash60(words: Column, k: Int): Column = {
-    import org.apache.spark.sql.GraftColumnCompat._
-    toColumn(WordGramHash60Expr(toExpression(words), k))
-  }
-
   /** One-pass substring-dedup rewrite ([[SubstringRemoveExpr]]): words
     * array + sorted removed-gram starts → `struct(text_kept,
     * n_words_kept, n_words_dropped)`.

@@ -763,33 +763,11 @@ object Dedup {
     * document (same collision semantics as [[minhashLshPairs]]; raise
     * `numHashes`/`bands` for precision).
     *
-    * Scale: with `broadcastProbe = true` (the default — the probe is an
-    * eval set, orders of magnitude smaller than the corpus) its distinct
-    * bucket set broadcasts and the left-semi band join runs map-side
-    * with NO corpus shuffle — the corpus is scanned once. The final
-    * anti join's contaminated-id set is bounded by CORPUS size, not
-    * probe size (a heavily-contaminated corpus, or over-collisional
-    * bands, can make it corpus-scale), so it is never broadcast-hinted:
-    * AQE broadcasts it at runtime when its measured size is small and
-    * falls back to a shuffled anti join when it is not. With
-    * `broadcastProbe = false` (corpus-vs-corpus scrubs where the probe
-    * does not fit a broadcast) both joins run as ordinary shuffled
-    * semi/anti joins on (band, bucket) / id — two linear shuffles, still
-    * never pairwise. Everything per-document is the native one-pass
-    * bucket expression either way.
-    *
-    * `maxBucketSize` threads the [[capHotBuckets]] guard over the
-    * CORPUS band rows for the shuffled (`broadcastProbe = false`) path,
-    * where a viral corpus family collapses into one (band, bucket) cell
-    * and skews the semi join's probe side. Unlike the pair-enumeration
-    * APIs it defaults OFF (0): the semi join's per-key work is already
-    * linear (one build row per probe bucket), and capping here changes
-    * ANSWERS, not just work — an over-cap family's rows skip those
-    * buckets and can only match through their other bands, and a family
-    * viral in ALL bands evades the scrub entirely. Leaking a
-    * million-copy boilerplate page that happens to overlap the eval set
-    * into training is a worse failure than one slow task, so sacrificing
-    * recall for speed must be an explicit choice at this call site.
+    * Scale: the probe's distinct bucket set broadcasts into a map-side
+    * semi join, so the corpus is scanned once and never shuffled for
+    * it; a probe too large to broadcast goes through
+    * [[decontaminateExactBloom]] or a persisted
+    * [[graft.sources.DeconIndex]].
     */
   def decontaminate(
       corpus: DataFrame,
@@ -798,42 +776,28 @@ object Dedup {
       textCol: String,
       shingleN: Int = 3,
       numHashes: Int = 16,
-      bands: Int = 8,
-      broadcastProbe: Boolean = true,
-      maxBucketSize: Int = 0): DataFrame = {
+      bands: Int = 8): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     def rows(df: DataFrame) =
       wordBandBucketRows(df, idCol, textCol, shingleN, numHashes, bands)
-    decontaminateBands(corpus, rows(corpus), rows(probe), idCol,
-      broadcastProbe, maxBucketSize)
+    decontaminateBands(corpus, rows(corpus), rows(probe), idCol)
   }
 
   /** [[decontaminate]]'s body over precomputed `(idCol, band, bucket)`
     * rows of the corpus and the probe — for a caller whose corpus
     * already carries its signature ([[Pipeline.curate]]'s `__bands`
-    * column). Probe buckets, the shuffled-path cap and the semi/anti
-    * joins are the ones documented there.
+    * column). Probe buckets and the semi/anti joins are the ones
+    * documented there.
     */
   private[graft] def decontaminateBands(
       corpus: DataFrame,
       corpusBands: DataFrame,
       probeBands: DataFrame,
-      idCol: String,
-      broadcastProbe: Boolean,
-      maxBucketSize: Int): DataFrame = {
-    def maybeBroadcast(df: DataFrame) =
-      if (broadcastProbe) broadcast(df) else df
+      idCol: String): DataFrame = {
     val probeBuckets =
       probeBands.select(col("band"), col("bucket")).distinct()
-    // the cap is scoped to the shuffled path, as documented: on the
-    // broadcast path the semi join never shuffles the corpus, so there
-    // is no skewed task to protect and the recall sacrifice would buy
-    // nothing
-    val capped =
-      if (broadcastProbe) corpusBands
-      else capHotBuckets(corpusBands, Seq("band", "bucket"), maxBucketSize)
-    val contaminated = capped
-      .join(maybeBroadcast(probeBuckets), Seq("band", "bucket"), "left_semi")
+    val contaminated = corpusBands
+      .join(broadcast(probeBuckets), Seq("band", "bucket"), "left_semi")
       .select(col(idCol)).distinct()
     corpus.join(contaminated, Seq(idCol), "left_anti")
   }
@@ -939,26 +903,23 @@ object Dedup {
     * equality, so collision-safety matters exactly as in substring
     * dedup); the probe side (eval sets — tiny by definition) broadcasts
     * into a semi join against the corpus gram stream, so the corpus
-    * never shuffles on the broadcast path. `broadcastProbe = false`
-    * falls back to a shuffled semi join keyed on the gram — linear,
-    * skew-bounded by gram-key cardinality — for probes too large to
-    * broadcast. Documents shorter than `n` words produce no grams and
-    * are never dropped, as published.
+    * never shuffles; probes too large to broadcast go through
+    * [[decontaminateExactBloom]] or a persisted
+    * [[graft.sources.DeconIndex]]. Documents shorter than `n` words
+    * produce no grams and are never dropped, as published.
     */
   def decontaminateExact(
       corpus: DataFrame,
       probe: DataFrame,
       idCol: String,
       textCol: String,
-      n: Int = 13,
-      broadcastProbe: Boolean = true): DataFrame = {
+      n: Int = 13): DataFrame = {
     require(n >= 2, "n must be >= 2")
     def grams(df: DataFrame, cols: Column*) =
       normalizedGramHashes(df, textCol, n, cols: _*)
     val probeGrams = grams(probe).select(col("__h")).distinct()
     val contaminated = grams(corpus, col(idCol))
-      .join(if (broadcastProbe) broadcast(probeGrams) else probeGrams,
-        Seq("__h"), "left_semi")
+      .join(broadcast(probeGrams), Seq("__h"), "left_semi")
       .select(col(idCol)).distinct()
     corpus.join(contaminated, Seq(idCol), "left_anti")
   }
@@ -1027,9 +988,9 @@ object Dedup {
 
   /** [[decontaminateExact]] for probes TOO LARGE TO BROADCAST — the
     * held-out-corpus case (decontaminating a crawl against another
-    * multi-TB corpus rather than a small eval set), where
-    * `broadcastProbe = false` degrades to shuffling the ENTIRE
-    * corpus-side gram stream. A Bloom filter over the probe's distinct
+    * multi-TB corpus rather than a small eval set), where a plain
+    * shuffled semi join would move the ENTIRE corpus-side gram
+    * stream. A Bloom filter over the probe's distinct
     * gram keys is `mBits/8` bytes REGARDLESS of probe size (128 KB at
     * the 2^20-bit default), always ships to every task, and prefilters
     * the corpus gram stream at scan time to contaminated-plus-false-
@@ -1096,21 +1057,18 @@ object Dedup {
     * Scale shape: the probe side collapses to DISTINCT 16-byte gram
     * keys and broadcasts (eval sets are tiny by definition) into a
     * semi join against the corpus's positional gram stream — the
-    * corpus never shuffles on the broadcast path; the only corpus-keyed
-    * shuffle is the per-doc starts aggregate, whose input is
-    * CONTAMINATED grams only (eval-overlap-sized, not corpus-sized).
-    * Token arrays materialize once ([[materialize]]) for the
-    * gram pass and the rewrite join, the [[dedupSubstrings]] fan-out
-    * discipline. `broadcastProbe = false` shuffles the semi join for
-    * probes too large to broadcast.
+    * corpus never shuffles for it; the only corpus-keyed shuffle is the
+    * per-doc starts aggregate, whose input is CONTAMINATED grams only
+    * (eval-overlap-sized, not corpus-sized). Token arrays materialize
+    * once ([[materialize]]) for the gram pass and the rewrite join, the
+    * [[dedupSubstrings]] fan-out discipline.
     */
   def scrubContaminatedSpans(
       corpus: DataFrame,
       probe: DataFrame,
       idCol: String,
       textCol: String,
-      n: Int = 13,
-      broadcastProbe: Boolean = true): DataFrame = {
+      n: Int = 13): DataFrame = {
     require(n >= 2, "n must be >= 2")
     def words(c: Column) = filter(split(c, "\\s+"), w => length(w) > 0)
     val probeGrams = probe.select(explode(wordGramHash128(
@@ -1124,8 +1082,7 @@ object Dedup {
         transform(col("__ws"), w => lower(w)), n))
         .as(Seq("__gpos", "__h")))
     val starts = grams
-      .join(if (broadcastProbe) broadcast(probeGrams) else probeGrams,
-        Seq("__h"), "left_semi")
+      .join(broadcast(probeGrams), Seq("__h"), "left_semi")
       .groupBy(col(idCol))
       .agg(sort_array(collect_list(col("__gpos"))).as("__starts"))
     applyWordRemoval(toks, starts, idCol, n)
@@ -1165,8 +1122,7 @@ object Dedup {
       textCol: String,
       spanTokens: Int = 50,
       merges: Seq[(String, String)] = graft.functions.Bpe.fixtureMerges,
-      scrubSeams: Boolean = false,
-      broadcastProbe: Boolean = true): DataFrame = {
+      scrubSeams: Boolean = false): DataFrame = {
     require(spanTokens >= 2, "spanTokens must be >= 2")
     val k = spanTokens
     val probeGrams = probe.select(explode(intGramHash128(
@@ -1181,8 +1137,7 @@ object Dedup {
         posexplode(intGramHash128(col("__ids"), k))
           .as(Seq("__gpos", "__h")))
     val starts = grams
-      .join(if (broadcastProbe) broadcast(probeGrams) else probeGrams,
-        Seq("__h"), "left_semi")
+      .join(broadcast(probeGrams), Seq("__h"), "left_semi")
       .groupBy(col(idCol))
       .agg(sort_array(collect_list(col("__gpos"))).as("__starts"))
     toks.join(starts, Seq(idCol), "left_outer")
@@ -1464,16 +1419,14 @@ object Dedup {
         col("__r").getField("n_words_kept").as("n_words_kept"),
         col("__r").getField("n_words_dropped").as("n_words_dropped"))
 
-  /** Materialize a frame that several consumers read, honoring the
-    * `graft.curate.materialize` config: default `localCheckpoint`
-    * (eager — triggers the upstream job at call time — and
-    * NON-RECOVERABLE on executor loss, the right trade in the common
-    * case because the ContextCleaner frees the blocks once the frame is
-    * unreachable), `persist` as the escape hatch for long multi-hour
-    * 100 TB runs where recomputing a lost corpus-scale partition from
-    * lineage is cheaper than a job restart. Callers: [[Pipeline.curate]]
-    * (its rewrite and signature boundaries) and the substring-dedup
-    * fan-out tables (token arrays + positional grams).
+  /** Materialize a frame that several consumers read: an eager
+    * `localCheckpoint` (it triggers the upstream job at call time and is
+    * NON-RECOVERABLE on executor loss, the right trade because the
+    * ContextCleaner frees the blocks once the frame is unreachable and
+    * the returned lazy frame has no unpersist hook a `persist` would
+    * need). Callers: [[Pipeline.curate]] (its rewrite and signature
+    * boundaries) and the substring-dedup fan-out tables (token arrays +
+    * positional grams).
     *
     * Spread rule: a checkpoint with fewer partitions than
     * `defaultParallelism` is re-spread by a round-robin
@@ -1482,21 +1435,15 @@ object Dedup {
     * dedup) to ONE partition, and a checkpoint freezes that, so every
     * per-row stage after it would run as one task. The count comes from
     * the checkpointed RDD, so reading it runs no job; at scale the
-    * checkpoint is already wide and nothing is added. The `persist`
-    * path is lazy and is not spread.
+    * checkpoint is already wide and nothing is added.
     */
-  private[graft] def materialize(df: DataFrame): DataFrame =
-    df.sparkSession.conf.get("graft.curate.materialize", "localCheckpoint")
-    match {
-      case "persist" =>
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      case _ =>
-        val frozen = df.localCheckpoint()
-        val cores = df.sparkSession.sparkContext.defaultParallelism
-        if (frozen.queryExecution.toRdd.getNumPartitions < cores)
-          frozen.repartition(cores)
-        else frozen
-    }
+  private[graft] def materialize(df: DataFrame): DataFrame = {
+    val frozen = df.localCheckpoint()
+    val cores = df.sparkSession.sparkContext.defaultParallelism
+    if (frozen.queryExecution.toRdd.getNumPartitions < cores)
+      frozen.repartition(cores)
+    else frozen
+  }
 
   /** The shared first-occurrence core of substring dedup: from positional
     * gram rows `(idCol, __gpos, __h)`, the per-document sorted starts of

@@ -89,8 +89,6 @@ object Pipeline {
       bands: Int = 8,
       maxGramExposure: Double = 1.0,
       exposureNgrams: Int = 13,
-      decontaminateBroadcastProbe: Boolean = true,
-      decontaminateMaxBucketSize: Int = 0,
       decontaminateExactNgrams: Int = 0,
       scrubProbeNgrams: Int = 0,
       ccnetBucketBy: String = "",
@@ -249,8 +247,7 @@ object Pipeline {
     // here instead of polluting the dedup with "" rows.
     if (scrubProbeNgrams > 0) probe.foreach { p =>
       d = Dedup.scrubContaminatedSpans(d, p, idCol, textCol,
-          n = scrubProbeNgrams,
-          broadcastProbe = decontaminateBroadcastProbe)
+          n = scrubProbeNgrams)
         .filter(length(col("text_kept")) > 0)
         .select(col(idCol), col("text_kept").as(textCol))
       snap("decontaminate_scrub", d)
@@ -261,12 +258,12 @@ object Pipeline {
     // back, near-dup owners and losers, decontamination): left lazy,
     // EACH branch re-runs the rewrites over the scan — measured 2.8x
     // wall on the 10x stress corpus. [[Dedup.materialize]] checkpoints
-    // (or persists, per `graft.curate.materialize`) and re-spreads a
-    // checkpoint narrower than `defaultParallelism`: AQE coalesces a
-    // small rewrite's shuffle to one partition, and frozen there every
-    // per-row stage below would run as one task. localCheckpoint is the
-    // default because the returned lazy frame has no unpersist hook: a
-    // persist here would pin a CacheManager entry per curate() call.
+    // and re-spreads a checkpoint narrower than `defaultParallelism`:
+    // AQE coalesces a small rewrite's shuffle to one partition, and
+    // frozen there every per-row stage below would run as one task.
+    // A localCheckpoint, not a persist, because the returned lazy frame
+    // has no unpersist hook: a persist here would pin a CacheManager
+    // entry per curate() call.
     //
     // With near-dup on, the word-band signature is computed ONCE per
     // document, here: on the final text (after every rewrite, so removed
@@ -367,17 +364,14 @@ object Pipeline {
       d =
         if (decontaminateExactNgrams > 0)
           Dedup.decontaminateExact(d, p, idCol, textCol,
-            n = decontaminateExactNgrams,
-            broadcastProbe = decontaminateBroadcastProbe)
+            n = decontaminateExactNgrams)
         else if (nearDup)
           Dedup.decontaminateBands(d, Dedup.bandRows(d, idCol, col(Bands)),
             Dedup.wordBandBucketRows(p, idCol, textCol, shingleN, numHashes,
               bands),
-            idCol, decontaminateBroadcastProbe, decontaminateMaxBucketSize)
+            idCol)
         else Dedup.decontaminate(d, p, idCol, textCol, shingleN,
-          numHashes, bands,
-          broadcastProbe = decontaminateBroadcastProbe,
-          maxBucketSize = decontaminateMaxBucketSize)
+          numHashes, bands)
       snap("decontaminate", d)
     }
     Sampling.assignSplit(d.drop(Bands), idCol, splits)
@@ -510,10 +504,8 @@ object Pipeline {
     *      to [[curate]]'s, pipelined into the stream scan;
     *  2.  exact-normalized dedup — `dropDuplicates` on
     *      [[Dedup.normalizedHash]] (keyed state = one entry per
-    *      distinct hash; pass `dedupHorizon` to bound state by a
-    *      processing-time watermark, [[graft.streaming.StreamingDedup
-    *      .exactStreamWindowed]]'s trade: a dup arriving later than the
-    *      horizon re-emits and the batch dedup downstream catches it);
+    *      distinct hash, unbounded: every dup is dropped, however late
+    *      it arrives);
     *  3.  decontamination — stateless predicates whose probe collapsed
     *      to a literal ([[graft.streaming.StreamingDedup
     *      .bandDecontaminateKeep]] / `exactGramDecontaminateKeep`);
@@ -552,7 +544,6 @@ object Pipeline {
       qualityModel: Option[Classifier.Model] = None,
       maxQualityScore: Double = 1.0,
       exactDedup: Boolean = true,
-      dedupHorizon: Option[String] = None,
       decontaminateExactNgrams: Int = 0,
       shingleN: Int = 3,
       numHashes: Int = 16,
@@ -612,14 +603,7 @@ object Pipeline {
     }
     if (exactDedup) {
       d = d.withColumn("text_hash", Dedup.normalizedHash(col(textCol)))
-      d = dedupHorizon match {
-        case Some(h) => d
-          .withColumn("__ingest", current_timestamp())
-          .withWatermark("__ingest", h)
-          .dropDuplicatesWithinWatermark("text_hash")
-          .drop("__ingest")
-        case None => d.dropDuplicates("text_hash")
-      }
+        .dropDuplicates("text_hash")
     }
     probe.foreach { p =>
       d = d.filter(

@@ -64,13 +64,6 @@ object Similarity {
       .filter(col("knn_rank") <= k)
   }
 
-  /** Deterministic pseudo-random hyperplane coefficient for plane `j`,
-    * vector dimension `k` (0-based): uniform-ish in [-1, 1). Pure integer
-    * arithmetic so any engine reproduces it exactly.
-    */
-  def hyperplaneCoef(j: Int, k: Column): Column =
-    ((lit(j.toLong * 73856093L) + k * 19349663L) % 2000L - 1000L) / 1000.0
-
   /** Random-hyperplane LSH bucket id: bit j of the bucket is the sign of
     * the dot product with hyperplane j. Cosine-similar vectors collide
     * with high probability. Linear scan, no shuffle; native expression

@@ -125,23 +125,17 @@ object TextAnalysis {
     * standard small-dimension fan-out, not a cross join). The gram
     * table is materialized once for its two consumers.
     *
-    * `materializeModel = false` skips the internal model
-    * `localCheckpoint` — pass it when the caller already holds a
-    * materialized model (e.g. one trained once and scored against
-    * repeatedly): checkpoint blocks live until the referencing
-    * DataFrame is garbage-collected, so a session that pins models
-    * (as the bench harness does per sfDir) should materialize ONCE on
-    * its side rather than accrete one more checkpoint per scoring
-    * call. The per-call gram-table checkpoint is unpinned and is
-    * reclaimed by the ContextCleaner with the returned frame.
+    * The model is `localCheckpoint`ed once per call for its three
+    * consumers (the two driver folds and the broadcast join); the
+    * checkpoint is unpinned and is reclaimed by the ContextCleaner with
+    * the returned frame.
     */
   def langIdScore(
       docs: DataFrame,
       idCol: String,
       textCol: String,
-      model: DataFrame,
-      materializeModel: Boolean = true): DataFrame =
-    langIdScoreKeyed(docs, Seq(idCol), textCol, model, materializeModel)
+      model: DataFrame): DataFrame =
+    langIdScoreKeyed(docs, Seq(idCol), textCol, model)
 
   /** [[langIdScore]] over a COMPOSITE key — the shared implementation.
     * One broadcast of the per-gram weight table and ONE partial-
@@ -157,9 +151,8 @@ object TextAnalysis {
       docs: DataFrame,
       idCols: Seq[String],
       textCol: String,
-      model: DataFrame,
-      materializeModel: Boolean = true): DataFrame = {
-    val m = if (materializeModel) model.localCheckpoint() else model
+      model: DataFrame): DataFrame = {
+    val m = model.localCheckpoint()
     // bounded driver folds: per-lang totals + profile vocabulary size
     // (≤ topK·|langs| rows by langIdTrain's cap)
     val stats = m.groupBy(col("lang")).agg(sum(col("cnt")).as("__tot"))
@@ -408,25 +401,15 @@ object TextAnalysis {
         countDistinct(col(idCol)).as("doc_freq"))
 
   /** Exact length quantiles per group (25/50/75th, interpolated) — data
-    * profiling for curation cutoffs. `percentile` is exact (full sort per
-    * group); for 100 TB profiling swap in `approx_percentile` — same
-    * call shape, sketch-based.
-    */
-  /** Per-group length quartiles. `approx = false` (default) computes
-    * exact percentiles — cross-engine reproducible, which the
-    * correctness oracle needs, but the aggregation buffers each group's
-    * values. At 100 TB pass `approx = true`: `approx_percentile`'s
-    * constant-size t-digest-style sketch merges map-side like any
-    * algebraic aggregate (bounded memory, one shuffle, small error).
+    * profiling for curation cutoffs. `percentile` is exact and
+    * cross-engine reproducible, which the correctness oracle needs; the
+    * aggregation buffers each group's values.
     */
   def lengthQuantiles(
       docs: DataFrame,
       groupCol: String,
-      lenCol: String,
-      approx: Boolean = false): DataFrame = {
-    def pct(q: Double) =
-      if (approx) approx_percentile(col(lenCol), lit(q), lit(10000))
-      else percentile(col(lenCol), lit(q))
+      lenCol: String): DataFrame = {
+    def pct(q: Double) = percentile(col(lenCol), lit(q))
     docs.groupBy(col(groupCol)).agg(
       round(pct(0.25), 6).as("p25"),
       round(pct(0.5), 6).as("p50"),

@@ -24,9 +24,7 @@ import org.apache.spark.sql.functions._
   * ([[graft.operators.Similarity.ivfPqTopKEncoded]] /
   * `ivfPqResidualTopKEncoded` consume nothing but these frames). Codes
   * are laid out clustered by `centroid_id` — the search join key — so
-  * per-cell scans prune; for heavy cross-job reuse write them bucketed
-  * into the metastore instead ([[writeCodesBucketed]]) and the search
-  * join skips its corpus-side shuffle entirely.
+  * per-cell scans prune.
   */
 object AnnIndex {
 
@@ -71,17 +69,6 @@ object AnnIndex {
     Commit.writeMeta(spark, s"$path/meta",
       Map("m" -> m, "n_codes" -> codebook.length, "residual" -> residual))
   }
-
-  /** Metastore-backed alternative for the codes table: bucketed by
-    * `centroid_id` via [[Tables.writeBucketed]], so every later search
-    * job's code-side join needs no shuffle at all.
-    */
-  def writeCodesBucketed(
-      codes: DataFrame,
-      path: String,
-      table: String,
-      buckets: Int): Unit =
-    Tables.writeBucketed(codes, path, table, Seq("centroid_id"), buckets)
 
   /** Encode a NEW vector batch against the FROZEN artifacts of a
     * persisted index and append its codes — the crawl-pipeline

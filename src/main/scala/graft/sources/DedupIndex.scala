@@ -869,38 +869,20 @@ object DedupIndex {
     Commit.markClean(spark, path, "substring")
   }
 
-  /** Compact the semantic index. Default (`dropShadowed = false`):
-    * fold replay-duplicate `vec_id` rows (keeping the original row —
-    * `kept` folds by OR, repairing the contradictory-flag corruption a
-    * pre-fix crash replay could leave) and restore the cell-clustered
-    * build layout. Probe results are BIT-IDENTICAL: the drop rule is
-    * an EXISTS over cell-mates and the vector set is unchanged.
-    *
-    * `dropShadowed = true` additionally removes `kept = false` rows
-    * that a KEPT cell-mate shadows at `tau` (one within-cell join —
-    * the family's own cell-bounded quadratic contract). This is a
-    * SPACE/FIDELITY TRADE, not a pure fold: cosine is not transitive,
-    * so a future vector within `tau` of a removed row but not of that
-    * row's kept shadower will now survive where the uncompacted index
-    * dropped it — append results stop telescoping exactly to the
-    * from-scratch run (SemDeDup's cell-prune view accepts this drift;
-    * the exact-parity default does not). Rows shadowed ONLY by other
-    * dropped rows are retained, so the rule needs no fixpoint.
-    *
-    * With `dropShadowed = false`, a clean semantic index skips the
-    * rewrite and ignores `numFiles`, as in [[compact]].
+  /** Compact the semantic index: fold replay-duplicate `vec_id` rows
+    * (keeping the original row — `kept` folds by OR, repairing the
+    * contradictory-flag corruption a pre-fix crash replay could leave)
+    * and restore the cell-clustered build layout. Probe results are
+    * BIT-IDENTICAL: the drop rule is an EXISTS over cell-mates and the
+    * vector set is unchanged. A clean semantic index skips the rewrite
+    * and ignores `numFiles`, as in [[compact]].
     */
   def compactSemantic(
-      spark: SparkSession, path: String, numFiles: Int = 32,
-      dropShadowed: Boolean = false): Unit = {
+      spark: SparkSession, path: String, numFiles: Int = 32): Unit = {
     require(numFiles > 0, "numFiles must be positive")
-    // no-op fast path (see [[compact]]'s sentinel note) — but ONLY for
-    // the exact-parity fold: dropShadowed is a space/fidelity trade
-    // that removes rows even from a freshly-built index, so it always
-    // runs
-    if (!dropShadowed && Commit.isClean(spark, path, "semantic")) return
+    // no-op fast path — see [[compact]]'s sentinel note
+    if (Commit.isClean(spark, path, "semantic")) return
     val meta = Commit.readMeta(spark, s"$path/sem_meta")
-    val tau = meta("tau").toDouble
     // sem_centroids/ is small, frozen, and never appended: it stays
     // in place untouched
     val folded = Commit.open(spark, meta, "sem_vecs", s"$path/sem_vecs")
@@ -909,23 +891,10 @@ object DedupIndex {
         .as("__r"))
       .select(col("vec_id"), col("__r.centroid_id").as("centroid_id"),
         col("__r.vec").as("vec"), col("__r.kept").as("kept"))
-    val compacted =
-      if (!dropShadowed) folded
-      else {
-        val pinned = folded.localCheckpoint()
-        val shadowed = pinned.filter(!col("kept")).as("d")
-          .join(pinned.filter(col("kept")).as("s"),
-            col("d.centroid_id") === col("s.centroid_id") &&
-            cosineFast(col("d.vec"), col("s.vec")) >= lit(tau))
-          .select(col("d.vec_id")).distinct()
-        pinned.join(shadowed, Seq("vec_id"), "left_anti")
-      }
     Commit.swapCompacted(spark, path, Seq(
-      "sem_vecs" -> compacted.repartition(numFiles, col("centroid_id"))
+      "sem_vecs" -> folded.repartition(numFiles, col("centroid_id"))
         .sortWithinPartitions("centroid_id", "vec_id")),
       s"$path/sem_meta", meta)
-    // either mode leaves folded vec_ids at the build layout, so a later
-    // exact-parity compact of the untouched artifact may skip
     Commit.markClean(spark, path, "semantic")
   }
 }

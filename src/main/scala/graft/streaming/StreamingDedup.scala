@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -13,9 +13,9 @@ import graft.operators.Dedup
   * keyed-state dedup operators.
   *
   * Scale design: state is one entry per distinct content *hash* (16
-  * bytes of md5 + key overhead), never the text itself, and the
-  * watermarked form bounds state to the horizon — the two knobs that
-  * make ingest dedup feasible on an unbounded 100 TB-scale stream.
+  * bytes of md5 + key overhead), never the text itself; the near-dup
+  * streams keep one long per live band bucket and evict it by
+  * event-time watermark, so their state is bounded by the horizon.
   */
 object StreamingDedup {
 
@@ -28,30 +28,12 @@ object StreamingDedup {
 
   /** First-seen exact dedup over a document stream: keep a row only if
     * its content hash was never seen before. State grows with the number
-    * of distinct contents (no horizon) — use [[exactStreamWindowed]] when
-    * the stream is unbounded and near-in-time duplicates are the target.
+    * of distinct contents (no horizon).
     */
   def exactStream(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.schema(DocSchema).parquet(dir)
       .withColumn("text_hash", md5(col("text")))
       .dropDuplicates("text_hash")
-
-  /** Watermark-bounded exact dedup: duplicates are dropped only within
-    * the `horizon` of processing time — state for hashes older than the
-    * watermark is evicted, so the operator runs indefinitely with bounded
-    * memory. The standard trade: an exact-duplicate document arriving
-    * later than the horizon is re-emitted (and caught by the batch dedup
-    * downstream).
-    */
-  def exactStreamWindowed(
-      spark: SparkSession,
-      dir: String,
-      horizon: String = "1 hour"): DataFrame =
-    spark.readStream.schema(DocSchema).parquet(dir)
-      .withColumn("text_hash", md5(col("text")))
-      .withColumn("ingest_time", current_timestamp())
-      .withWatermark("ingest_time", horizon)
-      .dropDuplicatesWithinWatermark("text_hash")
 
   case class BandRow(doc_id: Long, band: Int, bucket: String,
       ingest_ts: java.sql.Timestamp)
@@ -103,11 +85,34 @@ object StreamingDedup {
       shingleN: Int = 3,
       numHashes: Int = 16,
       bands: Int = 4): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import spark.implicits._
     require(numHashes % bands == 0, "bands must divide numHashes")
     val schema = StructType(DocSchema.fields :+
       StructField("ingest_ts", TimestampType))
+    val bandRows = spark.readStream.schema(schema).parquet(dir)
+      .withWatermark("ingest_ts", horizon)
+      .select(col("doc_id"), col("ingest_ts"),
+        posexplode(
+          Dedup.wordBands(col("text"), shingleN, numHashes, bands)))
+      .select(col("doc_id"), col("pos").as("band"),
+        col("col").as("bucket"), col("ingest_ts"))
+      .as[BandRow]
+    bandOwnership(bandRows, horizon)
+  }
+
+  /** The band-ownership state machine both near-dup stream families
+    * share, over watermarked `BandRow`s: keyed state per (band, bucket)
+    * records the first document to present the bucket (earliest
+    * ingest, then smallest id, within a batch) and is evicted one
+    * horizon after the bucket's last sighting; a windowed per-document
+    * aggregation then emits a document iff ALL its bands were fresh.
+    * Output `(window_start, doc_id)`.
+    */
+  private def bandOwnership(
+      bandRows: Dataset[BandRow], horizon: String): DataFrame = {
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    val spark = bandRows.sparkSession
+    import spark.implicits._
 
     def step(key: (Int, String), rows: Iterator[BandRow],
         state: GroupState[BucketState]): Iterator[BandVerdict] =
@@ -123,19 +128,11 @@ object StreamingDedup {
           BandVerdict(r.doc_id, r.ingest_ts, fresh = r.doc_id == owner))
       }
 
-    val bandRows = spark.readStream.schema(schema).parquet(dir)
-      .withWatermark("ingest_ts", horizon)
-      .select(col("doc_id"), col("ingest_ts"),
-        posexplode(
-          Dedup.wordBands(col("text"), shingleN, numHashes, bands)))
-      .select(col("doc_id"), col("pos").as("band"),
-        col("col").as("bucket"), col("ingest_ts"))
-      .as[BandRow]
-    val verdicts = bandRows
+    bandRows
       .groupByKey(r => (r.band, r.bucket))
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout)(step)
-    verdicts.toDF()
+      .toDF()
       .withWatermark("ingest_ts", horizon)
       .groupBy(window(col("ingest_ts"), horizon), col("doc_id"))
       .agg(bool_and(col("fresh")).as("all_bands_fresh"))
@@ -207,24 +204,11 @@ object StreamingDedup {
       hashFn: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
       horizon: String,
       bands: Int): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = stream.sparkSession
     import spark.implicits._
     require(bands > 0 && 64 % bands == 0, "bands must divide 64")
     val bw = 64 / bands
     val mask = if (bw == 64) -1L else (1L << bw) - 1
-
-    def step(key: (Int, String), rows: Iterator[BandRow],
-        state: GroupState[BucketState]): Iterator[BandVerdict] =
-      if (state.hasTimedOut) { state.remove(); Iterator.empty }
-      else {
-        val rs = rows.toSeq.sortBy(r => (r.ingest_ts.getTime, r.doc_id))
-        val owner = state.getOption.map(_.owner).getOrElse(rs.head.doc_id)
-        if (state.getOption.isEmpty) state.update(BucketState(owner))
-        state.setTimeoutTimestamp(rs.map(_.ingest_ts.getTime).max, horizon)
-        rs.iterator.map(r =>
-          BandVerdict(r.doc_id, r.ingest_ts, fresh = r.doc_id == owner))
-      }
 
     val marked = stream.withWatermark("ingest_ts", horizon)
       .select(col("doc_id"), col("ingest_ts"),
@@ -250,16 +234,7 @@ object StreamingDedup {
       .select(col("doc_id"), col("pos").as("band"),
         col("col").as("bucket"), col("ingest_ts"))
       .as[BandRow]
-    val verdicts = bandRows
-      .groupByKey(r => (r.band, r.bucket))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(step)
-    verdicts.toDF()
-      .withWatermark("ingest_ts", horizon)
-      .groupBy(window(col("ingest_ts"), horizon), col("doc_id"))
-      .agg(bool_and(col("fresh")).as("all_bands_fresh"))
-      .filter(col("all_bands_fresh"))
-      .select(col("window.start").as("window_start"), col("doc_id"))
+    bandOwnership(bandRows, horizon)
   }
 
   /** Streaming decontamination — the ingest-time form of

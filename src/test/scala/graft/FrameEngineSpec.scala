@@ -207,20 +207,6 @@ class FrameEngineSpec extends AnyFunSuite {
     assert(e.getMessage.contains("JSON"))
   }
 
-  test("expandCol handleDiff honors graft.expandCol.materialize=persist" +
-      " (lineage-keeping mode for elastic clusters)") {
-    val f = Seq(
-      (0L, """[{"i":"a","c1":1}]"""),
-      (1L, """[{"i":"b","c2":2}]""")).toDF("index_level0", "e")
-    spark.conf.set("graft.expandCol.materialize", "persist")
-    try {
-      val out = FrameEngine(f, Seq("index_level0")).expandCol("e")
-      assert(out.columns.toSet ===
-        Set("index_level0", "level_1", "i", "c1", "c2"))
-      assert(out.count() === 2)
-    } finally spark.conf.unset("graft.expandCol.materialize")
-  }
-
   test("toPuffy aggfunc dict: per-column functions with _default fallback," +
       " unknown keys rejected (frame.py:974-976, 1171-1186)") {
     val f = Seq((0L, 1L, 10.0, 100.0), (0L, 2L, 20.0, 200.0),

@@ -952,33 +952,6 @@ class OperatorsSpec extends AnyFunSuite {
     assert(math.abs(uni(1L) - uni(5L)) < 1e-9)
   }
 
-  test("decontaminate maxBucketSize: a viral corpus family in the" +
-      " shuffled-probe path is exempted when over-cap (documented" +
-      " recall trade); default 0 keeps full recall") {
-    import graft.operators.Dedup
-    // 200 identical docs (viral family, all matching the probe) plus 3
-    // below-cap near-copies of a second probed text plus clean docs
-    val viral = (0L until 200L).map(i => (i, "aaa bbb ccc ddd eee fff ggg"))
-    val family = (200L until 203L).map(i => (i, "xxx yyy zzz www vvv uuu ttt"))
-    val clean = (300L until 310L).map(i =>
-      (i, s"clean document number $i with its own words entirely c$i"))
-    val corpus = (viral ++ family ++ clean).toDF("doc_id", "text")
-    val probe = Seq((9001L, "aaa bbb ccc ddd eee fff ggg"),
-      (9002L, "xxx yyy zzz www vvv uuu ttt")).toDF("doc_id", "text")
-    // default (0 = uncapped): both families scrubbed, clean docs survive
-    val full = Dedup.decontaminate(corpus, probe, "doc_id", "text",
-      broadcastProbe = false)
-    assert(full.count() === 10L)
-    // cap 50: the 200-copy family blows every bucket and is EXEMPTED
-    // (stays in the corpus); the 3-copy family still scrubs
-    val capped = Dedup.decontaminate(corpus, probe, "doc_id", "text",
-      broadcastProbe = false, maxBucketSize = 50)
-    val ids = capped.select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(ids.size === 210)
-    assert((200L until 203L).forall(!ids.contains(_)))
-    assert((0L until 200L).forall(ids.contains))
-  }
-
   test("dedupSubstrings: cross-doc repeated spans removed keeping the" +
       " first occurrence; exact copies empty out; short/empty docs pass") {
     import graft.operators.Dedup
@@ -1025,11 +998,6 @@ class OperatorsSpec extends AnyFunSuite {
     val kept = Dedup.decontaminateExact(train, probe, "doc_id", "text",
       n = 13).select("doc_id").collect().map(_.getLong(0)).toSet
     assert(kept === Set(2L, 3L, 4L))
-    // shuffled-probe path computes the identical survivor set
-    val keptShuffled = Dedup.decontaminateExact(train, probe, "doc_id",
-      "text", n = 13, broadcastProbe = false)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(keptShuffled === kept)
   }
 
   test("langIdTrain/langIdScore: NB trigram profiles classify held-out" +
@@ -1958,8 +1926,8 @@ class OperatorsSpec extends AnyFunSuite {
     assert(got === Seq("alpha", "beta", "gamma"))
   }
 
-  test("decontaminate: shuffled variant equals broadcast variant; probe" +
-      " near-dups and members drop, unrelated docs survive") {
+  test("decontaminate: probe near-dups and members drop, unrelated docs" +
+      " survive") {
     import graft.operators.Dedup.decontaminate
     val base = Seq.tabulate(30)(i => s"w$i common phrase tail").mkString(" ")
     val corpus = Seq(
@@ -1970,16 +1938,13 @@ class OperatorsSpec extends AnyFunSuite {
     val probe = corpus.filter($"doc_id" === 0L)
     val a = decontaminate(corpus, probe, "doc_id", "text")
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-    val b = decontaminate(corpus, probe, "doc_id", "text",
-      broadcastProbe = false)
-      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
     assert(a === Seq(2L))
-    assert(b === a)
   }
 
   test("shuffle budgets: operator plans stay shuffle-minimal") {
     import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike,
+      ShuffleExchangeLike}
     import graft.core.FrameEngine
     import graft.operators.{AsofJoin, Dedup, Sampling, TextAnalysis}
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
@@ -2017,6 +1982,30 @@ class OperatorsSpec extends AnyFunSuite {
         Seq((0L, Array(1.0f, 0.0f))).toDF("vec_id", "embedding"),
         "vec_id", "embedding", k = 1, dim = 2)) === 3)
       assert(shuffles(Dedup.ngramJaccardPairs(docs, "doc_id", "text")) === 4)
+      // decontamination broadcasts the probe side by hint (auto-broadcast
+      // is off here), so the corpus side of its semi join never shuffles.
+      // The drop forms pay the probe distinct and both sides of the
+      // shuffled anti join; the scrubs pay the probe distinct, the
+      // round-robin spread of the checkpointed token arrays once per
+      // consumer, the starts aggregate and the rewrite join
+      def broadcasts(df: DataFrame): Int =
+        df.queryExecution.executedPlan.collect {
+          case b: BroadcastExchangeLike => b
+        }.size
+      val probe = docs.filter($"doc_id" === 0L)
+      Seq(
+        "decontaminate" ->
+          (Dedup.decontaminate(docs, probe, "doc_id", "text"), 3),
+        "decontaminateExact" -> (Dedup.decontaminateExact(
+          docs, probe, "doc_id", "text", n = 2), 3),
+        "scrubContaminatedSpans" -> (Dedup.scrubContaminatedSpans(
+          docs, probe, "doc_id", "text", n = 2), 5),
+        "scrubContaminatedSpansBpe" -> (Dedup.scrubContaminatedSpansBpe(
+          docs, probe, "doc_id", "text", spanTokens = 2), 5)
+      ).foreach { case (name, (df, n)) =>
+        assert(shuffles(df) === n, name)
+        assert(broadcasts(df) === 1, name)
+      }
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
@@ -5565,9 +5554,7 @@ class OperatorsSpec extends AnyFunSuite {
     assert(g.count() === distinctBefore, "duplicate gram hashes folded")
   }
 
-  test("DedupIndex.compactSemantic: parity mode repairs contradictory" +
-      " duplicate rows bit-identically; dropShadowed trades exact" +
-      " telescoping for space and keeps unshadowed dropped rows") {
+  test("DedupIndex.compactSemantic folds contradictory duplicate rows") {
     import graft.sources.DedupIndex
     def xz(deg: Double) = { val r = math.toRadians(deg)
       Array(math.cos(r).toFloat, 0f, math.sin(r).toFloat, 0f) }
@@ -5614,30 +5601,13 @@ class OperatorsSpec extends AnyFunSuite {
       "30 shadows via absorbed-dropped 1 (cos5); 31 is ≥ 30° from" +
         " every cell-1 vector")
     DedupIndex.compactSemantic(spark, path, numFiles = 2)
-    assert(probeIds() === before, "probe parity across parity compaction")
+    assert(probeIds() === before, "probe parity across compaction")
     val folded = spark.read.parquet(s"$path/sem_vecs")
       .collect().map(r => r.getAs[Long]("vec_id") -> r.getAs[Boolean]("kept"))
     assert(folded.length === folded.map(_._1).distinct.length,
       "vec_id duplicates folded")
     assert(folded.toMap.apply(0L) === true,
       "the original kept flag wins over the corrupt duplicate")
-    // dropShadowed: 1 and 4 (shadowed by KEPT cell-mates) are removed;
-    // 5 (shadowed only by dropped 4) is RETAINED — no fixpoint chasing
-    DedupIndex.compactSemantic(spark, path, numFiles = 2,
-      dropShadowed = true)
-    val left = spark.read.parquet(s"$path/sem_vecs")
-      .collect().map(_.getAs[Long]("vec_id")).toSet
-    assert(left === Set(0L, 2L, 5L), s"got $left")
-    // the documented drift: probe 40 (xz 30) was shadowed by the now-
-    // removed 1 (cos5) but is NOT within tau of kept 0 (cos30 < .9) —
-    // after dropShadowed it survives: exact telescoping is gone, which
-    // is exactly why parity mode is the default
-    val drifted = DedupIndex.dedupSemanticBatch(spark, path,
-        Seq((40L, xz(30))).toDF("vec_id", "embedding"),
-        "vec_id", "embedding").survivors
-      .collect().map(_.getLong(0)).toSet
-    assert(drifted === Set(40L),
-      "dropShadowed deliberately relaxes the drop rule for this case")
   }
 
   test("compaction fast path: an index untouched since build/compact is" +
